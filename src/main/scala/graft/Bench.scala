@@ -58,78 +58,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = GraftSession.builder(s"local[$cpus]")
       .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // Scale-correct shuffle sizing: START high and let AQE coalesce
-      // down to its advisory size. A pinned shuffle.partitions=32 was
-      // itself a dial that broke a decade up — at sf100 (600 M-row
-      // lineitem) 32-way sorts spilled ~20 M rows/task and b101 ran
-      // 105 s; with 512 initial partitions AQE kept small scales
-      // identical (coalesced to the same ~32) and b101 dropped to
-      // 46 s. 16× cpus mirrors what a real cluster would set (2-5×
-      // total cores, headroom for skew).
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-        (cpus.toInt * 16).toString)
-      // AQE must be allowed to coalesce CACHED plans too, or the 16×
-      // initial partition count above gets frozen into every persisted
-      // frame (cached plans bypass AQE coalescing by default): at
-      // sf0.1 every stage reading such a cache launched 512 tasks over
-      // a few thousand rows — the r12 event-log probe measured the
-      // ANN/dedup/retrieval families spending most of their wall time
-      // on that task-launch overhead (c65b 13.2→4.7 s, b102 8.8→2.4,
-      // c21 6.8→2.9 with the flag). Scale-adaptive: at sf100 the same
-      // caches coalesce to the advisory size instead of 1 partition.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      // CPU-dense small shuffles need parallelism the BYTE-based
-      // coalescing floor denies them: AQE's parallelismFirst targets
-      // minPartitionSize (1 MB default), so a 6 MB shuffle feeding an
-      // array_intersect verify or a within-cell cosine join coalesces
-      // to ~6 partitions and runs ~10 s of CPU 6-wide on a 32-core box
-      // (c4's verify stage: 6 tasks, 9.9 s exec-run, 2.3 s wall). A
-      // 256 KB floor lets those spread to ~target parallelism while
-      // LARGE shuffles stay governed by the advisory size (floor only
-      // binds when bytes/parallelism < 256 KB). Same-minute A/B:
-      // c4 3.9→2.1 s, c98 2.0→1.4, c102 2.9→2.5, rest flat.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-      // Spill-aware AQE target: advisoryPartitionSizeInBytes defaults
-      // to 64 MB, which assumes ~1 GB of execution memory per core. On
-      // a thread-dense box (32 cpus in one 8 GB JVM ≈ 75 MB execution
-      // memory per task) a 64 MB post-shuffle partition CANNOT sort in
-      // memory — the r10 sf100 probe adjudicated b2's 19.5x third
-      // decade as exactly this spill. Derive the target from what a
-      // task actually has: heap x 0.3 (the execution half of unified
-      // memory) / cpus / 4 (sort workspace vs uncompressed input),
-      // clamped to [8 MB, 64 MB] so a memory-rich cluster keeps the
-      // stock value. Here: ~20 MB — measured at sf100j (600 M-row
-      // lineitem): b2 47.9->42.3 s, b3 57.5->47.9 s, b101 57.8->51.4 s
-      // at identical plans; small scales coalesce to the same handful
-      // of partitions either way.
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
-        math.max(8L << 20, math.min(64L << 20,
-          (Runtime.getRuntime.maxMemory * 0.3 / cpus.toInt / 4).toLong)).toString)
-      // Streaming-checkpoint metadata trim (r13; full rationale in
-      // GraftSession.builder): Spark 4.1's default checksum sidecar +
-      // FileContext renames cost a create+rename (and, without native
-      // Hadoop, a forked `readlink`) per checkpoint file per trigger —
-      // a thread dump showed b23's 32 state-store commits serialized
-      // behind exactly this (task wall 814 ms, CPU 43 ms). Same values
-      // in Verify and GraftSession; override via SPARK_GRAFT_CONF.
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
-      // probe-run overrides (semicolon-separated k=v), applied LAST so
-      // a scaling experiment can dial AQE/spill knobs without editing
-      // the committed defaults: SPARK_GRAFT_CONF="spark.x=1;spark.y=2"
-      .config(sys.env.get("SPARK_GRAFT_CONF").toSeq
-        .flatMap(_.split(";")).filter(_.contains("="))
-        .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap)
+      .config(GraftSession.confOverrides())
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Optional comma-separated query filter for local iteration

@@ -38,13 +38,11 @@ object ClusterChaos {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
+    // the master comes from spark-submit; the session is the one the
+    // engine ships, checkpoint manager included (state-store commits run
+    // in the EXECUTOR JVMs here, which local[*] cannot show)
+    val spark = GraftSession.builder(sys.props("spark.master"))
       .appName("graft-chaos-drill")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     val removed = new AtomicInteger(0)
     spark.sparkContext.addSparkListener(new SparkListener {

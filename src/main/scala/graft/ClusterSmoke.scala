@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Honest-cluster smoke (SURVEY r6 / VERDICT r5 #10): the 10 most
   * expensive queries under `local-cluster[2,16,...]` — real executor
   * JVMs, real task serialization, real broadcasts over RPC — catching
@@ -12,21 +10,11 @@ import org.apache.spark.sql.SparkSession
 object ClusterSmoke {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
+    // the master comes from spark-submit; the session is the one the
+    // engine ships, checkpoint manager included (state-store commits run
+    // in the EXECUTOR JVMs here, which local[*] cannot show)
+    val spark = GraftSession.builder(sys.props("spark.master"))
       .appName("graft-cluster-smoke")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // same streaming-checkpoint mechanics as GraftSession/Bench/Verify
-      // (r13): the smoke must exercise the checkpoint manager the
-      // engine actually ships — state-store commits run in the
-      // EXECUTOR JVMs here, which local[*] cannot show
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
       .getOrCreate()
     val names = if (args.nonEmpty) args.toSeq else Seq(
       "c4_ngram_jaccard", "c21_corpus_pipeline", "c35_cluster_split",

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `explain("formatted")` for the named queries (or a
   * curated audit set) so the scan/pushdown/broadcast/codegen claims in
   * SURVEY §5 can be checked against the actual plans.
@@ -18,11 +16,9 @@ object ExplainAudit {
     // captured plans match what the bench actually runs; SPARK_GRAFT_CONF
     // overrides applied last let a capture revert individual configs to
     // produce honest "before" plans for config-level changes
-    val spark = GraftSession.builder("local[4]", 4)
+    val spark = GraftSession.builder("local[4]")
       .config("spark.ui.enabled", "false")
-      .config(sys.env.get("SPARK_GRAFT_CONF").toSeq
-        .flatMap(_.split(";")).filter(_.contains("="))
-        .map { kv => val Array(k, v) = kv.split("=", 2); k -> v }.toMap)
+      .config(GraftSession.confOverrides())
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     // audit the real computational plan, not the self-release wrapper's

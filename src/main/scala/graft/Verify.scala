@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,29 +6,11 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the library's session wiring (SQL functions + the opt-in
-      // approx-distinct optimizer rule b105 driver-checks)
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
+    // the bench's session (GraftSession.builder + SPARK_GRAFT_CONF), so
+    // the oracle gate checks the plans the bench times
+    val spark = GraftSession.builder(s"local[$cpus]")
       .config("spark.ui.enabled", "false")
-      // events.ts is parquet TIMESTAMP(NANOS): surface as epoch-nanos long
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // same cached-plan + coalescing-floor AQE settings the bench and
-      // session builder use, so the oracle gate exercises the same plan
-      // shape it benches
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
-      // streaming-checkpoint metadata trim (see GraftSession.builder):
-      // no checksum sidecar per checkpoint file, no readlink-forking
-      // FileContext renames — the oracle gate runs the same streaming
-      // machinery the bench times
-      .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
-      .config("spark.sql.streaming.checkpointFileManagerClass",
-        "org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager")
+      .config(GraftSession.confOverrides())
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

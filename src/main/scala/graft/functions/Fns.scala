@@ -63,9 +63,6 @@ object Fns {
     graft.plans.Cols.column(graft.plans.DotProductD(
       graft.plans.Cols.expression(a), graft.plans.Cols.expression(b)))
 
-  def norm2(a: Column): Column =
-    sqrt(aggregate(transform(a, x => x * x), lit(0.0), (acc, x) => acc + x))
-
   /** Cosine similarity of two double arrays, rounded for cross-engine
     * float stability (last-ulp differences between engines). One native
     * pass for all three reductions ([[graft.plans.CosineSimD]]). */

@@ -8,13 +8,12 @@ import graft.functions.Fns
   * the individual C-series operators exist for, as one call:
   *
   *   exact dedup → quality/length filter → near-dup pairs →
-  *   connected-components clustering → keep cluster minima → chunk
+  *   connected-components clustering → keep cluster minima
   *
   * Each stage is the already-audited operator; composition adds no new
   * shuffles beyond the stages' own (Catalyst fuses the projections
-  * between them). The output is the chunk table ready for tokenizer /
-  * writer, with every original column of the kept documents carried
-  * through.
+  * between them). The output is the kept documents with every original
+  * column carried through, ready for `Chunker.chunkTokens`.
   */
 object CorpusPipeline {
 
@@ -28,8 +27,6 @@ object CorpusPipeline {
       minQuality: Double = 0.5,
       shingleN: Int = 5,
       jaccardThreshold: Double = 0.6,
-      chunkSize: Int = 64,
-      chunkStride: Int = 32,
       lsh: Boolean = true)
 
   /** Documents that survive exact dedup, the quality gate, and
@@ -61,12 +58,5 @@ object CorpusPipeline {
       .filter(col("node") =!= col("component")) // non-minima of each cluster
       .select(col("node").as(idCol))
     filtered.join(dropIds, Seq(idCol), "left_anti")
-  }
-
-  /** Full pipeline: kept documents chunked into token windows. */
-  def prepare(docs: DataFrame, idCol: String, textCol: String,
-              cfg: Config = Config()): DataFrame = {
-    val kept = keptDocs(docs, idCol, textCol, cfg)
-    Chunker.chunkTokens(kept, idCol, textCol, cfg.chunkSize, cfg.chunkStride)
   }
 }

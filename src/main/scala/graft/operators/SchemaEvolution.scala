@@ -43,22 +43,6 @@ object ChTypes {
           .when(col("all_num"), Float64)
           .otherwise(String_).as("ch_type"))
   }
-
-  def toSpark(chType: String): DataType = chType match {
-    case Int64 => LongType
-    case Float64 => DoubleType
-    case UInt8 => BooleanType
-    case DateTime64 | DateTime => TimestampType
-    case _ => StringType
-  }
-
-  def fromSpark(dt: DataType): String = dt match {
-    case LongType | IntegerType | ShortType | ByteType => Int64
-    case DoubleType | FloatType | _: DecimalType => Float64
-    case BooleanType => UInt8
-    case TimestampType | TimestampNTZType | DateType => DateTime64
-    case _ => String_
-  }
 }
 
 /** Table schema evolution with the reference's exact merge rules

@@ -48,7 +48,10 @@ case class UpperTrianglePairs(child: Expression) extends UnaryExpression {
       els(i) = if (in.isNullAt(i)) null else in.get(i, et)
       i += 1
     }
-    val out = new Array[Any](n * (n - 1) / 2)
+    val pairs = n.toLong * (n - 1) / 2
+    require(pairs <= Int.MaxValue,
+      s"$prettyName: $n elements make $pairs pairs, more than one array holds")
+    val out = new Array[Any](pairs.toInt)
     var k = 0
     i = 0
     while (i < n) {

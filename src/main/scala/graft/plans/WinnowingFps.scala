@@ -22,11 +22,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * duplicates within the selection are kept exactly as the HOF form
   * keeps them (the caller's array_distinct sees the same array).
   * Fewer than w hashes select all of them (the degenerate window),
-  * also as before. DedupSpec/PropertySpec pin the equivalence.
+  * also as before. A null gram hashes to null and a window's minimum
+  * skips nulls (null only when the whole window is), as md5 and
+  * array_min did. DedupSpec/PropertySpec pin the equivalence.
   */
 case class WinnowingFps(child: Expression, w: Int) extends UnaryExpression {
+  require(w >= 1, s"winnowing_fps window w must be >= 1, got $w")
 
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
+  override def dataType: DataType = ArrayType(StringType,
+    child.dataType match { case ArrayType(_, n) => n; case _ => true })
   override def prettyName: String = "winnowing_fps"
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
@@ -40,18 +44,20 @@ case class WinnowingFps(child: Expression, w: Int) extends UnaryExpression {
     val hs = new Array[AnyRef](n)
     var i = 0
     while (i < n) {
-      val md = Md5.get()
-      md.update(in.getUTF8String(i).getBytes)
-      // substring(md5(g), 1, 8) == hex of the digest's first 4 bytes
-      val d = md.digest()
-      val hex = new Array[Byte](8)
-      var b = 0
-      while (b < 4) {
-        hex(2 * b) = HexLower((d(b) >> 4) & 0xf)
-        hex(2 * b + 1) = HexLower(d(b) & 0xf)
-        b += 1
+      if (!in.isNullAt(i)) {
+        val md = Md5.get()
+        md.update(in.getUTF8String(i).getBytes)
+        // substring(md5(g), 1, 8) == hex of the digest's first 4 bytes
+        val d = md.digest()
+        val hex = new Array[Byte](8)
+        var b = 0
+        while (b < 4) {
+          hex(2 * b) = HexLower((d(b) >> 4) & 0xf)
+          hex(2 * b + 1) = HexLower(d(b) & 0xf)
+          b += 1
+        }
+        hs(i) = UTF8String.fromBytes(hex)
       }
-      hs(i) = UTF8String.fromBytes(hex)
       i += 1
     }
     if (n < w) return new GenericArrayData(hs)
@@ -62,7 +68,7 @@ case class WinnowingFps(child: Expression, w: Int) extends UnaryExpression {
       var j = i + 1
       while (j < i + w) {
         val c = hs(j).asInstanceOf[UTF8String]
-        if (c.compareTo(min) < 0) min = c
+        if (c != null && (min == null || c.compareTo(min) < 0)) min = c
         j += 1
       }
       out(i) = min

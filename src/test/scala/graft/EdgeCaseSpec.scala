@@ -199,4 +199,24 @@ class EdgeCaseSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("no centroids"))
   }
+
+  test("winnowing_fps rejects a window below 1 by name") {
+    val e = intercept[IllegalArgumentException] {
+      graft.functions.Fns.winnowingFps(col("gs"), 0)
+    }
+    assert(e.getMessage.contains("window w must be >= 1, got 0"))
+  }
+
+  test("upper_triangle_pairs names a pair count past the array limit") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, LongType}
+    // 65537 elements make 2,147,516,416 pairs: one over Int.MaxValue,
+    // where an Int product wrapped to a small positive size
+    val xs = Literal.create(Array.range(0, 65537).map(_.toLong),
+      ArrayType(LongType, containsNull = false))
+    val e = intercept[IllegalArgumentException] {
+      graft.plans.UpperTrianglePairs(xs).eval()
+    }
+    assert(e.getMessage.contains("65537 elements make 2147516416 pairs"))
+  }
 }

@@ -3,26 +3,85 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The SQL-surface registration: the same native expressions the
-  * Column API lifts must resolve by name in spark.sql. */
+/** The one session definition: the plan-affecting keys every main
+  * takes from [[GraftSession.builder]], the core count it derives them
+  * from, the `SPARK_GRAFT_CONF` override parser, and the SQL-surface
+  * registration (the same native expressions the Column API lifts must
+  * resolve by name in spark.sql). */
 class GraftSessionSpec extends AnyFunSuite {
 
+  test("local[4] gets exactly the spark.sql.* keys Bench set at 4 cpus") {
+    assert(GraftSession.sqlConf("local[4]") == Map(
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> "64",
+      "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning" -> "true",
+      "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "256k",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" ->
+        GraftSession.advisoryPartitionBytes(Runtime.getRuntime.maxMemory, 4).toString,
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
+      "spark.sql.streaming.checkpointFileManagerClass" ->
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"))
+  }
+
+  test("advisory partition size: heap x 0.3 / cpus / 4, clamped to [8 MB, 64 MB]") {
+    assert(GraftSession.advisoryPartitionBytes(8L << 30, 32) == 20132659L)
+    assert(GraftSession.advisoryPartitionBytes(64L << 30, 4) == (64L << 20))
+    assert(GraftSession.advisoryPartitionBytes(1L << 30, 32) == (8L << 20))
+  }
+
+  test("core count comes from the master string") {
+    val procs = Runtime.getRuntime.availableProcessors()
+    Seq(
+      "local" -> Some(1),
+      "local[3]" -> Some(3),
+      "local[3,2]" -> Some(3),
+      "local[*]" -> Some(procs),
+      "local[*,4]" -> Some(procs),
+      "local-cluster[2,16,8192]" -> None,
+      "yarn" -> None,
+    ).foreach { case (master, cores) =>
+      assert(GraftSession.localCores(master) == cores, master)
+    }
+    assert(GraftSession.sqlConf("local")("spark.sql.shuffle.partitions") == "1")
+    assert(GraftSession.sqlConf("local[3,2]")(
+      "spark.sql.adaptive.coalescePartitions.initialPartitionNum") == "48")
+    val cluster = GraftSession.sqlConf("yarn")
+    assert(cluster("spark.sql.shuffle.partitions") == "32")
+    assert(!cluster.contains("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+  }
+
+  test("SPARK_GRAFT_CONF: key=value entries parse; a malformed entry fails by name") {
+    assert(GraftSession.confOverrides("spark.x=1") == Map("spark.x" -> "1"))
+    assert(GraftSession.confOverrides("spark.y=a=b; spark.x=1;") ==
+      Map("spark.y" -> "a=b", "spark.x" -> "1"))
+    assert(GraftSession.confOverrides("") == Map.empty)
+    Seq("spark.x", "=1").foreach { bad =>
+      val e = intercept[IllegalArgumentException] {
+        GraftSession.confOverrides(s"spark.ok=1;$bad")
+      }
+      assert(e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
+  }
+
   test("GraftExtensions registers word_ngrams/dot_product_d/cosine_sim_d in SQL") {
-    // A second SparkSession over the SHARED SparkContext, with the
-    // extensions applied fresh. getOrCreate() would return the shared
-    // session (no extensions) if one is active, and stopping it would
-    // kill the context for every later suite — so clear, build, and
-    // restore instead of stop.
+    // A second SparkSession over the SHARED SparkContext, built by the
+    // shipped builder. getOrCreate() would return the shared session
+    // (no extensions) if one is active, and stopping it would kill the
+    // context for every later suite — so clear, build, and restore
+    // instead of stop.
     val shared = TestSession.spark
     SparkSession.clearActiveSession()
     SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
+    val spark = GraftSession.builder("local[2]")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     try {
+      GraftSession.sqlConf("local[2]").foreach { case (k, v) =>
+        assert(spark.conf.get(k) == v, k)
+      }
       val r = spark.sql(
         """SELECT word_ngrams(array('a','b','c'), 2) AS ng,
                   dot_product_d(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dp,

@@ -533,13 +533,17 @@ class PropertySpec extends SparkSpec {
   test("winnowing_fps == the composed md5/transform/slice/array_min form") {
     // the r13 codegen'd kernel (graft.plans.WinnowingFps) must emit
     // exactly the hashes-and-window-minima array the HOF form emitted,
-    // for every w, including the degenerate n < w window and n == 0
+    // for every w, including the degenerate n < w window and n == 0,
+    // and null grams (md5 keeps them null; array_min skips them, so an
+    // all-null window is null)
     import spark.implicits._
     val rows = (0 until 50).map { i =>
       val g = Gen.listOf(Gen.alphaLowerStr.map(_.take(6)))
       (i.toLong, g.apply(Gen.Parameters.default, Seed(99L + i))
         .getOrElse(Nil))
-    } ++ Seq((1000L, Nil), (1001L, List("one")), (1002L, List("a", "b")))
+    } ++ Seq((1000L, Nil), (1001L, List("one")), (1002L, List("a", "b")),
+      (1003L, List("a", null, "b", "c")), (1004L, List(null, null, "d")),
+      (1005L, List(null)), (1006L, List(null, "e", null, null, null, null, null, "f")))
     val df = rows.toDF("id", "gs")
     for (w <- Seq(1, 2, 4, 7)) {
       val hof = df.select(col("id"),
