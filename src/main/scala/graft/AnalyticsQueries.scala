@@ -187,21 +187,8 @@ object AnalyticsQueries {
       .orderBy(col("p_id"), col("e_id"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "b10_asof_join" -> (b10AsofJoin _),
-    "b11_range_join" -> (b11RangeJoin _),
-    "b2_top_revenue" -> (b2TopRevenue _),
-    "b3_region_revenue" -> (b3RegionRevenue _),
-    "b4_top_per_group" -> (b4TopPerGroup _),
-    "b5_semi_anti" -> (b5SemiAnti _),
-    "b6_sessionize" -> (b6Sessionize _),
-    "b7_funnel" -> (b7Funnel _),
-    "b9_distinct_users" -> (b9DistinctUsers _),
-    "b9b_approx_distinct" -> (b9bApproxDistinct _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "b10_asof_join" ->
+  val registry: Seq[Q] = Seq(
+    Q("b10_asof_join", b10AsofJoin,
       """WITH p AS (
            SELECT event_id, user_id, epoch_ns(ts) AS tn FROM events
            WHERE event_type = 'purchase'),
@@ -224,16 +211,16 @@ object AnalyticsQueries {
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW))
          SELECT p_id AS event_id, user_id, tn // 1000000000 AS ts_s,
            asof_click_id, asof_click_value
-         FROM w WHERE side = 1 ORDER BY event_id""",
-    "b11_range_join" ->
+         FROM w WHERE side = 1 ORDER BY event_id"""),
+    Q("b11_range_join", b11RangeJoin,
       """SELECT p.event_id AS p_id, e.event_id AS e_id,
            (epoch_ns(e.ts) - epoch_ns(p.ts)) // 1000000000 AS delta_s
          FROM events p JOIN events e ON p.user_id = e.user_id
          WHERE p.event_type = 'purchase' AND e.event_type = 'error'
            AND epoch_ns(e.ts) >= epoch_ns(p.ts)
            AND epoch_ns(e.ts) - epoch_ns(p.ts) <= 1800000000000
-         ORDER BY p_id, e_id""",
-    "b2_top_revenue" ->
+         ORDER BY p_id, e_id"""),
+    Q("b2_top_revenue", b2TopRevenue,
       """SELECT o_orderkey,
          strftime(o_orderdate, '%Y-%m-%d') AS order_date, o_orderpriority,
          CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
@@ -244,8 +231,8 @@ object AnalyticsQueries {
            AND o_orderdate < TIMESTAMP '1998-06-30'
            AND l_shipdate > TIMESTAMP '1998-06-30'
          GROUP BY o_orderkey, o_orderdate, o_orderpriority
-         ORDER BY revenue DESC, o_orderkey LIMIT 10""",
-    "b3_region_revenue" ->
+         ORDER BY revenue DESC, o_orderkey LIMIT 10"""),
+    Q("b3_region_revenue", b3RegionRevenue,
       """SELECT n_name,
          CAST(sum(CAST(l_extendedprice * (1.0 - l_discount) AS DECIMAL(18,6))) AS DOUBLE) AS revenue
          FROM lineitem
@@ -257,22 +244,22 @@ object AnalyticsQueries {
          WHERE r_name = 'ASIA'
            AND o_orderdate >= TIMESTAMP '1996-01-01'
            AND o_orderdate < TIMESTAMP '1998-01-01'
-         GROUP BY n_name ORDER BY revenue DESC, n_name""",
-    "b4_top_per_group" ->
+         GROUP BY n_name ORDER BY revenue DESC, n_name"""),
+    Q("b4_top_per_group", b4TopPerGroup,
       """SELECT o_custkey, rn, o_orderkey, o_totalprice FROM (
            SELECT o_custkey, o_orderkey, o_totalprice,
              row_number() OVER (PARTITION BY o_custkey
                ORDER BY o_totalprice DESC, o_orderkey) AS rn
            FROM orders)
-         WHERE rn <= 3 ORDER BY o_custkey, rn""",
-    "b5_semi_anti" ->
+         WHERE rn <= 3 ORDER BY o_custkey, rn"""),
+    Q("b5_semi_anti", b5SemiAnti,
       """SELECT c_custkey, c_name, 'has_order' AS segment FROM customer
          WHERE EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
          UNION ALL
          SELECT c_custkey, c_name, 'no_order' AS segment FROM customer
          WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-         ORDER BY c_custkey""",
-    "b6_sessionize" ->
+         ORDER BY c_custkey"""),
+    Q("b6_sessionize", b6Sessionize,
       """WITH e AS (SELECT user_id, event_id, epoch_ns(ts) AS tsn FROM events),
          marked AS (
            SELECT user_id, tsn,
@@ -289,8 +276,8 @@ object AnalyticsQueries {
            min(tsn) // 1000000000 AS start_s,
            max(tsn) // 1000000000 AS end_s
          FROM sess GROUP BY user_id, session_id
-         ORDER BY user_id, session_id""",
-    "b7_funnel" ->
+         ORDER BY user_id, session_id"""),
+    Q("b7_funnel", b7Funnel,
       """WITH pu AS (
            SELECT user_id,
              min(CASE WHEN event_type = 'signup' THEN ts END) AS signup_ts,
@@ -301,15 +288,15 @@ object AnalyticsQueries {
            CAST(sum(CASE WHEN last_purchase_ts >= signup_ts THEN 1 ELSE 0 END)
              AS BIGINT) AS n_converted
          FROM pu WHERE signup_ts IS NOT NULL
-         GROUP BY cohort_date ORDER BY cohort_date""",
-    "b9_distinct_users" ->
+         GROUP BY cohort_date ORDER BY cohort_date"""),
+    Q("b9_distinct_users", b9DistinctUsers,
       """SELECT event_type, count(DISTINCT user_id) AS n_users_exact
-         FROM events GROUP BY event_type ORDER BY event_type""",
+         FROM events GROUP BY event_type ORDER BY event_type"""),
     // b9b: the estimate itself is engine-specific; the driver checks the
     // exact count plus the in-query ε-contract flag (literal-true here).
-    "b9b_approx_distinct" ->
+    Q("b9b_approx_distinct", b9bApproxDistinct,
       """SELECT event_type, count(DISTINCT user_id) AS n_users_exact,
            CAST(1 AS BIGINT) AS within_eps
-         FROM events GROUP BY event_type ORDER BY event_type"""
+         FROM events GROUP BY event_type ORDER BY event_type""")
   )
 }

@@ -377,29 +377,8 @@ object AnalyticsQueries2 {
       .orderBy(col("user_id"), col("event_type"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "b12_window_funnel" -> (b12WindowFunnel _),
-    "b12b_window_funnel_strict" -> (b12bWindowFunnelStrict _),
-    "b28_latest_version" -> (b28LatestVersion _),
-    "b13_retention" -> (b13Retention _),
-    "b14_top_k" -> (b14TopK _),
-    "b14b_topk_sketch" -> (b14bTopkSketch _),
-    "b15_quantiles" -> (b15Quantiles _),
-    "b15b_approx_quantiles" -> (b15bApproxQuantiles _),
-    "b16_rollup" -> (b16Rollup _),
-    "b17_pivot" -> (b17Pivot _),
-    "b18_moving_sum" -> (b18MovingSum _),
-    "b19_sequence_match" -> (b19SequenceMatch _),
-    "b20_argmax" -> (b20ArgMax _),
-    "b21_type_profiles" -> (b21TypeProfiles _),
-    "b22_promo_revenue" -> (b22PromoRevenue _),
-    "b25_histogram" -> (b25Histogram _),
-    "b26_suff_stats" -> (b26SuffStats _),
-    "b27_gap_fill" -> (b27GapFill _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "b28_latest_version" ->
+  val registry: Seq[Q] = Seq(
+    Q("b28_latest_version", b28LatestVersion,
       """SELECT user_id, event_type, event_id AS latest_event_id,
            epoch_ns(ts) // 1000000000 AS latest_ts_s,
            value AS latest_value
@@ -407,8 +386,8 @@ object AnalyticsQueries2 {
            SELECT *, row_number() OVER (PARTITION BY user_id, event_type
              ORDER BY ts DESC, event_id DESC) AS rk
            FROM events)
-         WHERE rk = 1 ORDER BY user_id, event_type""",
-    "b12_window_funnel" ->
+         WHERE rk = 1 ORDER BY user_id, event_type"""),
+    Q("b12_window_funnel", b12WindowFunnel,
       """WITH e AS (
            SELECT user_id, event_id, epoch_ns(ts) AS tn, event_type FROM events),
          w1 AS (
@@ -438,8 +417,8 @@ object AnalyticsQueries2 {
              CAST(max(h1) + max(h2) + max(h3) AS BIGINT) AS funnel_level
            FROM hits GROUP BY user_id)
          SELECT funnel_level, count(*) AS n_users
-         FROM lvl GROUP BY funnel_level ORDER BY funnel_level""",
-    "b12b_window_funnel_strict" ->
+         FROM lvl GROUP BY funnel_level ORDER BY funnel_level"""),
+    Q("b12b_window_funnel_strict", b12bWindowFunnelStrict,
       """WITH e AS (
            SELECT user_id, event_id, epoch_ns(ts) AS tn, event_type FROM events),
          s AS (
@@ -465,8 +444,8 @@ object AnalyticsQueries2 {
            SELECT user_id, CAST(max(l) AS BIGINT) AS funnel_level
            FROM lv GROUP BY user_id)
          SELECT funnel_level, count(*) AS n_users
-         FROM agg GROUP BY funnel_level ORDER BY funnel_level""",
-    "b13_retention" ->
+         FROM agg GROUP BY funnel_level ORDER BY funnel_level"""),
+    Q("b13_retention", b13Retention,
       """WITH u AS (
            SELECT user_id,
              max(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS d1,
@@ -479,16 +458,16 @@ object AnalyticsQueries2 {
            CAST(sum(d1 * d3) AS BIGINT) AS n_signup_purchase,
            CAST(sum(d1 * d4) AS BIGINT) AS n_signup_error,
            count(*) AS n_users
-         FROM u""",
-    "b14_top_k" ->
+         FROM u"""),
+    Q("b14_top_k", b14TopK,
       """SELECT event_type, rk, user_id, n_events FROM (
            SELECT event_type, user_id, n_events,
              row_number() OVER (PARTITION BY event_type
                ORDER BY n_events DESC, user_id) AS rk
            FROM (SELECT event_type, user_id, count(*) AS n_events
                  FROM events GROUP BY event_type, user_id))
-         WHERE rk <= 3 ORDER BY event_type, rk""",
-    "b15_quantiles" ->
+         WHERE rk <= 3 ORDER BY event_type, rk"""),
+    Q("b15_quantiles", b15Quantiles,
       """WITH v AS (
            SELECT event_type, event_id, value,
              row_number() OVER (PARTITION BY event_type
@@ -498,8 +477,8 @@ object AnalyticsQueries2 {
          SELECT event_type, q_pct, value AS q_value
          FROM v CROSS JOIN (VALUES (CAST(50 AS BIGINT)), (90), (99)) AS qs(q_pct)
          WHERE rn = ((cnt - 1) * q_pct) // 100 + 1
-         ORDER BY event_type, q_pct""",
-    "b16_rollup" ->
+         ORDER BY event_type, q_pct"""),
+    Q("b16_rollup", b16Rollup,
       """SELECT
            coalesce(event_type, '<all>') AS event_type_r,
            coalesce(event_date, '<all>') AS event_date_r,
@@ -509,16 +488,16 @@ object AnalyticsQueries2 {
          FROM (SELECT event_type, strftime(ts, '%Y-%m-%d') AS event_date, value
                FROM events)
          GROUP BY ROLLUP(event_type, event_date)
-         ORDER BY gid, event_type_r, event_date_r""",
-    "b17_pivot" ->
+         ORDER BY gid, event_type_r, event_date_r"""),
+    Q("b17_pivot", b17Pivot,
       """SELECT strftime(ts, '%Y-%m-%d') AS event_date,
            CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END) AS BIGINT) AS n_click,
            CAST(sum(CASE WHEN event_type = 'error' THEN 1 ELSE 0 END) AS BIGINT) AS n_error,
            CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS BIGINT) AS n_purchase,
            CAST(sum(CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END) AS BIGINT) AS n_signup,
            CAST(sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END) AS BIGINT) AS n_view
-         FROM events GROUP BY event_date ORDER BY event_date""",
-    "b18_moving_sum" ->
+         FROM events GROUP BY event_date ORDER BY event_date"""),
+    Q("b18_moving_sum", b18MovingSum,
       """WITH daily AS (
            SELECT strftime(ts, '%Y-%m-%d') AS event_date,
              sum(CAST(value AS DECIMAL(18,2))) AS d
@@ -530,8 +509,8 @@ object AnalyticsQueries2 {
            CAST(sum(d) OVER (ORDER BY event_date
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE) AS cum_sum,
            CAST(d - lag(d, 1) OVER (ORDER BY event_date) AS DOUBLE) AS delta_prev
-         FROM daily ORDER BY event_date""",
-    "b19_sequence_match" ->
+         FROM daily ORDER BY event_date"""),
+    Q("b19_sequence_match", b19SequenceMatch,
       """WITH u AS (
            SELECT user_id,
              min(CASE WHEN event_type = 'purchase' THEN epoch_ns(ts) END) AS f1,
@@ -540,8 +519,8 @@ object AnalyticsQueries2 {
          SELECT CAST(sum(CASE WHEN f1 IS NOT NULL AND l2 IS NOT NULL
              AND f1 < l2 THEN 1 ELSE 0 END) AS BIGINT) AS n_matched,
            count(*) AS n_users
-         FROM u""",
-    "b20_argmax" ->
+         FROM u"""),
+    Q("b20_argmax", b20ArgMax,
       """WITH mx AS (
            SELECT event_type, user_id AS argmax_user, value AS max_value
            FROM (SELECT event_type, user_id, value,
@@ -556,8 +535,8 @@ object AnalyticsQueries2 {
                  FROM events) WHERE rk = 1)
          SELECT mx.event_type, argmax_user, max_value, argmin_user, min_value
          FROM mx JOIN mn ON mx.event_type = mn.event_type
-         ORDER BY mx.event_type""",
-    "b21_type_profiles" ->
+         ORDER BY mx.event_type"""),
+    Q("b21_type_profiles", b21TypeProfiles,
       """WITH p AS (
            SELECT user_id,
              array_to_string(list_sort(list(DISTINCT event_type)), ',')
@@ -567,8 +546,8 @@ object AnalyticsQueries2 {
              AND event_id % 7 = 0
            GROUP BY user_id)
          SELECT type_set, count(*) AS n_users
-         FROM p GROUP BY type_set ORDER BY type_set""",
-    "b22_promo_revenue" ->
+         FROM p GROUP BY type_set ORDER BY type_set"""),
+    Q("b22_promo_revenue", b22PromoRevenue,
       """SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
            CAST(sum(CAST(CASE WHEN p_type = 'PROMO'
              THEN l_extendedprice * (1.0 - l_discount) ELSE 0.0 END
@@ -576,20 +555,20 @@ object AnalyticsQueries2 {
            CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
              AS DECIMAL(18,6))) AS DOUBLE) AS total_revenue
          FROM lineitem JOIN part ON l_partkey = p_partkey
-         GROUP BY ship_month ORDER BY ship_month""",
-    "b25_histogram" ->
+         GROUP BY ship_month ORDER BY ship_month"""),
+    Q("b25_histogram", b25Histogram,
       """SELECT event_type, CAST(floor(value / 50.0) AS BIGINT) AS bin,
            count(*) AS n,
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
          FROM events GROUP BY event_type, bin
-         ORDER BY event_type, bin""",
-    "b26_suff_stats" ->
+         ORDER BY event_type, bin"""),
+    Q("b26_suff_stats", b26SuffStats,
       """SELECT event_type, count(*) AS n,
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_v,
            CAST(sum(CAST(value * value AS DECIMAL(18,4))) AS DOUBLE) AS sum_v2,
            CAST(sum(CAST(value * user_id AS DECIMAL(18,2))) AS DOUBLE) AS sum_vu
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "b27_gap_fill" ->
+         FROM events GROUP BY event_type ORDER BY event_type"""),
+    Q("b27_gap_fill", b27GapFill,
       """WITH ev AS (
            SELECT event_type, CAST(ts AS DATE) AS d
            FROM events WHERE event_id % 11 = 0),
@@ -608,20 +587,20 @@ object AnalyticsQueries2 {
            coalesce(daily.n_events, 0) AS n_events
          FROM spine s LEFT JOIN daily
            ON s.event_type = daily.event_type AND s.d = daily.d
-         ORDER BY s.event_type, event_date""",
+         ORDER BY s.event_type, event_date"""),
     // b14b: which extra items the sketch tracks is merge-order dependent;
     // the driver checks the deterministic counts plus the in-query
     // SpaceSaving contract flag (literal-true here).
-    "b14b_topk_sketch" ->
+    Q("b14b_topk_sketch", b14bTopkSketch,
       """SELECT event_type, count(*) AS n_events,
            count(DISTINCT user_id) AS n_users,
            CAST(LEAST(8, count(DISTINCT user_id)) AS BIGINT) AS n_sketched,
            CAST(1 AS BIGINT) AS bounds_ok
-         FROM events GROUP BY event_type ORDER BY event_type""",
+         FROM events GROUP BY event_type ORDER BY event_type"""),
     // b15b: the estimate is engine-specific within the ε rank guarantee;
     // the driver checks b15's exact discrete quantile plus the in-query
     // rank-band contract flag (literal-true here).
-    "b15b_approx_quantiles" ->
+    Q("b15b_approx_quantiles", b15bApproxQuantiles,
       """WITH v AS (
            SELECT event_type, event_id, value,
              row_number() OVER (PARTITION BY event_type
@@ -632,6 +611,6 @@ object AnalyticsQueries2 {
            CAST(1 AS BIGINT) AS within_band
          FROM v CROSS JOIN (VALUES (CAST(50 AS BIGINT)), (90), (99)) AS qs(q_pct)
          WHERE rn = ((cnt - 1) * q_pct) // 100 + 1
-         ORDER BY event_type, q_pct"""
+         ORDER BY event_type, q_pct""")
   )
 }

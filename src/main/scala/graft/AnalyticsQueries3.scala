@@ -238,27 +238,16 @@ object AnalyticsQueries3 {
       .orderBy(col("type_a"), col("type_b"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "b29_incremental_rollup" -> (b29IncrementalRollup _),
-    "b30_sum_map" -> (b30SumMap _),
-    "b31_sequence_count" -> (b31SequenceCount _),
-    "b32_collapsing" -> (b32Collapsing _),
-    "b34_uniq_merge" -> (b34UniqMerge _),
-    "b35_tiered_rollup" -> (b35TieredRollup _),
-    "b36_overlap" -> (b36Overlap _),
-    "b37_quantile_merge" -> (b37QuantileMerge _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
+  val registry: Seq[Q] = Seq(
     // The oracle is the DIRECT rollup — the merge path must reproduce
     // it bit-for-bit (counts and decimal sums are exact).
-    "b29_incremental_rollup" ->
+    Q("b29_incremental_rollup", b29IncrementalRollup,
       """SELECT event_type, strftime(ts, '%Y-%m-%d') AS event_date,
            count(*) AS n_events,
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
          FROM events GROUP BY event_type, event_date
-         ORDER BY event_type, event_date""",
-    "b30_sum_map" ->
+         ORDER BY event_type, event_date"""),
+    Q("b30_sum_map", b30SumMap,
       """WITH kv AS (
            SELECT user_id, 'k' AS mkey,
              CAST(json_extract_string(props, '$.k') AS BIGINT) AS mval
@@ -266,8 +255,8 @@ object AnalyticsQueries3 {
            UNION ALL
            SELECT user_id, 't_' || event_type, 1 FROM events)
          SELECT user_id, mkey, CAST(sum(mval) AS BIGINT) AS mval_sum
-         FROM kv GROUP BY user_id, mkey ORDER BY user_id, mkey""",
-    "b31_sequence_count" ->
+         FROM kv GROUP BY user_id, mkey ORDER BY user_id, mkey"""),
+    Q("b31_sequence_count", b31SequenceCount,
       """WITH f AS (
            SELECT user_id, epoch_ns(ts) AS tn, event_id,
              CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is1,
@@ -283,10 +272,10 @@ object AnalyticsQueries3 {
                AS BIGINT) AS n_seq
            FROM s GROUP BY user_id)
          SELECT n_seq, count(*) AS n_users
-         FROM c GROUP BY n_seq ORDER BY n_seq""",
+         FROM c GROUP BY n_seq ORDER BY n_seq"""),
     // Direct current-state query: latest event per user, minus the
     // users whose state the write stream deleted.
-    "b32_collapsing" ->
+    Q("b32_collapsing", b32Collapsing,
       """SELECT user_id, event_id AS cur_event_id,
            epoch_ns(ts) // 1000000000 AS cur_ts_s,
            value AS cur_value
@@ -295,8 +284,8 @@ object AnalyticsQueries3 {
              ORDER BY ts DESC, event_id DESC) AS rk
            FROM events)
          WHERE rk = 1 AND user_id % 7 <> 0
-         ORDER BY user_id""",
-    "b35_tiered_rollup" ->
+         ORDER BY user_id"""),
+    Q("b35_tiered_rollup", b35TieredRollup,
       """WITH m AS (SELECT max(epoch_ns(ts)) AS max_ts FROM events),
          a AS (
            SELECT event_type, ts, value,
@@ -316,24 +305,24 @@ object AnalyticsQueries3 {
            count(*) AS n_events,
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
          FROM g GROUP BY event_type, gran, b
-         ORDER BY event_type, gran, bucket_date""",
-    "b36_overlap" ->
+         ORDER BY event_type, gran, bucket_date"""),
+    Q("b36_overlap", b36Overlap,
       """WITH m AS (SELECT DISTINCT user_id, event_type FROM events)
          SELECT a.event_type AS type_a, b.event_type AS type_b,
            count(*) AS n_users_both
          FROM m a JOIN m b USING (user_id)
-         GROUP BY 1, 2 ORDER BY 1, 2""",
+         GROUP BY 1, 2 ORDER BY 1, 2"""),
     // b34: the merged estimate is engine-specific; the driver checks the
     // exact count plus the in-query merge/ε contract flags (literal-true).
-    "b34_uniq_merge" ->
+    Q("b34_uniq_merge", b34UniqMerge,
       """SELECT event_type, count(DISTINCT user_id) AS n_users_exact,
            CAST(1 AS BIGINT) AS merged_close_direct,
            CAST(1 AS BIGINT) AS within_eps
-         FROM events GROUP BY event_type ORDER BY event_type""",
+         FROM events GROUP BY event_type ORDER BY event_type"""),
     // b37: the merged GK estimate is engine-specific within ε ranks; the
     // driver checks b15's exact discrete quantile (over the double-cast
     // value, identical to the raw double here) plus the rank-band flag.
-    "b37_quantile_merge" ->
+    Q("b37_quantile_merge", b37QuantileMerge,
       """WITH v AS (
            SELECT event_type, event_id, value,
              row_number() OVER (PARTITION BY event_type
@@ -344,6 +333,6 @@ object AnalyticsQueries3 {
            CAST(1 AS BIGINT) AS within_band
          FROM v CROSS JOIN (VALUES (CAST(50 AS BIGINT)), (90), (99)) AS qs(q_pct)
          WHERE rn = ((cnt - 1) * q_pct) // 100 + 1
-         ORDER BY event_type, q_pct"""
+         ORDER BY event_type, q_pct""")
   )
 }

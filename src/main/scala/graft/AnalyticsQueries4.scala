@@ -152,18 +152,8 @@ object AnalyticsQueries4 {
         Fns.floorDivLong(col("covered_ns"), 1000000L).as("covered_ms"))
       .orderBy(col("event_type"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "b38_delta_sum" -> (b38DeltaSum _),
-    "b39_fill_interpolate" -> (b39FillInterpolate _),
-    "b40_ttl_expire" -> (b40TtlExpire _),
-    "b41_ttl_rollup" -> (b41TtlRollup _),
-    "b42_cohort" -> (b42Cohort _),
-    "b43_max_intersections" -> (b43MaxIntersections _),
-    "b44_interval_length" -> (b44IntervalLength _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "b38_delta_sum" ->
+  val registry: Seq[Q] = Seq(
+    Q("b38_delta_sum", b38DeltaSum,
       """WITH s AS (
            SELECT user_id, CAST(value AS DECIMAL(18,2)) AS v,
              lag(CAST(value AS DECIMAL(18,2))) OVER
@@ -172,8 +162,8 @@ object AnalyticsQueries4 {
          SELECT user_id, count(*) AS n_points,
            CAST(coalesce(sum(CASE WHEN v > pv THEN v - pv END), 0)
              AS DOUBLE) AS delta_sum
-         FROM s GROUP BY user_id ORDER BY user_id""",
-    "b39_fill_interpolate" ->
+         FROM s GROUP BY user_id ORDER BY user_id"""),
+    Q("b39_fill_interpolate", b39FillInterpolate,
       """WITH f AS (
            SELECT event_type, CAST(ts AS DATE) AS d, value
            FROM events WHERE event_id % 499 = 0),
@@ -199,8 +189,8 @@ object AnalyticsQueries4 {
              PARTITION BY event_type ORDER BY d
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 0.0)
              AS v_ffill
-         FROM j ORDER BY event_type, event_date""",
-    "b41_ttl_rollup" ->
+         FROM j ORDER BY event_type, event_date"""),
+    Q("b41_ttl_rollup", b41TtlRollup,
       """WITH m AS (SELECT max(epoch_ns(ts)) AS mx FROM events),
          a AS (
            SELECT event_type, event_id, ts, value,
@@ -217,8 +207,8 @@ object AnalyticsQueries4 {
            CAST(0 AS BIGINT), event_id, CAST(1 AS BIGINT),
            CAST(CAST(value AS DECIMAL(18,2)) AS DOUBLE)
          FROM a WHERE age_days < 7
-         ORDER BY event_type, bucket_date, is_rolled, event_id""",
-    "b43_max_intersections" ->
+         ORDER BY event_type, bucket_date, is_rolled, event_id"""),
+    Q("b43_max_intersections", b43MaxIntersections,
       """WITH iv AS (
            SELECT event_type, event_id, epoch_ns(ts) AS s_ns,
              epoch_ns(ts) + CAST(CAST(value AS DECIMAL(18,2))
@@ -236,8 +226,8 @@ object AnalyticsQueries4 {
                ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS running
            FROM pts)
          SELECT event_type, CAST(max(running) AS BIGINT) AS peak_concurrency
-         FROM r GROUP BY event_type ORDER BY event_type""",
-    "b44_interval_length" ->
+         FROM r GROUP BY event_type ORDER BY event_type"""),
+    Q("b44_interval_length", b44IntervalLength,
       """WITH iv AS (
            SELECT event_type, event_id, epoch_ns(ts) AS s_ns,
              epoch_ns(ts) + CAST(CAST(value AS DECIMAL(18,2))
@@ -259,8 +249,8 @@ object AnalyticsQueries4 {
          SELECT event_type,
            CAST(sum(next_t - t) // 1000000 AS BIGINT) AS covered_ms
          FROM r WHERE running > 0 AND next_t IS NOT NULL
-         GROUP BY event_type ORDER BY event_type""",
-    "b42_cohort" ->
+         GROUP BY event_type ORDER BY event_type"""),
+    Q("b42_cohort", b42Cohort,
       """WITH f AS (
            SELECT user_id, ts,
              min(ts) OVER (PARTITION BY user_id) AS first_ts
@@ -274,8 +264,8 @@ object AnalyticsQueries4 {
            CAST(date_diff('day', cw, ew) // 7 AS BIGINT) AS week_offset,
            count(DISTINCT user_id) AS n_users
          FROM c GROUP BY cw, week_offset
-         ORDER BY cohort_week, week_offset""",
-    "b40_ttl_expire" ->
+         ORDER BY cohort_week, week_offset"""),
+    Q("b40_ttl_expire", b40TtlExpire,
       """WITH m AS (SELECT max(epoch_ns(ts)) AS mx FROM events),
          a AS (
            SELECT event_id, value,
@@ -285,6 +275,6 @@ object AnalyticsQueries4 {
            CASE WHEN age_days >= 7 THEN 0.0 ELSE value END AS value,
            CAST(CASE WHEN age_days >= 7 THEN 1 ELSE 0 END AS BIGINT)
              AS value_expired
-         FROM a WHERE age_days < 21 ORDER BY event_id"""
+         FROM a WHERE age_days < 21 ORDER BY event_id""")
   )
 }

@@ -329,23 +329,8 @@ object AnalyticsQueries5 {
       .orderBy(col("event_type"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "b55_linreg" -> (b55Linreg _),
-    "b54_series_similarity" -> (b54SeriesSimilarity _),
-    "b53_grouping_sets" -> (b53GroupingSets _),
-    "b52_weighted_quantiles" -> (b52WeightedQuantiles _),
-    "b51_asof_next" -> (b51AsofNext _),
-    "b50_avg_weighted" -> (b50AvgWeighted _),
-    "b45_versioned_collapse" -> (b45VersionedCollapse _),
-    "b12c_window_funnel_increase" -> (b12cWindowFunnelIncrease _),
-    "b46_sequence_next_node" -> (b46SequenceNextNode _),
-    "b47_uniq_upto" -> (b47UniqUpTo _),
-    "b48_bounding_ratio" -> (b48BoundingRatio _),
-    "b49_lttb" -> (b49Lttb _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "b55_linreg" ->
+  val registry: Seq[Q] = Seq(
+    Q("b55_linreg", b55Linreg,
       """WITH e AS (
            SELECT event_type, epoch_ns(ts) // 3600000000000 AS xs,
              CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS yc
@@ -371,10 +356,10 @@ object AnalyticsQueries5 {
              - CAST(sx AS DECIMAL(18,0)) * CAST(sx AS DECIMAL(19,0))
              AS DOUBLE) AS slope_den,
            CAST(sx AS DOUBLE) AS sum_x, CAST(sy AS DOUBLE) AS sum_y
-         FROM a ORDER BY event_type""",
+         FROM a ORDER BY event_type"""),
     // dense-vector mirror + the cosineSql fold (list_sum over
     // list_transform matches dotD's left-to-right accumulation)
-    "b54_series_similarity" -> {
+    Q("b54_series_similarity", b54SeriesSimilarity, {
       def dot(a: String, b: String) =
         s"list_sum(list_transform(generate_series(1, len($a)), i -> $a[i] * $b[i]))"
       def nrm(a: String) = s"sqrt(list_sum(list_transform($a, x -> x * x)))"
@@ -411,8 +396,8 @@ object AnalyticsQueries5 {
             FROM scored)
           SELECT query_id, rnk, corpus_id, cosine_sim FROM ranked
           WHERE rnk <= 5 ORDER BY query_id, rnk"""
-    },
-    "b53_grouping_sets" ->
+    }),
+    Q("b53_grouping_sets", b53GroupingSets,
       """SELECT
            coalesce(event_type, '<all>') AS event_type_g,
            coalesce(event_date, '<all>') AS event_date_g,
@@ -424,8 +409,8 @@ object AnalyticsQueries5 {
                  value
                FROM events)
          GROUP BY GROUPING SETS ((event_type, event_date), (event_date), ())
-         ORDER BY gid, event_type_g, event_date_g""",
-    "b52_weighted_quantiles" ->
+         ORDER BY gid, event_type_g, event_date_g"""),
+    Q("b52_weighted_quantiles", b52WeightedQuantiles,
       """WITH e AS (
            SELECT event_type, event_id, value,
              try_cast(json_extract_string(props, '$.k') AS BIGINT) AS w
@@ -444,8 +429,8 @@ object AnalyticsQueries5 {
              AS p90_weighted,
            min(CASE WHEN cumw > ((totw - 1) * 99) // 100 THEN value END)
              AS p99_weighted
-         FROM c GROUP BY event_type ORDER BY event_type""",
-    "b51_asof_next" ->
+         FROM c GROUP BY event_type ORDER BY event_type"""),
+    Q("b51_asof_next", b51AsofNext,
       """WITH p AS (
            SELECT event_id, user_id, epoch_us(ts) AS tu FROM events
            WHERE event_type = 'purchase'),
@@ -472,8 +457,8 @@ object AnalyticsQueries5 {
              AS next_click_id,
            coalesce(CASE WHEN nc_tu - tu <= 3600000000 THEN nc_value END,
              0.0) AS next_click_value
-         FROM w WHERE side = 0 ORDER BY event_id""",
-    "b50_avg_weighted" ->
+         FROM w WHERE side = 0 ORDER BY event_id"""),
+    Q("b50_avg_weighted", b50AvgWeighted,
       """WITH e AS (
            SELECT event_type,
              try_cast(json_extract_string(props, '$.k') AS BIGINT) AS w,
@@ -482,8 +467,8 @@ object AnalyticsQueries5 {
          SELECT event_type, count(w) AS n_weighted,
            CAST(sum(v * w) AS DOUBLE) AS num,
            CAST(sum(w) AS BIGINT) AS den
-         FROM e GROUP BY event_type ORDER BY event_type""",
-    "b45_versioned_collapse" ->
+         FROM e GROUP BY event_type ORDER BY event_type"""),
+    Q("b45_versioned_collapse", b45VersionedCollapse,
       """WITH st AS (
            SELECT user_id, ts, event_id, value,
              CAST(row_number() OVER (PARTITION BY user_id
@@ -512,8 +497,8 @@ object AnalyticsQueries5 {
            WHERE net.vnet > 0 AND w.sign = 1)
          SELECT user_id, ver AS cur_ver, event_id AS cur_event_id,
            epoch_ns(ts) // 1000000000 AS cur_ts_s, value AS cur_value
-         FROM live WHERE rk = 1 ORDER BY user_id""",
-    "b12c_window_funnel_increase" ->
+         FROM live WHERE rk = 1 ORDER BY user_id"""),
+    Q("b12c_window_funnel_increase", b12cWindowFunnelIncrease,
       """WITH e AS (
            SELECT user_id, epoch_ns(ts) // 3600000000000 AS th, event_type
            FROM events),
@@ -543,8 +528,8 @@ object AnalyticsQueries5 {
              CAST(max(h1) + max(h2) + max(h3) AS BIGINT) AS funnel_level
            FROM hits GROUP BY user_id)
          SELECT funnel_level, count(*) AS n_users
-         FROM lvl GROUP BY funnel_level ORDER BY funnel_level""",
-    "b46_sequence_next_node" ->
+         FROM lvl GROUP BY funnel_level ORDER BY funnel_level"""),
+    Q("b46_sequence_next_node", b46SequenceNextNode,
       """WITH o AS (
            SELECT user_id, event_type,
              lead(event_type) OVER (PARTITION BY user_id
@@ -559,16 +544,16 @@ object AnalyticsQueries5 {
            SELECT o.user_id, coalesce(o.nxt, '(end)') AS next_node
            FROM o JOIN f ON o.user_id = f.user_id AND o.rn = f.frn)
          SELECT next_node, count(*) AS n_users
-         FROM n GROUP BY next_node ORDER BY next_node""",
-    "b47_uniq_upto" ->
+         FROM n GROUP BY next_node ORDER BY next_node"""),
+    Q("b47_uniq_upto", b47UniqUpTo,
       """SELECT event_type, strftime(ts, '%Y-%m-%d') AS event_date,
            count(*) AS n_events,
            CAST(CASE WHEN count(DISTINCT user_id) <= 5
              THEN count(DISTINCT user_id) ELSE 6 END AS BIGINT)
              AS uniq_upto_5
          FROM events GROUP BY event_type, event_date
-         ORDER BY event_type, event_date""",
-    "b48_bounding_ratio" ->
+         ORDER BY event_type, event_date"""),
+    Q("b48_bounding_ratio", b48BoundingRatio,
       """WITH o AS (
            SELECT event_type, epoch_us(ts) AS tu,
              CAST(value AS DECIMAL(18,2)) AS v,
@@ -580,11 +565,11 @@ object AnalyticsQueries5 {
            CAST(max(CASE WHEN rn = n THEN v END)
              - max(CASE WHEN rn = 1 THEN v END) AS DOUBLE) AS delta_value,
            CAST(max(tu) - min(tu) AS BIGINT) AS delta_us
-         FROM o GROUP BY event_type ORDER BY event_type""",
+         FROM o GROUP BY event_type ORDER BY event_type"""),
     // mirror of Series.lttb: long sums, then the SAME double operation
     // tree for the area score — each op is one correctly-rounded IEEE
     // step over identical operands, so the argmax matches bit-for-bit
-    "b49_lttb" ->
+    Q("b49_lttb", b49Lttb,
       """WITH base AS (
            SELECT event_type, event_id, epoch_ms(ts) AS x,
              CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS y,
@@ -632,6 +617,6 @@ object AnalyticsQueries5 {
            FROM sc)
          SELECT event_type, CAST(bk AS BIGINT) AS bucket,
            c AS n_points, event_id AS pick_id, x AS x_ms, y AS y_units
-         FROM r WHERE pick = 1 ORDER BY event_type, bucket"""
+         FROM r WHERE pick = 1 ORDER BY event_type, bucket""")
   )
 }

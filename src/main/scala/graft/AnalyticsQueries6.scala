@@ -411,29 +411,8 @@ object AnalyticsQueries6 {
         Fns.sumExact(col("value"), 2).as("sum_sampled"))
       .orderBy(col("event_type"))
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "b73_sample" -> (b73Sample _),
-    "b72_sequence_match_time" -> (b72SequenceMatchTime _),
-    "b71_conversion_time" -> (b71ConversionTime _),
-    "b70_ohlc" -> (b70Ohlc _),
-    "b69_window_funnel_order" -> (b69WindowFunnelOrder _),
-    "b64_mwu_test" -> (b64MwuTest _),
-    "b65_minmax_map" -> (b65MinmaxMap _),
-    "b66_cramers_v" -> (b66CramersV _),
-    "b67_moments" -> (b67Moments _),
-    "b68_bit_agg" -> (b68BitAgg _),
-    "b56_entropy" -> (b56Entropy _),
-    "b57_exp_decay" -> (b57ExpDecay _),
-    "b58_ttest" -> (b58Ttest _),
-    "b59_topk_weighted" -> (b59TopkWeighted _),
-    "b60_equidepth_hist" -> (b60EquidepthHist _),
-    "b61_if_combinators" -> (b61IfCombinators _),
-    "b62_ks_test" -> (b62KsTest _),
-    "b63_corr_matrix" -> (b63CorrMatrix _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "b56_entropy" ->
+  val registry: Seq[Q] = Seq(
+    Q("b56_entropy", b56Entropy,
       """WITH c AS (
            SELECT strftime(ts, '%Y-%m-%d') AS event_date, event_type,
              count(*) AS c
@@ -442,8 +421,8 @@ object AnalyticsQueries6 {
            round(log2(CAST(sum(c) AS DOUBLE))
              - sum(CAST(c AS DOUBLE) * log2(CAST(c AS DOUBLE)))
                / CAST(sum(c) AS DOUBLE), 4) AS entropy_bits
-         FROM c GROUP BY event_date ORDER BY event_date""",
-    "b57_exp_decay" ->
+         FROM c GROUP BY event_date ORDER BY event_date"""),
+    Q("b57_exp_decay", b57ExpDecay,
       """WITH e AS (
            SELECT user_id, epoch_ns(ts) AS tns, value FROM events),
          m AS (SELECT user_id, max(tns) AS mx FROM e GROUP BY user_id)
@@ -452,8 +431,8 @@ object AnalyticsQueries6 {
            round(sum(value * exp(CAST(e.tns - m.mx AS DOUBLE)
              / 86400000000000.0)), 4) AS decayed_sum
          FROM e JOIN m ON e.user_id = m.user_id
-         GROUP BY e.user_id, m.mx ORDER BY e.user_id""",
-    "b58_ttest" ->
+         GROUP BY e.user_id, m.mx ORDER BY e.user_id"""),
+    Q("b58_ttest", b58Ttest,
       """WITH a AS (
            SELECT event_type,
              count(*) FILTER (WHERE user_id % 2 = 0) AS n_a,
@@ -469,8 +448,8 @@ object AnalyticsQueries6 {
              ((qa - n_a * (sa / n_a) * (sa / n_a)) / (n_a - 1)) / n_a
              + ((qb - n_b * (sb / n_b) * (sb / n_b)) / (n_b - 1)) / n_b),
              4) AS t_stat
-         FROM a ORDER BY event_type""",
-    "b59_topk_weighted" ->
+         FROM a ORDER BY event_type"""),
+    Q("b59_topk_weighted", b59TopkWeighted,
       """WITH rev AS (
            SELECT l_suppkey,
              CAST(sum(CAST(l_extendedprice * (1.0 - l_discount)
@@ -483,8 +462,8 @@ object AnalyticsQueries6 {
          FROM rev
          JOIN supplier ON l_suppkey = s_suppkey
          JOIN nation ON s_nationkey = n_nationkey
-         QUALIFY rk <= 5 ORDER BY nation, rk""",
-    "b60_equidepth_hist" ->
+         QUALIFY rk <= 5 ORDER BY nation, rk"""),
+    Q("b60_equidepth_hist", b60EquidepthHist,
       """WITH b AS (
            SELECT event_type, value,
              ntile(8) OVER (PARTITION BY event_type
@@ -492,8 +471,8 @@ object AnalyticsQueries6 {
            FROM events)
          SELECT event_type, bin, count(*) AS n,
            min(value) AS bin_lo, max(value) AS bin_hi
-         FROM b GROUP BY event_type, bin ORDER BY event_type, bin""",
-    "b61_if_combinators" ->
+         FROM b GROUP BY event_type, bin ORDER BY event_type, bin"""),
+    Q("b61_if_combinators", b61IfCombinators,
       """SELECT strftime(ts, '%Y-%m-%d') AS event_date,
            count(*) AS n_events,
            count(*) FILTER (WHERE event_type = 'purchase') AS n_purchases,
@@ -507,8 +486,8 @@ object AnalyticsQueries6 {
              ELSE 0.0 END AS avg_purchase,
            count(DISTINCT user_id) FILTER (WHERE event_type = 'signup')
              AS uniq_signup_users
-         FROM events GROUP BY 1 ORDER BY 1""",
-    "b62_ks_test" ->
+         FROM events GROUP BY 1 ORDER BY 1"""),
+    Q("b62_ks_test", b62KsTest,
       """WITH g AS (
            SELECT event_type, value,
              CAST(count(*) FILTER (WHERE user_id % 2 = 0) AS BIGINT) AS ca,
@@ -529,8 +508,8 @@ object AnalyticsQueries6 {
            max(abs(cuma * nb - cumb * na)) AS d_num,
            CAST(max(abs(cuma * nb - cumb * na)) AS DOUBLE)
              / CAST(max(na) * max(nb) AS DOUBLE) AS ks_d
-         FROM c GROUP BY event_type ORDER BY event_type""",
-    "b63_corr_matrix" ->
+         FROM c GROUP BY event_type ORDER BY event_type"""),
+    Q("b63_corr_matrix", b63CorrMatrix,
       """WITH daily AS (
            SELECT strftime(ts, '%Y-%m-%d') AS d, event_type,
              CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS v
@@ -550,8 +529,8 @@ object AnalyticsQueries6 {
              THEN round((n * sxy - sx * sy)
                / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 4)
              END AS corr
-         FROM a ORDER BY type_x, type_y""",
-    "b64_mwu_test" ->
+         FROM a ORDER BY type_x, type_y"""),
+    Q("b64_mwu_test", b64MwuTest,
       """WITH g AS (
            SELECT event_type, value,
              CAST(count(*) FILTER (WHERE user_id % 2 = 0) AS BIGINT) AS ca,
@@ -581,8 +560,8 @@ object AnalyticsQueries6 {
          SELECT event_type, n_a, n_b, u1,
            round((u1 - CAST(n_a AS DOUBLE) * n_b / 2.0) / sqrt(sig2), 4)
              AS z
-         FROM f ORDER BY event_type""",
-    "b73_sample" ->
+         FROM f ORDER BY event_type"""),
+    Q("b73_sample", b73Sample,
       """WITH s AS (
            SELECT * FROM events
            WHERE substr(md5(CAST(user_id AS VARCHAR)), 1, 8) < '19999999')
@@ -590,8 +569,8 @@ object AnalyticsQueries6 {
            count(*) * 10 AS est_total,
            count(DISTINCT user_id) AS n_users_sampled,
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_sampled
-         FROM s GROUP BY event_type ORDER BY event_type""",
-    "b72_sequence_match_time" ->
+         FROM s GROUP BY event_type ORDER BY event_type"""),
+    Q("b72_sequence_match_time", b72SequenceMatchTime,
       """WITH f AS (
            SELECT user_id, epoch_ns(ts) AS tn, event_id,
              CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END AS is1,
@@ -614,8 +593,8 @@ object AnalyticsQueries6 {
            FROM s GROUP BY user_id)
          SELECT matched, count(*) AS n_users,
            CAST(sum(n_matches) AS BIGINT) AS total_matches
-         FROM u GROUP BY matched ORDER BY matched""",
-    "b71_conversion_time" ->
+         FROM u GROUP BY matched ORDER BY matched"""),
+    Q("b71_conversion_time", b71ConversionTime,
       """WITH su AS (
            SELECT user_id,
              min(epoch_ns(ts)) FILTER (WHERE event_type = 'signup') AS s
@@ -640,8 +619,8 @@ object AnalyticsQueries6 {
          SELECT week, q_pct, cnt AS n_converted, delta_s AS q_delta_s
          FROM v CROSS JOIN (VALUES (CAST(50 AS BIGINT)), (90)) AS qs(q_pct)
          WHERE rn = ((cnt - 1) * q_pct) // 100 + 1
-         ORDER BY week, q_pct""",
-    "b70_ohlc" ->
+         ORDER BY week, q_pct"""),
+    Q("b70_ohlc", b70Ohlc,
       """WITH e AS (
            SELECT event_type, epoch_ns(ts) // 3600000000000 AS h,
              epoch_ns(ts) AS tn, event_id, value
@@ -658,8 +637,8 @@ object AnalyticsQueries6 {
            max(value) AS high, min(value) AS low,
            max(CASE WHEN rnd = 1 THEN value END) AS close,
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-         FROM r GROUP BY event_type, h ORDER BY event_type, h""",
-    "b69_window_funnel_order" ->
+         FROM r GROUP BY event_type, h ORDER BY event_type, h"""),
+    Q("b69_window_funnel_order", b69WindowFunnelOrder,
       """WITH f AS (
            SELECT user_id, epoch_ns(ts) AS tn, event_id,
              CASE WHEN event_type = 'signup' THEN 1 ELSE 0 END AS s0,
@@ -683,8 +662,8 @@ object AnalyticsQueries6 {
            FROM c GROUP BY user_id)
          SELECT CAST(funnel_level AS BIGINT) AS funnel_level,
            count(*) AS n_users
-         FROM u GROUP BY funnel_level ORDER BY funnel_level""",
-    "b68_bit_agg" ->
+         FROM u GROUP BY funnel_level ORDER BY funnel_level"""),
+    Q("b68_bit_agg", b68BitAgg,
       """WITH um AS (
            SELECT event_type, user_id,
              CAST(bit_or(CAST(1 AS BIGINT) << (isodow(ts) - 1)) AS BIGINT)
@@ -694,8 +673,8 @@ object AnalyticsQueries6 {
            CAST(bit_and(mask) AS BIGINT) AS mask_and,
            CAST(bit_or(mask) AS BIGINT) AS mask_or,
            CAST(bit_xor(mask) AS BIGINT) AS mask_xor
-         FROM um GROUP BY event_type ORDER BY event_type""",
-    "b66_cramers_v" ->
+         FROM um GROUP BY event_type ORDER BY event_type"""),
+    Q("b66_cramers_v", b66CramersV,
       """WITH cells AS (
            SELECT event_type, CAST(isodow(ts) - 1 AS BIGINT) AS dow,
              CAST(count(*) AS BIGINT) AS c
@@ -720,8 +699,8 @@ object AnalyticsQueries6 {
          SELECT n, k_types, k_dows, round(chi2, 4) AS chi2,
            round(sqrt(chi2 / (CAST(n AS DOUBLE)
              * (least(k_types, k_dows) - 1))), 4) AS cramers_v
-         FROM a""",
-    "b67_moments" ->
+         FROM a"""),
+    Q("b67_moments", b67Moments,
       """WITH a AS (
            SELECT event_type, count(*) AS n,
              sum(value) AS s1, sum(value * value) AS s2,
@@ -743,8 +722,8 @@ object AnalyticsQueries6 {
              AS skew_pop,
            CASE WHEN m2 > 0 THEN round(m4 / (m2 * m2) - 3.0, 4) END
              AS kurt_excess
-         FROM f ORDER BY event_type""",
-    "b65_minmax_map" ->
+         FROM f ORDER BY event_type"""),
+    Q("b65_minmax_map", b65MinmaxMap,
       """WITH kv AS (
            SELECT user_id, 'k' AS mkey,
              CAST(json_extract_string(props, '$.k') AS BIGINT) AS mval
@@ -753,6 +732,6 @@ object AnalyticsQueries6 {
            SELECT user_id, 't_' || event_type, 1 FROM events)
          SELECT user_id, mkey, count(*) AS n,
            min(mval) AS mval_min, max(mval) AS mval_max
-         FROM kv GROUP BY user_id, mkey ORDER BY user_id, mkey"""
+         FROM kv GROUP BY user_id, mkey ORDER BY user_id, mkey""")
   )
 }

@@ -693,31 +693,8 @@ object AnalyticsQueries7 {
       .orderBy(col("day"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "b92_stickiness" -> (b92Stickiness _),
-    "b91_concentration" -> (b91Concentration _),
-    "b107_gini" -> (b107Gini _),
-    "b90_top_paths" -> (b90TopPaths _),
-    "b88_type_affinity" -> (b88TypeAffinity _),
-    "b89_transition_matrix" -> (b89TransitionMatrix _),
-    "b87_funnel_rates" -> (b87FunnelRates _),
-    "b86_linreg_multi" -> (b86LinregMulti _),
-    "b85_gap_histogram" -> (b85GapHistogram _),
-    "b83_wow_growth" -> (b83WowGrowth _),
-    "b84_cohort_ltv" -> (b84CohortLtv _),
-    "b81_wilson_ci" -> (b81WilsonCi _),
-    "b82_anomaly" -> (b82Anomaly _),
-    "b80_rolling_uniq" -> (b80RollingUniq _),
-    "b74_rank_corr" -> (b74RankCorr _),
-    "b75_mad" -> (b75Mad _),
-    "b76_anova" -> (b76Anova _),
-    "b77_info_value" -> (b77InfoValue _),
-    "b78_theils_u" -> (b78TheilsU _),
-    "b79_array_funs" -> (b79ArrayFuns _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "b92_stickiness" ->
+  val registry: Seq[Q] = Seq(
+    Q("b92_stickiness", b92Stickiness,
       """WITH ud AS (
            SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),
          days AS (SELECT DISTINCT d FROM ud),
@@ -732,8 +709,8 @@ object AnalyticsQueries7 {
            FROM c JOIN days ON c.td = days.d GROUP BY td)
          SELECT strftime(td, '%Y-%m-%d') AS day, dau, wau, mau,
            dau * 1000000 // mau AS stickiness_ppm
-         FROM a ORDER BY day""",
-    "b107_gini" ->
+         FROM a ORDER BY day"""),
+    Q("b107_gini", b107Gini,
       """WITH pu AS (
            SELECT user_id,
              CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT)
@@ -750,8 +727,8 @@ object AnalyticsQueries7 {
          SELECT CAST(n AS BIGINT) AS n_users, CAST(t AS BIGINT) AS total_cents,
            CAST((2 * s - (CAST(n AS HUGEINT) + 1) * t) * 1000000
              // (CAST(n AS HUGEINT) * t) AS BIGINT) AS gini_ppm
-         FROM a""",
-    "b91_concentration" ->
+         FROM a"""),
+    Q("b91_concentration", b91Concentration,
       """WITH pu AS (
            SELECT user_id,
              CAST(sum(CAST(floor(value * 100) AS BIGINT)) AS BIGINT)
@@ -771,8 +748,8 @@ object AnalyticsQueries7 {
          SELECT top_pct, count(*) AS n_top_users, max(n_users) AS n_users,
            CAST(sum(cents) AS BIGINT) * 1000000 // max(total_cents)
              AS share_ppm
-         FROM x GROUP BY top_pct ORDER BY top_pct""",
-    "b90_top_paths" ->
+         FROM x GROUP BY top_pct ORDER BY top_pct"""),
+    Q("b90_top_paths", b90TopPaths,
       """WITH e AS (
            SELECT user_id, strftime(ts, '%Y-%m-%d') AS d, event_type,
              row_number() OVER (PARTITION BY user_id, strftime(ts, '%Y-%m-%d')
@@ -785,8 +762,8 @@ object AnalyticsQueries7 {
          c AS (
            SELECT path, count(*) AS n_sessions FROM p GROUP BY path)
          SELECT path, n_sessions FROM c
-         ORDER BY n_sessions DESC, path LIMIT 20""",
-    "b88_type_affinity" ->
+         ORDER BY n_sessions DESC, path LIMIT 20"""),
+    Q("b88_type_affinity", b88TypeAffinity,
       """WITH ud AS (
            SELECT DISTINCT user_id, strftime(ts, '%Y-%m-%d') AS d,
              event_type
@@ -816,8 +793,8 @@ object AnalyticsQueries7 {
          FROM pairs
          JOIN marg ma ON ta = ma.event_type
          JOIN marg mb ON tb = mb.event_type
-         ORDER BY type_a, type_b""",
-    "b89_transition_matrix" ->
+         ORDER BY type_a, type_b"""),
+    Q("b89_transition_matrix", b89TransitionMatrix,
       """WITH t AS (
            SELECT event_type AS from_type,
              lead(event_type) OVER (PARTITION BY user_id
@@ -831,8 +808,8 @@ object AnalyticsQueries7 {
              CAST(sum(n) OVER (PARTITION BY from_type) AS BIGINT) AS n_out
            FROM c)
          SELECT from_type, to_type, n, n * 1000000 // n_out AS share_ppm
-         FROM o ORDER BY from_type, to_type""",
-    "b87_funnel_rates" ->
+         FROM o ORDER BY from_type, to_type"""),
+    Q("b87_funnel_rates", b87FunnelRates,
       """WITH e AS (
            SELECT user_id, event_id, epoch_ns(ts) AS tn, event_type FROM events),
          w1 AS (
@@ -876,8 +853,8 @@ object AnalyticsQueries7 {
          SELECT step, n_reached,
            CASE WHEN base > 0 THEN n_reached * 1000000 // base END
              AS conv_ppm
-         FROM r ORDER BY step""",
-    "b86_linreg_multi" ->
+         FROM r ORDER BY step"""),
+    Q("b86_linreg_multi", b86LinregMulti,
       """WITH a AS (
            SELECT event_type, count(*) AS n,
              CAST(sum(hour(ts)) AS BIGINT) AS sx1,
@@ -915,8 +892,8 @@ object AnalyticsQueries7 {
              AS beta1,
            CASE WHEN abs(det) > 1e-9 THEN round(det2 / det, 4) END
              AS beta2
-         FROM f ORDER BY event_type""",
-    "b85_gap_histogram" ->
+         FROM f ORDER BY event_type"""),
+    Q("b85_gap_histogram", b85GapHistogram,
       """WITH g AS (
            SELECT event_type,
              (epoch_ns(ts) - lag(epoch_ns(ts)) OVER (PARTITION BY user_id
@@ -927,8 +904,8 @@ object AnalyticsQueries7 {
            CAST(len(CAST(gap_s AS VARCHAR)) AS BIGINT) AS gap_digits,
            count(*) AS n,
            min(gap_s) AS min_gap_s, max(gap_s) AS max_gap_s
-         FROM f GROUP BY 1, 2 ORDER BY event_type, gap_digits""",
-    "b83_wow_growth" ->
+         FROM f GROUP BY 1, 2 ORDER BY event_type, gap_digits"""),
+    Q("b83_wow_growth", b83WowGrowth,
       """WITH weekly AS (
            SELECT strftime(date_trunc('week', ts), '%Y-%m-%d') AS week,
              count(*) AS n,
@@ -941,8 +918,8 @@ object AnalyticsQueries7 {
          SELECT week, n, revenue,
            CASE WHEN prev > 0
              THEN round((revenue - prev) * 100.0 / prev, 4) END AS wow_pct
-         FROM l ORDER BY week""",
-    "b84_cohort_ltv" ->
+         FROM l ORDER BY week"""),
+    Q("b84_cohort_ltv", b84CohortLtv,
       """WITH f AS (
            SELECT user_id, min(epoch_ns(ts)) AS fts
            FROM events GROUP BY user_id),
@@ -965,8 +942,8 @@ object AnalyticsQueries7 {
              ORDER BY age_weeks
              ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 2)
              AS cum_revenue
-         FROM c ORDER BY cohort_week, age_weeks""",
-    "b81_wilson_ci" ->
+         FROM c ORDER BY cohort_week, age_weeks"""),
+    Q("b81_wilson_ci", b81WilsonCi,
       """WITH a AS (
            SELECT event_type, count(*) AS n,
              CAST(sum(CASE WHEN value > 100.0 THEN 1 ELSE 0 END)
@@ -985,8 +962,8 @@ object AnalyticsQueries7 {
              + 1.96 * sqrt(p * (1.0 - p) / nd
                  + 1.96 * 1.96 / (4.0 * nd * nd))
                / (1.0 + 1.96 * 1.96 / nd), 6) AS wilson_hi
-         FROM f ORDER BY event_type""",
-    "b82_anomaly" ->
+         FROM f ORDER BY event_type"""),
+    Q("b82_anomaly", b82Anomaly,
       """WITH daily AS (
            SELECT event_type, strftime(ts, '%Y-%m-%d') AS event_date,
              count(*) AS n
@@ -1013,8 +990,8 @@ object AnalyticsQueries7 {
            CASE WHEN k >= 3 AND v > 0
                AND abs((n - mu) / sqrt(v)) > 2.0
              THEN 1 ELSE 0 END AS is_anomaly
-         FROM f ORDER BY event_type, event_date""",
-    "b80_rolling_uniq" ->
+         FROM f ORDER BY event_type, event_date"""),
+    Q("b80_rolling_uniq", b80RollingUniq,
       """WITH ud AS (
            SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),
          days AS (SELECT DISTINCT d FROM ud),
@@ -1028,8 +1005,8 @@ object AnalyticsQueries7 {
              count(DISTINCT user_id) AS n_active_7d
            FROM c JOIN days ON c.td = days.d GROUP BY td)
          SELECT strftime(td, '%Y-%m-%d') AS day, n_active_1d, n_active_7d
-         FROM a ORDER BY day""",
-    "b74_rank_corr" ->
+         FROM a ORDER BY day"""),
+    Q("b74_rank_corr", b74RankCorr,
       """WITH r AS (
            SELECT event_type,
              2 * rank() OVER (PARTITION BY event_type ORDER BY value)
@@ -1050,8 +1027,8 @@ object AnalyticsQueries7 {
              THEN round((n * sxy - sx * sy)
                / sqrt((n * sxx - sx * sx) * (n * syy - sy * sy)), 4)
              END AS rho
-         FROM a ORDER BY event_type""",
-    "b75_mad" ->
+         FROM a ORDER BY event_type"""),
+    Q("b75_mad", b75Mad,
       """WITH v AS (
            SELECT event_type, event_id, value,
              row_number() OVER (PARTITION BY event_type
@@ -1070,8 +1047,8 @@ object AnalyticsQueries7 {
          SELECT d.event_type, med.n, med.median, d.dv AS mad
          FROM d JOIN med ON d.event_type = med.event_type
          WHERE d.rn = (d.cnt - 1) * 50 // 100 + 1
-         ORDER BY d.event_type""",
-    "b77_info_value" ->
+         ORDER BY d.event_type"""),
+    Q("b77_info_value", b77InfoValue,
       """WITH e AS (
            SELECT user_id,
              CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y,
@@ -1097,8 +1074,8 @@ object AnalyticsQueries7 {
              THEN (CAST(g AS DOUBLE) / gt - CAST(b AS DOUBLE) / bt)
                * ln((CAST(g AS DOUBLE) / gt) / (CAST(b AS DOUBLE) / bt))
              ELSE 0 END), 4) AS iv
-         FROM m GROUP BY feature ORDER BY feature""",
-    "b78_theils_u" ->
+         FROM m GROUP BY feature ORDER BY feature"""),
+    Q("b78_theils_u", b78TheilsU,
       """WITH cells AS (
            SELECT event_type, CAST(isodow(ts) - 1 AS BIGINT) AS dow,
              CAST(count(*) AS BIGINT) AS c
@@ -1131,8 +1108,8 @@ object AnalyticsQueries7 {
              / (ln(CAST(n AS DOUBLE)) - hc / n), 4) AS u_dow_given_type,
            round(chi2, 4) AS chi2,
            round(sqrt(chi2 / (chi2 + n)), 4) AS contingency_c
-         FROM a""",
-    "b79_array_funs" ->
+         FROM a"""),
+    Q("b79_array_funs", b79ArrayFuns,
       """WITH p AS (
            SELECT user_id, epoch_ns(ts) AS tn, event_id,
              CAST(floor(value * 100) AS BIGINT) AS cents
@@ -1154,8 +1131,8 @@ object AnalyticsQueries7 {
            string_agg(cum, ',' ORDER BY rn) AS cumsum_str,
            string_agg(cents, ',' ORDER BY srn)
              FILTER (WHERE prev IS NULL OR cents <> prev) AS compact_str
-         FROM o GROUP BY user_id ORDER BY user_id""",
-    "b76_anova" ->
+         FROM o GROUP BY user_id ORDER BY user_id"""),
+    Q("b76_anova", b76Anova,
       """WITH cells AS (
            SELECT strftime(ts, '%Y-%m-%d') AS event_date, event_type,
              count(*) AS n, sum(value) AS s, sum(value * value) AS q
@@ -1173,6 +1150,6 @@ object AnalyticsQueries7 {
            round(ssw, 2) AS ssw,
            CASE WHEN k >= 2 AND n > k AND ssw > 0
              THEN round((ssb / (k - 1)) / (ssw / (n - k)), 4) END AS f_stat
-         FROM f ORDER BY event_date"""
+         FROM f ORDER BY event_date""")
   )
 }

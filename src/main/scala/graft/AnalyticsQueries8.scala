@@ -538,25 +538,8 @@ object AnalyticsQueries8 {
       .orderBy(col("type_a"), col("type_b"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "b105_approx_mode" -> (b105ApproxMode _),
-    "b106_theta_diff" -> (b106ThetaDiff _),
-    "b104_auc" -> (b104Auc _),
-    "b103_new_vs_returning" -> (b103NewVsReturning _),
-    "b102_basket_lift" -> (b102BasketLift _),
-    "b101_ship_lag" -> (b101ShipLag _),
-    "b100_attribution" -> (b100Attribution _),
-    "b98_percentile_bands" -> (b98PercentileBands _),
-    "b99_cusum" -> (b99Cusum _),
-    "b93_growth_accounting" -> (b93GrowthAccounting _),
-    "b94_dow_profile" -> (b94DowProfile _),
-    "b95_lag_corr" -> (b95LagCorr _),
-    "b96_seasonal_naive" -> (b96SeasonalNaive _),
-    "b97_rfm" -> (b97Rfm _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "b104_auc" ->
+  val registry: Seq[Q] = Seq(
+    Q("b104_auc", b104Auc,
       """WITH o AS (
            SELECT o_custkey,
              CAST(round(o_totalprice * 100) AS BIGINT) AS score_cents,
@@ -582,8 +565,8 @@ object AnalyticsQueries8 {
            FROM r GROUP BY 1)
          SELECT c_mktsegment, p AS n_pos, nn AS n_neg,
            (s2 - p * (p + 1)) * 1000000 // (2 * p * nn) AS auc_ppm
-         FROM a ORDER BY c_mktsegment""",
-    "b103_new_vs_returning" ->
+         FROM a ORDER BY c_mktsegment"""),
+    Q("b103_new_vs_returning", b103NewVsReturning,
       """WITH e AS (
            SELECT user_id, epoch_ns(ts) // 86400000000000 AS day,
              event_type, CAST(round(value * 100) AS BIGINT) AS cents
@@ -604,8 +587,8 @@ object AnalyticsQueries8 {
            seg, CAST(sum(n) AS BIGINT) AS n_purchases,
            CAST(sum(pc) AS BIGINT) AS revenue_cents,
            count(*) AS n_users
-         FROM j GROUP BY 1, 2 ORDER BY day, seg""",
-    "b102_basket_lift" ->
+         FROM j GROUP BY 1, 2 ORDER BY day, seg"""),
+    Q("b102_basket_lift", b102BasketLift,
       """WITH op AS (
            SELECT DISTINCT l_orderkey AS o, l_partkey AS p FROM lineitem),
          n AS (SELECT count(DISTINCT o) AS n_orders FROM op),
@@ -623,8 +606,8 @@ object AnalyticsQueries8 {
            JOIN m mb ON mb.p = pr.pb
            WHERE n_ab >= 2)
          SELECT pa, pb, n_ab, lift_ppm FROM l
-         ORDER BY lift_ppm DESC, pa, pb LIMIT 100""",
-    "b101_ship_lag" ->
+         ORDER BY lift_ppm DESC, pa, pb LIMIT 100"""),
+    Q("b101_ship_lag", b101ShipLag,
       """WITH j AS (
            SELECT strftime(o_orderdate, '%Y-%m') AS order_month,
              CAST(date_diff('day', CAST(o_orderdate AS DATE),
@@ -641,8 +624,8 @@ object AnalyticsQueries8 {
            round(p[1], 1) AS p50_days, round(p[2], 1) AS p90_days,
            round(CAST(sl AS DOUBLE) / n_lines, 4) AS mean_days,
            late * 1000000 // n_lines AS late_ppm
-         FROM g ORDER BY order_month""",
-    "b100_attribution" ->
+         FROM g ORDER BY order_month"""),
+    Q("b100_attribution", b100Attribution,
       """WITH a AS (
            SELECT event_type, value,
              last_value(CASE WHEN event_type <> 'purchase'
@@ -661,8 +644,8 @@ object AnalyticsQueries8 {
          SELECT attributed_type, n_purchases, revenue_cents,
            revenue_cents * 1000000 //
              CAST((SELECT sum(revenue_cents) FROM g) AS BIGINT) AS share_ppm
-         FROM g ORDER BY attributed_type""",
-    "b98_percentile_bands" ->
+         FROM g ORDER BY attributed_type"""),
+    Q("b98_percentile_bands", b98PercentileBands,
       """WITH e AS (
            SELECT event_type, strftime(ts, '%Y-%m-%d') AS event_date,
              CAST(round(value * 100) AS BIGINT) AS cents
@@ -675,8 +658,8 @@ object AnalyticsQueries8 {
            round(p[1] / 100, 4) AS p50,
            round(p[2] / 100, 4) AS p90,
            round(p[3] / 100, 4) AS p99
-         FROM g ORDER BY event_type, event_date""",
-    "b99_cusum" ->
+         FROM g ORDER BY event_type, event_date"""),
+    Q("b99_cusum", b99Cusum,
       """WITH daily AS (
            SELECT event_type, epoch_ns(ts) // 86400000000000 AS day,
              count(*) AS n
@@ -707,8 +690,8 @@ object AnalyticsQueries8 {
            strftime(make_timestamp(day * 86400 * 1000000), '%Y-%m-%d') AS day,
            n, round(cusum_mu / 1e6, 4) AS cusum,
            CAST(cusum_mu > h_mu AS BIGINT) AS is_changepoint
-         FROM m ORDER BY event_type, day""",
-    "b96_seasonal_naive" ->
+         FROM m ORDER BY event_type, day"""),
+    Q("b96_seasonal_naive", b96SeasonalNaive,
       """WITH daily AS (
            SELECT event_type, epoch_ns(ts) // 86400000000000 AS day,
              count(*) AS n
@@ -725,8 +708,8 @@ object AnalyticsQueries8 {
          SELECT event_type, n_days, sum_abs_err,
            round(CAST(sum_abs_err AS DOUBLE) / n_days, 4) AS mae,
            sum_abs_err * 1000000 // sum_actual AS wmape_ppm
-         FROM g ORDER BY event_type""",
-    "b97_rfm" ->
+         FROM g ORDER BY event_type"""),
+    Q("b97_rfm", b97Rfm,
       """WITH cust AS (
            SELECT o_custkey, max(o_orderdate) AS last_order,
              count(*) AS frequency,
@@ -757,8 +740,8 @@ object AnalyticsQueries8 {
            FROM rfm, b)
          SELECT r_seg, f_seg, m_seg, count(*) AS n_customers,
            CAST(sum(monetary_cents) AS BIGINT) AS sum_monetary_cents
-         FROM seg GROUP BY 1, 2, 3 ORDER BY 1, 2, 3""",
-    "b94_dow_profile" ->
+         FROM seg GROUP BY 1, 2, 3 ORDER BY 1, 2, 3"""),
+    Q("b94_dow_profile", b94DowProfile,
       """WITH cells AS (
            SELECT (epoch_ns(ts) // 86400000000000 + 4) % 7 AS dow,
              (epoch_ns(ts) // 3600000000000) % 24 AS hour,
@@ -768,8 +751,8 @@ object AnalyticsQueries8 {
          SELECT dow, hour, n_events,
            CAST(n_events * 1000000 // CAST((SELECT sum(n_events) FROM cells) AS BIGINT) AS BIGINT) AS share_ppm,
            round(CAST(sv AS DOUBLE) / n_events, 4) AS mean_value
-         FROM cells ORDER BY dow, hour""",
-    "b95_lag_corr" ->
+         FROM cells ORDER BY dow, hour"""),
+    Q("b95_lag_corr", b95LagCorr,
       """WITH daily AS (
            SELECT epoch_ns(ts) // 86400000000000 AS day, event_type,
              count(*) AS n
@@ -791,8 +774,8 @@ object AnalyticsQueries8 {
            round(CAST(n * sab - sa * sb AS DOUBLE) /
              (sqrt(CAST(n * saa - sa * sa AS DOUBLE)) *
               sqrt(CAST(n * sbb - sb * sb AS DOUBLE))), 6) AS corr
-         FROM g ORDER BY lag""",
-    "b93_growth_accounting" ->
+         FROM g ORDER BY lag"""),
+    Q("b93_growth_accounting", b93GrowthAccounting,
       """WITH ud AS (
            SELECT DISTINCT CAST(ts AS DATE) AS d, user_id FROM events),
          cl AS (
@@ -820,17 +803,17 @@ object AnalyticsQueries8 {
            n_new, n_retained, n_resurrected, dau,
            CASE WHEN prev_dau IS NOT NULL AND date_diff('day', prev_d, d) = 1
              THEN prev_dau - n_retained END AS n_churned
-         FROM lagged ORDER BY day""",
+         FROM lagged ORDER BY day"""),
     // b105: the estimate is engine-specific; the driver checks the exact
     // counts plus the in-query rule-fired and ε flags (literal-true here).
-    "b105_approx_mode" ->
+    Q("b105_approx_mode", b105ApproxMode,
       """SELECT event_type, count(DISTINCT user_id) AS n_users_exact,
            CAST(1 AS BIGINT) AS rewrite_fired,
            CAST(1 AS BIGINT) AS within_eps
-         FROM events GROUP BY event_type ORDER BY event_type""",
+         FROM events GROUP BY event_type ORDER BY event_type"""),
     // b106: DuckDB ships no theta sketch; the driver checks the exact
     // audience algebra plus the in-query ε flag (literal-true here).
-    "b106_theta_diff" ->
+    Q("b106_theta_diff", b106ThetaDiff,
       """WITH du AS (SELECT DISTINCT event_type, user_id FROM events),
          n AS (SELECT event_type, count(*) AS n FROM du GROUP BY event_type),
          i AS (SELECT x.event_type AS ta, y.event_type AS tb,
@@ -845,6 +828,6 @@ object AnalyticsQueries8 {
            CAST(1 AS BIGINT) AS within_eps
          FROM n a JOIN n b ON a.event_type <> b.event_type
          LEFT JOIN i ON i.ta = a.event_type AND i.tb = b.event_type
-         ORDER BY type_a, type_b"""
+         ORDER BY type_a, type_b""")
   )
 }

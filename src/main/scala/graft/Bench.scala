@@ -57,16 +57,13 @@ object Bench {
     }.sortBy(_._2).map(_._1)
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val only = SparkEntry.only() // checked before the session starts
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(s"local[$cpus]")
       .config("spark.ui.enabled", "false")
       .config(GraftSession.confOverrides())
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // Optional comma-separated query filter for local iteration
-    // (SPARK_GRAFT_ONLY=c13_sample,c2_dedup_minhash); unset = full suite.
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // Untimed warmup: absorb one-time JVM/codegen/parquet-reader init
     // (otherwise it all lands on whichever query happens to run first).
     // Caching queries are fair game now that the cache is cleared

@@ -8,6 +8,23 @@ import graft.functions.Fns
 import graft.operators._
 import graft.sources.{JdbcEventSink, Tables}
 
+/** One query: its name, its Spark body over an sf dir, and the DuckDB
+  * SQL its result must match. The oracle is a required field, so a query
+  * cannot be registered without one. */
+final case class Q(name: String, run: (SparkSession, String) => DataFrame,
+                   oracle: String)
+
+object Q {
+  /** `entries` as given, or a failure naming every repeated name (a
+    * `Map` built from them would silently keep only the last). */
+  def distinctNames(entries: Seq[Q]): Seq[Q] = {
+    val dups = entries.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    require(dups.isEmpty,
+      s"query registry: duplicate name(s) ${dups.toSeq.sorted.mkString(", ")}")
+    entries
+  }
+}
+
 /** Driver contract — see /root/repo/SURVEY.md §2 for the inventory.
   *
   * Every query reads from the given sf dir, aliases every computed
@@ -861,50 +878,46 @@ object SparkEntry {
 
   // ---------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "a1_ingest" -> (a1Ingest _),
-    "a2_route_counts" -> (a2RouteCounts _),
-    "a3_flatten_records" -> (a3FlattenRecords _),
-    "a4_flatten_arrays" -> (a4FlattenArrays _),
-    "a5_infer_types" -> (a5InferTypes _),
-    "a6_schema_evolution" -> (a6SchemaEvolution _),
-    "a7_metadata_cols" -> (a7Metadata _),
-    "a8_transform_hook" -> (a8TransformHook _),
-    "a9_bulk_sink" -> (a9BulkBatches _),
-    "a10_dlq_retry" -> (a10Dlq _),
-    "a11_pipeline_e2e" -> (a11PipelineE2e _),
-    "a12_dlq_replay" -> (a12DlqReplay _),
-    "a13_legacy_normalize" -> (a13LegacyNormalize _),
-    "a14_compaction_e2e" -> (a14CompactionE2e _),
-    "a19_stream_compact" -> (a19StreamCompact _),
-    "a15_jdbc_evolve" -> (a15JdbcEvolve _),
-    "a15b_jdbc_evolve_net" -> (a15bJdbcEvolveNet _),
-    "a16_broker_roundtrip" -> (a16BrokerRoundtrip _),
-    "a17_warehouse_roundtrip" -> (a17WarehouseRoundtrip _),
-    "a18_retry_roundtrip" -> (a18RetryRoundtrip _),
-    "b1_pricing_summary" -> (b1Pricing _),
-    "b8_daily_rollup" -> (b8DailyRollup _),
-    "b23_stream_sessions" -> (b23StreamSessions _),
-    "b33_streaming_rollup" -> (b33StreamingRollup _)
-  ) ++ AnalyticsQueries.queries ++ AnalyticsQueries2.queries ++
-    AnalyticsQueries3.queries ++ AnalyticsQueries4.queries ++
-    AnalyticsQueries5.queries ++ AnalyticsQueries6.queries ++
-    AnalyticsQueries7.queries ++ AnalyticsQueries8.queries ++
-    TrainingQueries.queries ++
-    TrainingQueries2.queries ++ TrainingQueries3.queries ++
-    TrainingQueries4.queries ++ TrainingQueries5.queries ++
-    TrainingQueries6.queries ++ TrainingQueries7.queries ++
-    TrainingQueries8.queries
+  /** Every query with its oracle: SparkEntry's own entries, then each
+    * family's. Lazy, so object initialisation cannot form a cycle with
+    * the families (their bodies call `stageSliceFiles`). */
+  lazy val registry: Seq[Q] = Q.distinctNames(Seq(own,
+    AnalyticsQueries.registry, AnalyticsQueries2.registry,
+    AnalyticsQueries3.registry, AnalyticsQueries4.registry,
+    AnalyticsQueries5.registry, AnalyticsQueries6.registry,
+    AnalyticsQueries7.registry, AnalyticsQueries8.registry,
+    TrainingQueries.registry, TrainingQueries2.registry,
+    TrainingQueries3.registry, TrainingQueries4.registry,
+    TrainingQueries5.registry, TrainingQueries6.registry,
+    TrainingQueries7.registry, TrainingQueries8.registry).flatten)
 
-  def oracleSql: Map[String, String] = Map(
-    "a1_ingest" ->
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map(q => q.name -> q.run).toMap
+  lazy val oracleSql: Map[String, String] =
+    registry.map(q => q.name -> q.oracle).toMap
+
+  /** The query filter for local iteration: `SPARK_GRAFT_ONLY`, comma-
+    * separated registry names (`c13_sample,c2_dedup_minhash`); unset
+    * runs every query. An empty or unknown name fails startup, naming
+    * it, so a typo cannot quietly run fewer queries. */
+  def only(spec: Option[String] = sys.env.get("SPARK_GRAFT_ONLY"))
+      : Option[Set[String]] = spec.map { s =>
+    val names = s.split(",", -1).map(_.trim).toSeq
+    val bad = names.filterNot(queries.contains)
+    require(bad.isEmpty, "SPARK_GRAFT_ONLY: unknown query name(s) " +
+      bad.map(n => s"'$n'").mkString(", "))
+    names.toSet
+  }
+
+  private def own: Seq[Q] = Seq(
+    Q("a1_ingest", a1Ingest,
       """SELECT event_id, event_type, user_id, value,
          strftime(ts, '%Y-%m-%d') AS event_date,
          try_cast(json_extract_string(props, '$.k') AS BIGINT) AS props_k
          FROM events
          WHERE event_type IS NOT NULL AND len(event_type) > 0
-         ORDER BY event_id""",
-    "a2_route_counts" ->
+         ORDER BY event_id"""),
+    Q("a2_route_counts", a2RouteCounts,
       """SELECT event_type,
          count(*) AS n_events,
          count(DISTINCT user_id) AS n_users,
@@ -912,30 +925,30 @@ object SparkEntry {
          max(event_id) AS last_event_id
          FROM events
          WHERE event_type IS NOT NULL AND len(event_type) > 0
-         GROUP BY event_type ORDER BY event_type""",
-    "a3_flatten_records" ->
+         GROUP BY event_type ORDER BY event_type"""),
+    Q("a3_flatten_records", a3FlattenRecords,
       """SELECT event_id, event_type AS kind, props AS raw_props,
          user_id AS user_info_id, value AS user_info_score
-         FROM events ORDER BY event_id""",
-    "a4_flatten_arrays" ->
+         FROM events ORDER BY event_id"""),
+    Q("a4_flatten_arrays", a4FlattenArrays,
       """SELECT event_id,
          event_type AS tags_0, CAST(event_id AS VARCHAR) AS tags_1,
          value AS vals_0, value * 2 AS vals_1
-         FROM events ORDER BY event_id""",
-    "a5_infer_types" -> inferTypesOracle,
-    "a6_schema_evolution" -> schemaEvolutionOracle,
-    "a16_broker_roundtrip" ->
+         FROM events ORDER BY event_id"""),
+    Q("a5_infer_types", a5InferTypes, inferTypesOracle),
+    Q("a6_schema_evolution", a6SchemaEvolution, schemaEvolutionOracle),
+    Q("a16_broker_roundtrip", a16BrokerRoundtrip,
       """SELECT event_type, count(*) AS n_events,
            count(DISTINCT user_id) AS n_users,
            min(event_id) AS first_id, max(event_id) AS last_id
          FROM events
          WHERE event_id % 13 = 0 AND event_type IS NOT NULL
            AND len(event_type) > 0
-         GROUP BY event_type ORDER BY event_type""",
+         GROUP BY event_type ORDER BY event_type"""),
     // b33: the streaming summing view must equal the direct rollup —
     // through 3 parts per key AND a whole-stream replay (batch_id
     // dedup); n_parts pins real multi-part maintenance
-    "b33_streaming_rollup" ->
+    Q("b33_streaming_rollup", b33StreamingRollup,
       """SELECT event_type,
            epoch_ns(ts) // 86400000000000 AS day,
            count(*) AS n_rows,
@@ -943,10 +956,10 @@ object SparkEntry {
            count(DISTINCT event_id % 3) AS n_parts
          FROM events
          WHERE event_type IS NOT NULL AND len(event_type) > 0
-         GROUP BY 1, 2 ORDER BY event_type, day""",
+         GROUP BY 1, 2 ORDER BY event_type, day"""),
     // b23: streaming session_window vs the gaps-and-islands fold —
     // new session strictly past the 30-min gap, boundary-touch merges
-    "b23_stream_sessions" ->
+    Q("b23_stream_sessions", b23StreamSessions,
       """WITH ev AS (
            SELECT user_id, event_id, epoch_ns(ts) AS tsn, value
            FROM events WHERE event_id % 7 = 0),
@@ -965,12 +978,12 @@ object SparkEntry {
            count(*) AS n_events,
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
          FROM s GROUP BY user_id, sid
-         ORDER BY user_id, session_start_s""",
+         ORDER BY user_id, session_start_s"""),
     // a17: the whole warehouse loop — broker write-sink + DSv2 read +
     // flatten + JDBC evolve (CREATE / ADD COLUMN / widen) — replayed
     // on a 1-in-11 slice; the oracle is the slice's expected final
     // warehouse contents
-    "a17_warehouse_roundtrip" ->
+    Q("a17_warehouse_roundtrip", a17WarehouseRoundtrip,
       """WITH ev AS (
            SELECT event_id, user_id, event_type, value,
              try_cast(json_extract_string(props, '$.k') AS BIGINT) AS k
@@ -987,18 +1000,18 @@ object SparkEntry {
                 ELSE CAST(k AS VARCHAR) END AS k,
            CASE WHEN event_id > (SELECT half FROM h)
              THEN event_id % 7 END AS v
-         FROM ev ORDER BY event_id""",
+         FROM ev ORDER BY event_id"""),
     // a18: the retry loop — every slice row arrives exactly once,
     // poisoned rows (and natively type-less ones) under 'recovered'
-    "a18_retry_roundtrip" ->
+    Q("a18_retry_roundtrip", a18RetryRoundtrip,
       """SELECT event_id,
            CASE WHEN event_id % 3 = 0 OR event_type IS NULL
                   OR len(event_type) = 0
              THEN 'recovered' ELSE event_type END AS event_type,
            user_id, value
          FROM events WHERE event_id % 31 = 0
-         ORDER BY event_id""",
-    "a15_jdbc_evolve" ->
+         ORDER BY event_id"""),
+    Q("a15_jdbc_evolve", a15JdbcEvolve,
       """WITH ev AS (
            SELECT event_id, value,
              try_cast(json_extract_string(props, '$.k') AS BIGINT) AS k
@@ -1011,9 +1024,9 @@ object SparkEntry {
              AS amount_cents,
            CASE WHEN event_id <= (SELECT half FROM h) THEN NULL
              ELSE CAST(value > 100 AS VARCHAR) END AS new_flag
-         FROM ev ORDER BY event_id""",
+         FROM ev ORDER BY event_id"""),
     // a15b: identical evolve semantics over the wire (1-in-19 slice)
-    "a15b_jdbc_evolve_net" ->
+    Q("a15b_jdbc_evolve_net", a15bJdbcEvolveNet,
       """WITH ev AS (
            SELECT event_id, value,
              try_cast(json_extract_string(props, '$.k') AS BIGINT) AS k
@@ -1026,19 +1039,19 @@ object SparkEntry {
              AS amount_cents,
            CASE WHEN event_id <= (SELECT half FROM h) THEN NULL
              ELSE CAST(value > 100 AS VARCHAR) END AS new_flag
-         FROM ev ORDER BY event_id""",
-    "a7_metadata_cols" ->
+         FROM ev ORDER BY event_id"""),
+    Q("a7_metadata_cols", a7Metadata,
       """SELECT event_id,
          CAST(floor(epoch(ts)) AS BIGINT) AS received_at_s,
          '2026-01-01 00:00:00' AS sent_at_s,
          md5(concat(event_type, '#', CAST(event_id AS VARCHAR))) AS message_id
-         FROM events ORDER BY event_id""",
-    "a8_transform_hook" ->
+         FROM events ORDER BY event_id"""),
+    Q("a8_transform_hook", a8TransformHook,
       """SELECT event_id,
          CAST(floor(epoch(ts)) AS BIGINT) AS received_at,
          CAST(floor(epoch(ts)) AS BIGINT) AS transform_ts
-         FROM events ORDER BY event_id""",
-    "a9_bulk_sink" ->
+         FROM events ORDER BY event_id"""),
+    Q("a9_bulk_sink", a9BulkBatches,
       """WITH numbered AS (
            SELECT event_type, event_id,
              (row_number() OVER (PARTITION BY event_type ORDER BY ts, event_id) - 1) // 500
@@ -1047,13 +1060,13 @@ object SparkEntry {
          SELECT event_type, batch_id, count(*) AS n_rows,
            min(event_id) AS first_event_id, max(event_id) AS last_event_id
          FROM numbered GROUP BY event_type, batch_id
-         ORDER BY event_type, batch_id""",
-    "a10_dlq_retry" ->
+         ORDER BY event_type, batch_id"""),
+    Q("a10_dlq_retry", a10Dlq,
       """SELECT event_type, count(*) AS n_valid, 0 AS n_dlq
          FROM events
          WHERE event_type IS NOT NULL AND len(event_type) > 0
-         GROUP BY event_type ORDER BY event_type""",
-    "a13_legacy_normalize" ->
+         GROUP BY event_type ORDER BY event_type"""),
+    Q("a13_legacy_normalize", a13LegacyNormalize,
       """SELECT event_id,
            CASE WHEN event_id % 13 = 0
              THEN (epoch_us(ts) // 1000000) * 1000000
@@ -1063,14 +1076,14 @@ object SparkEntry {
              ELSE epoch_us(ts) END AS received_at_us,
            CAST(CASE WHEN event_id % 13 = 0 THEN 1 ELSE 0 END AS BIGINT)
              AS is_from_legacy
-         FROM events ORDER BY event_id""",
-    "a14_compaction_e2e" ->
+         FROM events ORDER BY event_id"""),
+    Q("a14_compaction_e2e", a14CompactionE2e,
       """SELECT event_type, count(*) AS n_rows,
            count(DISTINCT event_id) AS n_event_ids,
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
            CAST(1 AS INT) AS files_reduced
-         FROM events GROUP BY event_type ORDER BY event_type""",
-    "a19_stream_compact" ->
+         FROM events GROUP BY event_type ORDER BY event_type"""),
+    Q("a19_stream_compact", a19StreamCompact,
       """SELECT event_type, count(*) AS n_rows,
            count(DISTINCT event_id) AS n_event_ids,
            CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
@@ -1079,8 +1092,8 @@ object SparkEntry {
          FROM events
          WHERE event_id % 19 = 0
            AND event_type IS NOT NULL AND len(event_type) > 0
-         GROUP BY event_type ORDER BY event_type""",
-    "a12_dlq_replay" ->
+         GROUP BY event_type ORDER BY event_type"""),
+    Q("a12_dlq_replay", a12DlqReplay,
       """WITH ev AS (
            SELECT event_id,
              CASE WHEN event_id % 17 = 0 THEN '' ELSE event_type END AS event_type,
@@ -1109,14 +1122,14 @@ object SparkEntry {
                 WHEN rec_at IS NOT NULL AND rec_at <= 5 THEN 'recovered'
                 WHEN coalesce(event_type, '') = '' THEN 'dropped_non_critical'
                 ELSE 'parked' END AS disposition
-         FROM x ORDER BY event_id, attempt""",
-    "a11_pipeline_e2e" ->
+         FROM x ORDER BY event_id, attempt"""),
+    Q("a11_pipeline_e2e", a11PipelineE2e,
       """SELECT event_type, count(*) AS n_rows,
          count(DISTINCT md5(concat(event_type, '#', CAST(event_id AS VARCHAR)))) AS n_message_ids
          FROM events
          WHERE event_type IS NOT NULL AND len(event_type) > 0
-         GROUP BY event_type ORDER BY event_type""",
-    "b1_pricing_summary" ->
+         GROUP BY event_type ORDER BY event_type"""),
+    Q("b1_pricing_summary", b1Pricing,
       """SELECT l_returnflag, l_linestatus,
          CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
          CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
@@ -1125,23 +1138,15 @@ object SparkEntry {
          FROM lineitem
          WHERE l_shipdate <= TIMESTAMP '1998-09-02'
          GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-    "b8_daily_rollup" ->
+         ORDER BY l_returnflag, l_linestatus"""),
+    Q("b8_daily_rollup", b8DailyRollup,
       """SELECT event_type, strftime(ts, '%Y-%m-%d') AS event_date,
          count(*) AS n_events,
          CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value,
          count(DISTINCT user_id) AS n_users
          FROM events GROUP BY event_type, strftime(ts, '%Y-%m-%d')
-         ORDER BY event_type, event_date"""
-  ) ++ AnalyticsQueries.oracleSql ++ AnalyticsQueries2.oracleSql ++
-    AnalyticsQueries3.oracleSql ++ AnalyticsQueries4.oracleSql ++
-    AnalyticsQueries5.oracleSql ++ AnalyticsQueries6.oracleSql ++
-    AnalyticsQueries7.oracleSql ++ AnalyticsQueries8.oracleSql ++
-    TrainingQueries.oracleSql ++
-    TrainingQueries2.oracleSql ++ TrainingQueries3.oracleSql ++
-    TrainingQueries4.oracleSql ++ TrainingQueries5.oracleSql ++
-    TrainingQueries6.oracleSql ++ TrainingQueries7.oracleSql ++
-    TrainingQueries8.oracleSql
+         ORDER BY event_type, event_date""")
+  )
 
   /** DuckDB mirror of ChTypes.inferFromStrings over the same 5 keys. */
   private def inferTypesOracle: String = {

@@ -560,32 +560,6 @@ object TrainingQueries {
 
   // ------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c1_dedup_exact" -> (c1DedupExact _),
-    "c2_dedup_minhash" -> (c2DedupMinhash _),
-    "c3_dedup_simhash" -> (c3DedupSimhash _),
-    "c4_ngram_jaccard" -> (c4NgramJaccard _),
-    "c5_embed_neardup" -> (c5EmbedNeardup _),
-    "c6_ann_topk" -> (c6AnnTopK _),
-    "c7_ann_lsh" -> (c7AnnLsh _),
-    "c7b_ann_ivf" -> (c7bAnnIvf _),
-    "c7c_ann_ivf_trained" -> (c7cAnnIvfTrained _),
-    "c89_ann_int8" -> (c89AnnInt8 _),
-    "c65_ann_recall" -> (c65AnnRecall _),
-    "c65b_ann_recall_planted" -> (c65bAnnRecallPlanted _),
-    "c104_served_ann" -> (c104ServedAnn _),
-    "c106_index_append" -> (c106IndexAppend _),
-    "c8_lang_id" -> (c8LangId _),
-    "c9_quality" -> (c9Quality _),
-    "c10_token_count" -> (c10TokenCount _),
-    "c11_fingerprint" -> (c11Fingerprint _),
-    "c12_multimodal" -> (c12Multimodal _),
-    "c105_png_pixels" -> (c105PngPixels _),
-    "c13_sample" -> (c13Sample _),
-    "c19_dup_clusters" -> (c19DupClusters _),
-    "c26_line_dedup" -> (c26LineDedup _)
-  )
-
   // ------------------------------------------------------------------
   // Oracles
   // ------------------------------------------------------------------
@@ -1311,41 +1285,41 @@ object TrainingQueries {
            AS pixel_sq_sum
        FROM q ORDER BY media_id"""
 
-  def oracleSql: Map[String, String] = Map(
-    "c1_dedup_exact" ->
+  val registry: Seq[Q] = Seq(
+    Q("c1_dedup_exact", c1DedupExact,
       s"""WITH $exactCorpusSql
           SELECT md5($normTextSql) AS fp_md5,
             min(doc_id) AS keep_id, count(*) AS n_docs
-          FROM corpus GROUP BY fp_md5 ORDER BY fp_md5""",
-    "c2_dedup_minhash" -> c2OracleSql,
-    "c3_dedup_simhash" -> c3OracleSql,
-    "c4_ngram_jaccard" -> c4OracleSql,
-    "c5_embed_neardup" -> c5OracleSql,
-    "c6_ann_topk" -> c6OracleSql,
-    "c7_ann_lsh" -> c7OracleSql,
-    "c7b_ann_ivf" -> c7bOracleSql,
-    "c7c_ann_ivf_trained" -> c7cOracleSql,
-    "c89_ann_int8" -> c89OracleSql,
-    "c65_ann_recall" -> c65OracleSql,
-    "c65b_ann_recall_planted" -> c65bOracleSql,
-    "c104_served_ann" -> c104OracleSql,
-    "c106_index_append" -> c106OracleSql,
-    "c8_lang_id" -> c8OracleSql,
-    "c9_quality" -> c9OracleSql,
-    "c10_token_count" -> c10OracleSql,
-    "c11_fingerprint" -> c11OracleSql,
-    "c12_multimodal" -> c12OracleSql,
-    "c105_png_pixels" -> c105OracleSql,
-    "c13_sample" ->
+          FROM corpus GROUP BY fp_md5 ORDER BY fp_md5"""),
+    Q("c2_dedup_minhash", c2DedupMinhash, c2OracleSql),
+    Q("c3_dedup_simhash", c3DedupSimhash, c3OracleSql),
+    Q("c4_ngram_jaccard", c4NgramJaccard, c4OracleSql),
+    Q("c5_embed_neardup", c5EmbedNeardup, c5OracleSql),
+    Q("c6_ann_topk", c6AnnTopK, c6OracleSql),
+    Q("c7_ann_lsh", c7AnnLsh, c7OracleSql),
+    Q("c7b_ann_ivf", c7bAnnIvf, c7bOracleSql),
+    Q("c7c_ann_ivf_trained", c7cAnnIvfTrained, c7cOracleSql),
+    Q("c89_ann_int8", c89AnnInt8, c89OracleSql),
+    Q("c65_ann_recall", c65AnnRecall, c65OracleSql),
+    Q("c65b_ann_recall_planted", c65bAnnRecallPlanted, c65bOracleSql),
+    Q("c104_served_ann", c104ServedAnn, c104OracleSql),
+    Q("c106_index_append", c106IndexAppend, c106OracleSql),
+    Q("c8_lang_id", c8LangId, c8OracleSql),
+    Q("c9_quality", c9Quality, c9OracleSql),
+    Q("c10_token_count", c10TokenCount, c10OracleSql),
+    Q("c11_fingerprint", c11Fingerprint, c11OracleSql),
+    Q("c12_multimodal", c12Multimodal, c12OracleSql),
+    Q("c105_png_pixels", c105PngPixels, c105OracleSql),
+    Q("c13_sample", c13Sample,
       """WITH r AS (
            SELECT event_type, event_id, md5(CAST(event_id AS VARCHAR)) AS h,
              row_number() OVER (PARTITION BY event_type
                ORDER BY md5(CAST(event_id AS VARCHAR)), event_id) AS rn
            FROM events)
          SELECT event_type, rn, event_id
-         FROM r WHERE rn <= 5 ORDER BY event_type, rn""",
-    "c19_dup_clusters" -> c19OracleSql,
-    "c26_line_dedup" ->
+         FROM r WHERE rn <= 5 ORDER BY event_type, rn"""),
+    Q("c19_dup_clusters", c19DupClusters, c19OracleSql),
+    Q("c26_line_dedup", c26LineDedup,
       s"""WITH $corpusSql,
           t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
           c AS (
@@ -1367,7 +1341,7 @@ object TrainingQueries {
           SELECT doc_id, n_lines, n_dup_lines,
             CAST(floor(n_dup_lines * 1000000.0 / n_lines) AS BIGINT)
               AS dup_line_ratio_micro
-          FROM d ORDER BY doc_id"""
+          FROM d ORDER BY doc_id""")
   )
 
   /** The shared recursive-CTE chain: LSH-chain pairs (band candidates

@@ -220,23 +220,30 @@ object TrainingQueries2 {
       .orderBy(col("doc_id"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c14_tfidf" -> (c14Tfidf _),
-    "c25_token_budget" -> (c25TokenBudget _),
-    "c27_url_density" -> (c27UrlDensity _),
-    "c15_chunks" -> (c15Chunks _),
-    "c16_pii_scrub" -> (c16PiiScrub _),
-    "c17_label_centroids" -> (c17LabelCentroids _),
-    "c18_vocab" -> (c18Vocab _),
-    "c20_split" -> (c20Split _),
-    "c21_corpus_pipeline" -> (c21Pipeline _),
-    "c22_decontaminate" -> (c22Decontaminate _),
-    "c23_repetition" -> (c23Repetition _),
-    "c24_quantize" -> (c24Quantize _)
-  )
+  /** c22's oracle, shared with c22b (the Bloom pass is a pure
+    * prefilter, so its result set is identical). */
+  private[graft] val decontaminateOracle =
+      s"""WITH evals AS (
+            SELECT array_to_string(list_slice($toksSql, 11, 26), ' ') AS text
+            FROM documents WHERE doc_id % 13 = 0),
+          eg AS (
+            SELECT DISTINCT unnest(CASE WHEN len(tk) >= 8
+              THEN list_transform(generate_series(1, len(tk) - 7),
+                     i -> array_to_string(tk[i:i+7], ' '))
+              ELSE [] END) AS gram
+            FROM (SELECT $toksSql AS tk FROM evals) _),
+          cg AS (
+            SELECT doc_id, unnest(list_distinct(CASE WHEN len(tk) >= 8
+              THEN list_transform(generate_series(1, len(tk) - 7),
+                     i -> array_to_string(tk[i:i+7], ' '))
+              ELSE [] END)) AS gram
+            FROM (SELECT doc_id, $toksSql AS tk FROM documents) _)
+          SELECT doc_id, count(*) AS n_hits
+          FROM cg JOIN eg USING (gram)
+          GROUP BY doc_id HAVING count(*) >= 1 ORDER BY doc_id"""
 
-  def oracleSql: Map[String, String] = Map(
-    "c27_url_density" ->
+  val registry: Seq[Q] = Seq(
+    Q("c27_url_density", c27UrlDensity,
       s"""WITH d AS (
             SELECT doc_id, text ||
               CASE WHEN doc_id % 4 = 0
@@ -259,8 +266,8 @@ object TrainingQueries2 {
             CASE WHEN n_tokens > 0
               AND floor(n_urls * 1000000.0 / n_tokens) >= 5000 THEN 1
               ELSE 0 END AS flagged
-          FROM m ORDER BY doc_id""",
-    "c25_token_budget" ->
+          FROM m ORDER BY doc_id"""),
+    Q("c25_token_budget", c25TokenBudget,
       s"""WITH d AS (
             SELECT doc_id, lang, len($toksSql) AS n_toks,
               md5(CAST(doc_id AS VARCHAR)) AS h
@@ -274,8 +281,8 @@ object TrainingQueries2 {
           SELECT lang, count(*) AS n_docs,
             CAST(sum(n_toks) AS BIGINT) AS n_tokens
           FROM c WHERE cum_before < 10000
-          GROUP BY lang ORDER BY lang""",
-    "c14_tfidf" ->
+          GROUP BY lang ORDER BY lang"""),
+    Q("c14_tfidf", c14Tfidf,
       s"""WITH toks AS (
             SELECT doc_id, unnest($toksSql) AS word FROM documents),
           tf AS (
@@ -292,8 +299,8 @@ object TrainingQueries2 {
               ORDER BY score_micro DESC, word) AS rk
             FROM scored)
           SELECT doc_id, rk, word, term_freq, doc_freq, score_micro
-          FROM r WHERE rk <= 3 ORDER BY doc_id, rk""",
-    "c15_chunks" ->
+          FROM r WHERE rk <= 3 ORDER BY doc_id, rk"""),
+    Q("c15_chunks", c15Chunks,
       s"""WITH t AS (
             SELECT doc_id, $toksSql AS tk FROM documents),
           c AS (
@@ -307,8 +314,8 @@ object TrainingQueries2 {
             FROM c)
           SELECT doc_id, chunk_id, CAST(len(ct) AS BIGINT) AS n_tokens,
             md5(array_to_string(ct, ' ')) AS chunk_md5
-          FROM sl ORDER BY doc_id, chunk_id""",
-    "c16_pii_scrub" ->
+          FROM sl ORDER BY doc_id, chunk_id"""),
+    Q("c16_pii_scrub", c16PiiScrub,
       """WITH pii AS (
            SELECT doc_id,
              text || ' contact u' || CAST(doc_id AS VARCHAR) || '@ex.com' ||
@@ -350,16 +357,16 @@ object TrainingQueries2 {
            md5(regexp_replace(t3,
              '\+?1?[-.]?\(?\d{3}[-. )]*\d{3}[-. ]*\d{4}|\b555-\d{4}\b',
              '<PHONE>', 'g')) AS scrubbed_md5
-         FROM s3 ORDER BY doc_id""",
-    "c17_label_centroids" ->
+         FROM s3 ORDER BY doc_id"""),
+    Q("c17_label_centroids", c17LabelCentroids,
       """SELECT label, CAST(pos AS BIGINT) AS dim,
            CAST(sum(CAST(round(CAST(embedding[pos + 1] AS DOUBLE) * 1000000)
              AS BIGINT)) AS BIGINT) AS sum_micro,
            count(*) AS n_vecs
          FROM embeddings
          CROSS JOIN (SELECT unnest(generate_series(0, 63)) AS pos) g
-         GROUP BY label, pos ORDER BY label, dim""",
-    "c18_vocab" ->
+         GROUP BY label, pos ORDER BY label, dim"""),
+    Q("c18_vocab", c18Vocab,
       s"""WITH toks AS (
             SELECT doc_id, unnest($toksSql) AS word FROM documents),
           tf AS (
@@ -373,8 +380,8 @@ object TrainingQueries2 {
             SELECT row_number() OVER (ORDER BY n_total DESC, word) AS rk,
               word, n_total, n_docs
             FROM v ORDER BY n_total DESC, word LIMIT 50)
-          SELECT rk, word, n_total, n_docs FROM top ORDER BY rk""",
-    "c20_split" ->
+          SELECT rk, word, n_total, n_docs FROM top ORDER BY rk"""),
+    Q("c20_split", c20Split,
       """WITH sp AS (
            SELECT doc_id, lang,
              CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8) < 'cccccccc'
@@ -387,28 +394,10 @@ object TrainingQueries2 {
            FROM documents)
          SELECT lang, split, count(*) AS n_docs,
            CAST(sum(in_sample) AS BIGINT) AS n_sampled
-         FROM sp GROUP BY lang, split ORDER BY lang, split""",
-    "c21_corpus_pipeline" -> c21OracleSql,
-    "c22_decontaminate" ->
-      s"""WITH evals AS (
-            SELECT array_to_string(list_slice($toksSql, 11, 26), ' ') AS text
-            FROM documents WHERE doc_id % 13 = 0),
-          eg AS (
-            SELECT DISTINCT unnest(CASE WHEN len(tk) >= 8
-              THEN list_transform(generate_series(1, len(tk) - 7),
-                     i -> array_to_string(tk[i:i+7], ' '))
-              ELSE [] END) AS gram
-            FROM (SELECT $toksSql AS tk FROM evals) _),
-          cg AS (
-            SELECT doc_id, unnest(list_distinct(CASE WHEN len(tk) >= 8
-              THEN list_transform(generate_series(1, len(tk) - 7),
-                     i -> array_to_string(tk[i:i+7], ' '))
-              ELSE [] END)) AS gram
-            FROM (SELECT doc_id, $toksSql AS tk FROM documents) _)
-          SELECT doc_id, count(*) AS n_hits
-          FROM cg JOIN eg USING (gram)
-          GROUP BY doc_id HAVING count(*) >= 1 ORDER BY doc_id""",
-    "c23_repetition" ->
+         FROM sp GROUP BY lang, split ORDER BY lang, split"""),
+    Q("c21_corpus_pipeline", c21Pipeline, c21OracleSql),
+    Q("c22_decontaminate", c22Decontaminate, decontaminateOracle),
+    Q("c23_repetition", c23Repetition,
       s"""WITH d AS (
             SELECT doc_id,
               CASE WHEN doc_id % 9 = 0 THEN text ||
@@ -433,8 +422,8 @@ object TrainingQueries2 {
                 / n_grams) AS BIGINT) ELSE 0 END AS dup_ratio_micro,
             CASE WHEN n_grams > 0 AND floor((n_grams - n_distinct_grams)
               * 1000000.0 / n_grams) >= 100000 THEN 1 ELSE 0 END AS flagged
-          FROM m ORDER BY doc_id""",
-    "c24_quantize" ->
+          FROM m ORDER BY doc_id"""),
+    Q("c24_quantize", c24Quantize,
       """WITH q AS (
            SELECT vec_id,
              CAST(round(greatest(least(CAST(x AS DOUBLE), 1.0), -1.0) * 127)
@@ -442,7 +431,7 @@ object TrainingQueries2 {
            FROM (SELECT vec_id, unnest(embedding) AS x FROM embeddings) _)
          SELECT vec_id, CAST(sum(q) AS BIGINT) AS sum_q, min(q) AS min_q,
            max(q) AS max_q, CAST(sum(abs(q)) AS BIGINT) AS l1_q
-         FROM q GROUP BY vec_id ORDER BY vec_id"""
+         FROM q GROUP BY vec_id ORDER BY vec_id""")
   )
 
   /** Every pipeline stage mirrored in one recursive-CTE query (see

@@ -199,26 +199,15 @@ object TrainingQueries3 {
       .orderBy(col("doc_id"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c22b_decontaminate_bloom" -> (c22bDecontaminateBloom _),
-    "c34_gopher_gate" -> (c34GopherGate _),
-    "c35_cluster_split" -> (c35ClusterSplit _),
-    "c36_url_dedup" -> (c36UrlDedup _),
-    "c28_mix_weights" -> (c28MixWeights _),
-    "c29_blocklist" -> (c29Blocklist _),
-    "c30_substring_dedup" -> (c30SubstringDedup _),
-    "c31_apply_mix" -> (c31ApplyMix _),
-    "c33_pack_sequences" -> (c33PackSequences _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
+  val registry: Seq[Q] = Seq(
     // identical result set to c22 — the Bloom pass is a pure prefilter
-    "c22b_decontaminate_bloom" -> TrainingQueries2.oracleSql("c22_decontaminate"),
+    Q("c22b_decontaminate_bloom", c22bDecontaminateBloom,
+      TrainingQueries2.decontaminateOracle),
     // mirror of TextAnalysis.gopherGateCols: every metric is integer
     // micro-units (exact in a double, one IEEE divide, tie-free floor
     // except mean-token-len's round — half-away-from-zero on both
     // engines over an exactly-representable quotient)
-    "c34_gopher_gate" ->
+    Q("c34_gopher_gate", c34GopherGate,
       s"""WITH t AS (
            SELECT doc_id, $toksSql AS tk,
              CAST(length(regexp_replace(coalesce(text, ''), '\\s', '', 'g'))
@@ -258,10 +247,10 @@ object TrainingQueries3 {
          SELECT doc_id, n_tokens, mean_token_len_x4, alpha_micro,
            sym_micro, n_stopwords, reasons,
            CAST(CASE WHEN reasons = 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
-         FROM r ORDER BY doc_id""",
+         FROM r ORDER BY doc_id"""),
     // mirror of the plant + extract + canonicalize + keyed-window
     // chain; canonicalization is the same 4 anchored replaces
-    "c36_url_dedup" ->
+    Q("c36_url_dedup", c36UrlDedup,
       """WITH p AS (
            SELECT doc_id,
              text || ' ref ' ||
@@ -288,11 +277,11 @@ object TrainingQueries3 {
            CAST(CASE WHEN doc_id = min(doc_id)
              OVER (PARTITION BY canonical_url) THEN 1 ELSE 0 END AS BIGINT)
              AS keep
-         FROM u ORDER BY doc_id""",
+         FROM u ORDER BY doc_id"""),
     // same recursive-CTE cluster fixpoint as c19, then c20's hash
     // assignment taken over the cluster id (cumulative thresholds
     // mirror Splitter.hashSplit exactly)
-    "c35_cluster_split" -> {
+    Q("c35_cluster_split", c35ClusterSplit, {
       val t80 = Splitter.hexThreshold(0.8)
       val t90 = Splitter.hexThreshold(0.9)
       s"""WITH RECURSIVE ${TrainingQueries.clusterCteSql},
@@ -306,8 +295,8 @@ object TrainingQueries3 {
                  THEN 'valid'
                  ELSE 'test' END AS split
           FROM wc ORDER BY doc_id"""
-    },
-    "c28_mix_weights" ->
+    }),
+    Q("c28_mix_weights", c28MixWeights,
       s"""WITH s AS (
            SELECT lang, count(*) AS n_docs,
              CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens
@@ -319,8 +308,8 @@ object TrainingQueries3 {
          SELECT lang, n_docs, n_tokens, w_micro,
            CAST((w_micro * 1000000) // (SELECT CAST(sum(w_micro) AS BIGINT)
              FROM w) AS BIGINT) AS share_ppm
-         FROM w ORDER BY lang""",
-    "c29_blocklist" ->
+         FROM w ORDER BY lang"""),
+    Q("c29_blocklist", c29Blocklist,
       s"""SELECT doc_id,
            CAST(len(list_filter($toksSql,
              x -> x IN ('slow', 'big', 'dup'))) AS BIGINT) AS n_blocked,
@@ -329,8 +318,8 @@ object TrainingQueries3 {
            CAST(CASE WHEN len(list_filter($toksSql,
              x -> x IN ('slow', 'big', 'dup'))) > 0
              THEN 1 ELSE 0 END AS BIGINT) AS blocked
-         FROM documents ORDER BY doc_id""",
-    "c30_substring_dedup" ->
+         FROM documents ORDER BY doc_id"""),
+    Q("c30_substring_dedup", c30SubstringDedup,
       s"""WITH ${TrainingQueries.corpusSql},
            t AS (SELECT doc_id, $toksSql AS tk FROM corpus),
            l AS (
@@ -347,8 +336,8 @@ object TrainingQueries3 {
          SELECT doc_id, n_windows, n_dup_windows,
            CAST(floor(n_dup_windows * 1000000.0 / n_windows) AS BIGINT)
              AS dup_window_ratio_micro
-         FROM d ORDER BY doc_id""",
-    "c31_apply_mix" -> {
+         FROM d ORDER BY doc_id"""),
+    Q("c31_apply_mix", c31ApplyMix, {
       // mirror of Splitter.upsample: per-lang CASE over precomputed
       // hex thresholds — identical md5-space decisions on both engines
       val cases = mixFactors.map { case (l, f) =>
@@ -367,8 +356,8 @@ object TrainingQueries3 {
            CAST(unnest(generate_series(1, n_copies)) AS BIGINT) AS copy_id
          FROM d
          ORDER BY doc_id, copy_id"""
-    },
-    "c33_pack_sequences" ->
+    }),
+    Q("c33_pack_sequences", c33PackSequences,
       s"""WITH d AS (
            SELECT doc_id, lang,
              CAST(len($toksSql) AS BIGINT) AS n_tokens
@@ -382,6 +371,6 @@ object TrainingQueries3 {
            count(*) AS n_docs,
            CAST(sum(n_tokens) AS BIGINT) AS bin_tokens,
            min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         FROM c GROUP BY lang, bin_id ORDER BY lang, bin_id"""
+         FROM c GROUP BY lang, bin_id ORDER BY lang, bin_id""")
   )
 }

@@ -190,20 +190,10 @@ object TrainingQueries4 {
           .otherwise(lit(0L)).as("recall_ppm"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c37_semdedup" -> (c37SemDedup _),
-    "c88_semdedup_recall" -> (c88SemdedupRecall _),
-    "c38_line_scrub" -> (c38LineScrub _),
-    "c39_substring_scrub" -> (c39SubstringScrub _),
-    "c40_quality_calibrate" -> (c40QualityCalibrate _),
-    "c41_line_chunks" -> (c41LineChunks _),
-    "c42_keep_best" -> (c42KeepBest _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
+  val registry: Seq[Q] = Seq(
     // mirrors the plant, the id-stride centroid rule, the argmax-cosine
     // assignment (c7b's), and the within-cell lower-id pair gate
-    "c37_semdedup" ->
+    Q("c37_semdedup", c37SemDedup,
       s"""WITH base AS (
             SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           dups AS (
@@ -237,10 +227,10 @@ object TrainingQueries4 {
             CAST(CASE WHEN coalesce(d.n_dup_of, 0) > 0 THEN 1 ELSE 0 END
               AS BIGINT) AS is_dup
           FROM sized s LEFT JOIN d ON s.vec_id = d.vec_id
-          ORDER BY s.vec_id""",
+          ORDER BY s.vec_id"""),
     // same plant + assignment as c37, then brute-force truth over the
     // declared 1-in-5 sample and the shared-cell hit ratio in exact ppm
-    "c88_semdedup_recall" ->
+    Q("c88_semdedup_recall", c88SemdedupRecall,
       s"""WITH base AS (
             SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           dups AS (
@@ -270,10 +260,10 @@ object TrainingQueries4 {
             CASE WHEN count(*) > 0
               THEN CAST(sum(same_cell) AS BIGINT) * 1000000 // count(*)
               ELSE 0 END AS recall_ppm
-          FROM truth""",
+          FROM truth"""),
     // c26's line model (non-overlapping 10-token windows) + the
     // ordered string_agg rebuild; empty rebuilds coalesce to ''
-    "c38_line_scrub" ->
+    Q("c38_line_scrub", c38LineScrub,
       s"""WITH ${TrainingQueries.corpusSql},
           t AS (SELECT doc_id,
                   regexp_extract_all(lower(trim(text)), '\\S+') AS tk
@@ -303,11 +293,11 @@ object TrainingQueries4 {
           SELECT doc_id, n_lines, n_lines_kept,
             CAST(length(scrubbed) AS BIGINT) AS scrubbed_len,
             md5(scrubbed) AS scrubbed_md5
-          FROM d ORDER BY doc_id""",
+          FROM d ORDER BY doc_id"""),
     // sliding-window mirror: 0-based window starts and token
     // positions on both engines; the rebuild is the ordered
     // string_agg of uncovered tokens
-    "c39_substring_scrub" ->
+    Q("c39_substring_scrub", c39SubstringScrub,
       s"""WITH ${TrainingQueries.corpusSql},
           t AS (SELECT doc_id,
                   regexp_extract_all(lower(trim(text)), '\\S+') AS tk
@@ -348,10 +338,10 @@ object TrainingQueries4 {
           SELECT doc_id, n_tokens, n_tokens_kept,
             CAST(length(scrubbed) AS BIGINT) AS scrubbed_len,
             md5(scrubbed) AS scrubbed_md5
-          FROM d ORDER BY doc_id""",
+          FROM d ORDER BY doc_id"""),
     // c9's score formula in integer micro-units, then per-lang rank →
     // ppm percentile and CCNet tercile
-    "c40_quality_calibrate" -> {
+    Q("c40_quality_calibrate", c40QualityCalibrate, {
       val stopSet = TrainingQueries.markersIn(
         TextAnalysis.langMarkers.flatMap(_._2).distinct)
       s"""WITH t AS (
@@ -393,10 +383,10 @@ object TrainingQueries4 {
               WHEN 0 THEN 'tail' WHEN 1 THEN 'middle' ELSE 'head' END
               AS ccnet_bucket
           FROM k ORDER BY doc_id"""
-    },
+    }),
     // same line model as c26/c38; chunk assignment is the contiguous
     // running-sum rule, chunk text proven by ordered string_agg md5
-    "c41_line_chunks" ->
+    Q("c41_line_chunks", c41LineChunks,
       s"""WITH t AS (
             SELECT doc_id,
               regexp_extract_all(lower(trim(text)), '\\S+') AS tk
@@ -426,10 +416,10 @@ object TrainingQueries4 {
             min(line_id) AS first_line, max(line_id) AS last_line,
             md5(string_agg(line_txt, ' ' ORDER BY line_id)) AS chunk_md5
           FROM cm GROUP BY doc_id, chunk_id
-          ORDER BY doc_id, chunk_id""",
+          ORDER BY doc_id, chunk_id"""),
     // the c19/c35 recursive-CTE cluster fixpoint + a length rank in
     // place of the min-id keep rule
-    "c42_keep_best" ->
+    Q("c42_keep_best", c42KeepBest,
       s"""WITH RECURSIVE ${TrainingQueries.clusterCteSql},
           wc AS (
             SELECT c.doc_id, coalesce(cl.cluster, c.doc_id) AS cluster,
@@ -441,6 +431,6 @@ object TrainingQueries4 {
             FROM wc)
           SELECT doc_id, cluster, n_chars,
             CAST(CASE WHEN rk = 1 THEN 1 ELSE 0 END AS BIGINT) AS keep
-          FROM r ORDER BY doc_id"""
+          FROM r ORDER BY doc_id""")
   )
 }

@@ -190,19 +190,8 @@ object TrainingQueries5 {
           .as("recall_ppm"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c50_lsh_recall" -> (c50LshRecall _),
-    "c49_shard_export" -> (c49ShardExport _),
-    "c48_corpus_report" -> (c48CorpusReport _),
-    "c43_dsir" -> (c43Dsir _),
-    "c44_fertility" -> (c44Fertility _),
-    "c45_contam_frac" -> (c45ContamFrac _),
-    "c46_perplexity" -> (c46Perplexity _),
-    "c47_soft_dedup" -> (c47SoftDedup _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "c43_dsir" ->
+  val registry: Seq[Q] = Seq(
+    Q("c43_dsir", c43Dsir,
       s"""WITH toks AS (
             SELECT doc_id, lang = 'en' AS tgt, unnest($toksSql) AS word
             FROM documents),
@@ -229,8 +218,8 @@ object TrainingQueries5 {
               d.doc_id, d.lang, n_toks, dsir_score
             FROM ds JOIN documents d USING (doc_id))
           SELECT rk, doc_id, lang, n_toks, dsir_score
-          FROM r WHERE rk <= 50 ORDER BY rk""",
-    "c44_fertility" ->
+          FROM r WHERE rk <= 50 ORDER BY rk"""),
+    Q("c44_fertility", c44Fertility,
       s"""SELECT lang, source, count(*) AS n_docs,
             CAST(sum(len($toksSql)) AS BIGINT) AS n_tokens,
             CAST(sum(n_chars) AS BIGINT) AS sum_chars,
@@ -238,8 +227,8 @@ object TrainingQueries5 {
               / CAST(sum(len($toksSql)) AS DOUBLE), 4) AS chars_per_token,
             round(CAST(sum(len($toksSql)) AS DOUBLE) / count(*), 4)
               AS tokens_per_doc
-          FROM documents GROUP BY lang, source ORDER BY lang, source""",
-    "c45_contam_frac" ->
+          FROM documents GROUP BY lang, source ORDER BY lang, source"""),
+    Q("c45_contam_frac", c45ContamFrac,
       s"""WITH evals AS (
             SELECT array_to_string(list_slice($toksSql, 11, 26), ' ') AS text
             FROM documents WHERE doc_id % 13 = 0),
@@ -262,8 +251,8 @@ object TrainingQueries5 {
           SELECT doc_id, n_shingles, n_hits,
             round(CAST(n_hits AS DOUBLE) / n_shingles, 4) AS contam_frac,
             CAST(CAST(n_hits AS DOUBLE) / n_shingles <= 0.05 AS INT) AS keep
-          FROM j ORDER BY doc_id""",
-    "c46_perplexity" ->
+          FROM j ORDER BY doc_id"""),
+    Q("c46_perplexity", c46Perplexity,
       s"""WITH d AS (
             SELECT doc_id, ${TrainingQueries.normTextSql} AS s
             FROM documents),
@@ -285,8 +274,8 @@ object TrainingQueries5 {
             FROM tris JOIN p USING (tri) GROUP BY doc_id)
           SELECT doc_id, n_trigrams, round(h, 4) AS h_bits,
             round(power(2.0, h), 4) AS ppl
-          FROM ds ORDER BY doc_id""",
-    "c50_lsh_recall" ->
+          FROM ds ORDER BY doc_id"""),
+    Q("c50_lsh_recall", c50LshRecall,
       s"""WITH ${TrainingQueries.corpusSql},
           toks AS (SELECT doc_id, ${TrainingQueries.toksSql} AS tk
             FROM corpus),
@@ -311,14 +300,14 @@ object TrainingQueries5 {
             CASE WHEN m.n_exact > 0
               THEN (l.n_lsh * 1000000) // m.n_exact ELSE 0 END
               AS recall_ppm
-          FROM m, l""",
-    "c49_shard_export" ->
+          FROM m, l"""),
+    Q("c49_shard_export", c49ShardExport,
       """SELECT source, count(*) AS n_docs,
            count(DISTINCT doc_id) AS n_doc_ids,
            CAST(sum(n_chars) AS BIGINT) AS sum_chars,
            CAST(1 AS INT) AS shards_bounded, CAST(1 AS INT) AS multi_shard
-         FROM documents GROUP BY source ORDER BY source""",
-    "c48_corpus_report" ->
+         FROM documents GROUP BY source ORDER BY source"""),
+    Q("c48_corpus_report", c48CorpusReport,
       s"""WITH d AS (
             SELECT source, lang, n_chars,
               CAST(len($toksSql) AS BIGINT) AS n_toks,
@@ -341,9 +330,9 @@ object TrainingQueries5 {
             (n_en * 1000000) // n_docs AS en_ppm,
             (n_dup * 1000000) // n_docs AS dup_ppm,
             n_chars // n_docs AS mean_chars
-          FROM a ORDER BY source""",
+          FROM a ORDER BY source"""),
     // the shared recursive-CTE cluster fixpoint + unit-mass weights
-    "c47_soft_dedup" ->
+    Q("c47_soft_dedup", c47SoftDedup,
       s"""WITH RECURSIVE ${TrainingQueries.clusterCteSql},
           wc AS (
             SELECT c.doc_id, coalesce(cl.cluster, c.doc_id) AS cluster
@@ -354,6 +343,6 @@ object TrainingQueries5 {
             FROM wc)
           SELECT doc_id, cluster, cluster_size,
             1000000 // cluster_size AS weight_ppm
-          FROM sz ORDER BY doc_id"""
+          FROM sz ORDER BY doc_id""")
   )
 }

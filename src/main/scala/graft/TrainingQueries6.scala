@@ -411,24 +411,8 @@ object TrainingQueries6 {
       .orderBy(col("lang"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c64_oov_rate" -> (c64OovRate _),
-    "c63_embedding_health" -> (c63EmbeddingHealth _),
-    "c62_leakage_safe_split" -> (c62LeakageSafeSplit _),
-    "c61_lsh_precision" -> (c61LshPrecision _),
-    "c60_doc_entropy" -> (c60DocEntropy _),
-    "c58_cross_lingual" -> (c58CrossLingual _),
-    "c59_boilerplate" -> (c59Boilerplate _),
-    "c51_source_overlap" -> (c51SourceOverlap _),
-    "c52_stratified" -> (c52Stratified _),
-    "c53_marginal_coverage" -> (c53MarginalCoverage _),
-    "c54_split_drift" -> (c54SplitDrift _),
-    "c56_readability" -> (c56Readability _),
-    "c57_lexical_diversity" -> (c57LexicalDiversity _)
-  )
-
-  def oracleSql: Map[String, String] = Map(
-    "c64_oov_rate" ->
+  val registry: Seq[Q] = Seq(
+    Q("c64_oov_rate", c64OovRate,
       """WITH sp AS (
            SELECT lang, text,
              CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
@@ -461,8 +445,8 @@ object TrainingQueries6 {
            n_oov_types,
            n_oov_tokens * 1000000 // n_valid_tokens AS oov_ppm,
            n_oov_types * 1000000 // n_valid_types AS oov_type_ppm
-         FROM a ORDER BY lang""",
-    "c63_embedding_health" ->
+         FROM a ORDER BY lang"""),
+    Q("c63_embedding_health", c63EmbeddingHealth,
       """WITH v AS (
            SELECT CAST(label AS BIGINT) AS label,
              CAST(len(embedding) AS BIGINT) AS dim,
@@ -475,8 +459,8 @@ object TrainingQueries6 {
            round(max(norm), 4) AS max_norm,
            CAST(sum(CASE WHEN norm = 0.0 THEN 1 ELSE 0 END) AS BIGINT)
              AS n_zero
-         FROM v GROUP BY label ORDER BY label""",
-    "c62_leakage_safe_split" ->
+         FROM v GROUP BY label ORDER BY label"""),
+    Q("c62_leakage_safe_split", c62LeakageSafeSplit,
       s"""WITH RECURSIVE ${TrainingQueries.clusterCteSql},
           naive AS (
             SELECT doc_id,
@@ -501,8 +485,8 @@ object TrainingQueries6 {
           SELECT split, count(*) AS n_docs,
             CAST(sum(CASE WHEN naive_split <> split THEN 1 ELSE 0 END)
               AS BIGINT) AS n_moved
-          FROM safe GROUP BY split ORDER BY split""",
-    "c61_lsh_precision" ->
+          FROM safe GROUP BY split ORDER BY split"""),
+    Q("c61_lsh_precision", c61LshPrecision,
       s"""WITH ${TrainingQueries.corpusSql},
           toks AS (SELECT doc_id, ${TrainingQueries.toksSql} AS tk
             FROM corpus),
@@ -526,8 +510,8 @@ object TrainingQueries6 {
             CASE WHEN n_candidates > 0
               THEN n_verified * 1000000 // n_candidates
               ELSE 0 END AS precision_ppm
-          FROM a""",
-    "c60_doc_entropy" ->
+          FROM a"""),
+    Q("c60_doc_entropy", c60DocEntropy,
       s"""WITH d AS (
             SELECT source, doc_id, ${TrainingQueries.normTextSql} AS s
             FROM documents),
@@ -550,8 +534,8 @@ object TrainingQueries6 {
             round(avg(h), 4) AS mean_tri_entropy,
             CAST(sum(CASE WHEN h < 6.0 THEN 1 ELSE 0 END) AS BIGINT)
               AS n_low_entropy
-          FROM de GROUP BY source ORDER BY source""",
-    "c58_cross_lingual" ->
+          FROM de GROUP BY source ORDER BY source"""),
+    Q("c58_cross_lingual", c58CrossLingual,
       """WITH planted AS (
            SELECT doc_id, lang, text FROM documents
            UNION ALL
@@ -565,8 +549,8 @@ object TrainingQueries6 {
            SELECT a.h, a.lang AS la, b.lang AS lb
            FROM h a JOIN h b ON a.h = b.h AND a.lang < b.lang)
          SELECT la AS lang_a, lb AS lang_b, count(*) AS n_shared_texts
-         FROM s GROUP BY 1, 2 ORDER BY 1, 2""",
-    "c59_boilerplate" ->
+         FROM s GROUP BY 1, 2 ORDER BY 1, 2"""),
+    Q("c59_boilerplate", c59Boilerplate,
       """WITH toks AS (
            SELECT source, doc_id,
              regexp_extract_all(lower(trim(text)), '\S+') AS tk
@@ -592,8 +576,8 @@ object TrainingQueries6 {
            FROM g GROUP BY source)
          SELECT source, n_chunks, n_distinct_chunks, n_boiler_chunks,
            boiler_occ * 1000000 // n_chunks AS boiler_ppm
-         FROM a ORDER BY source""",
-    "c56_readability" ->
+         FROM a ORDER BY source"""),
+    Q("c56_readability", c56Readability,
       """WITH m AS (
            SELECT lang, source,
              len(regexp_extract_all(lower(trim(text)), '\S+')) AS w,
@@ -612,8 +596,8 @@ object TrainingQueries6 {
            round(avg(fre), 4) AS mean_fre,
            CAST(sum(CASE WHEN fre >= 60.0 THEN 1 ELSE 0 END) AS BIGINT)
              AS n_easy
-         FROM f GROUP BY lang, source ORDER BY lang, source""",
-    "c57_lexical_diversity" ->
+         FROM f GROUP BY lang, source ORDER BY lang, source"""),
+    Q("c57_lexical_diversity", c57LexicalDiversity,
       """WITH tk AS (
            SELECT source,
              unnest(regexp_extract_all(lower(trim(text)), '\S+')) AS tok
@@ -629,8 +613,8 @@ object TrainingQueries6 {
          SELECT source, n_tokens, vocab, hapax,
            vocab * 1000000 // n_tokens AS ttr_ppm,
            hapax * 1000000 // vocab AS hapax_ppm
-         FROM a ORDER BY source""",
-    "c53_marginal_coverage" ->
+         FROM a ORDER BY source"""),
+    Q("c53_marginal_coverage", c53MarginalCoverage,
       s"""WITH toks AS (
             SELECT source, ${TrainingQueries.toksSql} AS tk FROM documents),
           g AS (
@@ -644,8 +628,8 @@ object TrainingQueries6 {
             CAST(sum(n_new_grams) OVER (ORDER BY source
               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
               AS BIGINT) AS cum_grams
-          FROM c ORDER BY source""",
-    "c54_split_drift" ->
+          FROM c ORDER BY source"""),
+    Q("c54_split_drift", c54SplitDrift,
       """WITH sp AS (
            SELECT doc_id, text,
              CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 8)
@@ -685,8 +669,8 @@ object TrainingQueries6 {
              + ln(CAST(n_train_tokens + vocab_size AS DOUBLE)
                  / CAST(n_valid_tokens + vocab_size AS DOUBLE)), 6)
              AS kl_valid_train
-         FROM a""",
-    "c51_source_overlap" ->
+         FROM a"""),
+    Q("c51_source_overlap", c51SourceOverlap,
       s"""WITH toks AS (
             SELECT source, ${TrainingQueries.toksSql} AS tk FROM documents),
           g AS (
@@ -710,8 +694,8 @@ object TrainingQueries6 {
           FROM cnt a JOIN cnt b ON a.source < b.source
           LEFT JOIN inter i
             ON i.source_a = a.source AND i.source_b = b.source
-          ORDER BY source_a, source_b""",
-    "c52_stratified" ->
+          ORDER BY source_a, source_b"""),
+    Q("c52_stratified", c52Stratified,
       """WITH stats AS (
            SELECT lang, source, count(*) AS n_pop,
              CAST(sum(n_chars) AS BIGINT) AS sc,
@@ -756,6 +740,6 @@ object TrainingQueries6 {
              AS mean_chars_sampled
          FROM al LEFT JOIN sm
            ON al.lang = sm.lang AND al.source = sm.source
-         ORDER BY al.lang, al.source"""
+         ORDER BY al.lang, al.source""")
   )
 }

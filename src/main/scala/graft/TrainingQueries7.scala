@@ -629,31 +629,6 @@ object TrainingQueries7 {
       fps)
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c87_winnowing" -> (c87Winnowing _),
-    "c86_simhash_precision" -> (c86SimhashPrecision _),
-    "c85_neardup_savings" -> (c85NeardupSavings _),
-    "c84_media_ann" -> (c84MediaAnn _),
-    "c83_release_manifest" -> (c83ReleaseManifest _),
-    "c82_band_provenance" -> (c82BandProvenance _),
-    "c80_ppl_buckets" -> (c80PplBuckets _),
-    "c78_label_affinity" -> (c78LabelAffinity _),
-    "c79_label_cohesion" -> (c79LabelCohesion _),
-    "c76_incremental_dedup" -> (c76IncrementalDedup _),
-    "c81_streaming_ingest" -> (c81StreamingIngest _),
-    "c77_pack_efficiency" -> (c77PackEfficiency _),
-    "c74_gram_novelty" -> (c74GramNovelty _),
-    "c75_band_load" -> (c75BandLoad _),
-    "c71_minhash_error" -> (c71MinhashError _),
-    "c72_cell_balance" -> (c72CellBalance _),
-    "c73_lang_mix" -> (c73LangMix _),
-    "c66_dedup_savings" -> (c66DedupSavings _),
-    "c69_contam_by_source" -> (c69ContamBySource _),
-    "c70_threshold_sweep" -> (c70ThresholdSweep _),
-    "c68_cluster_sizes" -> (c68ClusterSizes _),
-    "c67_length_histogram" -> (c67LengthHistogram _)
-  )
-
   private val centroidsSql =
     """pd AS (
          SELECT label, pos,
@@ -668,8 +643,8 @@ object TrainingQueries7 {
            list(CAST(sm AS DOUBLE) / (n * 1000000) ORDER BY pos) AS cv
          FROM pd GROUP BY label)"""
 
-  def oracleSql: Map[String, String] = Map(
-    "c87_winnowing" ->
+  val registry: Seq[Q] = Seq(
+    Q("c87_winnowing", c87Winnowing,
       s"""WITH ${TrainingQueries.corpusSql},
           toks AS (SELECT doc_id, ${TrainingQueries.toksSql} AS tk
             FROM corpus),
@@ -694,8 +669,8 @@ object TrainingQueries7 {
             FROM fk a JOIN fk b ON a.fp = b.fp AND a.doc_id < b.doc_id
             GROUP BY 1, 2)
           SELECT id1, id2, n_shared FROM pr WHERE n_shared >= 3
-          ORDER BY id1, id2""",
-    "c86_simhash_precision" -> {
+          ORDER BY id1, id2"""),
+    Q("c86_simhash_precision", c86SimhashPrecision, {
       s"""WITH ${TrainingQueries.corpusSql},
           toks AS (SELECT doc_id, unnest(${TrainingQueries.toksSql}) AS tok
             FROM corpus),
@@ -734,8 +709,8 @@ object TrainingQueries7 {
             n_verified * 1000000 // n_pairs AS precision_ppm,
             sj // n_pairs AS mean_jaccard_ppm
           FROM g ORDER BY hamming"""
-    },
-    "c85_neardup_savings" ->
+    }),
+    Q("c85_neardup_savings", c85NeardupSavings,
       s"""WITH RECURSIVE ${TrainingQueries.clusterCteSql},
           srcmap AS (
             SELECT doc_id, source FROM documents
@@ -760,8 +735,8 @@ object TrainingQueries7 {
             CASE WHEN total_chars > 0
               THEN chars_removed * 1000000 // total_chars ELSE 0 END
               AS savings_ppm
-          FROM g ORDER BY source""",
-    "c84_media_ann" -> {
+          FROM g ORDER BY source"""),
+    Q("c84_media_ann", c84MediaAnn, {
       val dot = "list_sum(list_transform(generate_series(1, 16), " +
         "i -> qv[i] * cv[i]))"
       val den = "sqrt(list_sum(list_transform(qv, x -> x * x))) * " +
@@ -787,8 +762,8 @@ object TrainingQueries7 {
             FROM scored)
           SELECT query_id, CAST(rank AS INT) AS rank, corpus_id, cosine_sim
           FROM ranked WHERE rank <= 3 ORDER BY query_id, rank"""
-    },
-    "c83_release_manifest" ->
+    }),
+    Q("c83_release_manifest", c83ReleaseManifest,
       """WITH d AS (
            SELECT doc_id, text,
              (instr('0123456789abcdef',
@@ -799,8 +774,8 @@ object TrainingQueries7 {
            CAST(sum(length(text)) AS BIGINT) AS n_chars,
            min(doc_id) AS min_doc_id, max(doc_id) AS max_doc_id,
            md5(string_agg(md5(text), '' ORDER BY doc_id)) AS manifest_md5
-         FROM d GROUP BY 1 ORDER BY shard_id""",
-    "c82_band_provenance" ->
+         FROM d GROUP BY 1 ORDER BY shard_id"""),
+    Q("c82_band_provenance", c82BandProvenance,
       s"""WITH ${TrainingQueries.corpusSql},
           toks AS (SELECT doc_id, ${TrainingQueries.toksSql} AS tk
             FROM corpus),
@@ -819,8 +794,8 @@ object TrainingQueries7 {
             CAST(sum(CASE WHEN nb = 1 THEN 1 ELSE 0 END) AS BIGINT)
               AS n_exclusive
           FROM cb JOIN pp USING (id1, id2)
-          GROUP BY band ORDER BY band""",
-    "c80_ppl_buckets" ->
+          GROUP BY band ORDER BY band"""),
+    Q("c80_ppl_buckets", c80PplBuckets,
       s"""WITH d AS (
             SELECT doc_id, ${TrainingQueries.normTextSql} AS s
             FROM documents),
@@ -858,14 +833,14 @@ object TrainingQueries7 {
             FROM j GROUP BY 1, 2)
           SELECT source, CAST(decile AS BIGINT) AS decile, n_docs, n_tokens,
             sp // n_docs AS mean_ppl_x4, mx AS max_ppl_x4
-          FROM m ORDER BY source, decile""",
-    "c78_label_affinity" ->
+          FROM m ORDER BY source, decile"""),
+    Q("c78_label_affinity", c78LabelAffinity,
       s"""WITH $centroidsSql
           SELECT a.label AS label_a, b.label AS label_b,
             ${TrainingQueries.cosineSql("a.cv", "b.cv", 6)} AS centroid_cosine
           FROM ce a JOIN ce b ON a.label < b.label
-          ORDER BY label_a, label_b""",
-    "c79_label_cohesion" ->
+          ORDER BY label_a, label_b"""),
+    Q("c79_label_cohesion", c79LabelCohesion,
       s"""WITH $centroidsSql,
           pc AS (
             SELECT e.label,
@@ -876,8 +851,8 @@ object TrainingQueries7 {
           SELECT label, count(*) AS n_vecs,
             CAST(sum(cm) AS BIGINT) // count(*) AS cohesion_ppm,
             min(cm) AS min_cos_ppm, max(cm) AS max_cos_ppm
-          FROM pc GROUP BY label ORDER BY label""",
-    "c76_incremental_dedup" ->
+          FROM pc GROUP BY label ORDER BY label"""),
+    Q("c76_incremental_dedup", c76IncrementalDedup,
       s"""WITH newb AS (
             SELECT doc_id + 1000000 AS doc_id, text || ' zz tail' AS text
             FROM documents WHERE doc_id % 10 = 0
@@ -908,8 +883,8 @@ object TrainingQueries7 {
             FROM cand c JOIN verified v ON v.id1 = c.id1 AND v.id2 = c.id2)
           SELECT n.doc_id, CAST(f.doc_id IS NOT NULL AS BIGINT) AS is_dup
           FROM newb n LEFT JOIN flagged f ON f.doc_id = n.doc_id
-          ORDER BY n.doc_id""",
-    "c81_streaming_ingest" ->
+          ORDER BY n.doc_id"""),
+    Q("c81_streaming_ingest", c81StreamingIngest,
       s"""WITH refd AS (
             SELECT doc_id, text FROM documents WHERE doc_id % 3 = 0),
           newb AS (
@@ -942,8 +917,8 @@ object TrainingQueries7 {
             FROM cand c JOIN verified v ON v.id1 = c.id1 AND v.id2 = c.id2)
           SELECT n.doc_id, CAST(f.doc_id IS NOT NULL AS BIGINT) AS is_dup
           FROM newb n LEFT JOIN flagged f ON f.doc_id = n.doc_id
-          ORDER BY n.doc_id""",
-    "c77_pack_efficiency" ->
+          ORDER BY n.doc_id"""),
+    Q("c77_pack_efficiency", c77PackEfficiency,
       s"""WITH d AS (
             SELECT doc_id, lang,
               CAST(len(${TrainingQueries.toksSql}) AS BIGINT) AS n_tokens
@@ -967,8 +942,8 @@ object TrainingQueries7 {
           SELECT fill_decade, n_bins, n_docs, n_tokens,
             n_tokens * 1000000 //
               CAST((SELECT sum(n_tokens) FROM g) AS BIGINT) AS token_share_ppm
-          FROM g ORDER BY fill_decade""",
-    "c74_gram_novelty" ->
+          FROM g ORDER BY fill_decade"""),
+    Q("c74_gram_novelty", c74GramNovelty,
       s"""WITH toks AS (
             SELECT source, ${TrainingQueries.toksSql} AS tk FROM documents),
           gr AS (
@@ -985,8 +960,8 @@ object TrainingQueries7 {
           SELECT source, total_grams, distinct_grams,
             distinct_grams * 1000000 // total_grams AS novelty_ppm,
             hapax_grams * 1000000 // distinct_grams AS hapax_ppm
-          FROM g ORDER BY source""",
-    "c75_band_load" ->
+          FROM g ORDER BY source"""),
+    Q("c75_band_load", c75BandLoad,
       s"""WITH ${TrainingQueries.corpusSql},
           toks AS (SELECT doc_id, ${TrainingQueries.toksSql} AS tk
             FROM corpus),
@@ -1001,8 +976,8 @@ object TrainingQueries7 {
             CAST(sum(sz) AS BIGINT) AS n_docs,
             CAST(max(sz) AS BIGINT) AS max_bucket,
             CAST(sum(sz * (sz - 1) // 2) AS BIGINT) AS candidate_pairs
-          FROM bs GROUP BY band ORDER BY band""",
-    "c71_minhash_error" -> {
+          FROM bs GROUP BY band ORDER BY band"""),
+    Q("c71_minhash_error", c71MinhashError, {
       val matches = (0 until 8)
         .map(j => s"CAST(sa.h$j = sb.h$j AS BIGINT)").mkString(" + ")
       s"""WITH ${TrainingQueries.corpusSql},
@@ -1037,8 +1012,8 @@ object TrainingQueries7 {
           SELECT decile, n_pairs, se // n_pairs AS mean_est_ppm,
             sx // n_pairs AS mean_exact_ppm, sae // n_pairs AS mae_ppm
           FROM g ORDER BY decile"""
-    },
-    "c72_cell_balance" ->
+    }),
+    Q("c72_cell_balance", c72CellBalance,
       s"""WITH ve AS (
             SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           cents AS (
@@ -1062,8 +1037,8 @@ object TrainingQueries7 {
           SELECT cell, n_vectors,
             n_vectors * 1000000 // tot AS share_ppm,
             k * mx * 1000000 // tot AS imbalance_ppm
-          FROM cells, t ORDER BY cell""",
-    "c73_lang_mix" ->
+          FROM cells, t ORDER BY cell"""),
+    Q("c73_lang_mix", c73LangMix,
       s"""WITH cells AS (
             SELECT lang, source, count(*) AS n_docs,
               CAST(sum(len(${TrainingQueries.toksSql})) AS BIGINT) AS n_tokens
@@ -1071,8 +1046,8 @@ object TrainingQueries7 {
           SELECT lang, source, n_docs, n_tokens,
             n_tokens * 1000000 //
               CAST((SELECT sum(n_tokens) FROM cells) AS BIGINT) AS share_ppm
-          FROM cells ORDER BY lang, source""",
-    "c69_contam_by_source" ->
+          FROM cells ORDER BY lang, source"""),
+    Q("c69_contam_by_source", c69ContamBySource,
       s"""WITH evals AS (
             SELECT array_to_string(list_slice(${TrainingQueries.toksSql}, 11, 26), ' ') AS text
             FROM documents WHERE doc_id % 13 = 0),
@@ -1105,8 +1080,8 @@ object TrainingQueries7 {
               THEN CAST(sum(n_hits) AS BIGINT) * 1000000
                 // CAST(sum(n_shingles) AS BIGINT)
               ELSE 0 END AS hit_ppm
-          FROM per GROUP BY source ORDER BY source""",
-    "c70_threshold_sweep" ->
+          FROM per GROUP BY source ORDER BY source"""),
+    Q("c70_threshold_sweep", c70ThresholdSweep,
       s"""WITH ${TrainingQueries.corpusSql},
           toks AS (SELECT doc_id, ${TrainingQueries.toksSql} AS tk
             FROM corpus),
@@ -1129,8 +1104,8 @@ object TrainingQueries7 {
             CAST(sum(CASE WHEN cj.jaccard * 100 >= t.threshold_pct
               THEN 1 ELSE 0 END) AS BIGINT) AS n_pairs
           FROM cj CROSS JOIN t
-          GROUP BY t.threshold_pct ORDER BY t.threshold_pct""",
-    "c68_cluster_sizes" ->
+          GROUP BY t.threshold_pct ORDER BY t.threshold_pct"""),
+    Q("c68_cluster_sizes", c68ClusterSizes,
       s"""WITH RECURSIVE ${TrainingQueries.clusterCteSql},
           allc AS (
             SELECT c.doc_id, coalesce(cl.cluster, c.doc_id) AS cluster
@@ -1140,8 +1115,8 @@ object TrainingQueries7 {
             FROM allc GROUP BY cluster)
           SELECT cluster_size, count(*) AS n_clusters,
             CAST(sum(cluster_size) AS BIGINT) AS n_docs
-          FROM sz GROUP BY cluster_size ORDER BY cluster_size""",
-    "c66_dedup_savings" ->
+          FROM sz GROUP BY cluster_size ORDER BY cluster_size"""),
+    Q("c66_dedup_savings", c66DedupSavings,
       """WITH corpus AS (
            SELECT doc_id, text, source FROM documents
            UNION ALL
@@ -1162,8 +1137,8 @@ object TrainingQueries7 {
              THEN CAST(sum(removed * length(text)) AS BIGINT) * 1000000
                // CAST(sum(length(text)) AS BIGINT)
              ELSE 0 END AS savings_ppm
-         FROM marked GROUP BY source ORDER BY source""",
-    "c67_length_histogram" ->
+         FROM marked GROUP BY source ORDER BY source"""),
+    Q("c67_length_histogram", c67LengthHistogram,
       s"""WITH t AS (
             SELECT source,
               CAST(len(${TrainingQueries.toksSql}) AS BIGINT) AS n_tok
@@ -1175,6 +1150,6 @@ object TrainingQueries7 {
             min(n_tok) AS min_tokens,
             max(n_tok) AS max_tokens
           FROM t GROUP BY source, magnitude
-          ORDER BY source, magnitude"""
+          ORDER BY source, magnitude""")
   )
 }

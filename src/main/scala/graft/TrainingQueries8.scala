@@ -637,23 +637,6 @@ object TrainingQueries8 {
       .orderBy(col("n_merges"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "c103_merge_sweep" -> (c103MergeSweep _),
-    "c102_knn_recall" -> (c102KnnRecall _),
-    "c101_kappa" -> (c101Kappa _),
-    "c100_release_diff" -> (c100ReleaseDiff _),
-    "c99_line_lang" -> (c99LineLang _),
-    "c98_semantic_clusters" -> (c98SemanticClusters _),
-    "c97_knn_graph" -> (c97KnnGraph _),
-    "c96_embed_corr" -> (c96EmbedCorr _),
-    "c90_bm25" -> (c90Bm25 _),
-    "c91_band_planner" -> (c91BandPlanner _),
-    "c92_bpe_pairs" -> (c92BpePairs _),
-    "c93_prf_hybrid" -> (c93PrfHybrid _),
-    "c94_kn_counts" -> (c94KnCounts _),
-    "c95_containment" -> (c95Containment _)
-  )
-
   private val toksSql = """regexp_extract_all(lower(trim(text)), '\S+')"""
 
   /** The c90 BM25 chain as a CTE body ending at `bm25r(rk, doc_id,
@@ -749,8 +732,8 @@ object TrainingQueries8 {
                         WHERE e.a = pl.a AND e.b = pl.b))"""
   }
 
-  def oracleSql: Map[String, String] = Map(
-    "c103_merge_sweep" ->
+  val registry: Seq[Q] = Seq(
+    Q("c103_merge_sweep", c103MergeSweep,
       s"""WITH t AS (SELECT $toksSql AS tk FROM documents),
           ix AS (
             SELECT tk, unnest(range(1, len(tk))) AS i
@@ -773,8 +756,8 @@ object TrainingQueries8 {
             FROM r JOIN sz ON r.rk <= sz.n_merges GROUP BY n_merges)
           SELECT n_merges, covered_pairs, total_pairs, n_pair_types,
             covered_pairs * 1000000 // total_pairs AS coverage_ppm
-          FROM cov CROSS JOIN t2 ORDER BY n_merges""",
-    "c102_knn_recall" ->
+          FROM cov CROSS JOIN t2 ORDER BY n_merges"""),
+    Q("c102_knn_recall", c102KnnRecall,
       s"""WITH base AS (
             SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           dups AS (
@@ -798,8 +781,8 @@ object TrainingQueries8 {
           SELECT 2 AS probes, n_planted, n_recovered,
             n_recovered * 1000000 // n_planted AS recall_ppm
           FROM np CROSS JOIN p2rec
-          ORDER BY probes""",
-    "c101_kappa" -> {
+          ORDER BY probes"""),
+    Q("c101_kappa", c101Kappa, {
       import graft.operators.TextAnalysis
       val tailCase = TextAnalysis.langMarkers.map { case (l, ms) =>
         s"WHEN lang = '$l' THEN text || '${langTail(ms)}'"
@@ -831,8 +814,8 @@ object TrainingQueries8 {
             (n_docs * n_agree - chance) * 1000000
               // (n_docs * n_docs - chance) AS kappa_ppm
           FROM tot CROSS JOIN ch"""
-    },
-    "c100_release_diff" ->
+    }),
+    Q("c100_release_diff", c100ReleaseDiff,
       """WITH d AS (SELECT doc_id, source, text FROM documents),
          old AS (
            SELECT doc_id, source, md5(text) AS h FROM d
@@ -862,8 +845,8 @@ object TrainingQueries8 {
              AS n_changed,
            CAST(sum(CASE WHEN disp = 'same' THEN 1 ELSE 0 END) AS BIGINT)
              AS n_same
-         FROM j GROUP BY source ORDER BY source""",
-    "c99_line_lang" -> {
+         FROM j GROUP BY source ORDER BY source"""),
+    Q("c99_line_lang", c99LineLang, {
       val (hits, kase) = langCaseSql
       s"""WITH d AS (
             SELECT doc_id,
@@ -902,8 +885,8 @@ object TrainingQueries8 {
             (kt.n_known - r.n) * 1000000 // kt.n_known AS minority_ppm
           FROM r JOIN tot USING (doc_id) JOIN kt ON kt.doc_id = r.doc_id
           WHERE rn = 1 ORDER BY r.doc_id"""
-    },
-    "c98_semantic_clusters" ->
+    }),
+    Q("c98_semantic_clusters", c98SemanticClusters,
       s"""WITH RECURSIVE
           base AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           dups AS (
@@ -946,8 +929,8 @@ object TrainingQueries8 {
             SELECT component, count(*) AS cluster_size
             FROM cl GROUP BY component)
           SELECT cluster_size, count(*) AS n_clusters FROM cs
-          GROUP BY cluster_size ORDER BY cluster_size""",
-    "c97_knn_graph" ->
+          GROUP BY cluster_size ORDER BY cluster_size"""),
+    Q("c97_knn_graph", c97KnnGraph,
       s"""WITH ve AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
           cents AS (
             SELECT vec_id AS cent_id, v AS centv FROM ve
@@ -976,8 +959,8 @@ object TrainingQueries8 {
             FROM embeddings e LEFT JOIN edges ed ON ed.dst = e.vec_id
             GROUP BY e.vec_id)
           SELECT in_deg, count(*) AS n_nodes FROM indeg
-          GROUP BY in_deg ORDER BY in_deg""",
-    "c96_embed_corr" ->
+          GROUP BY in_deg ORDER BY in_deg"""),
+    Q("c96_embed_corr", c96EmbedCorr,
       """WITH e AS (
            SELECT list_transform(embedding::DOUBLE[],
              x -> CAST(round(x * 1000) AS BIGINT)) AS q
@@ -1006,8 +989,8 @@ object TrainingQueries8 {
          r AS (
            SELECT *, row_number() OVER (ORDER BY abs(corr_ppm) DESC, i, j)
              AS rk FROM c)
-         SELECT rk, i, j, corr_ppm FROM r WHERE rk <= 20 ORDER BY rk""",
-    "c91_band_planner" ->
+         SELECT rk, i, j, corr_ppm FROM r WHERE rk <= 20 ORDER BY rk"""),
+    Q("c91_band_planner", c91BandPlanner,
       s"""WITH ${TrainingQueries.corpusSql},
           t AS (
             SELECT doc_id, $toksSql AS tk FROM corpus
@@ -1045,12 +1028,12 @@ object TrainingQueries8 {
             CASE WHEN n_hi > 0 THEN hit_hi_ppm // n_hi ELSE 0 END
               AS exp_recall_ppm,
             wasted_lo_ppm
-          FROM agg ORDER BY n_bands DESC""",
-    "c90_bm25" ->
+          FROM agg ORDER BY n_bands DESC"""),
+    Q("c90_bm25", c90Bm25,
       s"""WITH $bm25Ctes
           SELECT rk, doc_id, score_micro, n_terms_hit
-          FROM bm25r WHERE rk <= 20 ORDER BY rk""",
-    "c93_prf_hybrid" ->
+          FROM bm25r WHERE rk <= 20 ORDER BY rk"""),
+    Q("c93_prf_hybrid", c93PrfHybrid,
       s"""WITH $bm25Ctes,
           lex AS (SELECT doc_id, rk AS rk_lex FROM bm25r WHERE rk <= 100),
           top3 AS (SELECT doc_id FROM lex WHERE rk_lex <= 3),
@@ -1081,8 +1064,8 @@ object TrainingQueries8 {
             SELECT *, row_number() OVER (ORDER BY rrf_micro DESC, doc_id)
               AS rk FROM fused)
           SELECT rk, doc_id, rrf_micro, rk_lex, rk_sem
-          FROM fr WHERE rk <= 20 ORDER BY rk""",
-    "c94_kn_counts" ->
+          FROM fr WHERE rk <= 20 ORDER BY rk"""),
+    Q("c94_kn_counts", c94KnCounts,
       s"""WITH t AS (SELECT $toksSql AS tk FROM documents),
           ix AS (
             SELECT tk, unnest(range(1, len(tk))) AS i
@@ -1104,8 +1087,8 @@ object TrainingQueries8 {
           SELECT rk, word, n_left_contexts, n_right_contexts,
             n_left_contexts * 1000000 // (SELECT n_types FROM tot)
               AS p_cont_ppm
-          FROM rkd WHERE rk <= 20 ORDER BY rk""",
-    "c95_containment" ->
+          FROM rkd WHERE rk <= 20 ORDER BY rk"""),
+    Q("c95_containment", c95Containment,
       s"""WITH b AS (SELECT doc_id, $toksSql AS tk FROM documents),
           f AS (
             SELECT doc_id + 2000000 AS doc_id,
@@ -1132,8 +1115,8 @@ object TrainingQueries8 {
               cont_ppm,
               n_inter * 1000000 // (s1 + s2 - n_inter) AS jaccard_ppm
             FROM c WHERE cont_ppm >= 900000)
-          SELECT * FROM k ORDER BY contained_id, container_id""",
-    "c92_bpe_pairs" ->
+          SELECT * FROM k ORDER BY contained_id, container_id"""),
+    Q("c92_bpe_pairs", c92BpePairs,
       s"""WITH t AS (SELECT doc_id, $toksSql AS tk FROM documents),
           ix AS (
             SELECT tk, unnest(range(1, len(tk))) AS i
@@ -1144,6 +1127,6 @@ object TrainingQueries8 {
             SELECT *, row_number() OVER (ORDER BY n_pairs DESC, w1, w2)
               AS rk FROM c)
           SELECT rk, w1, w2, n_pairs, w1 || '_' || w2 AS merged
-          FROM r WHERE rk <= 20 ORDER BY rk"""
+          FROM r WHERE rk <= 20 ORDER BY rk""")
   )
 }

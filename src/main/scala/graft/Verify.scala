@@ -1,10 +1,11 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
+/** Driver-run correctness dump: each SparkEntry.registry result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    val only = SparkEntry.only() // checked before the session starts
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // the bench's session (GraftSession.builder + SPARK_GRAFT_CONF), so
     // the oracle gate checks the plans the bench times
@@ -14,16 +15,14 @@ object Verify {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    // local-iteration filter (comma-separated names); driver leaves unset
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).toSet)
-    val selected = SparkEntry.queries.filter { case (n, _) =>
-      only.forall(_.contains(n)) }
-    selected.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+    // registry sorted by name: runs and oracle_sql.json in a fixed order,
+    // so two dumps compare with diff
+    val registry = SparkEntry.registry.sortBy(_.name)
+    registry.filter(q => only.forall(_.contains(q.name))).foreach { q =>
+      try q.run(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/${q.name}")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        System.err.println(s"[verify] ${q.name} failed: ${e.getMessage}")
       }
       // queries are independent — don't let one query's persisted
       // intermediates accumulate against the next's memory
@@ -41,8 +40,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = registry
+      .map(e => s"${q(e.name)}: ${q(e.oracle)}").mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

@@ -65,32 +65,44 @@ object EventPipeline {
     def load(spark: SparkSession): DataFrame = df
   }
 
-  /** `dlqDir = Some(dir)` dead-letters invalid rows (missing routing
-    * key / unparseable body) instead of dropping them — the reference
-    * never loses a row (main.ts:463-514); replay them later with
-    * `EventRouter.replayDlq`. None keeps the drop behavior. */
-  /** `sinkPing = Some(f)` is the connection-watchdog seam (reference
+  /** One pipeline's settings.
+    *
+    * `dlqDir = Some(dir)` is where rows go instead of being lost, with a
+    * reason + attempt counter (the reference never loses a row,
+    * main.ts:463-514); replay them with `EventRouter.replayDlq`. Which
+    * rows go there depends on the entry point:
+    *  - `start` dead-letters invalid rows (missing routing key /
+    *    unparseable body); None drops them.
+    *  - `startEvolving` and `startEvolvingJdbc` always DROP rows with no
+    *    routing key, and a body that does not parse lands with null
+    *    flattened columns. There `dlqDir` receives only the sinkPing
+    *    divert below and, in `startEvolving`, the batch rows of a type
+    *    whose table write threw.
+    *
+    * `sinkPing = Some(f)` is the connection-watchdog seam (reference
     * main.ts:244-260 pings ClickHouse and main.ts:464 gates inserts on
-    * `lastPingShowsDisconnectedDestination`): evaluated once per
-    * micro-batch BEFORE any table write. A false ping — or a table
-    * write that throws — diverts the affected rows to `dlqDir` with a
-    * reason + attempt counter instead of failing the stream; recovery
-    * is the existing a12 replay path. Without a `dlqDir` the failure
+    * `lastPingShowsDisconnectedDestination`), used by the evolving
+    * sinks: evaluated once per micro-batch BEFORE any table write. A
+    * false ping diverts the batch's routable rows to `dlqDir` raw
+    * instead of failing the stream; recovery is the existing a12 replay path.
+    * Without a `dlqDir` the ping is not consulted and a write failure
     * propagates (fail-the-batch, checkpoint replays — the pre-watchdog
-    * behavior). */
-  /** `compactEvery = Some(n)` runs [[graft.operators.Compactor]] over
-    * the routed table after every n-th micro-batch, INSIDE foreachBatch
-    * — the maintenance loop that keeps streaming fragmentation bounded
-    * (the reference's MergeTree background merges,
-    * bulker.class.ts:66-117, where the engine that owns the parts owns
-    * their merges). Running at the micro-batch boundary makes the
-    * merge atomic w.r.t. the stream's own appends BY CONSTRUCTION (no
-    * snapshot-then-swap lost-append race: foreachBatch serializes the
-    * two), and external readers see staged-swap visibility — the old
-    * file set or the new one, never a half-merged union
-    * (StreamingCompactionSpec pins both). `onCompact` observes each
-    * merge's Stats (tests and ops counters). */
-  /** `debugTee = Some(dir)` appends a compact JSON-lines trace of every
+    * behavior).
+    *
+    * `compactEvery = Some(n)` runs [[graft.operators.Compactor]] over
+    * the routed table after every n-th micro-batch of `start`, INSIDE
+    * foreachBatch — the maintenance loop that keeps streaming
+    * fragmentation bounded (the reference's MergeTree background
+    * merges, bulker.class.ts:66-117, where the engine that owns the
+    * parts owns their merges). Running at the micro-batch boundary
+    * makes the merge atomic w.r.t. the stream's own appends BY
+    * CONSTRUCTION (no snapshot-then-swap lost-append race: foreachBatch
+    * serializes the two), and external readers see staged-swap
+    * visibility — the old file set or the new one, never a half-merged
+    * union (StreamingCompactionSpec pins both). `onCompact` observes
+    * each merge's Stats (tests and ops counters).
+    *
+    * `debugTee = Some(dir)` appends a compact JSON-lines trace of every
     * STORED row — (type, received_at, stream_batch_id) — next to the
     * real write, the reference's DEBUG_STORE_LOG ops affordance
     * (main.ts:140-142, 181-199: fs.appendFile of per-row
