@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import graft.functions.Fns
 import graft.operators._
 import graft.sources.{JdbcEventSink, Tables}
+import graft.streaming.{EventPipeline, Scaffold}
+import graft.streaming.Scaffold.{scratch, stageSliceFiles}
 
 /** One query: its name, its Spark body over an sf dir, and the DuckDB
   * SQL its result must match. The oracle is a required field, so a query
@@ -37,49 +39,6 @@ object SparkEntry {
   private def T(s: SparkSession, dir: String, name: String): DataFrame =
     Tables(s, dir, name)
 
-  /** Stage N independent slice frames as EXACTLY one parquet file each
-    * under `dest` — the file-per-micro-batch input layout the streaming
-    * driver rows replay — writing them OVERLAPPED from a small thread
-    * pool (guide §2.6: independent jobs back-fill each other's task
-    * tails) instead of as N serial scan+write jobs. Each slice writes
-    * into its own staging dir (concurrent jobs must not share one
-    * output committer), then its single part file moves into `dest`
-    * under a deterministic name with strictly ASCENDING modification
-    * times, so a maxFilesPerTrigger=1 file stream consumes file i as
-    * micro-batch i exactly as the old serial writes arranged —
-    * including the watermark-ordering contract b23 depends on. */
-  private[graft] def stageSliceFiles(s: SparkSession, dest: String,
-                                     slices: Seq[DataFrame]): Unit = {
-    import org.apache.hadoop.fs.Path
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(4, math.max(1, slices.size)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(slices.zipWithIndex.map {
-          case (df, i) => scala.concurrent.Future {
-            df.coalesce(1).write.parquet(s"$dest/__stage_$i")
-          }
-        }),
-        scala.concurrent.duration.Duration.Inf)
-    } finally { pool.shutdown(); () }
-    val fs = new Path(dest).getFileSystem(s.sparkContext.hadoopConfiguration)
-    val base = System.currentTimeMillis()
-    slices.indices.foreach { i =>
-      val stage = new Path(s"$dest/__stage_$i")
-      val parts = fs.listStatus(stage).map(_.getPath)
-        .filter(_.getName.startsWith("part-"))
-      require(parts.length == 1, // coalesce(1) wrote exactly one file
-        s"stageSliceFiles: expected 1 part file in $stage, got ${parts.length}")
-      val to = new Path(dest, f"slice-$i%05d.parquet")
-      if (!fs.rename(parts.head, to))
-        throw new java.io.IOException(s"stageSliceFiles: rename to $to failed")
-      fs.setTimes(to, base - (slices.size - i) * 60000L, -1)
-      fs.delete(stage, true); ()
-    }
-  }
-
   /** Flagship: the event pipeline end-to-end on sf0.001 — ingest,
     * flatten, enrich, route, rollup. Driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
@@ -87,12 +46,7 @@ object SparkEntry {
     val ev = T(spark, dir, "events")
     val flat = EventFlattener.flatten(
       ev, "props", keep = Seq("event_id", "ts", "user_id", "event_type", "value"))
-    val enriched = EventFlattener.withMetadata(
-      flat,
-      receivedAt = Fns.nanosToTimestamp(col("ts")),
-      sentAt = current_timestamp(),
-      idCols = Seq(col("event_type"), col("event_id")))
-    EventRouter.routeCounts(EventFlattener.defaultTransform(enriched))
+    EventRouter.routeCounts(EventPipeline.enrich(flat, EventFlattener.defaultTransform))
   }
 
   // ---------------------------------------------------------------
@@ -284,16 +238,12 @@ object SparkEntry {
     * one-shuffle routed write, read the tables back. The oracle checks
     * the round-trip preserved exactly the valid rows per type. */
   private def a11PipelineE2e(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_e2e").toString + "/tables"
+    val out = scratch("graft_e2e") + "/tables"
     val ev = T(s, dir, "events")
     val flat = EventFlattener.flatten(ev, "props",
       keep = Seq("event_id", "ts", "user_id", "event_type", "value"),
       opts = EventFlattener.Options(detectDates = false, sampleFraction = 0.1))
-    val enriched = EventFlattener.defaultTransform(
-      EventFlattener.withMetadata(flat,
-        receivedAt = Fns.nanosToTimestamp(col("ts")),
-        sentAt = current_timestamp(),
-        idCols = Seq(col("event_type"), col("event_id"))))
+    val enriched = EventPipeline.enrich(flat, EventFlattener.defaultTransform)
       .filter(col("event_type").isNotNull && length(col("event_type")) > 0)
     EventRouter.writeRouted(enriched, out, sortCol = "ts")
     s.read.parquet(out)
@@ -310,8 +260,7 @@ object SparkEntry {
     * the original rows (counts, distinct ids, decimal-exact sums) —
     * with the file-count reduction asserted in-row. */
   private def a14CompactionE2e(s: SparkSession, dir: String): DataFrame = {
-    val out = java.nio.file.Files.createTempDirectory("graft_compact")
-      .toString + "/tables"
+    val out = scratch("graft_compact") + "/tables"
     T(s, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
@@ -342,7 +291,7 @@ object SparkEntry {
     * visibility). The oracle checks the final table contents are
     * lossless and that exactly 2 merges ran, each reducing files. */
   private def a19StreamCompact(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_a19").toString
+    val tmp = scratch("graft_a19")
     val slice = T(s, dir, "events")
       .filter(col("event_id") % 19 === 0)
       .select(col("event_id"), col("ts"), col("user_id"),
@@ -352,12 +301,11 @@ object SparkEntry {
     })
     val merges = new java.util.concurrent.ConcurrentLinkedQueue[
       graft.operators.Compactor.Stats]()
-    val cfg = graft.streaming.EventPipeline.Config(
+    val cfg = EventPipeline.Config(
       inputDir = s"$tmp/in", outputDir = s"$tmp/out",
       checkpointDir = s"$tmp/ck", maxFilesPerTrigger = 1,
       compactEvery = Some(2), onCompact = Some(st => { merges.add(st); () }))
-    graft.streaming.EventPipeline.start(s, slice.schema, cfg)
-      .awaitTermination()
+    EventPipeline.start(s, slice.schema, cfg).awaitTermination()
     val reduced = merges.size() == 2 &&
       merges.asScala.forall(st => st.filesAfter <= st.filesBefore)
     s.read.parquet(s"$tmp/out")
@@ -387,30 +335,7 @@ object SparkEntry {
     val base = "jdbc:derby:memory:graft_a15"
     try { java.sql.DriverManager.getConnection(s"$base;drop=true"); () }
     catch { case _: java.sql.SQLException => () } // drop reports via exception
-    val url = s"$base;create=true"
-    val ev = T(s, dir, "events").filter(col("event_id") % 17 === 0)
-      .select(col("event_id"), col("value"),
-        get_json_object(col("props"), "$.k").cast("long").as("k"))
-    val maxRow = ev.agg(max(col("event_id"))).collect()(0)
-    // the 1-in-17 slice could be empty on a tiny input — fail loudly
-    // instead of an opaque NPE from getLong on a NULL max
-    require(!maxRow.isNullAt(0),
-      s"a15_jdbc_evolve: no events with event_id % 17 == 0 under $dir")
-    val half = maxRow.getLong(0) / 2
-    val b1 = ev.filter(col("event_id") <= half)
-      .select(col("event_id"), col("k"),
-        round(col("value") * 100).cast("long").as("amount_cents"))
-    val b2 = ev.filter(col("event_id") > half)
-      .select(col("event_id"), col("k"),
-        concat(lit("usd_"), round(col("value") * 100).cast("long"))
-          .as("amount_cents"),
-        (col("value") > 100).as("new_flag"))
-    JdbcEventSink.evolveAppend(s, b1, url, "ev_replay")
-    JdbcEventSink.evolveAppend(s, b2, url, "ev_replay")
-    JdbcEventSink.readTable(s, url, "ev_replay")
-      .select(col("event_id"), col("k"), col("amount_cents"),
-        col("new_flag").cast("string").as("new_flag"))
-      .orderBy(col("event_id"))
+    evolveReplay(s, dir, "a15_jdbc_evolve", 17, s"$base;create=true")(identity)
   }
 
   /** A16b: the a15 evolve replay against a NETWORK-SERVED warehouse —
@@ -428,33 +353,43 @@ object SparkEntry {
     * parquet before the warehouse closes (the a16 broker pattern). */
   private def a15bJdbcEvolveNet(s: SparkSession, dir: String): DataFrame = {
     val wh = new graft.sources.NetWarehouse("graft_a15b")
-    try {
-      val ev = T(s, dir, "events").filter(col("event_id") % 19 === 0)
-        .select(col("event_id"), col("value"),
-          get_json_object(col("props"), "$.k").cast("long").as("k"))
-      val maxRow = ev.agg(max(col("event_id"))).collect()(0)
-      require(!maxRow.isNullAt(0),
-        s"a15b_jdbc_evolve_net: no events with event_id % 19 == 0 under $dir")
-      val half = maxRow.getLong(0) / 2
-      val b1 = ev.filter(col("event_id") <= half)
-        .select(col("event_id"), col("k"),
-          round(col("value") * 100).cast("long").as("amount_cents"))
-      val b2 = ev.filter(col("event_id") > half)
-        .select(col("event_id"), col("k"),
-          concat(lit("usd_"), round(col("value") * 100).cast("long"))
-            .as("amount_cents"),
-          (col("value") > 100).as("new_flag"))
-      JdbcEventSink.evolveAppend(s, b1, wh.url, "ev_replay")
-      JdbcEventSink.evolveAppend(s, b2, wh.url, "ev_replay")
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_a15b").toString
-      JdbcEventSink.readTable(s, wh.url, "ev_replay")
-        .write.mode("overwrite").parquet(out)
+    try evolveReplay(s, dir, "a15b_jdbc_evolve_net", 19, wh.url) { table =>
+      val out = scratch("graft_a15b")
+      table.write.mode("overwrite").parquet(out)
       s.read.parquet(out)
-        .select(col("event_id"), col("k"), col("amount_cents"),
-          col("new_flag").cast("string").as("new_flag"))
-        .orderBy(col("event_id"))
     } finally wh.close()
+  }
+
+  /** The a15/a15b replay (described at a15) over the 1-in-`modulus`
+    * slice into `ev_replay` at `url`. The table read back passes
+    * through `land` before the final shape: a15b stages it off the
+    * live server there. */
+  private def evolveReplay(s: SparkSession, dir: String, query: String,
+                           modulus: Int, url: String)(
+                           land: DataFrame => DataFrame): DataFrame = {
+    val ev = T(s, dir, "events").filter(col("event_id") % modulus === 0)
+      .select(col("event_id"), col("value"),
+        get_json_object(col("props"), "$.k").cast("long").as("k"))
+    val maxRow = ev.agg(max(col("event_id"))).collect()(0)
+    // the slice could be empty on a tiny input — fail loudly instead
+    // of an opaque NPE from getLong on a NULL max
+    require(!maxRow.isNullAt(0),
+      s"$query: no events with event_id % $modulus == 0 under $dir")
+    val half = maxRow.getLong(0) / 2
+    val b1 = ev.filter(col("event_id") <= half)
+      .select(col("event_id"), col("k"),
+        round(col("value") * 100).cast("long").as("amount_cents"))
+    val b2 = ev.filter(col("event_id") > half)
+      .select(col("event_id"), col("k"),
+        concat(lit("usd_"), round(col("value") * 100).cast("long"))
+          .as("amount_cents"),
+        (col("value") > 100).as("new_flag"))
+    JdbcEventSink.evolveAppend(s, b1, url, "ev_replay")
+    JdbcEventSink.evolveAppend(s, b2, url, "ev_replay")
+    land(JdbcEventSink.readTable(s, url, "ev_replay"))
+      .select(col("event_id"), col("k"), col("amount_cents"),
+        col("new_flag").cast("string").as("new_flag"))
+      .orderBy(col("event_id"))
   }
 
   /** A13 promotion: the REAL-BROKER queue seam as a driver-checked
@@ -469,8 +404,6 @@ object SparkEntry {
     * production, producers publish from their own processes —
     * RetryLoopSpec exercises the executor-parallel publisher. */
   private def a16BrokerRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    import org.apache.spark.sql.types._
     val broker = new graft.sources.QueueBroker(numPartitions = 2)
     try {
       val payloads = T(s, dir, "events")
@@ -483,23 +416,11 @@ object SparkEntry {
       payloads.zipWithIndex.foreach { case (p, i) =>
         broker.publish(i % 2, p)
       }
-      val schema = StructType(Seq(
-        StructField("event_id", LongType),
-        StructField("event_type", StringType),
-        StructField("user_id", LongType)))
-      val out = java.nio.file.Files
-        .createTempDirectory("graft_broker_rt").toString
-      s.readStream.format("graft-queue")
-        .option("host", broker.host)
-        .option("port", broker.port.toString)
-        .load()
-        .select(from_json(col("value"), schema).as("e")).select("e.*")
-        .writeStream
-        .option("checkpointLocation", s"$out/ck")
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(s"$out/rows"); ()
-        }
-        .trigger(Trigger.AvailableNow()).start().awaitTermination()
+      val out = scratch("graft_broker_rt")
+      Scaffold.foreachBatch(EventPipeline.brokerEvents(s, broker.host, broker.port),
+          s"$out/ck") { (b, _) =>
+        b.write.mode("append").parquet(s"$out/rows")
+      }.awaitTermination()
       s.read.parquet(s"$out/rows")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),
@@ -529,6 +450,7 @@ object SparkEntry {
   private def a17WarehouseRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.streaming.Trigger
     import org.apache.spark.sql.types._
+    import org.apache.hadoop.fs.Path
     // NETWORK-served warehouse (not embedded Derby): executor tasks
     // dial the catalog over sockets, so this row also runs under
     // local-cluster — the a15 lesson (an in-memory embedded DB is
@@ -582,27 +504,14 @@ object SparkEntry {
           col("event_type"), col("value"),
           to_json(struct(concat(lit("s"), col("k")).as("k"),
             (col("event_id") % 7).as("v"))).as("props"))).as("value"))
-      val tmp = java.nio.file.Files.createTempDirectory("graft_a17").toString
+      val tmp = scratch("graft_a17")
       val pubSchema = StructType(Seq(StructField("value", StringType)))
       // stage all three producer inputs UPFRONT and overlapped (guide
       // §2.6): the staged frames depend only on the static slice, not
       // on any drain, so the three serial scan+write jobs the r13
       // event-log probe measured between the drains collapse to one
       // parallel wave before the loop starts
-      locally {
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(
-            Seq("b1" -> b1, "b2a" -> b2a, "b2b" -> b2b).map { case (tag, df) =>
-              scala.concurrent.Future {
-                df.coalesce(1).write.mode("overwrite").parquet(s"$tmp/in_$tag")
-              }
-            }),
-          scala.concurrent.duration.Duration.Inf)
-        finally { pool.shutdown(); () }
-      }
+      stageSliceFiles(s, s"$tmp/in", Seq(b1, b2a, b2b))
       // producer seat: ONE always-on DSv2 write-sink stream (the
       // epoch-idempotent PUBBATCH producer) watches a drop dir and
       // publishes each staged batch as its file is moved in — the r12
@@ -614,9 +523,8 @@ object SparkEntry {
       // (the row counts come from the staged files' parquet footers —
       // driver-side metadata, no job), so each drain still starts only
       // after its stage is fully on the log, exactly as before.
-      val fs = new org.apache.hadoop.fs.Path(tmp)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.mkdirs(new org.apache.hadoop.fs.Path(s"$tmp/pub_in"))
+      val fs = new Path(tmp).getFileSystem(s.sparkContext.hadoopConfiguration)
+      fs.mkdirs(new Path(s"$tmp/pub_in"))
       val pubQ = s.readStream.schema(pubSchema).parquet(s"$tmp/pub_in")
         .writeStream.format("graft-queue")
         .option("host", broker.host)
@@ -624,18 +532,14 @@ object SparkEntry {
         .option("checkpointLocation", s"$tmp/pub_ck")
         .trigger(Trigger.ProcessingTime(0)).start()
       var publishedRows = 0L
-      def publish(tag: String): Unit = {
-        val from = new org.apache.hadoop.fs.Path(s"$tmp/in_$tag")
-        fs.listStatus(from).filter(_.getPath.getName.startsWith("part-"))
-          .foreach { f =>
-            publishedRows += org.apache.parquet.hadoop.ParquetFileReader
-              .readFooter(s.sparkContext.hadoopConfiguration, f.getPath)
-              .getBlocks.asScala.map(_.getRowCount).sum
-            if (!fs.rename(f.getPath,
-                new org.apache.hadoop.fs.Path(s"$tmp/pub_in",
-                  s"$tag-${f.getPath.getName}")))
-              throw new java.io.IOException(s"a17: stage move failed for $tag")
-          }
+      // moves staged batch i (b1, b2a, b2b) into the producer's drop dir
+      def publish(i: Int): Unit = {
+        val slice = new Path(f"$tmp/in/slice-$i%05d.parquet")
+        publishedRows += org.apache.parquet.hadoop.ParquetFileReader
+          .readFooter(s.sparkContext.hadoopConfiguration, slice)
+          .getBlocks.asScala.map(_.getRowCount).sum
+        if (!fs.rename(slice, new Path(s"$tmp/pub_in", slice.getName)))
+          throw new java.io.IOException(s"a17: stage move failed for $slice")
         val c = new graft.sources.QueueBroker.Client(broker.host, broker.port)
         try {
           val parts = c.numPartitions
@@ -643,30 +547,21 @@ object SparkEntry {
           while (c.endOffsets(parts).sum < publishedRows) {
             if (System.nanoTime() > deadline)
               throw new IllegalStateException(
-                s"a17: publish of $tag not on the broker log after 120 s")
+                s"a17: publish of $slice not on the broker log after 120 s")
             Thread.sleep(5)
           }
         } finally c.close()
       }
-      val eventSchema = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", LongType),
-        StructField("user_id", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
-      def consumed: DataFrame = s.readStream.format("graft-queue")
-        .option("host", broker.host)
-        .option("port", broker.port.toString)
-        .load()
-        .select(from_json(col("value"), eventSchema).as("e")).select("e.*")
-      val cfg = graft.streaming.EventPipeline.Config(
+      val cfg = EventPipeline.Config(
         inputDir = "", outputDir = s"$tmp/out", checkpointDir = s"$tmp/ck")
       def drainToWarehouse(): Unit =
-        graft.streaming.EventPipeline.startEvolvingJdbc(s,
-          graft.streaming.EventPipeline.FrameEventSource(consumed), cfg, url)
+        EventPipeline.startEvolvingJdbc(s, EventPipeline.FrameEventSource(
+          EventPipeline.brokerEvents(s, broker.host, broker.port)), cfg, url)
           .awaitTermination()
-      publish("b1"); drainToWarehouse()
+      publish(0); drainToWarehouse()
       // each drain is a checkpointed restart consuming ONLY new offsets
-      publish("b2a"); drainToWarehouse() // 4 metadata-only ADD COLUMNs
-      publish("b2b"); drainToWarehouse() // the ONE staged-rewrite widen
+      publish(1); drainToWarehouse() // 4 metadata-only ADD COLUMNs
+      publish(2); drainToWarehouse() // the ONE staged-rewrite widen
       pubQ.stop() // the producer's seat closes with the show
       // read back over JDBC; per-type tables align to the merged shape
       // (a type all of whose rows landed in batch 1 never widened k,
@@ -702,11 +597,10 @@ object SparkEntry {
     * under its original type or 'recovered' — a lost, duplicated, or
     * double-recovered row breaks the hash. */
   private def a18RetryRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.types._
     val broker = new graft.sources.QueueBroker(numPartitions = 2)
     try {
-      val tmp = java.nio.file.Files.createTempDirectory("graft_a18").toString
-      val cfg = graft.streaming.EventPipeline.Config(
+      val tmp = scratch("graft_a18")
+      val cfg = EventPipeline.Config(
         inputDir = "", outputDir = s"$tmp/out", checkpointDir = s"$tmp/ck",
         dlqDir = Some(s"$tmp/dlq"))
       val slice = T(s, dir, "events").filter(col("event_id") % 31 === 0)
@@ -721,17 +615,8 @@ object SparkEntry {
         broker.host, broker.port, col("payload"), col("event_id"))
       require(published > 0,
         s"a18_retry_roundtrip: no events with event_id % 31 == 0 under $dir")
-      val eventSchema = StructType(Seq(
-        StructField("event_id", LongType), StructField("ts", LongType),
-        StructField("user_id", LongType), StructField("event_type", StringType),
-        StructField("value", DoubleType), StructField("props", StringType)))
-      def consumed: DataFrame = s.readStream.format("graft-queue")
-        .option("host", broker.host)
-        .option("port", broker.port.toString)
-        .load()
-        .select(from_json(col("value"), eventSchema).as("e")).select("e.*")
-      def run(): Unit = graft.streaming.EventPipeline.start(s,
-        graft.streaming.EventPipeline.FrameEventSource(consumed), cfg,
+      def run(): Unit = EventPipeline.start(s, EventPipeline.FrameEventSource(
+        EventPipeline.brokerEvents(s, broker.host, broker.port)), cfg,
         availableNow = true).awaitTermination()
       run()
       // repair the dead letters and re-enqueue over the wire (the
@@ -811,7 +696,7 @@ object SparkEntry {
     * pins multi-part maintenance (keys genuinely span parts, the
     * merge is real, not one part passing through). */
   private def b33StreamingRollup(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_b33").toString
+    val tmp = scratch("graft_b33")
     val ev = T(s, dir, "events")
       .filter(col("event_type").isNotNull && length(col("event_type")) > 0)
       .select(col("event_type"),
@@ -822,7 +707,7 @@ object SparkEntry {
     })
     val schema = s.read.parquet(s"$tmp/in").schema
     def maintain(ck: String): Unit = graft.streaming.StreamingRollup.start(s,
-      graft.streaming.EventPipeline.FileEventSource(schema, s"$tmp/in", 1),
+      EventPipeline.FileEventSource(schema, s"$tmp/in", 1),
       s"$tmp/states", ck, keys = Seq("event_type", "day"),
       value = col("value")).awaitTermination()
     maintain(s"$tmp/ck1")
@@ -847,8 +732,7 @@ object SparkEntry {
     * past the 30-minute gap, an event exactly AT the gap boundary
     * merges (Spark coalesces touching windows). */
   private def b23StreamSessions(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
-    val tmp = java.nio.file.Files.createTempDirectory("graft_b23").toString
+    val tmp = scratch("graft_b23")
     val ev = T(s, dir, "events").filter(col("event_id") % 7 === 0)
       .select(col("ts"), col("user_id"), col("value"))
     val maxRow = ev.agg(max(col("ts"))).collect()(0)
@@ -860,16 +744,12 @@ object SparkEntry {
     // (stageSliceFiles pins that order via ascending modification times)
     stageSliceFiles(s, s"$tmp/in",
       Seq(ev.filter(col("ts") <= mid), ev.filter(col("ts") > mid)))
-    val schema = s.read.parquet(s"$tmp/in").schema
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(s"$tmp/in")
-    graft.streaming.StreamingAnalytics.sessionWindowRollup(stream)
-      .writeStream.outputMode("complete")
-      .option("checkpointLocation", s"$tmp/ck")
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        b.write.mode("overwrite").parquet(s"$tmp/out"); ()
-      }
-      .trigger(Trigger.AvailableNow()).start().awaitTermination()
+    val stream = EventPipeline.FileEventSource(
+      s.read.parquet(s"$tmp/in").schema, s"$tmp/in").load(s)
+    Scaffold.foreachBatch(graft.streaming.StreamingAnalytics.sessionWindowRollup(stream),
+        s"$tmp/ck", outputMode = "complete") { (b, _) =>
+      b.write.mode("overwrite").parquet(s"$tmp/out")
+    }.awaitTermination()
     s.read.parquet(s"$tmp/out")
       .select(col("user_id"), col("session_start_s"), col("n_events"),
         col("sum_value").cast("double").as("sum_value"))
@@ -879,8 +759,7 @@ object SparkEntry {
   // ---------------------------------------------------------------
 
   /** Every query with its oracle: SparkEntry's own entries, then each
-    * family's. Lazy, so object initialisation cannot form a cycle with
-    * the families (their bodies call `stageSliceFiles`). */
+    * family's. */
   lazy val registry: Seq[Q] = Q.distinctNames(Seq(own,
     AnalyticsQueries.registry, AnalyticsQueries2.registry,
     AnalyticsQueries3.registry, AnalyticsQueries4.registry,

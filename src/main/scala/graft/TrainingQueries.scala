@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Multimodal, Similarity, TextAnalysis}
 import graft.sources.Tables
+import graft.streaming.{EventPipeline, Scaffold}
 
 /** C-series (SURVEY §2C): LLM-training-data pipeline operators —
   * dedup family, similarity search, text analysis, multimodal
@@ -524,10 +525,10 @@ object TrainingQueries {
   private def c106IndexAppend(s: SparkSession, dir: String): DataFrame = {
     val emb = T(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val base = emb.filter(col("vec_id") % 4 =!= 3)
-    val root = java.nio.file.Files.createTempDirectory("graft_c106").toString
+    val root = Scaffold.scratch("graft_c106")
     // the two micro-batch input files stage overlapped (guide §2.6);
     // result invariant to batch order by construction (see above)
-    SparkEntry.stageSliceFiles(s, s"$root/in",
+    Scaffold.stageSliceFiles(s, s"$root/in",
       Seq(emb.filter(col("vec_id") % 8 === 3),
         emb.filter(col("vec_id") % 8 === 7)))
     // foreachBatch runs on the stream's execution thread: the handle
@@ -535,15 +536,10 @@ object TrainingQueries {
     // here is safely published
     val idxRef = new java.util.concurrent.atomic.AtomicReference(
       Similarity.buildIndex(base, "vec_id", "embedding", stride = 0))
-    s.readStream.schema(emb.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$root/in")
-      .writeStream
-      .option("checkpointLocation", s"$root/ck")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        idxRef.set(Similarity.appendToIndex(idxRef.get, batch)); ()
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start().awaitTermination()
+    Scaffold.foreachBatch(EventPipeline.FileEventSource(emb.schema, s"$root/in").load(s),
+        s"$root/ck") { (batch, _) =>
+      idxRef.set(Similarity.appendToIndex(idxRef.get, batch))
+    }.awaitTermination()
     val idx = idxRef.get
     val refined = Similarity.refineServed(idx, iters = 1)
     val q = emb.filter(col("vec_id") < 8)

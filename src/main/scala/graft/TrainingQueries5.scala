@@ -149,8 +149,7 @@ object TrainingQueries5 {
     * row bound and multi-shard layout asserted in-row. */
   private def c49ShardExport(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Exporter
-    val out = java.nio.file.Files.createTempDirectory("graft_shards")
-      .toString + "/shards"
+    val out = graft.streaming.Scaffold.scratch("graft_shards") + "/shards"
     Exporter.writeShuffledShards(
       T(s, dir, "documents").select(col("doc_id"), col("source"),
         col("n_chars")),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
 import graft.sources.Tables
+import graft.streaming.{EventPipeline, Scaffold, StreamingIngest}
 
 /** C-series round 6: corpus accounting — the per-source dedup savings
   * report (what did dedup buy, and from whom) and the token-length
@@ -318,11 +319,10 @@ object TrainingQueries7 {
           concat(col("text"), lit(" zz tail")).as("text"))
     val b1 = novel(1).unionAll(dups(0, 1000000L))
     val b2 = novel(2).unionAll(dups(3, 2000000L))
-    val root = java.nio.file.Files.createTempDirectory("graft_c81").toString
-    SparkEntry.stageSliceFiles(s, s"$root/in", Seq(b1, b2))
-    val stream = s.readStream.schema(ref.schema)
-      .option("maxFilesPerTrigger", "1").parquet(s"$root/in")
-    graft.streaming.StreamingIngest.flagAgainstReference(stream, ref,
+    val root = Scaffold.scratch("graft_c81")
+    Scaffold.stageSliceFiles(s, s"$root/in", Seq(b1, b2))
+    val stream = EventPipeline.FileEventSource(ref.schema, s"$root/in").load(s)
+    StreamingIngest.flagAgainstReference(stream, ref,
       "doc_id", "text", s"$root/out", s"$root/ck", threshold = 0.5)
       .awaitTermination()
     s.read.parquet(s"$root/out")

@@ -8,8 +8,8 @@ import org.apache.spark.sql.connector.write.{DataWriter, LogicalWriteInfo,
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
 
-/** The WRITE half of the `graft-queue` connector —
-  * `df.writeStream.format("graft-queue")` — making the broker surface
+/** The WRITE half of the `graft-queue` connector — a streaming
+  * `format("graft-queue")` sink — making the broker surface
   * symmetric with Kafka's both ways (reference: main.ts:388-409, the
   * producer half of the retry loop). Shape:
   *

@@ -2,8 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 import graft.functions.Fns
 import graft.operators.{EventFlattener, EventRouter, SchemaEvolution}
 import graft.sources.JdbcEventSink
@@ -64,6 +64,23 @@ object EventPipeline {
   final case class FrameEventSource(df: DataFrame) extends EventSource {
     def load(spark: SparkSession): DataFrame = df
   }
+
+  /** The queue job's JSON body: the six event columns every producer
+    * publishes, `props` still a JSON string for the evolving sinks to
+    * flatten. */
+  val envelope: StructType = StructType(Seq(
+    StructField("event_id", LongType), StructField("ts", LongType),
+    StructField("user_id", LongType), StructField("event_type", StringType),
+    StructField("value", DoubleType), StructField("props", StringType)))
+
+  /** The `graft-queue` broker at host:port as a stream of event rows:
+    * each record's value decoded as an [[envelope]] JSON job. */
+  private[graft] def brokerEvents(spark: SparkSession, host: String, port: Int): DataFrame =
+    spark.readStream.format("graft-queue")
+      .option("host", host)
+      .option("port", port.toString)
+      .load()
+      .select(from_json(col("value"), envelope).as("e")).select("e.*")
 
   /** One pipeline's settings.
     *
@@ -153,11 +170,8 @@ object EventPipeline {
   def start(spark: SparkSession, source: EventSource, cfg: Config,
             availableNow: Boolean): StreamingQuery = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stream = source.load(spark)
-
-    val writer = stream.writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    Scaffold.foreachBatch(source.load(spark), cfg.checkpointDir, availableNow) {
+      (batch, batchId) =>
         // reference main.ts:463-514: a row is never lost — invalid rows
         // dead-letter (when configured) with a reason + attempt counter
         val valid = cfg.dlqDir match {
@@ -197,9 +211,7 @@ object EventPipeline {
             cfg.onCompact.foreach(_(st))
           }
         }
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    }
   }
 
   /** Read one routed destination "table" back. */
@@ -281,7 +293,8 @@ object EventPipeline {
     * insert gate), flatten the JSON column, enrich, stamp the batch
     * id, then hand (rawValid, presentTypes, enriched) to the
     * sink-specific body. Skips the body for an empty or diverted
-    * batch; manages the raw frame's persist lifetime around the body.
+    * batch; persists the raw frame and `enriched` (which both sinks
+    * consume once per present type) around the body and the trace.
     *
     * The emptiness gate and the sinks' type discovery are ONE job: the
     * distinct event_type list is collected here (empty list == empty
@@ -308,8 +321,11 @@ object EventPipeline {
             opts = EventFlattener.Options(reserved = reserved))
           val enriched = enrich(flat, cfg.transform)
             .withColumn("stream_batch_id", lit(batchId))
-          body(valid, types, enriched)
-          traceBatch(enriched, cfg.debugTee)
+            .persist()
+          try {
+            body(valid, types, enriched)
+            traceBatch(enriched, cfg.debugTee)
+          } finally { enriched.unpersist(); () }
         }
       }
     } finally { valid.unpersist(); () }
@@ -319,26 +335,18 @@ object EventPipeline {
   def startEvolving(spark: SparkSession, source: EventSource, cfg: Config,
                     jsonCol: String, availableNow: Boolean): StreamingQuery = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val stream = source.load(spark)
-    val writer = stream.writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        withRoutableBatch(batch, batchId, cfg, jsonCol) {
-          (valid, types, enrichedRaw) =>
-          val enriched = enrichedRaw.persist()
-          try {
-            val onFail: Option[(Seq[String], Throwable) => Unit] =
-              cfg.dlqDir.map { dlqOut => (failed: Seq[String], _: Throwable) =>
-                divertToDlq(valid.filter(col("event_type").isin(failed: _*)),
-                  "sink_write_failed", dlqOut, batchId)
-              }
-            writeEvolvedBatch(spark, enriched, types, cfg.outputDir,
-              batchId, onFail)
-          } finally { enriched.unpersist(); () }
+    Scaffold.foreachBatch(source.load(spark), cfg.checkpointDir, availableNow) {
+      (batch, batchId) =>
+        withRoutableBatch(batch, batchId, cfg, jsonCol) { (valid, types, enriched) =>
+          val onFail: Option[(Seq[String], Throwable) => Unit] =
+            cfg.dlqDir.map { dlqOut => (failed: Seq[String], _: Throwable) =>
+              divertToDlq(valid.filter(col("event_type").isin(failed: _*)),
+                "sink_write_failed", dlqOut, batchId)
+            }
+          writeEvolvedBatch(spark, enriched, types, cfg.outputDir,
+            batchId, onFail)
         }
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    }
   }
 
   /** The reference's FULL path on real seams: any [[EventSource]] (in
@@ -358,26 +366,14 @@ object EventPipeline {
   def startEvolvingJdbc(spark: SparkSession, source: EventSource, cfg: Config,
                         jdbcUrl: String, jsonCol: String = "props",
                         availableNow: Boolean = true): StreamingQuery = {
-    val writer = source.load(spark).writeStream
-      .option("checkpointLocation", cfg.checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        withRoutableBatch(batch, batchId, cfg, jsonCol) {
-          (_, types, enrichedRaw) =>
-          // persist: routeAndAppend consumes the flatten+enrich plan
-          // once per present type (and, overlapped, concurrently) —
-          // without this each per-type append re-runs the projection
-          // and re-plans its full lineage
-          val enriched = enrichedRaw.persist()
-          try {
-            JdbcEventSink.routeAndAppend(spark, enriched, jdbcUrl,
-              knownTypes = Some(types))
-            ()
-          }
-          finally { enriched.unpersist(); () }
+    Scaffold.foreachBatch(source.load(spark), cfg.checkpointDir, availableNow) {
+      (batch, batchId) =>
+        withRoutableBatch(batch, batchId, cfg, jsonCol) { (_, types, enriched) =>
+          JdbcEventSink.routeAndAppend(spark, enriched, jdbcUrl,
+            knownTypes = Some(types))
+          ()
         }
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    }
   }
 
   /** One micro-batch's routed write with per-type schema evolution.

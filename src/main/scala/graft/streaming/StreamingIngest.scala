@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener}
 import graft.operators.Dedup
 
 /** Streaming ingestion dedup — the streaming face of c76's
@@ -36,9 +36,8 @@ object StreamingIngest {
                            availableNow: Boolean = true): StreamingQuery = {
     val spark = docs.sparkSession
     val refIdx = Dedup.buildCorpusIndex(ref, idCol, textCol).persist()
-    val writer = docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    val q = Scaffold.foreachBatch(docs, checkpointDir, availableNow) {
+      (batch, batchId) =>
         // new-side index stays unpersisted: a micro-batch is scanned
         // at most twice (band keys + verify), cheaper than churning
         // the block manager every trigger
@@ -50,10 +49,7 @@ object StreamingIngest {
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("stream_batch_id")
           .parquet(outDir)
-        ()
-      }
-    val q = (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer)
-      .start()
+    }
     // Release the reference index when THIS query terminates.
     spark.streams.addListener(new StreamingQueryListener {
       override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import graft.operators.IncrementalRollup
 
 /** The streaming half of the SummingMergeTree / materialized-view
@@ -28,17 +28,13 @@ object StreamingRollup {
   def start(spark: SparkSession, source: EventPipeline.EventSource,
             statesDir: String, checkpointDir: String,
             keys: Seq[String], value: Column,
-            availableNow: Boolean = true): StreamingQuery = {
-    val writer = source.load(spark).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+            availableNow: Boolean = true): StreamingQuery =
+    Scaffold.foreachBatch(source.load(spark), checkpointDir, availableNow) {
+      (batch, batchId) =>
         IncrementalRollup.partialStates(batch, keys, value)
           .withColumn("batch_id", org.apache.spark.sql.functions.lit(batchId))
           .write.mode("append").parquet(statesDir)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
-  }
+    }
 
   /** Read-side view: dedup replayed parts, merge states, finalize.
     * Cost is proportional to the states table (keys × batches), not
@@ -61,16 +57,13 @@ object StreamingRollup {
                 keys: Seq[String], idCol: Column,
                 availableNow: Boolean = true): StreamingQuery = {
     import org.apache.spark.sql.functions._
-    val writer = source.load(spark).writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    Scaffold.foreachBatch(source.load(spark), checkpointDir, availableNow) {
+      (batch, batchId) =>
         batch.groupBy(keys.map(col): _*)
           .agg(hll_sketch_agg(idCol).as("uniq_state"))
           .withColumn("batch_id", lit(batchId))
           .write.mode("append").parquet(statesDir)
-        ()
-      }
-    (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
+    }
   }
 
   /** Merge the per-batch sketches and estimate. Replayed parts dedup

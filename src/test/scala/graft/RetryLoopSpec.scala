@@ -1,8 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.sources.{QueueBroker, QueuePublisher}
 import graft.streaming.EventPipeline
 
@@ -16,22 +14,6 @@ import graft.streaming.EventPipeline
   * back through the DSv2 consumer. */
 class RetryLoopSpec extends SparkSpec {
   import spark.implicits._
-
-  private val eventSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  private def brokerEvents(broker: QueueBroker): DataFrame =
-    spark.readStream.format("graft-queue")
-      .option("host", broker.host)
-      .option("port", broker.port.toString)
-      .load()
-      .select(from_json(col("value"), eventSchema).as("e"))
-      .select("e.*")
 
   private def ev(id: Long, tpe: String): String = {
     val t = if (tpe == null) "null" else s""""$tpe""""
@@ -50,8 +32,8 @@ class RetryLoopSpec extends SparkSpec {
       broker.publishAll(Seq(
         ev(1, "click"), ev(2, "purchase"), ev(3, null),
         ev(4, "click"), ev(5, null), ev(6, "purchase")))
-      def run(): Unit = EventPipeline.start(spark,
-        EventPipeline.FrameEventSource(brokerEvents(broker)),
+      def run(): Unit = EventPipeline.start(spark, EventPipeline.FrameEventSource(
+        EventPipeline.brokerEvents(spark, broker.host, broker.port)),
         cfg, availableNow = true).awaitTermination()
       run()
 

@@ -18,6 +18,5 @@ object TestSession {
 
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
-  def tmpDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  def tmpDir(prefix: String): String = graft.streaming.Scaffold.scratch(prefix)
 }

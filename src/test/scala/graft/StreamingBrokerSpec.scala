@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.sources.QueueBroker
 import graft.streaming.EventPipeline
 
@@ -32,14 +31,6 @@ import graft.streaming.EventPipeline
 class StreamingBrokerSpec extends SparkSpec {
   import spark.implicits._
 
-  private val eventSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
   private def payload(i: Int): String = {
     val t = if (i % 5 == 0) "purchase" else "click"
     s"""{"event_id":$i,"ts":${1700000000000000000L + i * 1000000000L},""" +
@@ -48,19 +39,16 @@ class StreamingBrokerSpec extends SparkSpec {
   }
 
   /** The documented Kafka-mapping decode shape: envelope value -> JSON
-    * body -> event columns. */
-  private def brokerEvents(broker: QueueBroker, maxPerTrigger: Int = 0): DataFrame = {
-    val reader = spark.readStream.format("graft-queue")
+    * body -> event columns; `maxPerTrigger > 0` caps each micro-batch. */
+  private def brokerEvents(broker: QueueBroker, maxPerTrigger: Int = 0): DataFrame =
+    if (maxPerTrigger <= 0) EventPipeline.brokerEvents(spark, broker.host, broker.port)
+    else spark.readStream.format("graft-queue")
       .option("host", broker.host)
       .option("port", broker.port.toString)
-    val withCap =
-      if (maxPerTrigger > 0)
-        reader.option("maxRecordsPerTrigger", maxPerTrigger.toString)
-      else reader
-    withCap.load()
-      .select(from_json(col("value"), eventSchema).as("e"))
+      .option("maxRecordsPerTrigger", maxPerTrigger.toString)
+      .load()
+      .select(from_json(col("value"), EventPipeline.envelope).as("e"))
       .select("e.*")
-  }
 
   private def runOnce(broker: QueueBroker, cfg: EventPipeline.Config,
                       maxPerTrigger: Int = 0): Unit =
@@ -149,7 +137,7 @@ class StreamingBrokerSpec extends SparkSpec {
         .option("port", broker.port.toString)
         .option("MAXRECORDSPERTRIGGER", "6") // hostile casing
         .load()
-        .select(from_json(col("value"), eventSchema).as("e")).select("e.*")
+        .select(from_json(col("value"), EventPipeline.envelope).as("e")).select("e.*")
       EventPipeline.start(spark, EventPipeline.FrameEventSource(events),
         cfg, availableNow = true).awaitTermination()
       val out = spark.read.parquet(s"$base/out")

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.sources.{JdbcEventSink, QueueBroker}
 import graft.streaming.EventPipeline
 
@@ -25,22 +22,6 @@ class WarehousePipelineSpec extends SparkSpec {
 
   private val url = "jdbc:derby:memory:graftwh;create=true"
 
-  private val eventSchema = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", LongType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)))
-
-  private def brokerEvents(broker: QueueBroker): DataFrame =
-    spark.readStream.format("graft-queue")
-      .option("host", broker.host)
-      .option("port", broker.port.toString)
-      .load()
-      .select(from_json(col("value"), eventSchema).as("e"))
-      .select("e.*")
-
   test("broker -> DSv2 stream -> flatten/enrich -> JDBC warehouse with real evolution") {
     val broker = new QueueBroker(numPartitions = 2)
     val base = tmpDir("whpipe")
@@ -57,8 +38,8 @@ class WarehousePipelineSpec extends SparkSpec {
         ev(1, "click", """{"k": 1}"""),
         ev(2, "purchase", """{"k": 2, "amount": 19}"""),
         ev(3, "click", """{"k": 3}""")))
-      EventPipeline.startEvolvingJdbc(spark,
-        EventPipeline.FrameEventSource(brokerEvents(broker)), cfg, url)
+      EventPipeline.startEvolvingJdbc(spark, EventPipeline.FrameEventSource(
+        EventPipeline.brokerEvents(spark, broker.host, broker.port)), cfg, url)
         .awaitTermination()
 
       val click1 = JdbcEventSink.readTable(spark, url, "ev_click")
@@ -71,8 +52,8 @@ class WarehousePipelineSpec extends SparkSpec {
       broker.publishAll(Seq(
         ev(4, "click", """{"k": 4, "newFlag": true}"""),
         ev(5, "purchase", """{"k": 5, "amount": "usd_12"}""")))
-      EventPipeline.startEvolvingJdbc(spark,
-        EventPipeline.FrameEventSource(brokerEvents(broker)), cfg, url)
+      EventPipeline.startEvolvingJdbc(spark, EventPipeline.FrameEventSource(
+        EventPipeline.brokerEvents(spark, broker.host, broker.port)), cfg, url)
         .awaitTermination()
 
       // the restart consumed ONLY the new offsets: no duplicates
