@@ -1,6 +1,10 @@
 package graft.operators
 
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -58,8 +62,10 @@ object ChTypes {
   *
   * In Spark terms the "table" is a parquet directory; evolution is a
   * driver-side StructType merge + null-padded aligned append, with
-  * `mergeSchema` on read. No data rewrite, exactly like ClickHouse's
-  * metadata-only ALTER.
+  * `mergeSchema` on read. ADD COLUMN rewrites no data, exactly like
+  * ClickHouse's metadata-only ALTER; a widen to String rewrites the
+  * table once (see [[evolveAppend]]), like ClickHouse's MODIFY COLUMN
+  * mutation.
   */
 object SchemaEvolution {
 
@@ -106,7 +112,67 @@ object SchemaEvolution {
     df.select(cols.toIndexedSeq: _*)
   }
 
-  /** Append with evolution: merge schemas, align, write.
+  /** True when `target` changes the type of one of `existing`'s
+    * columns — a widen, which parquet can only apply by rewriting. */
+  private[graft] def widens(existing: StructType, target: StructType): Boolean =
+    existing.fields.exists(f => target(f.name).dataType != f.dataType)
+
+  /** `schema` plus a STRING table-key column `keyCol`. */
+  private[graft] def keyed(schema: StructType, keyCol: String): StructType =
+    StructType(schema.fields :+ StructField(keyCol, StringType))
+
+  /** The widen rewrite's rows, for one table or a group of them: every
+    * `old` row of the tables and the `incoming` ones, both carrying the
+    * table key in `keyCol`, aligned to `target` + the key. */
+  private[graft] def widened(old: DataFrame, incoming: DataFrame, target: StructType,
+                             keyCol: String): DataFrame =
+    align(old, keyed(target, keyCol)).unionByName(align(incoming, keyed(target, keyCol)))
+
+  /** Write the keyed `rows` by ONE `partitionBy(keyCol)` job to `stage`,
+    * then land each table's staged partition in its dir (`tables`: key
+    * → dir). An append (`replace = false`) moves the part files in; a
+    * rewrite (`replace = true`) swaps the staged dir in for the table:
+    * delete, then rename, since a path being read cannot be overwritten
+    * in place. Returns each key that failed, with its cause: every key
+    * when building or writing `rows` fails, else the keys whose landing
+    * failed. `stage` must be a `__`-prefixed name with no `=`, which
+    * partition discovery skips, and every key must have rows. */
+  private[graft] def land(spark: SparkSession, rows: => DataFrame, keyCol: String,
+                          tables: Seq[(String, String)], stage: String,
+                          replace: Boolean): Seq[(String, Throwable)] = {
+    def attempt(keys: Seq[String])(body: => Unit): Seq[(String, Throwable)] =
+      try { body; Nil } catch { case NonFatal(e) => keys.map(_ -> e) }
+    val fs = new Path(stage).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def move(from: Path, to: Path): Unit =
+      if (!fs.rename(from, to))
+        throw new java.io.IOException(s"rename $from -> $to failed (destination unwritable?)")
+    attempt(tables.map(_._1)) {
+      rows.write.mode("overwrite").partitionBy(keyCol).parquet(stage)
+    } match {
+      case Nil =>
+        val failed = tables.flatMap { case (key, dir) =>
+          attempt(Seq(key)) {
+            val from = new Path(stage, s"$keyCol=${ExternalCatalogUtils.escapePathName(key)}")
+            val to = new Path(dir)
+            if (replace) { fs.delete(to, true); move(from, to) }
+            else {
+              if (!fs.exists(to) && !fs.mkdirs(to))
+                throw new java.io.IOException(s"cannot create table dir $to")
+              fs.listStatus(from).map(_.getPath).filter(_.getName.startsWith("part-"))
+                .foreach(f => move(f, new Path(to, f.getName)))
+            }
+          }
+        }
+        fs.delete(new Path(stage), true)
+        failed
+      case failed => failed
+    }
+  }
+
+  /** Append with evolution: merge schemas, align, write — the one-table
+    * case of the evolving stream sink's routed write: the aligned rows
+    * are written to a `__`-prefixed sibling dir and [[land]]ed in the
+    * table.
     *
     * ADD COLUMN is metadata-only — older files simply lack the new
     * columns and surface nulls via mergeSchema, the parquet analogue
@@ -116,36 +182,29 @@ object SchemaEvolution {
     * (unlike a ClickHouse ALTER MODIFY mutation) cannot re-read old
     * DOUBLE pages as STRING — so a widen triggers the same thing the
     * ClickHouse mutation does: a one-time rewrite of the existing
-    * table at the new type. Rare by construction (the reference only
-    * risks this single ALTER) and explicit here. */
+    * table at the new type ([[widened]] rows landed with `replace`).
+    * The existing rows are read at the table's MERGED schema: a
+    * single-footer read could miss a column only the newer (ADD
+    * COLUMN) files carry, and the rewrite would write it back as NULL.
+    * Rare by construction (the reference only risks this single ALTER)
+    * and explicit here. */
   def evolveAppend(spark: SparkSession, df: DataFrame, path: String,
                    newColsNullable: Boolean = true): StructType = {
-    val existingDf: Option[DataFrame] =
-      try { val d = spark.read.parquet(path); d.schema; Some(d) }
-      catch { case _: Exception => None }
-    existingDf match {
-      case None =>
-        df.write.mode("append").parquet(path)
-        df.schema
-      case Some(ex) =>
-        val target = merge(ex.schema, df.schema, newColsNullable)
-        val typeChanged = ex.schema.fields.exists(f => target(f.name).dataType != f.dataType)
-        if (typeChanged) {
-          // widen = rewrite: old + new data aligned to the widened type,
-          // staged then swapped (can't overwrite a path being read).
-          val combined = align(ex, target).unionByName(align(df, target))
-          val fs = org.apache.hadoop.fs.FileSystem.get(
-            new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
-          val p = new org.apache.hadoop.fs.Path(path)
-          val stage = new org.apache.hadoop.fs.Path(path + "__graft_stage")
-          combined.write.mode("overwrite").parquet(stage.toString)
-          fs.delete(p, true)
-          fs.rename(stage, p)
-        } else {
-          align(df, target).write.mode("append").parquet(path)
-        }
-        target
-    }
+    val p = new Path(path)
+    val existing = Option.when(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .exists(p))(readEvolved(spark, path).schema)
+    val target = existing.fold(df.schema)(merge(_, df.schema, newColsNullable))
+    val rewrite = existing.exists(widens(_, target))
+    val key = "__graft_table" // a name no table column takes
+    val rows = df.withColumn(key, lit("t"))
+    land(spark,
+      if (!rewrite) align(rows, keyed(target, key))
+      else widened(spark.read.schema(existing.get).parquet(path).withColumn(key, lit("t")),
+        rows, target, key),
+      key, Seq("t" -> path),
+      new Path(p.getParent, s"__graft_stage_${java.util.UUID.randomUUID()}").toString,
+      replace = rewrite).headOption.foreach { case (_, e) => throw e }
+    target
   }
 
   def readEvolved(spark: SparkSession, path: String): DataFrame =

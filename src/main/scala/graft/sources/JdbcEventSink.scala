@@ -172,7 +172,7 @@ object JdbcEventSink {
     * are per-table by nature, so unlike the parquet fast path there
     * is no single-job variant to ride; type count bounds the loop.
     *
-    * The per-type appends run OVERLAPPED from a small thread pool
+    * The per-type appends run [[graft.streaming.Scaffold.overlapped]]
     * (guide §2.6 — independent jobs; each type owns its own table, so
     * the schema reads, DDL and INSERT batches never touch another
     * type's state, and the warehouse serves each connection on its own
@@ -192,31 +192,13 @@ object JdbcEventSink {
     // callers that already collected the batch's distinct types (the
     // streaming prelude's emptiness gate) pass them in — one driver
     // round-trip per micro-batch instead of two
-    val types = knownTypes.map(_.toArray).getOrElse(
+    val types = knownTypes.getOrElse(
       batch.select(col(typeCol)).distinct()
-        .collect().map(_.getString(0))) // bounded by table count
-    val maxPar = math.max(1, math.min(types.length,
-      spark.conf.get("spark.graft.jdbc.maxParallelTables", "8").toInt))
-    if (maxPar <= 1 || types.length <= 1)
-      types.map { t =>
-        t -> evolveAppend(spark,
-          batch.filter(col(typeCol) === t).drop(typeCol), url, tableName(t))
-      }.toMap
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(maxPar)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      try {
-        val futs = types.toSeq.map { t =>
-          scala.concurrent.Future {
-            t -> evolveAppend(spark,
-              batch.filter(col(typeCol) === t).drop(typeCol), url, tableName(t))
-          }
-        }
-        scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(futs),
-          scala.concurrent.duration.Duration.Inf).toMap
-      } finally { pool.shutdown(); () }
-    }
+        .collect().map(_.getString(0)).toSeq) // bounded by table count
+    graft.streaming.Scaffold.overlapped(types,
+        spark.conf.get("spark.graft.jdbc.maxParallelTables", "8").toInt) { t =>
+      t -> evolveAppend(spark,
+        batch.filter(col(typeCol) === t).drop(typeCol), url, tableName(t))
+    }.toMap
   }
 }

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.util.{Failure, Success, Try}
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -250,8 +252,8 @@ object EventPipeline {
     * DATA write is ONE routed `partitionBy` job per micro-batch for
     * every cast-free type, staged then file-moved into the per-type
     * tables ([[writeEvolvedBatch]]) — the batch router's one-shuffle
-    * shape, not a per-type job loop. Only a table needing a cast or
-    * widen rewrite falls back to its own aligned append.
+    * shape, not a per-type job loop. Tables needing a cast or a widen
+    * rewrite add one job per distinct table schema, not per table.
     *
     * Delivery is at-least-once at the table level: a crash between a
     * type's append and the checkpoint commit replays the batch, and
@@ -376,103 +378,97 @@ object EventPipeline {
     }
   }
 
-  /** One micro-batch's routed write with per-type schema evolution.
+  /** Spark jobs [[writeEvolvedBatch]] keeps in flight at once: a small
+    * constant, since each job already spreads over every core — the
+    * overlap only fills the gaps between one job's tasks and the next
+    * job's driver-side planning. */
+  private val evolvePar = 4
+
+  /** One micro-batch's routed write with per-type schema evolution, in
+    * a number of Spark jobs that follows the batch's distinct table
+    * schemas, not its type count.
     *
-    * Schema EVOLUTION is metadata: each present type's target schema
-    * merges driver-side (a handful of parquet-footer reads, bounded by
-    * table count — the reference's one-Bulker-per-type assumption).
-    * The DATA write is one job whenever it can be: every type whose
-    * append is cast-free — no existing column widens, every column
-    * shared with its table already has the table's dtype (new columns
-    * are metadata-only via mergeSchema, like evolveAppend's ADD
-    * COLUMN) — rides a single salted-by-type `partitionBy` write to a
-    * staging dir (the batch router's one-shuffle shape,
-    * EventRouter.writeRouted), whose part files then MOVE into the
-    * per-type tables driver-side. The batch crosses the cluster once
-    * per trigger, not once per present type — at high type
-    * cardinality the per-type loop serialized N jobs per micro-batch.
+    * 1. Each present type's table schema is read (mergeSchema, one
+    *    small job per existing table), [[Scaffold.overlapped]]. A table
+    *    dir that does not exist is a CREATE; one that exists but cannot
+    *    be read fails only its own type.
+    * 2. Every type whose append is cast-free — a new table, or no
+    *    column the batch shares with its table changes dtype (new
+    *    columns are metadata-only via mergeSchema, like evolveAppend's
+    *    ADD COLUMN) — rides ONE salted-by-type `partitionBy` write to a
+    *    staging dir (the batch router's one-shuffle shape,
+    *    EventRouter.writeRouted), whose part files then MOVE into the
+    *    per-type tables driver-side ([[SchemaEvolution.land]]).
+    * 3. The other types are grouped by their table's merged schema. The
+    *    batch schema is inferred once per micro-batch, so one existing
+    *    schema fixes one target schema. A group whose target widens a
+    *    column is rewritten: its tables are read by ONE parquet scan
+    *    (`event_type` read back as a STRING partition column, so a type
+    *    named `007` keeps its name), unioned with the group's batch
+    *    rows, written by one job and swapped in per table — the same
+    *    rewrite [[SchemaEvolution.evolveAppend]] runs for one table. Any
+    *    other group appends its batch rows, cast to the target, as in
+    *    step 2. The groups and the step-2 write run overlapped.
     *
-    * Only a type whose table needs a cast or a widen rewrite (rare by
-    * construction: the reference risks exactly one ALTER) falls back
-    * to the per-type aligned `evolveAppend`.
+    * A failure diverts exactly the types it touched — one type for a
+    * schema read or a file move, every type of a write that failed —
+    * through `onWriteFailure`, called ONCE after all the work above
+    * (two overlapped DLQ appends would share one output committer dir);
+    * with no handler the first failure propagates (fail-the-batch, the
+    * checkpoint replays).
     *
-    * The staging dir lives under the output root with a `__` prefix,
-    * which Spark's partition discovery ignores; a crash mid-move
-    * replays the batch (at-least-once, deduped downstream by
-    * `message_id` — same contract as before). NOTE the move is a
-    * same-filesystem rename — O(1) on HDFS/local; on an object store
-    * front it with a rename-capable committer or layer. */
+    * Every staging dir lives under the output root with a `__` prefix
+    * and no `=`, which Spark's partition discovery ignores; a crash
+    * mid-move replays the batch (at-least-once, deduped downstream by
+    * `message_id`). NOTE the move is a same-filesystem rename — O(1)
+    * on HDFS/local; on an object store front it with a rename-capable
+    * committer or layer. */
   private[graft] def writeEvolvedBatch(spark: SparkSession, enriched: DataFrame,
                                        types: Seq[String], outputDir: String,
                                        batchId: Long,
                                        onWriteFailure: Option[(Seq[String], Throwable) => Unit] = None): Unit = {
     import org.apache.hadoop.fs.Path
-    // a write failure either diverts the affected types' rows (the
-    // sink watchdog) or propagates (fail-the-batch, checkpoint replays)
-    def guarded(affected: Seq[String])(body: => Unit): Unit =
-      try body catch {
-        case scala.util.control.NonFatal(e) => onWriteFailure match {
-          case Some(h) => h(affected, e)
-          case None => throw e
-        }
-      }
-    val batchSchema = StructType(enriched.drop("event_type").schema.fields)
+    val fs = new Path(outputDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val batchSchema = enriched.drop("event_type").schema
     def tablePath(t: String) = s"$outputDir/event_type=${escapeType(t)}"
     // mergeSchema=true is LOAD-BEARING here: after a fast-path batch
     // added a column, only the newer files carry it — a single-footer
     // schema read could pick an older file, miss that column, classify
     // a type-changing batch as cast-free, and mix incompatible types
     // into one table (unreadable until manually repaired)
-    val existing: Map[String, Option[StructType]] = types.map { t =>
-      t -> (try Some(spark.read.option("mergeSchema", "true")
-                       .parquet(tablePath(t)).schema)
-            catch { case _: Exception => None })
-    }.toMap
-    def castFree(t: String): Boolean = existing(t) match {
-      case None => true // first batch CREATEs the table at batch schema
-      case Some(ex) =>
-        val target = SchemaEvolution.merge(ex, batchSchema)
-        ex.fields.forall(f => target(f.name).dataType == f.dataType) &&
-          batchSchema.fields.filter(f => ex.fieldNames.contains(f.name))
-            .forall(f => ex(f.name).dataType == f.dataType)
+    val existing = Scaffold.overlapped(types, evolvePar) { t =>
+      t -> Try(Option.when(fs.exists(new Path(tablePath(t))))(
+        spark.read.option("mergeSchema", "true").parquet(tablePath(t)).schema))
     }
-    val (fast, slow) = types.partition(castFree)
-    if (fast.nonEmpty) {
-      val staging = s"$outputDir/__graft_stage_$batchId"
-      var staged = false
-      guarded(fast) {
-        enriched.filter(col("event_type").isin(fast: _*))
+    // one group per existing schema, hence one target, except that
+    // every cast-free type shares the group keyed None: a new table
+    // (CREATE at the batch schema), or one whose columns the batch
+    // shares all keep their dtype (so none widens)
+    val groups = existing.collect { case (t, Success(ex)) => t -> ex }.groupMap {
+      case (_, ex) => ex.filterNot(ex => batchSchema.fields.forall(f =>
+        ex.fields.find(_.name == f.name).forall(_.dataType == f.dataType)))
+    }(_._1).toSeq
+    val work = groups.zipWithIndex.map { case ((ex, ts), i) => () =>
+      import SchemaEvolution.{align, keyed, widened}
+      val target = ex.fold(batchSchema)(SchemaEvolution.merge(_, batchSchema))
+      val rewrite = ex.exists(SchemaEvolution.widens(_, target))
+      val rows = enriched.filter(col("event_type").isin(ts: _*))
+      SchemaEvolution.land(spark,
+        (if (!rewrite) align(rows, keyed(target, "event_type"))
+         else widened(spark.read.schema(keyed(ex.get, "event_type"))
+           .option("basePath", outputDir).parquet(ts.map(tablePath): _*),
+           rows, target, "event_type"))
           .repartition(col("event_type"))
-          .sortWithinPartitions(col("event_type"), col("received_at"))
-          .write.mode("overwrite").partitionBy("event_type").parquet(staging)
-        staged = true
-      }
-      if (staged) {
-        val fs = org.apache.hadoop.fs.FileSystem.get(
-          new java.net.URI(staging), spark.sparkContext.hadoopConfiguration)
-        fast.foreach { t =>
-          guarded(Seq(t)) {
-            val from = new Path(s"$staging/event_type=" +
-              org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName(t))
-            val to = new Path(tablePath(t))
-            if (!fs.exists(to) && !fs.mkdirs(to))
-              throw new java.io.IOException(s"cannot create table dir $to")
-            fs.listStatus(from).foreach { f =>
-              if (f.getPath.getName.startsWith("part-") &&
-                  !fs.rename(f.getPath, new Path(to, f.getPath.getName)))
-                throw new java.io.IOException(
-                  s"rename ${f.getPath} -> $to failed (destination unwritable?)")
-            }
-          }
-        }
-        fs.delete(new Path(staging), true); ()
-      }
+          .sortWithinPartitions(col("event_type"), col("received_at")),
+        "event_type", ts.map(t => t -> tablePath(t)),
+        s"$outputDir/__graft_stage_${batchId}_$i", replace = rewrite)
     }
-    slow.foreach { t =>
-      guarded(Seq(t)) {
-        SchemaEvolution.evolveAppend(spark,
-          enriched.filter(col("event_type") === t).drop("event_type"),
-          tablePath(t))
+    val failed = existing.collect { case (t, Failure(e)) => t -> e } ++
+      Scaffold.overlapped(work, evolvePar)(_()).flatten
+    failed.headOption.foreach { case (_, cause) =>
+      onWriteFailure match {
+        case Some(h) => h(failed.map(_._1), cause)
+        case None => throw cause
       }
     }
   }

@@ -1,5 +1,9 @@
 package graft.streaming
 
+import java.util.concurrent.{Callable, ExecutionException, Executors}
+
+import scala.util.Try
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,31 +30,39 @@ private[graft] object Scaffold {
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
   }
 
+  /** `f` over `items`, at most `maxPar` at a time, results in item
+    * order: independent Spark jobs submitted from a small driver pool
+    * back-fill each other's task tails instead of running as a serial
+    * ladder. `maxPar <= 1` (or a single item) runs serially on the
+    * calling thread. The first failure propagates once every item has
+    * finished. */
+  def overlapped[A, B](items: Seq[A], maxPar: Int)(f: A => B): Seq[B] =
+    if (maxPar <= 1 || items.size <= 1) items.map(f)
+    else {
+      val pool = Executors.newFixedThreadPool(math.min(maxPar, items.size))
+      try {
+        val futs = items.map(a => pool.submit(new Callable[B] { def call(): B = f(a) }))
+        val done = futs.map(fu => Try(fu.get())) // waits for every item
+        done.map(_.fold({
+          case e: ExecutionException => throw e.getCause
+          case e => throw e
+        }, identity))
+      } finally { pool.shutdown(); () }
+    }
+
   /** Stage N independent slice frames as EXACTLY one parquet file each
     * under `dest` — the file-per-micro-batch input layout the streaming
-    * driver rows replay — writing them OVERLAPPED from a small thread
-    * pool (guide §2.6: independent jobs back-fill each other's task
-    * tails) instead of as N serial scan+write jobs. Each slice writes
-    * into its own staging dir (concurrent jobs must not share one
-    * output committer), then its single part file moves into `dest` as
+    * driver rows replay — writing them [[overlapped]] instead of as N
+    * serial scan+write jobs. Each slice writes into its own staging dir
+    * (concurrent jobs must not share one output committer), then its single part file moves into `dest` as
     * `slice-0000i.parquet` with strictly ASCENDING modification times,
     * so a maxFilesPerTrigger=1 file stream consumes file i as
     * micro-batch i — the watermark-ordering contract b23 depends on. */
   def stageSliceFiles(s: SparkSession, dest: String,
                       slices: Seq[DataFrame]): Unit = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(4, math.max(1, slices.size)))
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try {
-      scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(slices.zipWithIndex.map {
-          case (df, i) => scala.concurrent.Future {
-            df.coalesce(1).write.parquet(s"$dest/__stage_$i")
-          }
-        }),
-        scala.concurrent.duration.Duration.Inf)
-    } finally { pool.shutdown(); () }
+    overlapped(slices.zipWithIndex, 4) { case (df, i) =>
+      df.coalesce(1).write.parquet(s"$dest/__stage_$i")
+    }
     val fs = new Path(dest).getFileSystem(s.sparkContext.hadoopConfiguration)
     val base = System.currentTimeMillis()
     slices.indices.foreach { i =>

@@ -90,4 +90,47 @@ class EvolvingWriteJobSpec extends SparkSpec {
     assert(a.map(_.getAs[String]("amount")).toSeq == Seq("1.5", "usd_9"))
     assert(EventPipeline.readEvolvingTable(spark, cfg, "b").count() == 1)
   }
+
+  private def widenTwice(base: String, types: Seq[String]): (EventPipeline.Config, Int) = {
+    val cfg = EventPipeline.Config(s"$base/in", s"$base/out", s"$base/ck")
+    def write(amount: Int => String, from: Int): Unit =
+      types.zipWithIndex.map { case (t, i) =>
+        ((from + i).toLong, 1700000000000000000L + (from + i) * 1000000000L, i.toLong, t,
+          i * 1.0, s"""{"amount": ${amount(i)}}""")
+      }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("append").parquet(cfg.inputDir)
+    write(i => s"$i.5", 0)
+    val schema = spark.read.parquet(cfg.inputDir).schema
+    EventPipeline.startEvolving(spark, schema, cfg).awaitTermination()
+    // batch 2: every type's amount widens double -> string
+    write(i => s""""usd_$i"""", 100)
+    val inserts = countInserts {
+      EventPipeline.startEvolving(spark, schema, cfg).awaitTermination()
+    }
+    (cfg, inserts)
+  }
+
+  private def assertWidened(cfg: EventPipeline.Config, types: Seq[String]): Unit =
+    types.zipWithIndex.foreach { case (t, i) =>
+      val rows = EventPipeline.readEvolvingTable(spark, cfg, t).orderBy("event_id").collect()
+      assert(rows.map(_.getAs[Long]("event_id")).toSeq == Seq(i.toLong, 100L + i), t)
+      assert(rows.map(_.getAs[String]("amount")).toSeq == Seq(s"$i.5", s"usd_$i"), t)
+    }
+
+  test("types whose tables share one schema widen in ONE rewrite job") {
+    val types = (0 until 8).map(i => s"type_$i")
+    val (cfg, inserts) = widenTwice(tmpDir("evojobs3"), types)
+    assert(inserts == 1, s"expected one grouped widen rewrite for 8 types, saw $inserts")
+    assertWidened(cfg, types)
+  }
+
+  test("the grouped rewrite keeps type names that partition discovery would mangle") {
+    val types = Seq("007", "page/view", "中")
+    val (cfg, inserts) = widenTwice(tmpDir("evojobs4"), types)
+    assert(inserts == 1, s"expected one grouped widen rewrite, saw $inserts")
+    assertWidened(cfg, types)
+    // only the three tables remain: no staged or retyped sibling dir
+    val dirs = new java.io.File(cfg.outputDir).list().toSet
+    assert(dirs == Set("event_type=007", "event_type=page%2Fview", "event_type=中"), dirs)
+  }
 }

@@ -57,6 +57,24 @@ class SchemaEvolutionSpec extends SparkSpec {
     assert(out(1).getAs[String]("amount") == "usd_20")
   }
 
+  test("evolveAppend: a widen keeps the columns only newer files carry") {
+    // fresh tables each time: which footer a single-file schema read
+    // picks varies from table to table
+    (0 until 12).foreach { i =>
+      val path = tmpDir("evolve_keep") + "/tbl"
+      SchemaEvolution.evolveAppend(spark, Seq((1L, 10L)).toDF("id", "a"), path)
+      SchemaEvolution.evolveAppend(spark, Seq((2L, 20L, "kept")).toDF("id", "a", "b"), path)
+      SchemaEvolution.evolveAppend(spark, Seq((3L, "x")).toDF("id", "a"), path)
+      val out = SchemaEvolution.readEvolved(spark, path).orderBy("id").collect()
+      assert(out.map(_.getAs[String]("a")).toSeq == Seq("10", "20", "x"), s"table $i")
+      assert(out.map(r => Option(r.getAs[String]("b"))).toSeq == Seq(None, Some("kept"), None),
+        s"table $i lost the ADD COLUMN values in the widen rewrite")
+      // the rewrite staged beside the table, under a name partition
+      // discovery skips, and cleaned up after itself
+      assert(new java.io.File(path).getParentFile.list().toSeq == Seq("tbl"))
+    }
+  }
+
   test("align null-pads and casts to the target schema in order") {
     val target = StructType(Seq(
       StructField("x", StringType), StructField("y", LongType)))
