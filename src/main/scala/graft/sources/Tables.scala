@@ -31,19 +31,33 @@ object Tables {
     * no DATA is cached — every action still scans parquet. Keyed by
     * session so a restarted session never reuses plans bound to a
     * stopped one. The test tables are immutable by contract (queries
-    * write only under their own temp dirs, never through Tables). */
+    * write only under their own temp dirs, never through Tables).
+    *
+    * Bounded as an LRU over (session, dir, table) keys: a library
+    * consumer cycling many short-lived sessions must not retain every
+    * stopped session through its cached plans (plans hold their
+    * session), and a stopped session's plans age out as live ones are
+    * used. 256 ≈ 25 sessions × 10 tables. A cold plan is built outside
+    * the lock, so concurrent first reads do not queue behind each
+    * other; two threads racing on one key keep the first plan put. */
+  private[graft] val memoBound = 256
   private val planMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
+    new java.util.LinkedHashMap[(SparkSession, String, String), DataFrame](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[(SparkSession, String, String), DataFrame]): Boolean =
+        size > memoBound
+    }
+
+  private[graft] def memoSize: Int = planMemo.synchronized(planMemo.size)
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     if (sys.env.get("SPARK_GRAFT_TABLE_MEMO").contains("0")) fresh(spark, dir, name)
     else {
-      // bound the memo: a library consumer cycling many short-lived
-      // sessions must not retain every stopped session through its
-      // cached plans (plans hold their session). 256 ≈ 25 sessions ×
-      // 10 tables; a rare full reset just re-reads footers once.
-      if (planMemo.size > 256) planMemo.clear()
-      planMemo.computeIfAbsent((spark, dir, name), _ => fresh(spark, dir, name))
+      val key = (spark, dir, name)
+      planMemo.synchronized(Option(planMemo.get(key))).getOrElse {
+        val df = fresh(spark, dir, name)
+        planMemo.synchronized(Option(planMemo.putIfAbsent(key, df)).getOrElse(df))
+      }
     }
 
   private def fresh(spark: SparkSession, dir: String, name: String): DataFrame = {

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -255,6 +256,13 @@ object EventPipeline {
     * shape, not a per-type job loop. Tables needing a cast or a widen
     * rewrite add one job per distinct table schema, not per table.
     *
+    * The running query owns its tables' schemas: it reads each table's
+    * merged schema on first touch in this query run and then keeps it
+    * in driver memory, updated by every landing, so a steady trigger
+    * runs no schema-read job. A schema edit made outside the stream is
+    * therefore seen after a restart, which rebuilds the schemas from
+    * the files.
+    *
     * Delivery is at-least-once at the table level: a crash between a
     * type's append and the checkpoint commit replays the batch, and
     * replays APPEND (parquet has no upsert). `message_id` is a content
@@ -337,6 +345,7 @@ object EventPipeline {
   def startEvolving(spark: SparkSession, source: EventSource, cfg: Config,
                     jsonCol: String, availableNow: Boolean): StreamingQuery = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val schemas = mutable.Map.empty[String, StructType] // this query run's tables
     Scaffold.foreachBatch(source.load(spark), cfg.checkpointDir, availableNow) {
       (batch, batchId) =>
         withRoutableBatch(batch, batchId, cfg, jsonCol) { (valid, types, enriched) =>
@@ -346,7 +355,7 @@ object EventPipeline {
                 "sink_write_failed", dlqOut, batchId)
             }
           writeEvolvedBatch(spark, enriched, types, cfg.outputDir,
-            batchId, onFail)
+            batchId, onFail, schemas)
         }
     }
   }
@@ -388,10 +397,16 @@ object EventPipeline {
     * a number of Spark jobs that follows the batch's distinct table
     * schemas, not its type count.
     *
-    * 1. Each present type's table schema is read (mergeSchema, one
-    *    small job per existing table), [[Scaffold.overlapped]]. A table
-    *    dir that does not exist is a CREATE; one that exists but cannot
-    *    be read fails only its own type.
+    * 1. Each present type's merged table schema is taken from `known`,
+    *    the schemas this query run has already seen. A type not in it is
+    *    read (mergeSchema, one small job per existing table),
+    *    [[Scaffold.overlapped]]: a table dir that does not exist is a
+    *    CREATE; one that exists but cannot be read fails only its own
+    *    type. After the landings below each landed type's new merged
+    *    schema goes into `known` and each failed type leaves it, so a
+    *    steady trigger reads no schema. The running query owns its
+    *    tables' schemas: an edit made to a table outside the stream is
+    *    seen after a restart, which starts from an empty `known`.
     * 2. Every type whose append is cast-free — a new table, or no
     *    column the batch shares with its table changes dtype (new
     *    columns are metadata-only via mergeSchema, like evolveAppend's
@@ -426,7 +441,8 @@ object EventPipeline {
   private[graft] def writeEvolvedBatch(spark: SparkSession, enriched: DataFrame,
                                        types: Seq[String], outputDir: String,
                                        batchId: Long,
-                                       onWriteFailure: Option[(Seq[String], Throwable) => Unit] = None): Unit = {
+                                       onWriteFailure: Option[(Seq[String], Throwable) => Unit] = None,
+                                       known: mutable.Map[String, StructType] = mutable.Map.empty): Unit = {
     import org.apache.hadoop.fs.Path
     val fs = new Path(outputDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batchSchema = enriched.drop("event_type").schema
@@ -435,11 +451,14 @@ object EventPipeline {
     // added a column, only the newer files carry it — a single-footer
     // schema read could pick an older file, miss that column, classify
     // a type-changing batch as cast-free, and mix incompatible types
-    // into one table (unreadable until manually repaired)
-    val existing = Scaffold.overlapped(types, evolvePar) { t =>
-      t -> Try(Option.when(fs.exists(new Path(tablePath(t))))(
-        spark.read.option("mergeSchema", "true").parquet(tablePath(t)).schema))
-    }
+    // into one table (unreadable until manually repaired); `known`
+    // holds that merged schema too, so a type in it is not read again
+    val (seen, unseen) = types.partition(known.contains)
+    val existing = seen.map(t => t -> Success(known.get(t))) ++
+      Scaffold.overlapped(unseen, evolvePar) { t =>
+        t -> Try(Option.when(fs.exists(new Path(tablePath(t))))(
+          spark.read.option("mergeSchema", "true").parquet(tablePath(t)).schema))
+      }
     // one group per existing schema, hence one target, except that
     // every cast-free type shares the group keyed None: a new table
     // (CREATE at the batch schema), or one whose columns the batch
@@ -465,6 +484,15 @@ object EventPipeline {
     }
     val failed = existing.collect { case (t, Failure(e)) => t -> e } ++
       Scaffold.overlapped(work, evolvePar)(_()).flatten
+    // a landed table's merged schema is now its old one merged with the
+    // batch's: the target a rewrite wrote, or what a mergeSchema read of
+    // the old and new files returns. A failed table is read afresh.
+    val lost = failed.map(_._1).toSet
+    existing.foreach {
+      case (t, Success(ex)) if !lost(t) =>
+        known(t) = ex.fold(batchSchema)(SchemaEvolution.merge(_, batchSchema))
+      case (t, _) => known -= t
+    }
     failed.headOption.foreach { case (_, cause) =>
       onWriteFailure match {
         case Some(h) => h(failed.map(_._1), cause)

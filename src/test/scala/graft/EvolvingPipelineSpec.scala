@@ -1,6 +1,10 @@
 package graft
 
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
 import graft.streaming.EventPipeline
 
 /** The reference's end-to-end story: stream of free-form JSON events →
@@ -78,5 +82,83 @@ class EvolvingPipelineSpec extends SparkSpec {
       assert(purchases.map(_.getAs[Double]("amount")).toSeq == Seq(19.5))
     } finally q.stop()
     assert(!q.isActive)
+  }
+
+  private def byName(s: StructType): Map[String, DataType] =
+    s.fields.map(f => f.name -> f.dataType).toMap
+
+  test("the schemas a query holds equal a fresh mergeSchema read after every batch") {
+    val out = tmpDir("evoheld") + "/out"
+    val held = mutable.Map.empty[String, StructType]
+    val diverted = mutable.Buffer.empty[Seq[String]]
+    def table(t: String) = new java.io.File(s"$out/event_type=$t")
+    def poison(t: String): Unit = {
+      org.apache.commons.io.FileUtils.deleteDirectory(table(t))
+      assert(table(t).createNewFile())
+    }
+    def heal(t: String): Unit = assert(table(t).delete())
+    // one micro-batch: every type gets one row with the given columns
+    def batch(id: Long, cols: (String, Column)*): Unit = {
+      val rows: DataFrame = cols.foldLeft(Seq("a", "q", "p").toDF("event_type")
+        .withColumn("received_at", lit(id))) { case (df, (n, c)) => df.withColumn(n, c) }
+      diverted.clear()
+      EventPipeline.writeEvolvedBatch(spark, rows, Seq("a", "q", "p"), out, id,
+        Some((failed: Seq[String], _: Throwable) => { diverted += failed; () }), held)
+      held.foreach { case (t, schema) =>
+        val read = spark.read.option("mergeSchema", "true").parquet(s"$out/event_type=$t").schema
+        assert(byName(schema) == byName(read), s"batch $id: held schema of $t")
+      }
+    }
+    new java.io.File(out).mkdirs()
+    poison("p") // as in SinkWatchdogSpec: the table path is a plain file
+
+    batch(1, "x" -> lit(1L)) // CREATE a and q; p's read fails
+    assert(held.keySet == Set("a", "q") && diverted.flatten == Seq("p"))
+    poison("q")
+    batch(2, "x" -> lit(2L), "y" -> lit("v")) // ADD COLUMN y; q's move fails
+    assert(held.keySet == Set("a") && diverted.flatten.sorted == Seq("p", "q"))
+    assert(byName(held("a")).keySet.contains("y"))
+    heal("q")
+    batch(3, "x" -> lit(3.5)) // cast-only for a (x stays bigint); q re-CREATEs
+    assert(held.keySet == Set("a", "q") && diverted.flatten == Seq("p"), "p is read again")
+    assert(held("a")("x").dataType == LongType)
+    assert(!byName(held("q")).contains("y"), "q was re-read, not remembered")
+    heal("p")
+    batch(4, "x" -> lit("s")) // widen a's and q's x to string; p CREATEs
+    assert(held.keySet == Set("a", "q", "p") && diverted.isEmpty)
+    assert(held.values.forall(_("x").dataType == StringType))
+    val a = spark.read.parquet(s"$out/event_type=a").orderBy("received_at").collect()
+    assert(a.map(_.getAs[String]("x")).toSeq == Seq("1", "2", "3", "s"))
+    assert(a.map(r => Option(r.getAs[String]("y"))).toSeq == Seq(None, Some("v"), None, None))
+  }
+
+  test("a restarted query widens with every column the previous run added") {
+    val base = tmpDir("evorestart")
+    val cfg = EventPipeline.Config(s"$base/in", s"$base/out", s"$base/ck")
+    val types = (0 until 6).map(i => s"t$i")
+    def write(rows: Seq[(Long, String, String)]): Unit =
+      rows.map { case (id, t, props) => (id, 1700000000000000000L + id, 1L, t, 1.0, props) }
+        .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("append").parquet(cfg.inputDir)
+    // query A, two triggers: CREATE all six, then ADD COLUMN on three
+    write(types.zipWithIndex.map { case (t, i) => (i.toLong, t, s"""{"k": $i}""") })
+    write(types.take(3).zipWithIndex.map { case (t, i) =>
+      (10L + i, t, s"""{"k": $i, "extra": "e$i"}""") })
+    val schema = spark.read.parquet(cfg.inputDir).schema
+    EventPipeline.startEvolving(spark, schema, cfg).awaitTermination()
+    // query B, restarted on the same output and checkpoint: widen k
+    write(types.zipWithIndex.map { case (t, i) => (20L + i, t, s"""{"k": "w$i"}""") })
+    EventPipeline.startEvolving(spark, schema, cfg).awaitTermination()
+
+    types.zipWithIndex.foreach { case (t, i) =>
+      val rows = EventPipeline.readEvolvingTable(spark, cfg, t).orderBy("event_id").collect()
+      val added = i < 3
+      assert(rows.map(_.getAs[String]("k")).toSeq ==
+        (if (added) Seq(s"$i", s"$i", s"w$i") else Seq(s"$i", s"w$i")), t)
+      assert(rows.head.schema.fieldNames.contains("extra") == added, t)
+      if (added)
+        assert(rows.map(r => Option(r.getAs[String]("extra"))).toSeq ==
+          Seq(None, Some(s"e$i"), None), s"$t lost its ADD COLUMN values in the widen")
+    }
   }
 }

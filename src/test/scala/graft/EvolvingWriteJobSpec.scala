@@ -1,7 +1,7 @@
 package graft
 
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.SparkListener
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.functions._
 import graft.streaming.EventPipeline
@@ -10,20 +10,18 @@ import graft.streaming.EventPipeline
   * (the batch router's one-shuffle shape), not a per-present-type job
   * loop — at high type cardinality the loop serialized N sequential
   * filtered writes per trigger. Counted via SQL-execution events whose
-  * physical plan is a parquet insert. */
+  * physical plan is a parquet insert; a steady trigger's whole job
+  * count, schema reads included, must not follow the type count. */
 class EvolvingWriteJobSpec extends SparkSpec {
   import spark.implicits._
 
-  private def countInserts[A](body: => A): Int = {
+  private def countEvents(hit: SparkListenerEvent => Boolean)(body: => Unit): Int = {
     val n = new AtomicInteger(0)
     val listener = new SparkListener {
-      override def onOtherEvent(event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        event match {
-          case e: SparkListenerSQLExecutionStart
-            if e.physicalPlanDescription.contains("InsertIntoHadoopFsRelation") =>
-            n.incrementAndGet(); ()
-          case _ => ()
-        }
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (hit(e)) { n.incrementAndGet(); () }
+      override def onOtherEvent(e: SparkListenerEvent): Unit =
+        if (hit(e)) { n.incrementAndGet(); () }
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -37,6 +35,12 @@ class EvolvingWriteJobSpec extends SparkSpec {
       n.get()
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  private def countInserts(body: => Unit): Int = countEvents {
+    case e: SparkListenerSQLExecutionStart =>
+      e.physicalPlanDescription.contains("InsertIntoHadoopFsRelation")
+    case _ => false
+  }(body)
 
   test("evolving router: one insert job per micro-batch across many types") {
     val base = tmpDir("evojobs")
@@ -132,5 +136,44 @@ class EvolvingWriteJobSpec extends SparkSpec {
     // only the three tables remain: no staged or retyped sibling dir
     val dirs = new java.io.File(cfg.outputDir).list().toSet
     assert(dirs == Set("event_type=007", "event_type=page%2Fview", "event_type=中"), dirs)
+  }
+
+  /** Spark jobs the second trigger of one always-on query starts, when
+    * every one of `types` types gains a column (a cast-free append). */
+  private def secondTriggerJobs(base: String, types: Int): Int = {
+    val cfg = EventPipeline.Config(s"$base/in", s"$base/out", s"$base/ck")
+    def write(dir: String, from: Int, props: Int => String): Unit =
+      (0 until types).map { i =>
+        ((from + i).toLong, 1700000000000000000L + (from + i) * 1000000000L, i.toLong,
+          s"type_$i", i * 1.0, props(i))
+      }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+        .coalesce(1).write.mode("append").parquet(dir)
+    write(cfg.inputDir, 0, i => s"""{"k": $i}""")
+    // staged outside the input dir, so the query cannot see it before
+    // the listener counts
+    write(s"$base/next", 100, i => s"""{"k": $i, "extra": "e$i"}""")
+    val next = new java.io.File(s"$base/next").listFiles().filter(_.getName.startsWith("part-")).head
+    val q = EventPipeline.startEvolving(spark, spark.read.parquet(cfg.inputDir).schema, cfg,
+      availableNow = false)
+    val jobs = try {
+      q.processAllAvailable()
+      countEvents(_.isInstanceOf[SparkListenerJobStart]) {
+        java.nio.file.Files.move(next.toPath,
+          java.nio.file.Paths.get(cfg.inputDir, "part-next.parquet"))
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    (0 until types).foreach { i =>
+      val rows = EventPipeline.readEvolvingTable(spark, cfg, s"type_$i").orderBy("event_id").collect()
+      assert(rows.map(r => Option(r.getAs[String]("extra"))).toSeq == Seq(None, Some(s"e$i")))
+    }
+    jobs
+  }
+
+  test("a steady trigger runs no job per table: its job count does not follow the type count") {
+    val (eight, sixteen) = (secondTriggerJobs(tmpDir("evojobs5"), 8),
+      secondTriggerJobs(tmpDir("evojobs6"), 16))
+    assert(eight == sixteen,
+      s"trigger 2 started $eight jobs over 8 tables but $sixteen over 16")
   }
 }
