@@ -21,17 +21,14 @@ import graft.sources.Tables
   */
 object AnalyticsQueries {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** B2: 3-way join + group + top-n revenue (TPC-H Q3 shape).
     * customer SCALES with SF, so its broadcast is size-gated
     * ([[Tables.broadcastIfSmall]]) — forced at sf100 the 3 M-row
     * build dominated the whole query. */
   private def b2TopRevenue(s: SparkSession, dir: String): DataFrame = {
-    val c = T(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
-    val o = T(s, dir, "orders").filter(col("o_orderdate") < lit("1998-06-30"))
-    val l = T(s, dir, "lineitem").filter(col("l_shipdate") > lit("1998-06-30"))
+    val c = Tables(s, dir, "customer").filter(col("c_mktsegment") === "BUILDING")
+    val o = Tables(s, dir, "orders").filter(col("o_orderdate") < lit("1998-06-30"))
+    val l = Tables(s, dir, "lineitem").filter(col("l_shipdate") > lit("1998-06-30"))
     l.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(Tables.broadcastIfSmall(s, dir, "customer", c),
         col("o_custkey") === col("c_custkey"))
@@ -49,14 +46,14 @@ object AnalyticsQueries {
     * dims (25/5 rows) — broadcast unconditionally; supplier SCALES
     * with SF, so its broadcast is size-gated. */
   private def b3RegionRevenue(s: SparkSession, dir: String): DataFrame = {
-    val r = T(s, dir, "region").filter(col("r_name") === "ASIA")
-    val n = T(s, dir, "nation")
+    val r = Tables(s, dir, "region").filter(col("r_name") === "ASIA")
+    val n = Tables(s, dir, "nation")
     val dims = broadcast(n.join(broadcast(r), col("n_regionkey") === col("r_regionkey")))
-    val su = T(s, dir, "supplier")
-    val cu = T(s, dir, "customer")
-    val o = T(s, dir, "orders")
+    val su = Tables(s, dir, "supplier")
+    val cu = Tables(s, dir, "customer")
+    val o = Tables(s, dir, "orders")
       .filter(col("o_orderdate") >= lit("1996-01-01") && col("o_orderdate") < lit("1998-01-01"))
-    val l = T(s, dir, "lineitem")
+    val l = Tables(s, dir, "lineitem")
     l.join(o, col("l_orderkey") === col("o_orderkey"))
       .join(Tables.broadcastIfSmall(s, dir, "supplier", su),
         col("l_suppkey") === col("s_suppkey"))
@@ -73,7 +70,7 @@ object AnalyticsQueries {
   private def b4TopPerGroup(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("o_custkey"))
       .orderBy(col("o_totalprice").desc, col("o_orderkey"))
-    T(s, dir, "orders")
+    Tables(s, dir, "orders")
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= 3)
       .select(col("o_custkey"), col("rn"), col("o_orderkey"), col("o_totalprice"))
@@ -82,8 +79,8 @@ object AnalyticsQueries {
 
   /** B5: left-semi + left-anti join (EXISTS / NOT EXISTS). */
   private def b5SemiAnti(s: SparkSession, dir: String): DataFrame = {
-    val c = T(s, dir, "customer")
-    val o = T(s, dir, "orders")
+    val c = Tables(s, dir, "customer")
+    val o = Tables(s, dir, "orders")
     val semi = c.join(o, col("c_custkey") === col("o_custkey"), "left_semi")
       .select(col("c_custkey"), col("c_name"), lit("has_order").as("segment"))
     val anti = c.join(o, col("c_custkey") === col("o_custkey"), "left_anti")
@@ -97,7 +94,7 @@ object AnalyticsQueries {
   private def b6Sessionize(s: SparkSession, dir: String): DataFrame = {
     val gapNs = 1800L * 1000000000L
     val w = Window.partitionBy(col("user_id")).orderBy(col("ts"), col("event_id"))
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .withColumn("prev_ts", lag(col("ts"), 1).over(w))
       .withColumn("new_sess",
         when(col("prev_ts").isNull || col("ts") - col("prev_ts") > gapNs, 1L)
@@ -113,7 +110,7 @@ object AnalyticsQueries {
   /** B7: signup→purchase conversion funnel by signup-date cohort.
     * Single-pass conditional aggregation — no join. */
   private def b7Funnel(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("user_id"))
       .agg(
         min(when(col("event_type") === "signup", col("ts"))).as("signup_ts"),
@@ -129,7 +126,7 @@ object AnalyticsQueries {
   /** B9: exact distinct users per type (oracle'd; the HLL approximate
     * twin is `b9b_approx_distinct`, driver-checked via its ε-contract). */
   private def b9DistinctUsers(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_users_exact"))
       .orderBy(col("event_type"))
@@ -142,7 +139,7 @@ object AnalyticsQueries {
     * in-query; the oracle mirrors `exact` and literal-true bounds.
     * A broken sketch flips the flag → hash mismatch at the driver. */
   private def b9bApproxDistinct(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(
         approx_count_distinct(col("user_id")).as("n_users_approx"),
@@ -156,7 +153,7 @@ object AnalyticsQueries {
   /** B10: as-of join — for each purchase, the user's most recent click
     * at or before it (union + keyed sort window; see [[AsOf]]). */
   private def b10AsofJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts"))
     val clicks = ev.filter(col("event_type") === "click")
@@ -174,7 +171,7 @@ object AnalyticsQueries {
   /** B11: range join — error events within 30 min after each purchase,
     * same user (Δ-cell bucketed equi-join; see [[RangeJoin]]). */
   private def b11RangeJoin(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id").as("p_id"), col("user_id"), col("ts").as("p_ts"))
     val errors = ev.filter(col("event_type") === "error")

@@ -22,15 +22,12 @@ import graft.sources.Tables
   */
 object AnalyticsQueries2 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   private val SevenDaysNs = 7L * 86400L * 1000000000L
 
   /** B12: CH windowFunnel — signup→click→purchase within 7 days, per
     * user; output the user count per max-level-reached (0..3). */
   private def b12WindowFunnel(s: SparkSession, dir: String): DataFrame =
-    Funnel.windowFunnel(T(s, dir, "events"),
+    Funnel.windowFunnel(Tables(s, dir, "events"),
         key = "user_id", time = "ts", tieBreak = "event_id",
         conds = Seq(col("event_type") === "signup",
           col("event_type") === "click",
@@ -45,7 +42,7 @@ object AnalyticsQueries2 {
     * runs count. Far fewer users reach level 3 than in b12's default
     * mode (the planted streams interleave other events). */
   private def b12bWindowFunnelStrict(s: SparkSession, dir: String): DataFrame =
-    Funnel.windowFunnelStrictOrder(T(s, dir, "events"),
+    Funnel.windowFunnelStrictOrder(Tables(s, dir, "events"),
         key = "user_id", time = "ts", tieBreak = "event_id",
         conds = Seq(col("event_type") === "signup",
           col("event_type") === "click",
@@ -58,7 +55,7 @@ object AnalyticsQueries2 {
   /** B13: CH retention — of users who signed up, how many also
     * clicked / purchased / errored (flags ANDed with cond_1). */
   private def b13Retention(s: SparkSession, dir: String): DataFrame =
-    Funnel.retention(T(s, dir, "events"), key = "user_id",
+    Funnel.retention(Tables(s, dir, "events"), key = "user_id",
         conds = Seq(col("event_type") === "signup",
           col("event_type") === "click",
           col("event_type") === "purchase",
@@ -73,7 +70,7 @@ object AnalyticsQueries2 {
   /** B19: CH sequenceMatch('(?1).*(?2)') — purchase strictly before a
     * later error, per user; aggregated match counts. */
   private def b19SequenceMatch(s: SparkSession, dir: String): DataFrame =
-    Funnel.sequenceMatch2(T(s, dir, "events"), key = "user_id", time = "ts",
+    Funnel.sequenceMatch2(Tables(s, dir, "events"), key = "user_id", time = "ts",
         cond1 = col("event_type") === "purchase",
         cond2 = col("event_type") === "error")
       .agg(sum(col("matched")).cast("long").as("n_matched"),
@@ -86,7 +83,7 @@ object AnalyticsQueries2 {
   private def b14TopK(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("n_events").desc, col("user_id"))
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("event_type"), col("user_id"))
       .agg(count(lit(1)).as("n_events"))
       .withColumn("rk", row_number().over(w))
@@ -100,7 +97,7 @@ object AnalyticsQueries2 {
     * formulation (rank-1), not max_by: max_by's tie choice is
     * engine-unspecified and would flake the oracle. */
   private def b20ArgMax(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select(col("event_type"), col("user_id"), col("value"))
     val wMax = Window.partitionBy(col("event_type"))
       .orderBy(col("value").desc, col("user_id"))
@@ -131,7 +128,7 @@ object AnalyticsQueries2 {
     * by HeavyHittersSpec (no item here exceeds N/capacity). The
     * exact-count join is the audit, not the production path. */
   private def b14bTopkSketch(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select(col("event_type"), col("user_id").cast("string").as("u"))
     val sk = ev.groupBy(col("event_type"))
       .agg(Fns.heavyHitters(col("u"), capacity = 8).as("topk_sketch"),
@@ -163,7 +160,7 @@ object AnalyticsQueries2 {
     * One sort-window per type, shared by all three quantiles. */
   private def b15Quantiles(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("event_type")).orderBy(col("value"), col("event_id"))
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("event_type"), col("event_id"), col("value"))
       .withColumn("rn", row_number().over(w))
       .withColumn("cnt", count(lit(1)).over(Window.partitionBy(col("event_type"))))
@@ -183,7 +180,7 @@ object AnalyticsQueries2 {
     * rank window is the audit path; production reads the estimate
     * alone (one partial-agg exchange, no sort). */
   private def b15bApproxQuantiles(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select(col("event_type"), col("value"), col("event_id"))
     val est = ev.groupBy(col("event_type"))
       .agg(percentile_approx(col("value"), array(lit(0.5), lit(0.9), lit(0.99)),
@@ -206,7 +203,7 @@ object AnalyticsQueries2 {
     * grouping levels surfaced as sentinel strings + grouping_id so the
     * oracle compare is null-free. */
   private def b16Rollup(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("event_type"),
         date_format(Fns.nanosToTimestamp(col("ts")), "yyyy-MM-dd").as("event_date"),
         col("value"))
@@ -223,7 +220,7 @@ object AnalyticsQueries2 {
     * CH dashboard matrix). Explicit value list: no extra distinct pass,
     * stable schema at any scale. */
   private def b17Pivot(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(
         date_format(Fns.nanosToTimestamp(col("ts")), "yyyy-MM-dd").as("event_date"),
         col("event_type"))
@@ -242,7 +239,7 @@ object AnalyticsQueries2 {
     * day-over-day delta of daily revenue. Sums stay decimal through
     * the frames (exact), surfaced as DOUBLE at the end. */
   private def b18MovingSum(s: SparkSession, dir: String): DataFrame = {
-    val daily = T(s, dir, "events")
+    val daily = Tables(s, dir, "events")
       .groupBy(date_format(Fns.nanosToTimestamp(col("ts")), "yyyy-MM-dd").as("event_date"))
       .agg(sum(col("value").cast("decimal(18,2)")).as("d"))
     // bounded input: the |days| rollup — the single-partition moving
@@ -275,8 +272,8 @@ object AnalyticsQueries2 {
     * query — the manual 'drop the hint at scale' instruction this doc
     * used to carry was itself the pinned dial. */
   private def b22PromoRevenue(s: SparkSession, dir: String): DataFrame = {
-    val li = T(s, dir, "lineitem")
-    val p = T(s, dir, "part").select(col("p_partkey"), col("p_type"))
+    val li = Tables(s, dir, "lineitem")
+    val p = Tables(s, dir, "part").select(col("p_partkey"), col("p_type"))
     val rev = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
     li.join(Tables.broadcastIfSmall(s, dir, "part", p),
         col("l_partkey") === col("p_partkey"))
@@ -293,7 +290,7 @@ object AnalyticsQueries2 {
     * collect_set order-independent; sort_array + join makes the
     * profile string deterministic cross-engine. */
   private def b21TypeProfiles(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       // null/empty types excluded on BOTH sides: collect_set drops
       // nulls, DuckDB's list() keeps them — don't let them differ.
       // The 1-in-7 event sample keeps profiles varied — the full table
@@ -311,7 +308,7 @@ object AnalyticsQueries2 {
     * `histogram` dashboard shape, exact bins). floor(v/width) on
     * identical IEEE doubles bins identically on both engines. */
   private def b25Histogram(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("event_type"),
         floor(col("value") / 50.0).cast("long").as("bin"))
       .agg(count(lit(1)).as("n"),
@@ -324,7 +321,7 @@ object AnalyticsQueries2 {
     * reduction (a direct var_samp would hash-flake), and the scan
     * stays a single partial-agg pass at any scale. */
   private def b26SuffStats(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         Fns.sumExact(col("value")).as("sum_v"),
@@ -339,7 +336,7 @@ object AnalyticsQueries2 {
     * left-joined to the sparse rollup. The 1-in-11 event sample makes
     * real gaps to fill. */
   private def b27GapFill(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").filter(col("event_id") % 11 === 0)
+    val ev = Tables(s, dir, "events").filter(col("event_id") % 11 === 0)
       .select(col("event_type"),
         to_date(Fns.nanosToTimestamp(col("ts"))).as("d"),
         col("value"))
@@ -367,7 +364,7 @@ object AnalyticsQueries2 {
   private def b28LatestVersion(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"), col("event_type"))
       .orderBy(col("ts").desc, col("event_id").desc)
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .withColumn("rk", row_number().over(w))
       .filter(col("rk") === 1)
       .select(col("user_id"), col("event_type"),

@@ -21,9 +21,6 @@ import graft.sources.Tables
   */
 object AnalyticsQueries3 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** B29: SummingMergeTree / materialized-view maintenance — three
     * ingest "parts" (batches split by event_id mod 3) each rolled to
     * per-(type, day) states, merged state-wise, then finalized. The
@@ -31,7 +28,7 @@ object AnalyticsQueries3 {
     * merge(states(A), states(B), states(C)) == rollup(A∪B∪C) exactly
     * — the incremental-view invariant, with no history rescan. */
   private def b29IncrementalRollup(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(
+    val ev = Tables(s, dir, "events").select(
       col("event_type"),
       date_format(Fns.nanosToTimestamp(col("ts")), "yyyy-MM-dd").as("event_date"),
       col("value"), col("event_id"))
@@ -50,7 +47,7 @@ object AnalyticsQueries3 {
     * (one row per live counter — the driver can't sort map cells; the
     * map-shaped variant is [[MapAgg.sumMap]], spec-covered). */
   private def b30SumMap(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(
+    val ev = Tables(s, dir, "events").select(
       col("user_id"),
       map_concat(
         from_json(col("props"), lit("map<string,bigint>")),
@@ -63,7 +60,7 @@ object AnalyticsQueries3 {
     * purchase→error matches per user, surfaced as the distribution of
     * match counts over users with ≥1 purchase/error event. */
   private def b31SequenceCount(s: SparkSession, dir: String): DataFrame =
-    Funnel.sequenceCount2(T(s, dir, "events"),
+    Funnel.sequenceCount2(Tables(s, dir, "events"),
         key = "user_id", time = "ts", tieBreak = "event_id",
         cond1 = col("event_type") === "purchase",
         cond2 = col("event_type") === "error")
@@ -93,7 +90,7 @@ object AnalyticsQueries3 {
     // cache reads and lets the cached plan's AQE-coalesced
     // partitioning carry through the union into the collapse windows
     // with no new exchange. Same rows, same collapse semantics.
-    val st = T(s, dir, "events")
+    val st = Tables(s, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .withColumn("ver", row_number().over(verW))
       .withColumn("maxver", max(col("ver")).over(byUser))
@@ -134,7 +131,7 @@ object AnalyticsQueries3 {
     * vs exact at max(5, 5%·exact) (lgK=12 → ~1.6%·3σ). The exact
     * countDistinct branch is the audit, not the read path. */
   private def b34UniqMerge(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(
+    val ev = Tables(s, dir, "events").select(
       col("event_type"), col("user_id"), col("event_id"))
     val parts = (0 to 2).map(i =>
       ev.filter(pmod(col("event_id"), lit(3)) === i)
@@ -172,7 +169,7 @@ object AnalyticsQueries3 {
     * ranks target ± k ([[graft.operators.QuantileBands]]). The rank
     * window is the audit path; production reads merged states only. */
   private def b37QuantileMerge(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(
+    val ev = Tables(s, dir, "events").select(
       col("event_type"), col("value").cast("double").as("v"), col("event_id"))
     val parts = (0 to 2).map(i =>
       ev.filter(pmod(col("event_id"), lit(3)) === i)
@@ -201,7 +198,7 @@ object AnalyticsQueries3 {
     * the corpus max ts (1-row broadcast) so every SF is reproducible;
     * production passes the wall clock and skips that scan. */
   private def b35TieredRollup(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select(col("event_type"), col("ts"), col("value"))
     val asOf = ev.agg(max(col("ts")).as("max_ts"))
     IncrementalRollup.tieredRollup(
@@ -228,7 +225,7 @@ object AnalyticsQueries3 {
     // user; the pair explode is a generator over those small sets
     // (a relational self-join would scan and shuffle the memberships
     // twice — Catalyst does not share the subtree across a self-join)
-    val sets = T(s, dir, "events")
+    val sets = Tables(s, dir, "events")
       .groupBy(col("user_id"))
       .agg(collect_set(col("event_type")).as("tset"))
     sets.select(explode(col("tset")).as("type_a"), col("tset"))

@@ -21,9 +21,6 @@ import graft.sources.Tables
   */
 object AnalyticsQueries4 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** B38: CH deltaSum — per-user sum of positive deltas between
     * consecutive `value` readings in time order (monotonic-counter
     * accounting: increases survive, counter resets contribute
@@ -32,7 +29,7 @@ object AnalyticsQueries4 {
     * to DOUBLE for the driver compare. */
   private def b38DeltaSum(s: SparkSession, dir: String): DataFrame =
     Series.deltaSum(
-        T(s, dir, "events").select(
+        Tables(s, dir, "events").select(
           col("user_id"), col("ts"), col("event_id"), col("value")),
         key = "user_id", time = "ts", tieBreak = "event_id",
         value = col("value"))
@@ -47,7 +44,7 @@ object AnalyticsQueries4 {
     * days. Zero before a series' first observation (CH emits the
     * column default there). */
   private def b39FillInterpolate(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val sparse = ev.filter(pmod(col("event_id"), lit(499)) === 0)
       .groupBy(col("event_type"),
         to_date(Fns.nanosToTimestamp(col("ts"))).as("event_date"))
@@ -72,7 +69,7 @@ object AnalyticsQueries4 {
     * the row filter then prunes date partitions before any byte is
     * read. */
   private def b40TtlExpire(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select(col("event_id"), col("ts"), col("value"))
     val asOf = ev.agg(max(col("ts")).as("as_of"))
     Ttl.expire(ev.crossJoin(broadcast(asOf)),
@@ -91,7 +88,7 @@ object AnalyticsQueries4 {
     * rows). The two branches carry complementary age predicates, so a
     * date-partitioned table reads each byte once. */
   private def b41TtlRollup(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select(col("event_type"), col("event_id"), col("ts"), col("value"))
     val asOf = ev.agg(max(col("ts")).as("as_of"))
     Ttl.rollupExpired(ev.crossJoin(broadcast(asOf)),
@@ -112,7 +109,7 @@ object AnalyticsQueries4 {
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
     val t = Fns.nanosToTimestamp(col("ts"))
-    val ev = T(s, dir, "events").select(col("user_id"), col("ts"))
+    val ev = Tables(s, dir, "events").select(col("user_id"), col("ts"))
       .withColumn("first_ts", min(col("ts")).over(w))
     ev.select(col("user_id"),
         date_trunc("WEEK", Fns.nanosToTimestamp(col("first_ts"))).as("cw"),
@@ -129,7 +126,7 @@ object AnalyticsQueries4 {
     * nanos: double→long casts round on DuckDB but truncate on Spark,
     * so the duration goes through DECIMAL on both engines). */
   private def intervals(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events").select(
+    Tables(s, dir, "events").select(
       col("event_type"), col("event_id"), col("ts").as("s_ns"),
       (col("ts") + (col("value").cast("decimal(18,2)") * 1000000000L)
         .cast("long")).as("e_ns"))

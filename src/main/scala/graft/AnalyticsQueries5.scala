@@ -22,9 +22,6 @@ import graft.sources.Tables
   */
 object AnalyticsQueries5 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   private val HourNs = 3600L * 1000000000L
 
   /** B45: CH VersionedCollapsingMergeTree — signed writes where every
@@ -39,7 +36,7 @@ object AnalyticsQueries5 {
   private def b45VersionedCollapse(s: SparkSession, dir: String): DataFrame = {
     val byUser = Window.partitionBy(col("user_id"))
     val verW = byUser.orderBy(col("ts"), col("event_id"))
-    val st = T(s, dir, "events")
+    val st = Tables(s, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .withColumn("ver", row_number().over(verW).cast("long"))
       .withColumn("maxver", max(col("ver")).over(byUser))
@@ -78,7 +75,7 @@ object AnalyticsQueries5 {
     * default mode. Window = 168 hours ≡ b12's 7 days. */
   private def b12cWindowFunnelIncrease(s: SparkSession, dir: String): DataFrame =
     Funnel.windowFunnelStrictIncrease(
-        T(s, dir, "events")
+        Tables(s, dir, "events")
           .withColumn("ts_h", Fns.floorDivLong(col("ts"), HourNs)),
         key = "user_id", time = "ts_h",
         conds = Seq(col("event_type") === "signup",
@@ -96,7 +93,7 @@ object AnalyticsQueries5 {
     * signed up are absent (CH returns NULL for both — the sentinel
     * keeps the driver compare NULL-free). */
   private def b46SequenceNextNode(s: SparkSession, dir: String): DataFrame =
-    Funnel.sequenceNextNode(T(s, dir, "events"),
+    Funnel.sequenceNextNode(Tables(s, dir, "events"),
         key = "user_id", time = "ts", tieBreak = "event_id",
         node = col("event_type"), cond = col("event_type") === "signup")
       .groupBy(coalesce(col("next_node"), lit("(end)")).as("next_node"))
@@ -111,7 +108,7 @@ object AnalyticsQueries5 {
     * ever cross the shuffle — the bounded-state contract that makes
     * uniqUpTo cheaper than uniqExact at 100 TB. */
   private def b47UniqUpTo(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("event_type"),
         date_format(to_date(Fns.nanosToTimestamp(col("ts"))), "yyyy-MM-dd")
           .as("event_date"))
@@ -132,7 +129,7 @@ object AnalyticsQueries5 {
   private def b48BoundingRatio(s: SparkSession, dir: String): DataFrame = {
     val byType = Window.partitionBy(col("event_type"))
     val asc = byType.orderBy(col("ts"), col("event_id"))
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("event_type"), col("ts"), col("event_id"),
         col("value").cast("decimal(18,2)").as("v"))
       .withColumn("rn", row_number().over(asc))
@@ -156,7 +153,7 @@ object AnalyticsQueries5 {
     * decides on bit-identical doubles, and the OUTPUT is all-integer
     * (type, bucket, n, picked id, x, y). */
   private def b49Lttb(s: SparkSession, dir: String): DataFrame =
-    Series.lttb(T(s, dir, "events"), "event_type",
+    Series.lttb(Tables(s, dir, "events"), "event_type",
         xMs = Fns.floorDivLong(col("ts"), 1000000L),
         yUnits = (col("value").cast("decimal(18,2)") * 100).cast("long"),
         tieBreak = col("event_id"), buckets = 20)
@@ -169,7 +166,7 @@ object AnalyticsQueries5 {
     * differently, so the exact num/den pair IS the answer). Plain
     * partial-agg'd one-shuffle aggregate. */
   private def b50AvgWeighted(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("event_type"),
         get_json_object(col("props"), "$.k").try_cast("bigint").as("w"),
         col("value").cast("decimal(18,2)").as("v"))
@@ -187,7 +184,7 @@ object AnalyticsQueries5 {
     * the boundary). Unmatched/out-of-tolerance land on sentinels so
     * the output stays NULL-free integer/double. */
   private def b51AsofNext(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .withColumn("ts_us", Fns.floorDivLong(col("ts"), 1000L))
     val purchases = ev.filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("ts_us"))
@@ -216,7 +213,7 @@ object AnalyticsQueries5 {
     val byType = Window.partitionBy(col("event_type"))
     val cumW = byType.orderBy(col("value"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wtd = T(s, dir, "events")
+    val wtd = Tables(s, dir, "events")
       .select(col("event_type"), col("event_id"), col("value"),
         get_json_object(col("props"), "$.k").try_cast("bigint").as("w"))
       .filter(col("w").isNotNull && col("w") > 0)
@@ -239,7 +236,7 @@ object AnalyticsQueries5 {
     * decimal-exact sums and grouping-bit conventions as b16; one
     * expand + one aggregate exchange. */
   private def b53GroupingSets(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("event_type"),
         date_format(Fns.nanosToTimestamp(col("ts")), "yyyy-MM-dd")
           .as("event_date"),
@@ -267,7 +264,7 @@ object AnalyticsQueries5 {
     * are integers so every dot product is exact in a double; the
     * rounded cosine + id tie-break make ranks deterministic. */
   private def b54SeriesSimilarity(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val day = to_date(Fns.nanosToTimestamp(col("ts")))
     val perDay = ev.groupBy(col("user_id"), day.as("d"))
       .agg(count(lit(1)).as("c"))
@@ -304,7 +301,7 @@ object AnalyticsQueries5 {
     * as b22/b48/b50. */
   private def b55Linreg(s: SparkSession, dir: String): DataFrame = {
     val byType = Window.partitionBy(col("event_type"))
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select(col("event_type"),
         Fns.floorDivLong(col("ts"), 3600L * 1000000000L).as("xs"),
         (col("value").cast("decimal(18,2)") * 100).cast("long").as("yc"))

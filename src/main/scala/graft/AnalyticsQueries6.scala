@@ -22,9 +22,6 @@ import graft.sources.Tables
   */
 object AnalyticsQueries6 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   private val DayNs = 86400L * 1000000000L
   private val HourNs = 3600L * 1000000000L
 
@@ -32,7 +29,7 @@ object AnalyticsQueries6 {
     * event-type mix, the feed-health dashboard number (a day whose
     * traffic collapses into one type drops toward 0). */
   private def b56Entropy(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(
+    val ev = Tables(s, dir, "events").select(
       date_format(Fns.nanosToTimestamp(col("ts")), "yyyy-MM-dd")
         .as("event_date"),
       col("event_type"))
@@ -49,7 +46,7 @@ object AnalyticsQueries6 {
     * (epoch-nanos exceed a double's mantissa; spans don't). */
   private def b57ExpDecay(s: SparkSession, dir: String): DataFrame =
     Stats.decayedSumAtLast(
-        T(s, dir, "events").select(col("user_id"), col("ts"), col("value")),
+        Tables(s, dir, "events").select(col("user_id"), col("ts"), col("value")),
         Seq("user_id"), col("ts"), col("value"), tauNs = DayNs)
       .select(col("user_id"), col("n_events"), col("last_ts_s"),
         round(col("decayed_sum"), 4).as("decayed_sum"))
@@ -61,7 +58,7 @@ object AnalyticsQueries6 {
     * per group. */
   private def b58Ttest(s: SparkSession, dir: String): DataFrame =
     Stats.welchT(
-        T(s, dir, "events").select(col("event_type"), col("user_id"),
+        Tables(s, dir, "events").select(col("event_type"), col("user_id"),
           col("value")),
         Seq("event_type"), col("value"),
         inA = pmod(col("user_id"), lit(2)) === 0,
@@ -80,13 +77,13 @@ object AnalyticsQueries6 {
     * supplier join is a same-keyed shuffle anyway; the rank window
     * prunes below the exchange (WindowGroupLimit). */
   private def b59TopkWeighted(s: SparkSession, dir: String): DataFrame = {
-    val rev = T(s, dir, "lineitem")
+    val rev = Tables(s, dir, "lineitem")
       .groupBy(col("l_suppkey"))
       .agg(Fns.sumExact(col("l_extendedprice") * (lit(1.0) - col("l_discount")), 6)
         .as("revenue"))
-    val sup = T(s, dir, "supplier")
+    val sup = Tables(s, dir, "supplier")
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"))
-    val nat = T(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
+    val nat = Tables(s, dir, "nation").select(col("n_nationkey"), col("n_name"))
     val w = Window.partitionBy(col("nation"))
       .orderBy(col("revenue").desc, col("suppkey"))
     rev.join(Tables.broadcastIfSmall(s, dir, "supplier", sup),
@@ -106,7 +103,7 @@ object AnalyticsQueries6 {
   private def b60EquidepthHist(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("event_type"))
       .orderBy(col("value"), col("event_id"))
-    T(s, dir, "events").select(col("event_type"), col("event_id"), col("value"))
+    Tables(s, dir, "events").select(col("event_type"), col("event_id"), col("value"))
       .withColumn("bin", ntile(8).over(w))
       .groupBy(col("event_type"), col("bin"))
       .agg(count(lit(1)).as("n"),
@@ -120,7 +117,7 @@ object AnalyticsQueries6 {
     * decimal-exact (order-insensitive); the average finalizes from it. */
   private def b61IfCombinators(s: SparkSession, dir: String): DataFrame = {
     val isPurchase = col("event_type") === "purchase"
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(date_format(Fns.nanosToTimestamp(col("ts")), "yyyy-MM-dd")
           .as("event_date"),
         col("event_type"), col("user_id"), col("value"))
@@ -147,7 +144,7 @@ object AnalyticsQueries6 {
     * input is |distinct values| rows, not the corpus. */
   private def b62KsTest(s: SparkSession, dir: String): DataFrame =
     Stats.ks2Sample(
-        T(s, dir, "events").select(col("event_type"), col("user_id"),
+        Tables(s, dir, "events").select(col("event_type"), col("user_id"),
           col("value")),
         Seq("event_type"), col("value"),
         inA = pmod(col("user_id"), lit(2)) === 0)
@@ -161,7 +158,7 @@ object AnalyticsQueries6 {
     * size). Explicit Σ-formula on both engines (library corr()
     * implementations differ numerically); round(4) seals the ulps. */
   private def b63CorrMatrix(s: SparkSession, dir: String): DataFrame = {
-    val daily = T(s, dir, "events")
+    val daily = Tables(s, dir, "events")
       .groupBy(date_format(Fns.nanosToTimestamp(col("ts")), "yyyy-MM-dd")
           .as("d"),
         col("event_type"))
@@ -193,7 +190,7 @@ object AnalyticsQueries6 {
     * exact U via doubled average ranks, tie-corrected normal z. */
   private def b64MwuTest(s: SparkSession, dir: String): DataFrame =
     Stats.mannWhitney(
-        T(s, dir, "events").select(col("event_type"), col("user_id"),
+        Tables(s, dir, "events").select(col("event_type"), col("user_id"),
           col("value")),
         Seq("event_type"), col("value"),
         inA = pmod(col("user_id"), lit(2)) === 0)
@@ -205,7 +202,7 @@ object AnalyticsQueries6 {
     * sparse counter maps b30 sums (the "first/last/peak per counter"
     * dashboard idioms), one explode + one exchange, map-side combine. */
   private def b65MinmaxMap(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("user_id"),
         explode(map_concat(
           from_json(col("props"), lit("map<string,bigint>")),
@@ -225,7 +222,7 @@ object AnalyticsQueries6 {
   private def b66CramersV(s: SparkSession, dir: String): DataFrame = {
     // weekday(): 0=Monday — mirrors DuckDB isodow()−1 (dayofweek()
     // would not: Spark counts 1=Sunday, DuckDB 0=Sunday)
-    val cells = T(s, dir, "events")
+    val cells = Tables(s, dir, "events")
       .groupBy(col("event_type"),
         weekday(Fns.nanosToTimestamp(col("ts"))).cast("long").as("dow"))
       .agg(count(lit(1)).as("c"))
@@ -258,7 +255,7 @@ object AnalyticsQueries6 {
     * the mergeable state CH keeps); finalization is per-group scalar
     * math. */
   private def b67Moments(s: SparkSession, dir: String): DataFrame = {
-    val agg = T(s, dir, "events")
+    val agg = Tables(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(col("value")).as("s1"),
@@ -287,7 +284,7 @@ object AnalyticsQueries6 {
     * cascaded aggregations, the second over |types|·|users| masks;
     * same 0=Monday axis as b66. */
   private def b68BitAgg(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("event_type"), col("user_id"),
         weekday(Fns.nanosToTimestamp(col("ts"))).as("dow"))
       .groupBy(col("event_type"), col("user_id"))
@@ -306,7 +303,7 @@ object AnalyticsQueries6 {
     * on both engines. */
   private def b69WindowFunnelOrder(s: SparkSession, dir: String): DataFrame =
     graft.operators.Funnel.windowFunnelStrictOrder(
-        T(s, dir, "events"),
+        Tables(s, dir, "events"),
         key = "user_id", time = "ts", tieBreak = "event_id",
         conds = Seq(col("event_type") === "signup",
           col("event_type") === "click",
@@ -328,7 +325,7 @@ object AnalyticsQueries6 {
       .orderBy(col("ts"), col("event_id"))
     val wDesc = Window.partitionBy(col("event_type"), col("h"))
       .orderBy(col("ts").desc, col("event_id").desc)
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("event_type"), col("ts"), col("event_id"), col("value"))
       .withColumn("h", hour)
       .withColumn("rna", row_number().over(wAsc))
@@ -352,7 +349,7 @@ object AnalyticsQueries6 {
     * exchange, the tiny converted-user table re-keys by week. */
   private def b71ConversionTime(s: SparkSession, dir: String): DataFrame = {
     val wu = Window.partitionBy(col("user_id"))
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select(col("user_id"), col("ts"), col("event_type"))
       .withColumn("su",
         min(when(col("event_type") === "signup", col("ts"))).over(wu))
@@ -383,7 +380,7 @@ object AnalyticsQueries6 {
     * the scan, one keyed sort window does adjacency + gap. */
   private def b72SequenceMatchTime(s: SparkSession, dir: String): DataFrame =
     graft.operators.Funnel.sequenceMatchTime(
-        T(s, dir, "events"),
+        Tables(s, dir, "events"),
         key = "user_id", time = "ts", tieBreak = "event_id",
         cond1 = col("event_type") === "signup",
         cond2 = col("event_type") === "purchase",
@@ -401,7 +398,7 @@ object AnalyticsQueries6 {
     * The sample predicate is a projection-level filter: at 100 TB it
     * rides the scan, nothing shuffles but the sampled slice. */
   private def b73Sample(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .filter(substring(md5(col("user_id").cast("string")), 1, 8)
         < lit("19999999"))
       .groupBy(col("event_type"))

@@ -22,16 +22,13 @@ import graft.sources.Tables
   */
 object AnalyticsQueries7 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** B74: CH `rankCorr` — Spearman ρ between `value` and event time
     * per event type ("does the metric trend over the corpus
     * window?"). Tie-exact via doubled average ranks (integers all the
     * way to the final ρ). */
   private def b74RankCorr(s: SparkSession, dir: String): DataFrame =
     Stats.spearman(
-        T(s, dir, "events").select(col("event_type"), col("ts"), col("value")),
+        Tables(s, dir, "events").select(col("event_type"), col("ts"), col("value")),
         Seq("event_type"), col("value"), col("ts"))
       .select(col("event_type"), col("n"), round(col("rho"), 4).as("rho"))
       .orderBy(col("event_type"))
@@ -43,7 +40,7 @@ object AnalyticsQueries7 {
     * subtraction, so the output compares exactly with NO rounding. */
   private def b75Mad(s: SparkSession, dir: String): DataFrame =
     Stats.medianAbsDev(
-        T(s, dir, "events").select(col("event_type"), col("event_id"),
+        Tables(s, dir, "events").select(col("event_type"), col("event_id"),
           col("value")),
         Seq("event_type"), col("value"), col("event_id"))
       .orderBy(col("event_type"))
@@ -54,7 +51,7 @@ object AnalyticsQueries7 {
     * once). */
   private def b76Anova(s: SparkSession, dir: String): DataFrame =
     Stats.anovaF(
-        T(s, dir, "events").select(
+        Tables(s, dir, "events").select(
           date_format(Fns.nanosToTimestamp(col("ts")), "yyyy-MM-dd")
             .as("event_date"),
           col("event_type"), col("value")),
@@ -72,7 +69,7 @@ object AnalyticsQueries7 {
     * both features' cells via a 2-row explode; the finalization runs
     * over ≤ 17 cells. Same 0=Monday axis as b66. */
   private def b77InfoValue(s: SparkSession, dir: String): DataFrame = {
-    val cells = T(s, dir, "events")
+    val cells = Tables(s, dir, "events")
       .select(col("user_id"),
         (col("event_type") === "purchase").cast("long").as("y"),
         weekday(Fns.nanosToTimestamp(col("ts"))).cast("long").as("dow"))
@@ -107,7 +104,7 @@ object AnalyticsQueries7 {
     * the same 35-cell contingency table; counts are exact integers,
     * float math touches only cells. */
   private def b78TheilsU(s: SparkSession, dir: String): DataFrame = {
-    val cells = T(s, dir, "events")
+    val cells = Tables(s, dir, "events")
       .groupBy(col("event_type"),
         weekday(Fns.nanosToTimestamp(col("ts"))).cast("long").as("dow"))
       .agg(count(lit(1)).as("c"))
@@ -159,7 +156,7 @@ object AnalyticsQueries7 {
     * (zip_with/slice/transform) over it — no second shuffle, no
     * window pass over the corpus. */
   private def b79ArrayFuns(s: SparkSession, dir: String): DataFrame = {
-    val p = T(s, dir, "events")
+    val p = Tables(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .select(col("user_id"), col("ts"), col("event_id"),
         floor(col("value") * 100).cast("long").as("cents"))
@@ -194,7 +191,7 @@ object AnalyticsQueries7 {
     * distinct counts finalize over the fan-out. Days with no events
     * (fan-out-only targets) are dropped by the active-days semi join. */
   private def b80RollingUniq(s: SparkSession, dir: String): DataFrame = {
-    val ud = T(s, dir, "events")
+    val ud = Tables(s, dir, "events")
       .select(to_date(Fns.nanosToTimestamp(col("ts"))).as("d"), col("user_id"))
       .distinct()
     val activeDays = ud.select(col("d").as("td")).distinct()
@@ -218,7 +215,7 @@ object AnalyticsQueries7 {
     * fixed, identical IEEE ops on both engines. */
   private def b81WilsonCi(s: SparkSession, dir: String): DataFrame = {
     val z = lit(1.96)
-    val agg = T(s, dir, "events")
+    val agg = Tables(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"),
         sum(when(col("value") > 100.0, 1L).otherwise(0L)).as("hits"))
@@ -247,7 +244,7 @@ object AnalyticsQueries7 {
     * frame runs over that tiny table. Sample σ from integral sums;
     * warm-up days (< 3 prior) stay unflagged with null z. */
   private def b82Anomaly(s: SparkSession, dir: String): DataFrame = {
-    val daily = T(s, dir, "events")
+    val daily = Tables(s, dir, "events")
       .groupBy(col("event_type"),
         date_format(Fns.nanosToTimestamp(col("ts")), "yyyy-MM-dd")
           .as("event_date"))
@@ -282,7 +279,7 @@ object AnalyticsQueries7 {
     * |types|·|weeks| rollup, first weeks and zero-base weeks
     * null-guarded in the divisor (ANSI). */
   private def b83WowGrowth(s: SparkSession, dir: String): DataFrame = {
-    val weekly = T(s, dir, "events")
+    val weekly = Tables(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .groupBy(date_format(date_trunc("week",
           Fns.nanosToTimestamp(col("ts"))), "yyyy-MM-dd").as("week"))
@@ -305,7 +302,7 @@ object AnalyticsQueries7 {
     * cumulative runs over the |cohorts|·|ages| triangle, never data. */
   private def b84CohortLtv(s: SparkSession, dir: String): DataFrame = {
     val wu = Window.partitionBy(col("user_id"))
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .select(col("user_id"), col("ts"), col("event_type"), col("value"))
       .withColumn("first_ts", min(col("ts")).over(wu))
     val cells = ev.filter(col("event_type") === "purchase")
@@ -335,7 +332,7 @@ object AnalyticsQueries7 {
   private def b85GapHistogram(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("prev", lag(col("ts"), 1).over(w))
       .filter(col("prev").isNotNull)
@@ -356,7 +353,7 @@ object AnalyticsQueries7 {
     * evaluate in double with the SAME association on both engines
     * (int64 would overflow at ~10⁵ rows/group: n·Σx₁²·Σx₂² ~ 2·10¹⁹). */
   private def b86LinregMulti(s: SparkSession, dir: String): DataFrame = {
-    val agg = T(s, dir, "events")
+    val agg = Tables(s, dir, "events")
       .select(col("event_type"),
         hour(Fns.nanosToTimestamp(col("ts"))).cast("long").as("x1"),
         weekday(Fns.nanosToTimestamp(col("ts"))).cast("long").as("x2"),
@@ -398,7 +395,7 @@ object AnalyticsQueries7 {
     * shows, at 0), base-0 steps null-guarded (ANSI integer div). */
   private def b87FunnelRates(s: SparkSession, dir: String): DataFrame = {
     val levels = graft.operators.Funnel.windowFunnel(
-        T(s, dir, "events"),
+        Tables(s, dir, "events"),
         key = "user_id", time = "ts", tieBreak = "event_id",
         conds = Seq(col("event_type") === "signup",
           col("event_type") === "click",
@@ -433,7 +430,7 @@ object AnalyticsQueries7 {
     * collapsed table; counts exact, the two logs finalize per
     * ≤|types|² row. */
   private def b88TypeAffinity(s: SparkSession, dir: String): DataFrame = {
-    val ud = T(s, dir, "events")
+    val ud = Tables(s, dir, "events")
       .select(col("user_id"),
         date_format(Fns.nanosToTimestamp(col("ts")), "yyyy-MM-dd").as("d"),
         col("event_type"))
@@ -482,7 +479,7 @@ object AnalyticsQueries7 {
   private def b89TransitionMatrix(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
-    val trans = T(s, dir, "events")
+    val trans = Tables(s, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"), col("event_type"))
       .withColumn("next_type", lead(col("event_type"), 1).over(w))
       .filter(col("next_type").isNotNull)
@@ -506,7 +503,7 @@ object AnalyticsQueries7 {
   private def b90TopPaths(s: SparkSession, dir: String): DataFrame = {
     val w = Window.partitionBy(col("user_id"), col("d"))
       .orderBy(col("ts"), col("event_id"))
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("user_id"),
         date_format(Fns.nanosToTimestamp(col("ts")), "yyyy-MM-dd").as("d"),
         col("ts"), col("event_id"), col("event_type"))
@@ -556,7 +553,7 @@ object AnalyticsQueries7 {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val order = if (ascending) col("cents").asc else col("cents").desc
-    val perUser = T(s, dir, "events")
+    val perUser = Tables(s, dir, "events")
       .filter(col("event_type") === "purchase")
       .groupBy(col("user_id"))
       .agg(sum(floor(col("value") * 100).cast("long")).as("cents"))
@@ -675,7 +672,7 @@ object AnalyticsQueries7 {
     * same collapse-then-fan-out — the distinct (user, day) table
     * fans out ×28 with per-window flags, never the raw corpus. */
   private def b92Stickiness(s: SparkSession, dir: String): DataFrame = {
-    val ud = T(s, dir, "events")
+    val ud = Tables(s, dir, "events")
       .select(to_date(Fns.nanosToTimestamp(col("ts"))).as("d"), col("user_id"))
       .distinct()
     val activeDays = ud.select(col("d").as("td")).distinct()

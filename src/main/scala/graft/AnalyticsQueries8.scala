@@ -19,9 +19,6 @@ import graft.sources.Tables
   * than once, same contract as b80/b92. */
 object AnalyticsQueries8 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** B93: growth accounting. Per day: users active for the first time
     * ever (new), active yesterday too (retained), returning after a
     * gap ≥ 2 days (resurrected), and yesterday's actives who did not
@@ -30,7 +27,7 @@ object AnalyticsQueries8 {
     * Social Capital framework). dau ≡ new + retained + resurrected by
     * construction. */
   private def b93GrowthAccounting(s: SparkSession, dir: String): DataFrame = {
-    val ud = T(s, dir, "events")
+    val ud = Tables(s, dir, "events")
       .select(to_date(Fns.nanosToTimestamp(col("ts"))).as("d"), col("user_id"))
       .distinct()
     val lagW = Window.partitionBy(col("user_id")).orderBy(col("d"))
@@ -70,7 +67,7 @@ object AnalyticsQueries8 {
   private def b94DowProfile(s: SparkSession, dir: String): DataFrame = {
     val dayNs = 86400L * 1000000000L
     val hourNs = 3600L * 1000000000L
-    val cells = T(s, dir, "events")
+    val cells = Tables(s, dir, "events")
       .select(
         pmod(Fns.floorDivLong(col("ts"), dayNs) + 4L, lit(7L)).as("dow"),
         pmod(Fns.floorDivLong(col("ts"), hourNs), lit(24L)).as("hour"),
@@ -95,7 +92,7 @@ object AnalyticsQueries8 {
     * closed form per lag. */
   private def b95LagCorr(s: SparkSession, dir: String): DataFrame = {
     val dayNs = 86400L * 1000000000L
-    val daily = T(s, dir, "events")
+    val daily = Tables(s, dir, "events")
       .select(Fns.floorDivLong(col("ts"), dayNs).as("day"), col("event_type"))
       .groupBy(col("day"), col("event_type")).agg(count(lit(1)).as("n"))
     val a = daily.filter(col("event_type") === "click")
@@ -136,7 +133,7 @@ object AnalyticsQueries8 {
     // persist the rollup: actuals and predictions are the SAME table
     // read twice — without the cache Spark re-collapses the raw
     // events for the prediction branch (no common-subplan reuse)
-    val daily = T(s, dir, "events")
+    val daily = Tables(s, dir, "events")
       .select(col("event_type"), Fns.floorDivLong(col("ts"), dayNs).as("day"))
       .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -175,7 +172,7 @@ object AnalyticsQueries8 {
     // percentile boundaries, the bucket pass) — materialize it once;
     // it is bounded by |customers|, the thing this query exists to
     // keep small relative to orders
-    val cust = T(s, dir, "orders")
+    val cust = Tables(s, dir, "orders")
       .groupBy(col("o_custkey"))
       .agg(max(col("o_orderdate")).as("last_order"),
         count(lit(1)).as("frequency"),
@@ -222,7 +219,7 @@ object AnalyticsQueries8 {
     * group's value cardinality is unbounded. Same plan shape. */
   private def b98PercentileBands(s: SparkSession, dir: String): DataFrame = {
     val dayNs = 86400L * 1000000000L
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("event_type"),
         Fns.floorDivLong(col("ts"), dayNs).as("__day"),
         round(col("value") * 100).cast("long").as("__cents"))
@@ -255,7 +252,7 @@ object AnalyticsQueries8 {
     // the |days × types| rollup feeds both the stats pass and the
     // window pass — materialize it once so events cross ONE exchange
     // (without this the stats branch re-collapses the raw corpus)
-    val daily = T(s, dir, "events")
+    val daily = Tables(s, dir, "events")
       .select(col("event_type"), Fns.floorDivLong(col("ts"), dayNs).as("day"))
       .groupBy(col("event_type"), col("day")).agg(count(lit(1)).as("n"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -301,7 +298,7 @@ object AnalyticsQueries8 {
     val w = Window.partitionBy(col("user_id"))
       .orderBy(col("ts"), col("event_id"))
       .rowsBetween(Window.unboundedPreceding, -1)
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type"), col("value"))
       .withColumn("attr",
@@ -330,9 +327,9 @@ object AnalyticsQueries8 {
     * Lag is integer days (date difference), percentiles interpolate
     * over integers. */
   private def b101ShipLag(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "lineitem")
+    Tables(s, dir, "lineitem")
       .select(col("l_orderkey"), col("l_shipdate"))
-      .join(T(s, dir, "orders")
+      .join(Tables(s, dir, "orders")
         .select(col("o_orderkey"), col("o_orderdate")),
         col("l_orderkey") === col("o_orderkey"))
       .select(date_format(col("o_orderdate"), "yyyy-MM").as("order_month"),
@@ -358,7 +355,7 @@ object AnalyticsQueries8 {
     * (order,part) self-join. Margins broadcast; every statistic is
     * integer (lift_ppm = n_ab·N·10⁶ div n_a·n_b). */
   private def b102BasketLift(s: SparkSession, dir: String): DataFrame = {
-    val op = T(s, dir, "lineitem")
+    val op = Tables(s, dir, "lineitem")
       .select(col("l_orderkey").as("o"), col("l_partkey").as("p"))
       .distinct()
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -398,7 +395,7 @@ object AnalyticsQueries8 {
     * rows. Revenue in exact integer cents. */
   private def b103NewVsReturning(s: SparkSession, dir: String): DataFrame = {
     val dayNs = 86400L * 1000000000L
-    val e = T(s, dir, "events")
+    val e = Tables(s, dir, "events")
       .select(col("user_id"), Fns.floorDivLong(col("ts"), dayNs).as("day"),
         col("event_type"), round(col("value") * 100).cast("long").as("cents"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -439,10 +436,10 @@ object AnalyticsQueries8 {
     * sort-once-then-scan contract as b98. Int64 holds to ~3·10^12
     * rows·1e6; past that lift S2 to decimal(38,0). */
   private def b104Auc(s: SparkSession, dir: String): DataFrame = {
-    val o = T(s, dir, "orders").select(col("o_custkey"),
+    val o = Tables(s, dir, "orders").select(col("o_custkey"),
       round(col("o_totalprice") * 100).cast("long").as("score_cents"),
       when(col("o_orderpriority") < "3", 1L).otherwise(0L).as("is_pos"))
-    val seg = T(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
+    val seg = Tables(s, dir, "customer").select(col("c_custkey"), col("c_mktsegment"))
     graft.operators.Stats.aucBySegment(
         o.join(Tables.broadcastIfSmall(s, dir, "customer", seg),
           col("o_custkey") === col("c_custkey")),
@@ -460,7 +457,7 @@ object AnalyticsQueries8 {
     * (restored in a finally) so the rest of the suite keeps exact
     * semantics; the collect is driver-bounded by \|event types\|. */
   private def b105ApproxMode(s: SparkSession, dir: String): DataFrame = {
-    def rollup() = T(s, dir, "events")
+    def rollup() = Tables(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(countDistinct(col("user_id")).as("n_users"))
     val prev = s.conf.getOption("spark.graft.approxDistinct")
@@ -505,7 +502,7 @@ object AnalyticsQueries8 {
     * group per partition), then a \|types\|² self-pair of the 5-row
     * sketch table. */
   private def b106ThetaDiff(s: SparkSession, dir: String): DataFrame = {
-    val du = T(s, dir, "events")
+    val du = Tables(s, dir, "events")
       .select(col("event_type"), col("user_id")).distinct().persist()
     val sk = du.groupBy(col("event_type"))
       .agg(Fns.thetaSketch(col("user_id")).as("sk"),

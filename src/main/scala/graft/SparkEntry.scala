@@ -36,14 +36,11 @@ object Q {
   */
 object SparkEntry {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** Flagship: the event pipeline end-to-end on sf0.001 — ingest,
     * flatten, enrich, route, rollup. Driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame = {
     val dir = "/root/testdata/sf0.001"
-    val ev = T(spark, dir, "events")
+    val ev = Tables(spark, dir, "events")
     val flat = EventFlattener.flatten(
       ev, "props", keep = Seq("event_id", "ts", "user_id", "event_type", "value"))
     EventRouter.routeCounts(EventPipeline.enrich(flat, EventFlattener.defaultTransform))
@@ -55,7 +52,7 @@ object SparkEntry {
 
   /** A1: ingestion — required-key check + typed body extraction. */
   private def a1Ingest(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .filter(col("event_type").isNotNull && length(col("event_type")) > 0)
       .select(
         col("event_id"), col("event_type"), col("user_id"), col("value"),
@@ -65,13 +62,13 @@ object SparkEntry {
 
   /** A2: routing — one bulker/table per event_type. */
   private def a2RouteCounts(s: SparkSession, dir: String): DataFrame =
-    EventRouter.routeCounts(T(s, dir, "events")).orderBy(col("event_type"))
+    EventRouter.routeCounts(Tables(s, dir, "events")).orderBy(col("event_type"))
 
   /** A3: nested record → snake_case flattened columns. The testdata
     * props are flat, so the nested body is assembled in-plan from real
     * columns, then flattened by the operator. */
   private def a3FlattenRecords(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val nested = ev.withColumn("body",
       to_json(struct(
         struct(col("user_id").as("id"), col("value").as("score")).as("userInfo"),
@@ -86,7 +83,7 @@ object SparkEntry {
 
   /** A4: arrays → indexed columns `k_0, k_1, …`. */
   private def a4FlattenArrays(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val nested = ev.withColumn("body",
       to_json(struct(
         array(col("event_type"), col("event_id").cast("string")).as("tags"),
@@ -101,7 +98,7 @@ object SparkEntry {
   /** A5: value-form type inference (date-string / int / float / bool /
     * string → ClickHouse-ish types), aggregated over all values. */
   private def a5InferTypes(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val kv = ev.select(lit("props_k").as("key"),
         get_json_object(col("props"), "$.k").as("value"))
       .unionAll(ev.select(lit("value").as("key"), col("value").cast("string")))
@@ -116,7 +113,7 @@ object SparkEntry {
   /** A6: schema evolution — batch 1's inferred schema merged with a
     * later batch that adds a column and turns a numeric into strings. */
   private def a6SchemaEvolution(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val half = ev.agg(max(col("event_id"))).collect()(0).getLong(0) / 2
     val b1 = ev.filter(col("event_id") <= half)
       .select(lit("k").as("key"), get_json_object(col("props"), "$.k").as("value"))
@@ -137,7 +134,7 @@ object SparkEntry {
     * reference's random UUID becomes a content md5 (deterministic,
     * replay-safe). */
   private def a7Metadata(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(
         col("event_id"),
         Fns.nanosToEpochSec(col("ts")).as("received_at_s"),
@@ -147,7 +144,7 @@ object SparkEntry {
 
   /** A8: transform hook — default adds timestamp := received_at. */
   private def a8TransformHook(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "events")
+    val base = Tables(s, dir, "events")
       .withColumn("received_at", Fns.nanosToEpochSec(col("ts")))
     EventFlattener.defaultTransform(base)
       .select(col("event_id"), col("received_at"),
@@ -158,7 +155,7 @@ object SparkEntry {
   /** A9: micro-batch bulk sink bookkeeping — deterministic batch ids
     * per route (TAKE_UP_TO_PER_BATCH=500) + batch manifests. */
   private def a9BulkBatches(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     EventRouter.withBatchId(ev, 500, Seq(col("ts"), col("event_id")))
       .groupBy(col("event_type"), col("batch_id"))
       .agg(count(lit(1)).as("n_rows"),
@@ -170,7 +167,7 @@ object SparkEntry {
   /** A10: DLQ split summary (testdata is all-valid, so the output is
     * the per-route valid/dlq accounting, never empty). */
   private def a10Dlq(s: SparkSession, dir: String): DataFrame = {
-    val (ok, dlq) = EventRouter.splitDlq(T(s, dir, "events"), "props")
+    val (ok, dlq) = EventRouter.splitDlq(Tables(s, dir, "events"), "props")
     ok.groupBy(col("event_type")).agg(count(lit(1)).as("n_valid"))
       .join(dlq.groupBy(col("event_type")).agg(count(lit(1)).as("n_dlq")),
         Seq("event_type"), "full_outer")
@@ -189,7 +186,7 @@ object SparkEntry {
     * fault), keyless rows never do and are non-critical → dropped.
     * The oracle reproduces the full (row, attempt) schedule. */
   private def a12DlqReplay(s: SparkSession, dir: String): DataFrame = {
-    val ev = T(s, dir, "events").select(
+    val ev = Tables(s, dir, "events").select(
       col("event_id"),
       when(col("event_id") % 17 === 0, lit(""))
         .otherwise(col("event_type")).as("event_type"),
@@ -214,7 +211,7 @@ object SparkEntry {
     * backfill received_at on first touch, leaving modern rows
     * byte-unchanged. */
   private def a13LegacyNormalize(s: SparkSession, dir: String): DataFrame = {
-    val planted = T(s, dir, "events").select(
+    val planted = Tables(s, dir, "events").select(
       col("event_id"),
       when(col("event_id") % 13 === 0,
         floor(col("ts").cast("decimal(25,0)") / 1000000000L).cast("long"))
@@ -239,7 +236,7 @@ object SparkEntry {
     * the round-trip preserved exactly the valid rows per type. */
   private def a11PipelineE2e(s: SparkSession, dir: String): DataFrame = {
     val out = scratch("graft_e2e") + "/tables"
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
     val flat = EventFlattener.flatten(ev, "props",
       keep = Seq("event_id", "ts", "user_id", "event_type", "value"),
       opts = EventFlattener.Options(detectDates = false, sampleFraction = 0.1))
@@ -261,7 +258,7 @@ object SparkEntry {
     * with the file-count reduction asserted in-row. */
   private def a14CompactionE2e(s: SparkSession, dir: String): DataFrame = {
     val out = scratch("graft_compact") + "/tables"
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"))
       .repartition(16)
@@ -292,7 +289,7 @@ object SparkEntry {
     * lossless and that exactly 2 merges ran, each reducing files. */
   private def a19StreamCompact(s: SparkSession, dir: String): DataFrame = {
     val tmp = scratch("graft_a19")
-    val slice = T(s, dir, "events")
+    val slice = Tables(s, dir, "events")
       .filter(col("event_id") % 19 === 0)
       .select(col("event_id"), col("ts"), col("user_id"),
         col("event_type"), col("value"), col("props"))
@@ -303,8 +300,8 @@ object SparkEntry {
       graft.operators.Compactor.Stats]()
     val cfg = EventPipeline.Config(
       inputDir = s"$tmp/in", outputDir = s"$tmp/out",
-      checkpointDir = s"$tmp/ck", maxFilesPerTrigger = 1,
-      compactEvery = Some(2), onCompact = Some(st => { merges.add(st); () }))
+      checkpointDir = s"$tmp/ck", compactEvery = Some(2),
+      onCompact = Some(st => { merges.add(st); () }))
     EventPipeline.start(s, slice.schema, cfg).awaitTermination()
     val reduced = merges.size() == 2 &&
       merges.asScala.forall(st => st.filesAfter <= st.filesBefore)
@@ -367,7 +364,7 @@ object SparkEntry {
   private def evolveReplay(s: SparkSession, dir: String, query: String,
                            modulus: Int, url: String)(
                            land: DataFrame => DataFrame): DataFrame = {
-    val ev = T(s, dir, "events").filter(col("event_id") % modulus === 0)
+    val ev = Tables(s, dir, "events").filter(col("event_id") % modulus === 0)
       .select(col("event_id"), col("value"),
         get_json_object(col("props"), "$.k").cast("long").as("k"))
     val maxRow = ev.agg(max(col("event_id"))).collect()(0)
@@ -406,7 +403,7 @@ object SparkEntry {
   private def a16BrokerRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val broker = new graft.sources.QueueBroker(numPartitions = 2)
     try {
-      val payloads = T(s, dir, "events")
+      val payloads = Tables(s, dir, "events")
         .filter(col("event_id") % 13 === 0 &&
           col("event_type").isNotNull && length(col("event_type")) > 0)
         .orderBy(col("event_id"))
@@ -459,7 +456,7 @@ object SparkEntry {
     val url = wh.url
     val broker = new graft.sources.QueueBroker(numPartitions = 2)
     try {
-      val ev = T(s, dir, "events")
+      val ev = Tables(s, dir, "events")
         .filter(col("event_id") % 11 === 0 &&
           col("event_type").isNotNull && length(col("event_type")) > 0)
         .select(col("event_id"), col("ts"), col("user_id"),
@@ -603,7 +600,7 @@ object SparkEntry {
       val cfg = EventPipeline.Config(
         inputDir = "", outputDir = s"$tmp/out", checkpointDir = s"$tmp/ck",
         dlqDir = Some(s"$tmp/dlq"))
-      val slice = T(s, dir, "events").filter(col("event_id") % 31 === 0)
+      val slice = Tables(s, dir, "events").filter(col("event_id") % 31 === 0)
         .select(col("event_id"), col("ts"), col("user_id"),
           when(col("event_id") % 3 === 0, lit(null).cast("string"))
             .otherwise(col("event_type")).as("event_type"),
@@ -646,7 +643,7 @@ object SparkEntry {
 
   /** B1: grouped aggregation with decimal-exact sums (TPC-H Q1 shape). */
   private def b1Pricing(s: SparkSession, dir: String): DataFrame = {
-    val li = T(s, dir, "lineitem")
+    val li = Tables(s, dir, "lineitem")
     li.filter(col("l_shipdate") <= lit("1998-09-02"))
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(
@@ -667,7 +664,7 @@ object SparkEntry {
     * count is a plain count over the collapsed table (b80/b92's
     * shape). */
   private def b8DailyRollup(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("event_type"),
         Fns.floorDivLong(col("ts"), 86400L * 1000000000L).as("__day"),
         col("user_id"))
@@ -697,7 +694,7 @@ object SparkEntry {
     * merge is real, not one part passing through). */
   private def b33StreamingRollup(s: SparkSession, dir: String): DataFrame = {
     val tmp = scratch("graft_b33")
-    val ev = T(s, dir, "events")
+    val ev = Tables(s, dir, "events")
       .filter(col("event_type").isNotNull && length(col("event_type")) > 0)
       .select(col("event_type"),
         Fns.floorDivLong(col("ts"), 86400L * 1000000000L).as("day"),
@@ -707,7 +704,7 @@ object SparkEntry {
     })
     val schema = s.read.parquet(s"$tmp/in").schema
     def maintain(ck: String): Unit = graft.streaming.StreamingRollup.start(s,
-      EventPipeline.FileEventSource(schema, s"$tmp/in", 1),
+      EventPipeline.FileEventSource(schema, s"$tmp/in"),
       s"$tmp/states", ck, keys = Seq("event_type", "day"),
       value = col("value")).awaitTermination()
     maintain(s"$tmp/ck1")
@@ -733,7 +730,7 @@ object SparkEntry {
     * merges (Spark coalesces touching windows). */
   private def b23StreamSessions(s: SparkSession, dir: String): DataFrame = {
     val tmp = scratch("graft_b23")
-    val ev = T(s, dir, "events").filter(col("event_id") % 7 === 0)
+    val ev = Tables(s, dir, "events").filter(col("event_id") % 7 === 0)
       .select(col("ts"), col("user_id"), col("value"))
     val maxRow = ev.agg(max(col("ts"))).collect()(0)
     require(!maxRow.isNullAt(0),

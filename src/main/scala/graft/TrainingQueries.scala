@@ -21,9 +21,6 @@ import graft.streaming.{EventPipeline, Scaffold}
   */
 object TrainingQueries {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   // ------------------------------------------------------------------
   // Planted-duplicate corpora (Spark side + SQL mirror)
   // ------------------------------------------------------------------
@@ -93,28 +90,28 @@ object TrainingQueries {
   // ------------------------------------------------------------------
 
   private def c1DedupExact(s: SparkSession, dir: String): DataFrame =
-    Dedup.exact(corpusWithExactDups(T(s, dir, "documents")), "doc_id", "text")
+    Dedup.exact(corpusWithExactDups(Tables(s, dir, "documents")), "doc_id", "text")
       .orderBy(col("fp_md5"))
 
   private def c2DedupMinhash(s: SparkSession, dir: String): DataFrame =
-    Dedup.minHashLsh(corpusWithDups(T(s, dir, "documents")), "doc_id", "text",
+    Dedup.minHashLsh(corpusWithDups(Tables(s, dir, "documents")), "doc_id", "text",
         n = 5, k = 8, bands = 4, threshold = 0.5)
       .orderBy(col("id1"), col("id2"))
 
   private def c3DedupSimhash(s: SparkSession, dir: String): DataFrame =
-    Dedup.simHashPairs(corpusWithDups(T(s, dir, "documents")), "doc_id", "text",
+    Dedup.simHashPairs(corpusWithDups(Tables(s, dir, "documents")), "doc_id", "text",
         maxHamming = 3)
       .orderBy(col("id1"), col("id2"))
 
   private def c4NgramJaccard(s: SparkSession, dir: String): DataFrame =
-    Dedup.ngramJaccardPairs(corpusWithDups(T(s, dir, "documents")), "doc_id", "text",
+    Dedup.ngramJaccardPairs(corpusWithDups(Tables(s, dir, "documents")), "doc_id", "text",
         n = 3, threshold = 0.6)
       .orderBy(col("id1"), col("id2"))
 
   /** Embedding sample with planted near-identical vectors (+0.05 on
     * every dimension, id + 1,000,000). */
   private def embSample(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "embeddings").filter(col("vec_id") % 20 === 0)
+    val base = Tables(s, dir, "embeddings").filter(col("vec_id") % 20 === 0)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val dups = base.filter(col("vec_id") % 40 === 0)
       .select((col("vec_id") + 1000000L).as("vec_id"),
@@ -137,7 +134,7 @@ object TrainingQueries {
     * LSH-produced pair set — genuinely the same computation. */
   private def c19DupClusters(s: SparkSession, dir: String): DataFrame = {
     val pairs = Dedup.minHashLsh(
-      corpusWithDups(T(s, dir, "documents")), "doc_id", "text",
+      corpusWithDups(Tables(s, dir, "documents")), "doc_id", "text",
       n = 5, k = 8, bands = 4, threshold = 0.5)
     Dedup.connectedComponents(pairs, "id1", "id2")
       .select(col("node").as("doc_id"), col("component").as("cluster"))
@@ -149,7 +146,7 @@ object TrainingQueries {
     * positives: every copied doc shares almost all its 10-token lines
     * with its original. */
   private def c26LineDedup(s: SparkSession, dir: String): DataFrame =
-    Dedup.lineDupStats(corpusWithDups(T(s, dir, "documents")),
+    Dedup.lineDupStats(corpusWithDups(Tables(s, dir, "documents")),
         "doc_id", "text", lineTokens = 10)
       .orderBy(col("doc_id"))
 
@@ -158,7 +155,7 @@ object TrainingQueries {
   // ------------------------------------------------------------------
 
   private def c6AnnTopK(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 8),
         "vec_id", "embedding", k = 5, roundScale = 4)
       .select(col("query_id"), col("rank").as("rnk"), col("corpus_id"),
@@ -167,7 +164,7 @@ object TrainingQueries {
   }
 
   private def c7AnnLsh(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     Similarity.lshTopK(emb, emb.filter(col("vec_id") < 8),
         "vec_id", "embedding", k = 5, planes = 0, dim = 64, roundScale = 4,
         probes = 2)
@@ -177,7 +174,7 @@ object TrainingQueries {
   }
 
   private def c7bAnnIvf(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     Similarity.ivfTopK(emb, emb.filter(col("vec_id") < 8),
         "vec_id", "embedding", k = 5, stride = 0, roundScale = 4)
       .select(col("query_id"), col("rank").as("rnk"), col("corpus_id"),
@@ -193,7 +190,7 @@ object TrainingQueries {
     * decimal-mean → reassignment chain relationally and must land on
     * bit-identical cells and ranks. */
   private def c7cAnnIvfTrained(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     Similarity.ivfTopKTrained(emb, emb.filter(col("vec_id") < 8),
         "vec_id", "embedding", k = 5, stride = 0, iters = 1, roundScale = 4)
       .select(col("query_id"), col("rank").as("rnk"), col("corpus_id"),
@@ -217,7 +214,7 @@ object TrainingQueries {
     * would. The dequantization error is priced by c65's `ivf_int8`
     * recall line against the float-exact ground truth. */
   private def c89AnnInt8(s: SparkSession, dir: String): DataFrame = {
-    val deq = int8Deq(T(s, dir, "embeddings"))
+    val deq = int8Deq(Tables(s, dir, "embeddings"))
     Similarity.ivfTopK(deq, deq.filter(col("vec_id") < 8),
         "vec_id", "embedding", k = 5, stride = 0, roundScale = 4)
       .select(col("query_id"), col("rank").as("rnk"), col("corpus_id"),
@@ -233,7 +230,7 @@ object TrainingQueries {
     * |queries|·k-row tables — the corpus-sized work is the three
     * searches themselves, each already audited for plan shape. */
   private def c65AnnRecall(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     val q = emb.filter(col("vec_id") < 8)
     def pairs(df: DataFrame): DataFrame =
       df.select(col("query_id"), col("corpus_id"))
@@ -295,7 +292,7 @@ object TrainingQueries {
     * can gate at sf ≥ 1 (the r9 sweep found the unsampled DuckDB
     * mirror's 10M-row cross join intractable at sf1). */
   private def c65bAnnRecallPlanted(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "embeddings")
+    val base = Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("embedding"))
     val n0 = base.count()
     val qStride = 40L * math.max(1L, n0 / 2000L)
@@ -407,25 +404,25 @@ object TrainingQueries {
 
   private def c8LangId(s: SparkSession, dir: String): DataFrame = {
     val (pred, scores) = TextAnalysis.langId(col("text"))
-    T(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id") +: pred.as("lang_pred") +:
         scores.map { case (l, c) => c.as(s"hits_$l") }: _*)
       .orderBy(col("doc_id"))
   }
 
   private def c9Quality(s: SparkSession, dir: String): DataFrame =
-    TextAnalysis.quality(T(s, dir, "documents"), "doc_id", "text")
+    TextAnalysis.quality(Tables(s, dir, "documents"), "doc_id", "text")
       .orderBy(col("doc_id"))
 
   private def c10TokenCount(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"),
         TextAnalysis.wsTokenCount(col("text")).as("ws_tokens"),
         TextAnalysis.bpeTokenCount(col("text")).as("bpe_tokens"))
       .orderBy(col("doc_id"))
 
   private def c11Fingerprint(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id") +:
         TextAnalysis.fingerprintCols(col("text"), 5).map { case (n, c) => c.as(n) }: _*)
       .orderBy(col("doc_id"))
@@ -438,7 +435,7 @@ object TrainingQueries {
     * hash-checkable against the full oracle. */
   private def c13Sample(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.Fns
-    T(s, dir, "events")
+    Tables(s, dir, "events")
       .groupBy(col("event_type"))
       .agg(Fns.bottomKByHash(col("event_id"), 5).as("sample_ids"))
       .select(col("event_type"), posexplode(col("sample_ids")))
@@ -462,7 +459,7 @@ object TrainingQueries {
     * three times, so a hash match IS the served==per-call proof —
     * the per-call path (c7b) is green against the same mirror. */
   private def c104ServedAnn(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     val idx = Similarity.buildIndex(emb, "vec_id", "embedding", stride = 0)
     val served = Seq(0L, 8L, 16L).map { lo =>
       Similarity.searchIndex(idx,
@@ -478,7 +475,7 @@ object TrainingQueries {
   }
 
   private def c12Multimodal(s: SparkSession, dir: String): DataFrame =
-    Multimodal.withMedia(T(s, dir, "documents"), "doc_id", col("text"))
+    Multimodal.withMedia(Tables(s, dir, "documents"), "doc_id", col("text"))
       .select(col("doc_id"), col("media_kind"), col("byte_len"),
         col("width"), col("height"), col("bit_depth"), col("channels"),
         col("n_frames"), col("feature_md5"))
@@ -498,7 +495,7 @@ object TrainingQueries {
     * one Deflater/Inflater per partition, rows streamed through,
     * nothing collected. */
   private def c105PngPixels(s: SparkSession, dir: String): DataFrame = {
-    val dims = T(s, dir, "documents")
+    val dims = Tables(s, dir, "documents")
       .select(col("doc_id").as("media_id"),
         (octet_length(col("text")).cast("bigint") % 64L + 1L).as("width"),
         (octet_length(col("text")).cast("bigint") * 7L % 48L + 1L).as("height"))
@@ -523,7 +520,7 @@ object TrainingQueries {
     * compaction-after-append == training on the full corpus), batch
     * count and order invariant by construction. */
   private def c106IndexAppend(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
+    val emb = Tables(s, dir, "embeddings").select(col("vec_id"), col("embedding"))
     val base = emb.filter(col("vec_id") % 4 =!= 3)
     val root = Scaffold.scratch("graft_c106")
     // the two micro-batch input files stage overlapped (guide §2.6);

@@ -15,20 +15,17 @@ import graft.sources.Tables
   */
 object TrainingQueries2 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   private val toksSql = """regexp_extract_all(lower(trim(text)), '\S+')"""
 
   /** C14: top-3 TF-IDF terms per document (integer-scaled score). */
   private def c14Tfidf(s: SparkSession, dir: String): DataFrame =
-    TfIdf.topTerms(T(s, dir, "documents"), "doc_id", "text", k = 3)
+    TfIdf.topTerms(Tables(s, dir, "documents"), "doc_id", "text", k = 3)
       .orderBy(col("doc_id"), col("rk"))
 
   /** C15: 64-token chunks, stride 32 (overlapping context windows);
     * chunk text compared by md5 digest. */
   private def c15Chunks(s: SparkSession, dir: String): DataFrame =
-    Chunker.chunkTokens(T(s, dir, "documents"), "doc_id", "text",
+    Chunker.chunkTokens(Tables(s, dir, "documents"), "doc_id", "text",
         size = 64, stride = 32)
       .select(col("doc_id"), col("chunk_id"),
         size(col("chunk_tokens")).cast("long").as("n_tokens"),
@@ -39,7 +36,7 @@ object TrainingQueries2 {
     * (the raw synthetic corpus carries none — plant deterministically
     * in-plan, mirror the plant in the oracle). */
   private def c16PiiScrub(s: SparkSession, dir: String): DataFrame = {
-    val withPii = T(s, dir, "documents").select(col("doc_id"),
+    val withPii = Tables(s, dir, "documents").select(col("doc_id"),
       concat(
         col("text"),
         lit(" contact u"), col("doc_id").cast("string"), lit("@ex.com"),
@@ -59,7 +56,7 @@ object TrainingQueries2 {
 
   /** C17: per-label embedding centroid sums (micro-unit exact). */
   private def c17LabelCentroids(s: SparkSession, dir: String): DataFrame =
-    VectorStats.centroidSums(T(s, dir, "embeddings"), "label", "embedding")
+    VectorStats.centroidSums(Tables(s, dir, "embeddings"), "label", "embedding")
       .select(col("label"), col("dim").cast("long").as("dim"),
         col("sum_micro"), col("n_vecs"))
       .orderBy(col("label"), col("dim"))
@@ -69,7 +66,7 @@ object TrainingQueries2 {
     * rank window only ever sees the surviving 50 rows. */
   private def c18Vocab(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val v = TfIdf.termFreq(T(s, dir, "documents"), "doc_id", "text")
+    val v = TfIdf.termFreq(Tables(s, dir, "documents"), "doc_id", "text")
       .groupBy(col("word"))
       .agg(sum(col("term_freq")).as("n_total"), count(lit(1)).as("n_docs"))
       .orderBy(col("n_total").desc, col("word"))
@@ -86,7 +83,7 @@ object TrainingQueries2 {
     * stratified sample, rolled up per (lang, split). Pure hash
     * projections — no RNG, no shuffle before the final rollup. */
   private def c20Split(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val sp = Splitter.hashSplit(docs, "doc_id",
       Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1))
     val sampled = Splitter.stratifiedSample(docs, "lang", "doc_id", 0.1)
@@ -105,7 +102,7 @@ object TrainingQueries2 {
     * if any stage drifts (dedup winner, rounding, cluster minima,
     * chunk count), the hash breaks. */
   private def c21Pipeline(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val corpus = docs.select(col("doc_id"), col("lang"), col("text"))
       .unionAll(docs.filter(col("doc_id") % 7 === 0)
         .select((col("doc_id") + 2000000L).as("doc_id"), col("lang"), col("text")))
@@ -134,7 +131,7 @@ object TrainingQueries2 {
     * known answer the oracle reproduces. */
   private def c22Decontaminate(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Decontaminate
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val eval = docs.filter(col("doc_id") % 13 === 0)
       .select(concat_ws(" ",
         slice(graft.functions.Fns.tokens(col("text")), 11, 16)).as("text"))
@@ -146,7 +143,7 @@ object TrainingQueries2 {
   /** C23: repetition filter (Gopher rule) over a corpus with planted
     * repetitive tails (every 9th doc gets a 4× repeated phrase). */
   private def c23Repetition(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents").select(col("doc_id"),
+    val docs = Tables(s, dir, "documents").select(col("doc_id"),
       when(col("doc_id") % 9 === 0,
         concat(col("text"),
           lit(" spam ham eggs spam ham eggs spam ham eggs spam ham eggs")))
@@ -164,7 +161,7 @@ object TrainingQueries2 {
     * engines. */
   private def c24Quantize(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.VectorStats
-    T(s, dir, "embeddings")
+    Tables(s, dir, "embeddings")
       .select(col("vec_id"),
         explode(VectorStats.quantizeInt8(col("embedding"))).as("q"))
       .groupBy(col("vec_id"))
@@ -187,7 +184,7 @@ object TrainingQueries2 {
     * window shape as sessionization, at any corpus size. */
   private def c25TokenBudget(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         size(graft.functions.Fns.tokens(col("text"))).cast("long").as("n_toks"),
         md5(col("doc_id").cast("string")).as("h"))
@@ -207,7 +204,7 @@ object TrainingQueries2 {
     * one http URL, every 12th two www hosts on top. Flag threshold
     * 0.5% of tokens — planted docs land well above, clean docs at 0. */
   private def c27UrlDensity(s: SparkSession, dir: String): DataFrame = {
-    val planted = T(s, dir, "documents").select(col("doc_id"),
+    val planted = Tables(s, dir, "documents").select(col("doc_id"),
       concat(col("text"),
         when(col("doc_id") % 4 === 0,
           concat(lit(" see http://ex.com/p"), col("doc_id").cast("string")))

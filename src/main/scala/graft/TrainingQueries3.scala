@@ -18,9 +18,6 @@ import graft.sources.Tables
   */
 object TrainingQueries3 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   private val toksSql = """regexp_extract_all(lower(trim(text)), '\S+')"""
 
   /** C28: temperature-scaled language-mixing weights (α = 0.5, the
@@ -34,7 +31,7 @@ object TrainingQueries3 {
     // window over the aggregated frame (one row per lang — a
     // single-partition window over |langs| rows, never over the
     // corpus; a second agg branch would rescan all of documents).
-    val strata = T(s, dir, "documents")
+    val strata = Tables(s, dir, "documents")
       .groupBy(col("lang"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(Fns.tokens(col("text"))).cast("long")).as("n_tokens"))
@@ -53,7 +50,7 @@ object TrainingQueries3 {
     * "dup" rare) so counts, distinct counts, and the flag all vary. */
   private def c29Blocklist(s: SparkSession, dir: String): DataFrame = {
     val terms = Seq("slow", "big", "dup")
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
       .select(col("doc_id"), Fns.tokens(col("text")).as("_toks"))
     val cols = TextAnalysis.blocklistCols(col("_toks"), terms)
       .map { case (n, c) => c.as(n) }
@@ -66,7 +63,7 @@ object TrainingQueries3 {
     * and verbatim copies give real signal at every SF. */
   private def c30SubstringDedup(s: SparkSession, dir: String): DataFrame =
     Dedup.substringDupStats(
-        TrainingQueries.corpusWithDups(T(s, dir, "documents")),
+        TrainingQueries.corpusWithDups(Tables(s, dir, "documents")),
         "doc_id", "text", windowTokens = 10)
       .orderBy(col("doc_id"))
 
@@ -80,7 +77,7 @@ object TrainingQueries3 {
 
   private def c31ApplyMix(s: SparkSession, dir: String): DataFrame =
     Splitter.upsample(
-        T(s, dir, "documents").select(col("doc_id"), col("lang")),
+        Tables(s, dir, "documents").select(col("doc_id"), col("lang")),
         "lang", "doc_id", mixFactors.toMap, default = 1.0)
       .select(col("doc_id"), col("lang"), col("n_copies"), col("copy_id"))
       .orderBy(col("doc_id"), col("copy_id"))
@@ -96,7 +93,7 @@ object TrainingQueries3 {
     val budget = 2048L
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("doc_id"))
-    T(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         size(Fns.tokens(col("text"))).cast("long").as("n_tokens"))
       .withColumn("cum", sum(col("n_tokens")).over(w))
@@ -117,7 +114,7 @@ object TrainingQueries3 {
     * eval union too big to broadcast. */
   private def c22bDecontaminateBloom(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Decontaminate
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val eval = docs.filter(col("doc_id") % 13 === 0)
       .select(concat_ws(" ",
         slice(Fns.tokens(col("text")), 11, 16)).as("text"))
@@ -135,7 +132,7 @@ object TrainingQueries3 {
   private def c34GopherGate(s: SparkSession, dir: String): DataFrame = {
     val cols = TextAnalysis.gopherGateCols(col("text"))
       .map { case (n, c) => c.as(n) }
-    T(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id") +: cols: _*)
       .orderBy(col("doc_id"))
   }
@@ -149,7 +146,7 @@ object TrainingQueries3 {
     * clustering + c20's hash assignment — no new shuffle shape; the
     * cluster join is the only addition over c20. */
   private def c35ClusterSplit(s: SparkSession, dir: String): DataFrame = {
-    val corpus = TrainingQueries.corpusWithDups(T(s, dir, "documents"))
+    val corpus = TrainingQueries.corpusWithDups(Tables(s, dir, "documents"))
     val pairs = Dedup.minHashLsh(corpus, "doc_id", "text",
       n = 5, k = 8, bands = 4, threshold = 0.5)
     val cc = Dedup.connectedComponents(pairs, "id1", "id2")
@@ -183,7 +180,7 @@ object TrainingQueries3 {
         concat(lit("http://www."), lower(host), lit(".com/"), lower(page),
           lit("#sec")))
       .otherwise(concat(lit("www."), host, lit(".com/"), page, lit("/")))
-    val planted = T(s, dir, "documents")
+    val planted = Tables(s, dir, "documents")
       .select(col("doc_id"),
         concat(col("text"), lit(" ref "), url).as("text"))
     val withUrl = planted.select(col("doc_id"),

@@ -21,16 +21,13 @@ import graft.sources.Tables
   */
 object TrainingQueries4 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** Embedding corpus with planted semantic near-dups: every 40th
     * vector reappears (id + 1,000,000) shifted +0.05 on every
     * dimension — cosine lands ≥ 0.99, well over the 0.9 gate. Same
     * plant rule as c5's sampled pairs, but over the FULL corpus (the
     * scale path needs no sample). */
   private def embWithDups(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "embeddings")
+    val base = Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val dups = base.filter(col("vec_id") % 40 === 0)
       .select((col("vec_id") + 1000000L).as("vec_id"),
@@ -58,7 +55,7 @@ object TrainingQueries4 {
     * driver compare. */
   private def c38LineScrub(s: SparkSession, dir: String): DataFrame =
     Dedup.lineScrub(
-        TrainingQueries.corpusWithDups(T(s, dir, "documents")),
+        TrainingQueries.corpusWithDups(Tables(s, dir, "documents")),
         "doc_id", "text", lineTokens = 10, maxOcc = 1)
       .select(col("doc_id"), col("n_lines"), col("n_lines_kept"),
         length(col("scrubbed_text")).cast("long").as("scrubbed_len"),
@@ -74,7 +71,7 @@ object TrainingQueries4 {
     * flagged. */
   private def c39SubstringScrub(s: SparkSession, dir: String): DataFrame =
     Dedup.substringScrub(
-        TrainingQueries.corpusWithDups(T(s, dir, "documents")),
+        TrainingQueries.corpusWithDups(Tables(s, dir, "documents")),
         "doc_id", "text", windowTokens = 10)
       .select(col("doc_id"), col("n_tokens"), col("n_tokens_kept"),
         length(col("scrubbed_text")).cast("long").as("scrubbed_len"),
@@ -94,7 +91,7 @@ object TrainingQueries4 {
     val w = Window.partitionBy(col("lang"))
       .orderBy(col("score_micro"), col("doc_id"))
     val byLang = Window.partitionBy(col("lang"))
-    T(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         TextAnalysis.qualityScoreMicro(col("text")).as("score_micro"))
       .withColumn("rk", row_number().over(w))
@@ -117,7 +114,7 @@ object TrainingQueries4 {
     * partitioning. */
   private def c41LineChunks(s: SparkSession, dir: String): DataFrame = {
     val budget = 50L
-    val lines = Chunker.chunkTokens(T(s, dir, "documents"),
+    val lines = Chunker.chunkTokens(Tables(s, dir, "documents"),
         "doc_id", "text", size = 10, stride = 10)
       .select(col("doc_id"), col("chunk_id").as("line_id"),
         size(col("chunk_tokens")).cast("long").as("line_tokens"),
@@ -147,7 +144,7 @@ object TrainingQueries4 {
     * min-id rule c19/c21 use. Reuses the whole LSH+CC chain; the only
     * addition is a broadcast-able cluster join + one rank window. */
   private def c42KeepBest(s: SparkSession, dir: String): DataFrame = {
-    val corpus = TrainingQueries.corpusWithDups(T(s, dir, "documents"))
+    val corpus = TrainingQueries.corpusWithDups(Tables(s, dir, "documents"))
     val pairs = Dedup.minHashLsh(corpus, "doc_id", "text",
       n = 5, k = 8, bands = 4, threshold = 0.5)
     val cc = Dedup.connectedComponents(pairs, "id1", "id2")

@@ -20,9 +20,6 @@ import graft.sources.Tables
   */
 object TrainingQueries5 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   private val toksSql = TrainingQueries.toksSql
 
   /** C43: DSIR data selection (Xie et al. 2023) — score docs by
@@ -30,7 +27,7 @@ object TrainingQueries5 {
     * log-likelihood ratio; keep the top 50. Rank runs on the ROUNDED
     * score (ties broken by doc_id) so both engines rank identically. */
   private def c43Dsir(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val scored = Importance
       .dsirScores(docs, "doc_id", "text", isTarget = col("lang") === "en")
       .withColumn("dsir_score", round(col("score"), 4))
@@ -50,7 +47,7 @@ object TrainingQueries5 {
     * scripts the tokenizer fragments (all-integer sums; doubles only
     * at the final division). */
   private def c44Fertility(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("lang"), col("source"), col("n_chars"),
         size(Fns.tokens(col("text"))).cast("long").as("n_toks"))
       .groupBy(col("lang"), col("source"))
@@ -69,7 +66,7 @@ object TrainingQueries5 {
     * The keep flag compares the UNROUNDED exact ratio on both engines
     * (hits/shingles is an exact small-integer quotient). */
   private def c45ContamFrac(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val eval = docs.filter(col("doc_id") % 13 === 0)
       .select(concat_ws(" ",
         slice(Fns.tokens(col("text")), 11, 16)).as("text"))
@@ -86,7 +83,7 @@ object TrainingQueries5 {
     * CCNet actually buckets. Both engines compute ppl from the
     * UNROUNDED entropy, then round. */
   private def c46Perplexity(s: SparkSession, dir: String): DataFrame =
-    Importance.trigramPerplexity(T(s, dir, "documents"), "doc_id", "text")
+    Importance.trigramPerplexity(Tables(s, dir, "documents"), "doc_id", "text")
       .select(col("doc_id"), col("n_trigrams"),
         round(col("h"), 4).as("h_bits"), round(col("ppl"), 4).as("ppl"))
       .orderBy(col("doc_id"))
@@ -98,7 +95,7 @@ object TrainingQueries5 {
     * c2→c19 LSH+CC cluster chain; weights in exact integer ppm. */
   private def c47SoftDedup(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    val corpus = TrainingQueries.corpusWithDups(T(s, dir, "documents"))
+    val corpus = TrainingQueries.corpusWithDups(Tables(s, dir, "documents"))
     val pairs = Dedup.minHashLsh(corpus, "doc_id", "text",
       n = 5, k = 8, bands = 4, threshold = 0.5)
     val cc = Dedup.connectedComponents(pairs, "id1", "id2")
@@ -121,7 +118,7 @@ object TrainingQueries5 {
     * text hash rolled up per source. Two exchanges: one on the
     * content hash (dup counts), one on source. */
   private def c48CorpusReport(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents").select(col("source"), col("lang"),
+    val docs = Tables(s, dir, "documents").select(col("source"), col("lang"),
       col("n_chars"),
       size(Fns.tokens(col("text"))).cast("long").as("n_toks"),
       md5(Fns.normText(col("text"))).as("sig"))
@@ -151,7 +148,7 @@ object TrainingQueries5 {
     import graft.operators.Exporter
     val out = graft.streaming.Scaffold.scratch("graft_shards") + "/shards"
     Exporter.writeShuffledShards(
-      T(s, dir, "documents").select(col("doc_id"), col("source"),
+      Tables(s, dir, "documents").select(col("doc_id"), col("source"),
         col("n_chars")),
       "doc_id", out, rowsPerShard = 100)
     val back = Exporter.readShards(s, out)
@@ -175,7 +172,7 @@ object TrainingQueries5 {
     * Jaccard), so the set sizes alone carry the audit. */
   private def c50LshRecall(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    val corpus = TrainingQueries.corpusWithDups(T(s, dir, "documents"))
+    val corpus = TrainingQueries.corpusWithDups(Tables(s, dir, "documents"))
     val exact = Dedup.ngramJaccardPairs(corpus, "doc_id", "text",
       n = 5, threshold = 0.5)
     val lsh = Dedup.minHashLsh(corpus, "doc_id", "text",

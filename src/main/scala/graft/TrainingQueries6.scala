@@ -23,9 +23,6 @@ import graft.sources.Tables
   */
 object TrainingQueries6 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** C51: cross-source contamination matrix — word-5-gram Jaccard and
     * overlap coefficient between every source pair (the "is Common
     * Crawl leaking into the curated split?" report). Distinct
@@ -38,7 +35,7 @@ object TrainingQueries6 {
     // per-gram source-sets (explode of |sources|-sized arrays), so the
     // corpus is never re-scanned for the margins. Persisted because
     // both the counts and the pair emission read it.
-    val sets = T(s, dir, "documents")
+    val sets = Tables(s, dir, "documents")
       .select(col("source"),
         explode(Fns.wordNGrams(Fns.tokens(col("text")), 5)).as("g"))
       .groupBy(col("g"))
@@ -86,7 +83,7 @@ object TrainingQueries6 {
     * floor. */
   private def c52Stratified(s: SparkSession, dir: String): DataFrame = {
     val budget = 1000L
-    val stats = T(s, dir, "documents")
+    val stats = Tables(s, dir, "documents")
       .groupBy(col("lang"), col("source"))
       .agg(count(lit(1)).as("n_pop"),
         sum(col("n_chars")).as("sc"),
@@ -105,7 +102,7 @@ object TrainingQueries6 {
       .withColumn("alloc", // w_total=0 iff every stratum is degenerate
         when(col("w_total") > 0, expr(s"$budget * w_int div w_total"))
           .otherwise(lit(0L)))
-    val ranked = T(s, dir, "documents")
+    val ranked = Tables(s, dir, "documents")
       .select(col("lang"), col("source"), col("doc_id"), col("n_chars"))
       .withColumn("rn", row_number().over(
         Window.partitionBy(col("lang"), col("source"))
@@ -133,7 +130,7 @@ object TrainingQueries6 {
     * cumulative curve finalizes over |sources| rows. Same single
     * gram-keyed exchange as c51 (min instead of collect_set). */
   private def c53MarginalCoverage(s: SparkSession, dir: String): DataFrame = {
-    val firsts = T(s, dir, "documents")
+    val firsts = Tables(s, dir, "documents")
       .select(col("source"),
         explode(Fns.wordNGrams(Fns.tokens(col("text")), 5)).as("g"))
       .groupBy(col("g"))
@@ -158,7 +155,7 @@ object TrainingQueries6 {
     * final log-sum. */
   private def c54SplitDrift(s: SparkSession, dir: String): DataFrame = {
     val sp = graft.operators.Splitter.hashSplit(
-      T(s, dir, "documents"), "doc_id",
+      Tables(s, dir, "documents"), "doc_id",
       Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1))
     val counts = sp.filter(col("split").isin("train", "valid"))
       .select(col("split"), explode(Fns.tokens(col("text"))).as("tok"))
@@ -196,7 +193,7 @@ object TrainingQueries6 {
     val words = size(Fns.tokens(col("text")))
     val sents = size(regexp_extract_all(lowered, lit("[.!?]+"), lit(0)))
     val sylls = size(regexp_extract_all(lowered, lit("[aeiouy]+"), lit(0)))
-    val scored = T(s, dir, "documents")
+    val scored = Tables(s, dir, "documents")
       .select(col("lang"), col("source"), words.as("w"), sents.as("st"),
         sylls.as("sy"))
       .withColumn("fre",
@@ -219,7 +216,7 @@ object TrainingQueries6 {
     * ratios in exact ppm (integer div) so no float leaves the
     * engine. */
   private def c57LexicalDiversity(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("source"), explode(Fns.tokens(col("text"))).as("tok"))
       .groupBy(col("source"), col("tok"))
       .agg(count(lit(1)).as("c"))
@@ -240,7 +237,7 @@ object TrainingQueries6 {
     * md5(normalized text) — bounded key, one exchange — and each
     * hash's sorted lang-set emits pairs like c51. */
   private def c58CrossLingual(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents").select(col("doc_id"), col("lang"),
+    val docs = Tables(s, dir, "documents").select(col("doc_id"), col("lang"),
       col("text"))
     val planted = docs.unionAll(
       docs.filter(col("doc_id") % 9 === 0)
@@ -271,7 +268,7 @@ object TrainingQueries6 {
            THEN transform(sequence(1, size(tk) div 10),
              i -> array_join(slice(tk, (i - 1) * 10 + 1, 10), ' '))
            ELSE array() END""")
-    val occ = T(s, dir, "documents")
+    val occ = Tables(s, dir, "documents")
       .select(col("source"), col("doc_id"),
         Fns.tokens(col("text")).as("tk"))
       .select(col("source"), col("doc_id"), explode(chunksExpr).as("chunk"))
@@ -299,7 +296,7 @@ object TrainingQueries6 {
     * the per-doc entropy is Stats.entropyAgg reused with doc-grain
     * keys — one (doc, tri) exchange, then a |docs|-row rollup. */
   private def c60DocEntropy(s: SparkSession, dir: String): DataFrame = {
-    val tris = T(s, dir, "documents")
+    val tris = Tables(s, dir, "documents")
       .select(col("source"), col("doc_id"),
         explode(graft.operators.Importance.charTrigrams(col("text")))
           .as("tri"))
@@ -320,7 +317,7 @@ object TrainingQueries6 {
     * same banded plan minHashLsh thresholds; shares in exact ppm. */
   private def c61LshPrecision(s: SparkSession, dir: String): DataFrame =
     graft.operators.Dedup.minHashCandidates(
-        TrainingQueries.corpusWithDups(T(s, dir, "documents")),
+        TrainingQueries.corpusWithDups(Tables(s, dir, "documents")),
         "doc_id", "text", n = 5, k = 8, bands = 4)
       .groupBy()
       .agg(count(lit(1)).as("n_candidates"),
@@ -338,7 +335,7 @@ object TrainingQueries6 {
     * per-doc hash would have mis-placed — the quantified leakage the
     * safe split prevents. */
   private def c62LeakageSafeSplit(s: SparkSession, dir: String): DataFrame = {
-    val corpus = TrainingQueries.corpusWithDups(T(s, dir, "documents"))
+    val corpus = TrainingQueries.corpusWithDups(Tables(s, dir, "documents"))
     val pairs = graft.operators.Dedup.minHashLsh(corpus, "doc_id", "text",
       n = 5, k = 8, bands = 4, threshold = 0.5)
     val cl = graft.operators.Dedup.connectedComponents(pairs, "id1", "id2")
@@ -367,7 +364,7 @@ object TrainingQueries6 {
     val norm = sqrt(expr(
       """aggregate(embedding, CAST(0 AS DOUBLE),
            (acc, x) -> acc + CAST(x AS DOUBLE) * CAST(x AS DOUBLE))"""))
-    T(s, dir, "embeddings")
+    Tables(s, dir, "embeddings")
       .select(col("label").cast("long").as("label"),
         size(col("embedding")).cast("long").as("dim"), norm.as("norm"))
       .groupBy(col("label"))
@@ -388,7 +385,7 @@ object TrainingQueries6 {
     * rates in exact ppm. */
   private def c64OovRate(s: SparkSession, dir: String): DataFrame = {
     val sp = graft.operators.Splitter.hashSplit(
-      T(s, dir, "documents"), "doc_id",
+      Tables(s, dir, "documents"), "doc_id",
       Seq("train" -> 0.8, "valid" -> 0.1, "test" -> 0.1))
     sp.filter(col("split").isin("train", "valid"))
       .select(col("lang"), col("split"),

@@ -21,9 +21,6 @@ import graft.streaming.{EventPipeline, Scaffold, StreamingIngest}
   * ulp can move a document across a boundary. */
 object TrainingQueries7 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** C66: per-source dedup savings — the dataset-card row that prices
     * exact dedup: docs seen, docs kept (keeper = min doc_id of each
     * fingerprint group, c1's rule), docs and characters removed, and
@@ -31,7 +28,7 @@ object TrainingQueries7 {
     * dups (doc_id % 7 → +2000000, same text AND source) make the
     * numbers non-trivial at every sf. */
   private def c66DedupSavings(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
       .select(col("doc_id"), col("text"), col("source"))
     val corpus = docs.unionAll(
       docs.filter(col("doc_id") % 7 === 0)
@@ -63,7 +60,7 @@ object TrainingQueries7 {
     * any engine (b85's convention), unlike floor(log10) whose ulp can
     * flip a boundary doc. */
   private def c67LengthHistogram(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("source"), size(Fns.tokens(col("text"))).cast("long").as("n_tok"))
       .groupBy(col("source"),
         length(col("n_tok").cast("string")).as("magnitude"))
@@ -82,10 +79,10 @@ object TrainingQueries7 {
     * itself is |distinct sizes| rows. */
   private def c68ClusterSizes(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    val corpus = TrainingQueries.corpusWithDups(T(s, dir, "documents"))
+    val corpus = TrainingQueries.corpusWithDups(Tables(s, dir, "documents"))
       .select(col("doc_id"))
     val pairs = Dedup.minHashLsh(
-      TrainingQueries.corpusWithDups(T(s, dir, "documents")), "doc_id", "text",
+      TrainingQueries.corpusWithDups(Tables(s, dir, "documents")), "doc_id", "text",
       n = 5, k = 8, bands = 4, threshold = 0.5)
     val cc = Dedup.connectedComponents(pairs, "id1", "id2")
       .select(col("node").as("doc_id"), col("component"))
@@ -107,7 +104,7 @@ object TrainingQueries7 {
     * |sources| rows. */
   private def c69ContamBySource(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Decontaminate
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val eval = docs.filter(col("doc_id") % 13 === 0)
       .select(concat_ws(" ",
         slice(Fns.tokens(col("text")), 11, 16)).as("text"))
@@ -136,7 +133,7 @@ object TrainingQueries7 {
   private def c70ThresholdSweep(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
     val scored = Dedup.minHashCandidates(
-      TrainingQueries.corpusWithDups(T(s, dir, "documents")), "doc_id", "text",
+      TrainingQueries.corpusWithDups(Tables(s, dir, "documents")), "doc_id", "text",
       n = 5, k = 8, bands = 4)
     scored
       .select(col("jaccard"),
@@ -161,7 +158,7 @@ object TrainingQueries7 {
     * |pairs|-keyed; the decile rollup is 10 rows. */
   private def c71MinhashError(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    val corpus = TrainingQueries.corpusWithDups(T(s, dir, "documents"))
+    val corpus = TrainingQueries.corpusWithDups(Tables(s, dir, "documents"))
     val cand = Dedup.minHashCandidates(corpus, "doc_id", "text",
       n = 5, k = 8, bands = 4)
     val sig = Dedup.minHashSignatures(corpus, "doc_id", "text", n = 5, k = 8)
@@ -197,7 +194,7 @@ object TrainingQueries7 {
   private def c72CellBalance(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Similarity
     val assigned = Similarity.cellAssignments(
-      T(s, dir, "embeddings"), "vec_id", "embedding",
+      Tables(s, dir, "embeddings"), "vec_id", "embedding",
       stride = 0, roundScale = 4)
     assigned.groupBy(col("cell")).agg(count(lit(1)).as("n_vectors"))
       .withColumn("__tot", sum(col("n_vectors")).over(Window.partitionBy()))
@@ -215,7 +212,7 @@ object TrainingQueries7 {
     * share in exact ppm per (lang, source) cell. One map-side-combined
     * aggregation; the share window runs over |langs × sources| cells. */
   private def c73LangMix(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("lang"), col("source"),
         size(Fns.tokens(col("text"))).cast("long").as("__ntok"))
       .groupBy(col("lang"), col("source"))
@@ -235,7 +232,7 @@ object TrainingQueries7 {
     * (b9b's trade) — the exchange stays, the per-key state shrinks to
     * a sketch. Exact here for the oracle. */
   private def c74GramNovelty(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents")
+    Tables(s, dir, "documents")
       .select(col("source"),
         explode(Fns.wordNGrams(Fns.tokens(col("text")), 8)).as("gram"))
       .groupBy(col("source"), col("gram")).agg(count(lit(1)).as("occ"))
@@ -258,7 +255,7 @@ object TrainingQueries7 {
   private def c75BandLoad(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
     Dedup.bandBuckets(
-        TrainingQueries.corpusWithDups(T(s, dir, "documents")),
+        TrainingQueries.corpusWithDups(Tables(s, dir, "documents")),
         "doc_id", "text", n = 5, k = 8, bands = 4)
       .groupBy(col("band"), col("bk")).agg(count(lit(1)).as("sz"))
       .groupBy(col("band"))
@@ -284,7 +281,7 @@ object TrainingQueries7 {
     * per-candidate. */
   private def c76IncrementalDedup(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val ref = docs.select(col("doc_id"), col("text"))
     val newBatch = docs.filter(col("doc_id") % 10 === 0)
       .select((col("doc_id") + 1000000L).as("doc_id"),
@@ -308,7 +305,7 @@ object TrainingQueries7 {
     * reference id space (+500000/+1000000/+2000000) so the oracle's
     * ordered pair join stays ref<new. */
   private def c81StreamingIngest(s: SparkSession, dir: String): DataFrame = {
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val ref = docs.filter(col("doc_id") % 3 === 0)
       .select(col("doc_id"), col("text"))
     def novel(m: Int): DataFrame = docs.filter(col("doc_id") % 3 === m)
@@ -337,7 +334,7 @@ object TrainingQueries7 {
     * per-lang cumulative-sum assignment (one window over the \|docs\|
     * token-count table), then two tiny rollups. */
   private def c77PackEfficiency(s: SparkSession, dir: String): DataFrame = {
-    val d = T(s, dir, "documents")
+    val d = Tables(s, dir, "documents")
       .select(col("doc_id"), col("lang"),
         size(Fns.tokens(col("text"))).cast("long").as("n_tokens"))
     val w = Window.partitionBy(col("lang")).orderBy(col("doc_id"))
@@ -368,7 +365,7 @@ object TrainingQueries7 {
     * vectors with O(dim) map-side state — N rows through one exchange,
     * no N·dim posexplode, no collect_list re-assembly. */
   private def labelCentroids(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "embeddings")
+    Tables(s, dir, "embeddings")
       .groupBy(col("label"))
       .agg(Fns.vecSumLong(transform(col("embedding").cast("array<double>"),
           x => round(x * 1000000).cast("long"))).as("sm"),
@@ -398,7 +395,7 @@ object TrainingQueries7 {
     * affinity; low cohesion + high affinity = the label is noise).
     * One centroid pass + one broadcast join back over the corpus. */
   private def c79LabelCohesion(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "embeddings")
+    Tables(s, dir, "embeddings")
       .select(col("label"), col("vec_id"),
         col("embedding").cast("array<double>").as("v"))
       .join(broadcast(labelCentroids(s, dir)), "label")
@@ -426,7 +423,7 @@ object TrainingQueries7 {
     * ORDER key is the ROUNDED ppl both engines agree on. */
   private def c80PplBuckets(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Importance
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val ppl = Importance.trigramPerplexity(docs, "doc_id", "text")
       .select(col("doc_id"), round(col("ppl"), 4).as("ppl"))
     val src = docs.select(col("doc_id"), col("source"),
@@ -454,7 +451,7 @@ object TrainingQueries7 {
   private def c82BandProvenance(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
     val banded = Dedup.bandBuckets(
-        TrainingQueries.corpusWithDups(T(s, dir, "documents")),
+        TrainingQueries.corpusWithDups(Tables(s, dir, "documents")),
         "doc_id", "text", n = 5, k = 8, bands = 4)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val candB = banded.as("a").join(banded.as("b"),
@@ -489,7 +486,7 @@ object TrainingQueries7 {
     * goes per-part (Merkle-style, digests of part digests), same
     * plan one level deeper. */
   private def c83ReleaseManifest(s: SparkSession, dir: String): DataFrame =
-    T(s, dir, "documents")
+    Tables(s, dir, "documents")
       .withColumn("shard_id",
         expr("(instr('0123456789abcdef', " +
           "substr(md5(cast(doc_id as string)), 1, 1)) - 1) div 2"))
@@ -516,7 +513,7 @@ object TrainingQueries7 {
   private def c84MediaAnn(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.{Multimodal, Similarity}
     val media = Multimodal.withMedia(
-      T(s, dir, "documents").select(col("doc_id"), col("text")),
+      Tables(s, dir, "documents").select(col("doc_id"), col("text")),
       "doc_id", col("text"))
     val featured = Multimodal.featureStub(media, dim = 16)
       .select(col("doc_id"), col("feature_vec"))
@@ -537,7 +534,7 @@ object TrainingQueries7 {
     * window. */
   private def c85NeardupSavings(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    val docs = T(s, dir, "documents")
+    val docs = Tables(s, dir, "documents")
     val corpus = TrainingQueries.corpusWithDups(docs)
     val srcmap = docs.select(col("doc_id"), col("source"))
       .unionAll(docs.filter(col("doc_id") % 10 === 0)
@@ -576,7 +573,7 @@ object TrainingQueries7 {
     * of scope on both engines. */
   private def c86SimhashPrecision(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
-    val corpus = TrainingQueries.corpusWithDups(T(s, dir, "documents"))
+    val corpus = TrainingQueries.corpusWithDups(Tables(s, dir, "documents"))
     val pairs = Dedup.simHashPairs(corpus, "doc_id", "text", maxHamming = 3)
     val sets = corpus.select(col("doc_id"),
         array_distinct(Fns.wordNGrams(Fns.tokens(col("text")), 5)).as("shs"))
@@ -611,7 +608,7 @@ object TrainingQueries7 {
   private def c87Winnowing(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.Dedup
     val fps = Dedup.winnowingFingerprints(
-        TrainingQueries.corpusWithDups(T(s, dir, "documents")),
+        TrainingQueries.corpusWithDups(Tables(s, dir, "documents")),
         "doc_id", "text", k = 5, w = 4)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val keep = fps.groupBy(col("fp")).agg(count(lit(1)).as("__nd"))

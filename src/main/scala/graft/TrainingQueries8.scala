@@ -19,9 +19,6 @@ import graft.sources.Tables
   */
 object TrainingQueries8 {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame =
-    Tables(s, dir, name)
-
   /** C90: BM25 document retrieval, log-free integer form. The query is
     * data-derived (vocabulary ranks 10-12 — past the stopword head,
     * still frequent enough to hit many docs), so the whole thing is
@@ -35,7 +32,7 @@ object TrainingQueries8 {
     * T = corpus tokens, N = docs — exact int64 to ~1e7 docs; swap the
     * product chain to decimal(38,0) beyond. */
   private def c90Bm25(s: SparkSession, dir: String): DataFrame = {
-    val (top, tf) = bm25TopDocs(T(s, dir, "documents"), "doc_id", "text",
+    val (top, tf) = bm25TopDocs(Tables(s, dir, "documents"), "doc_id", "text",
       vocabRankLo = 10, vocabRankHi = 12, k = 20)
     // k rows: self-releasing (the c65b pattern) — the tf cache never
     // outlives this query
@@ -108,7 +105,7 @@ object TrainingQueries8 {
     * most frequent adjacent pair; this is that argmax's input,
     * top-20). */
   private def c92BpePairs(s: SparkSession, dir: String): DataFrame = {
-    adjacentPairs(T(s, dir, "documents"))
+    adjacentPairs(Tables(s, dir, "documents"))
       .groupBy("w1", "w2").agg(count(lit(1)).as("n_pairs"))
       // bounded input: the bigram-type rollup (vocab²-bounded ≪ tokens);
       // top-20 plans as WindowGroupLimit (PlanAuditSpec pin)
@@ -154,7 +151,7 @@ object TrainingQueries8 {
     // planted-positive convention (c4): the near-dup corpus's copies
     // land in the 1-in-10 sample with their originals (id+1e6 keeps
     // id%10), so the high-similarity buckets are non-vacuous
-    val sample = TrainingQueries.corpusWithDups(T(s, dir, "documents"))
+    val sample = TrainingQueries.corpusWithDups(Tables(s, dir, "documents"))
       .filter(col("doc_id") % 10 === 0)
     val sets = sample.select(col("doc_id"),
         array_distinct(Fns.wordNGrams(Fns.tokens(col("text")), 5)).as("shs"))
@@ -211,11 +208,11 @@ object TrainingQueries8 {
     * fusion joins two 100-row lists. doc_id ≡ vec_id by the testdata
     * contract (same generator row). */
   private def c93PrfHybrid(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     // the 100-row lexical list feeds TWO branches (PRF seeds, fusion);
     // without the persist each branch re-runs the whole BM25 subtree
-    val (bm25, tf) = bm25TopDocs(T(s, dir, "documents"), "doc_id", "text",
+    val (bm25, tf) = bm25TopDocs(Tables(s, dir, "documents"), "doc_id", "text",
         vocabRankLo = 10, vocabRankHi = 12, k = 100)
     val lex = bm25.select(col("doc_id"), col("rk").as("rk_lex"))
       .persist()
@@ -284,7 +281,7 @@ object TrainingQueries8 {
     * (Kneser–Ney's continuation counts), top-20 words by left-context
     * diversity. */
   private def c94KnCounts(s: SparkSession, dir: String): DataFrame = {
-    val (top, bt) = knContinuation(T(s, dir, "documents"), 20)
+    val (top, bt) = knContinuation(Tables(s, dir, "documents"), 20)
     // k rows: self-releasing (the c65b pattern)
     TrainingQueries.materialized(s, top, bt)
   }
@@ -325,7 +322,7 @@ object TrainingQueries8 {
     * c4/c91: at corpus scale the candidate join runs over LSH bands
     * (c2's candidates), not the raw inverted index. */
   private def c95Containment(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "documents")
+    val base = Tables(s, dir, "documents")
       .select(col("doc_id"), Fns.tokens(col("text")).as("tk"))
     val frags = base
       .filter(col("doc_id") % 5 === 0 && size(col("tk")) >= 20)
@@ -349,7 +346,7 @@ object TrainingQueries8 {
     * identical IEEE out (the c6 convention). */
   private def c96EmbedCorr(s: SparkSession, dir: String): DataFrame = {
     val d = 64
-    val e = T(s, dir, "embeddings")
+    val e = Tables(s, dir, "embeddings")
       .select(transform(col("embedding").cast("array<double>"),
         x => round(x * 1000).cast("long")).as("q"))
       .select(col("q"), Fns.upperTriangleProducts(col("q")).as("pp"))
@@ -402,7 +399,7 @@ object TrainingQueries8 {
     * surfaces per corpus release. Zero-in-degree nodes (nobody's
     * neighbor) are counted too — the left join keeps them. */
   private def c97KnnGraph(s: SparkSession, dir: String): DataFrame = {
-    val emb = T(s, dir, "embeddings")
+    val emb = Tables(s, dir, "embeddings")
     val indeg = Similarity.knnGraph(emb, "vec_id", "embedding", k = 5)
       .groupBy(col("dst").as("vec_id")).agg(count(lit(1)).as("in_deg"))
     emb.select(col("vec_id")).join(indeg, Seq("vec_id"), "left_outer")
@@ -427,7 +424,7 @@ object TrainingQueries8 {
   /** c98/c102's shared planted corpus: every 40th embedding reappears
     * shifted +0.02 (id + 1,000,000; cos ≈ 0.987 to its source). */
   private def plantedEmbeddings(s: SparkSession, dir: String): DataFrame = {
-    val base = T(s, dir, "embeddings")
+    val base = Tables(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     base.unionAll(base.filter(col("vec_id") % 40 === 0)
       .select((col("vec_id") + 1000000L).as("vec_id"),
@@ -461,7 +458,7 @@ object TrainingQueries8 {
     import graft.operators.{Chunker, TextAnalysis}
     // planted mixing (the c16/c5 convention): every 7th doc gets a
     // 10-token German tail, so real code-switched docs exist
-    val docs = T(s, dir, "documents").select(col("doc_id"),
+    val docs = Tables(s, dir, "documents").select(col("doc_id"),
       when(col("doc_id") % 7 === 0,
         concat(col("text"), lit(germanTail))).otherwise(col("text")).as("text"))
     val segs = Chunker.chunkTokens(docs, "doc_id", "text",
@@ -494,7 +491,7 @@ object TrainingQueries8 {
     * bucket by doc_id and the exchange disappears; the rollup is
     * \|sources × 4\|. */
   private def c100ReleaseDiff(s: SparkSession, dir: String): DataFrame = {
-    val d = T(s, dir, "documents").select(col("doc_id"), col("source"), col("text"))
+    val d = Tables(s, dir, "documents").select(col("doc_id"), col("source"), col("text"))
     val old = d.filter(col("doc_id") % 11 =!= 0)
       .select(col("doc_id"), col("source"), md5(col("text")).as("h"))
       .unionAll(d.filter(col("doc_id") % 31 === 0)
@@ -544,7 +541,7 @@ object TrainingQueries8 {
       case ((l, ms), acc) =>
         when(col("lang") === l, lit(langTail(ms))).otherwise(acc)
     }
-    val planted = T(s, dir, "documents").select(col("lang"),
+    val planted = Tables(s, dir, "documents").select(col("lang"),
       when(col("doc_id") % 10 =!= 0, concat(col("text"), tail))
         .otherwise(col("text")).as("text"))
     val pred = TextAnalysis.langId(col("text"))._1
@@ -579,7 +576,7 @@ object TrainingQueries8 {
     * missing mass at probes=1 is exactly the cell-boundary loss the
     * multi-probe assignment exists to buy back. */
   private def c102KnnRecall(s: SparkSession, dir: String): DataFrame = {
-    val planted = T(s, dir, "embeddings").filter(col("vec_id") % 40 === 0)
+    val planted = Tables(s, dir, "embeddings").filter(col("vec_id") % 40 === 0)
       .select(col("vec_id").as("a"), (col("vec_id") + 1000000L).as("b"))
     // ONE assignment pass serves both probe dials (knnGraphSweep: a
     // p-probe list's prefix is the (p-1)-probe list, so the per-dial
@@ -616,7 +613,7 @@ object TrainingQueries8 {
     * vocab²-bounded. */
   private def c103MergeSweep(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val counts = adjacentPairs(T(s, dir, "documents"))
+    val counts = adjacentPairs(Tables(s, dir, "documents"))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("n"))
     // bounded input: the bigram-type rollup (vocab²-bounded)
     val w = Window.orderBy(col("n").desc, col("w1"), col("w2"))

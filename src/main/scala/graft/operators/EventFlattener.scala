@@ -30,10 +30,12 @@ object EventFlattener {
   case class Options(
       splitRecords: Boolean = true,
       splitArrays: Boolean = true,
-      maxArrayItems: Int = 16,
       detectDates: Boolean = true,
       sampleFraction: Double = 1.0,
       reserved: Set[String] = defaultReserved)
+
+  /** An array splits into at most this many `key_i` columns. */
+  private val MaxArrayItems = 16
 
   /** reference: src/clickhouse-batch-client.class.ts:196-205 */
   val defaultReserved: Set[String] = Set(
@@ -97,7 +99,7 @@ object EventFlattener {
     // (widths only gate array-indexed leaves, whose dates we detect per
     // item anyway from the same leaf expression shapes).
     val probeLeaves = leafColumns("", root, schema, opts,
-        arrayPaths.map { case (p, _) => p -> opts.maxArrayItems }.toMap)
+        arrayPaths.map { case (p, _) => p -> MaxArrayItems }.toMap)
       .filterNot { case (name, _, _) => opts.reserved.map(snakeCase).contains(name) }
     val stringLeaves = probeLeaves.collect { case (n, c, StringType) => (n, c) }
     val dateAggs =
@@ -168,7 +170,7 @@ object EventFlattener {
       case _: StructType =>
         Seq((prefix, to_json(c), StringType))
       case ArrayType(et, _) if opts.splitArrays && isFlattenableElement(et, opts) =>
-        val n = math.min(maxLens.getOrElse(prefix, 0), opts.maxArrayItems)
+        val n = math.min(maxLens.getOrElse(prefix, 0), MaxArrayItems)
         (0 until n).flatMap { i =>
           val item = try_element_at(c, lit(i + 1))
           et match {

@@ -238,11 +238,14 @@ object EventRouter {
   def splitDlq(events: DataFrame): (DataFrame, DataFrame) =
     splitDlqImpl(events, None)
 
+  /** True for a row whose present JSON body does not parse — the
+    * `malformed_body` rule every pipeline entry point applies. */
+  private[graft] def malformedBody(jsonCol: String): Column =
+    col(jsonCol).isNotNull && isnull(try_parse_json(col(jsonCol)))
+
   private def splitDlqImpl(events: DataFrame,
                            jsonCol: Option[String]): (DataFrame, DataFrame) = {
-    val bodyBad = jsonCol
-      .map(c => col(c).isNotNull && isnull(try_parse_json(col(c))))
-      .getOrElse(lit(false))
+    val bodyBad = jsonCol.map(malformedBody).getOrElse(lit(false))
     val invalidReason =
       when(col(RouteCol).isNull || length(col(RouteCol)) === 0, "missing_event_type")
         .when(bodyBad, "malformed_body")

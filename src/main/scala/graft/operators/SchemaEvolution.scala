@@ -52,8 +52,8 @@ object ChTypes {
 /** Table schema evolution with the reference's exact merge rules
   * (reference: src/clickhouse-batch-client.class.ts:492-568):
   *
-  *  - column missing from the existing table → ADD COLUMN (nullable
-  *    when configured, reference env CLICKHOUSE_ALTERED_COLUMN_NULLABLE);
+  *  - column missing from the existing table → ADD COLUMN, always
+  *    nullable: files written before it read the column as null;
   *  - existing numeric/boolean column receiving strings → widen the
   *    column to String (the only ALTER the reference risks);
   *  - incoming DateTime64 vs existing DateTime → keep the existing,
@@ -64,8 +64,8 @@ object ChTypes {
   * driver-side StructType merge + null-padded aligned append, with
   * `mergeSchema` on read. ADD COLUMN rewrites no data, exactly like
   * ClickHouse's metadata-only ALTER; a widen to String rewrites the
-  * table once (see [[evolveAppend]]), like ClickHouse's MODIFY COLUMN
-  * mutation.
+  * table once (see [[graft.streaming.EventPipeline.writeEvolvedBatch]]),
+  * like ClickHouse's MODIFY COLUMN mutation.
   */
 object SchemaEvolution {
 
@@ -74,8 +74,7 @@ object SchemaEvolution {
     case _ => false
   }
 
-  def merge(existing: StructType, incoming: StructType,
-            newColsNullable: Boolean = true): StructType = {
+  def merge(existing: StructType, incoming: StructType): StructType = {
     val kept = existing.fields.map { ex =>
       incoming.fields.find(_.name == ex.name) match {
         case Some(in) if widensToString(ex.dataType) && in.dataType == StringType =>
@@ -85,7 +84,7 @@ object SchemaEvolution {
     }
     val added = incoming.fields
       .filterNot(f => existing.fieldNames.contains(f.name))
-      .map(f => f.copy(nullable = newColsNullable || f.nullable))
+      .map(_.copy(nullable = true))
     StructType(kept ++ added)
   }
 
@@ -167,44 +166,6 @@ object SchemaEvolution {
         failed
       case failed => failed
     }
-  }
-
-  /** Append with evolution: merge schemas, align, write — the one-table
-    * case of the evolving stream sink's routed write: the aligned rows
-    * are written to a `__`-prefixed sibling dir and [[land]]ed in the
-    * table.
-    *
-    * ADD COLUMN is metadata-only — older files simply lack the new
-    * columns and surface nulls via mergeSchema, the parquet analogue
-    * of ClickHouse's metadata-only ALTER ADD.
-    *
-    * Widen-to-String CHANGES an existing column's type, and parquet
-    * (unlike a ClickHouse ALTER MODIFY mutation) cannot re-read old
-    * DOUBLE pages as STRING — so a widen triggers the same thing the
-    * ClickHouse mutation does: a one-time rewrite of the existing
-    * table at the new type ([[widened]] rows landed with `replace`).
-    * The existing rows are read at the table's MERGED schema: a
-    * single-footer read could miss a column only the newer (ADD
-    * COLUMN) files carry, and the rewrite would write it back as NULL.
-    * Rare by construction (the reference only risks this single ALTER)
-    * and explicit here. */
-  def evolveAppend(spark: SparkSession, df: DataFrame, path: String,
-                   newColsNullable: Boolean = true): StructType = {
-    val p = new Path(path)
-    val existing = Option.when(p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(p))(readEvolved(spark, path).schema)
-    val target = existing.fold(df.schema)(merge(_, df.schema, newColsNullable))
-    val rewrite = existing.exists(widens(_, target))
-    val key = "__graft_table" // a name no table column takes
-    val rows = df.withColumn(key, lit("t"))
-    land(spark,
-      if (!rewrite) align(rows, keyed(target, key))
-      else widened(spark.read.schema(existing.get).parquet(path).withColumn(key, lit("t")),
-        rows, target, key),
-      key, Seq("t" -> path),
-      new Path(p.getParent, s"__graft_stage_${java.util.UUID.randomUUID()}").toString,
-      replace = rewrite).headOption.foreach { case (_, e) => throw e }
-    target
   }
 
   def readEvolved(spark: SparkSession, path: String): DataFrame =

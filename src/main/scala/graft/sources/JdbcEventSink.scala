@@ -73,22 +73,16 @@ object JdbcEventSink {
 
   private def qi(id: String): String = "\"" + id + "\""
 
-  /** Cap the INSERT fan-out: each write partition opens its own
-    * warehouse connection (Spark's JDBC writer), so a 32-shuffle-
-    * partition micro-batch filtered per type would dial the catalog
-    * 32× per table per batch — connection handshakes dominate small
-    * batches (measured ~10 s of pure setup on a17's 10 evolve rounds
-    * over the network warehouse). The reference bounds this the same
-    * way: one bulker channel per table, READ_MAX_CONCURRENCY-bounded
-    * (main.ts:40-77). Default 8 parallel inserts per table append;
-    * tune with spark.graft.jdbc.maxWritePartitions (raise it when the
-    * warehouse genuinely takes more parallel INSERT channels; 0
-    * disables the cap, same contract as the queue publisher's). */
-  private def capped(spark: SparkSession, df: DataFrame): DataFrame = {
-    val maxW = spark.conf.get("spark.graft.jdbc.maxWritePartitions", "8").toInt
-    // coalesce is a no-op when df already has <= maxW partitions
-    if (maxW > 0) df.coalesce(maxW) else df
-  }
+  /** Cap the INSERT fan-out at 8 parallel inserts per table append:
+    * each write partition opens its own warehouse connection (Spark's
+    * JDBC writer), so a 32-shuffle-partition micro-batch filtered per
+    * type would dial the catalog 32× per table per batch — connection
+    * handshakes dominate small batches (measured ~10 s of pure setup on
+    * a17's 10 evolve rounds over the network warehouse). The reference
+    * bounds this the same way: one bulker channel per table,
+    * READ_MAX_CONCURRENCY-bounded (main.ts:40-77). coalesce is a no-op
+    * when `df` already has <= 8 partitions. */
+  private def capped(df: DataFrame): DataFrame = df.coalesce(8)
 
   /** Append `df` to `table`, evolving the table's catalog schema with
     * the reference's merge rules. Returns the table's schema after
@@ -100,15 +94,13 @@ object JdbcEventSink {
       case None =>
         // first batch CREATEs the table at the batch schema, exactly
         // like the parquet twin (and the reference's CREATE path)
-        capped(spark, df).write.jdbc(url, table, props(url))
+        capped(df).write.jdbc(url, table, props(url))
         df.schema
       case Some(ex) =>
         val target = SchemaEvolution.merge(ex, df.schema)
-        val widened = ex.fields
-          .filter(f => target(f.name).dataType != f.dataType).map(_.name)
         val added = target.fields
           .filterNot(f => ex.fieldNames.contains(f.name))
-        if (widened.nonEmpty) {
+        if (SchemaEvolution.widens(ex, target)) {
           // the mutation path: old + new aligned at the widened type,
           // staged, then swapped in the catalog
           val old = spark.read.jdbc(url, table, props(url))
@@ -123,7 +115,7 @@ object JdbcEventSink {
               catch { case _: java.sql.SQLException => () } // absent: fine
             }
           }
-          capped(spark, combined).write.jdbc(url, stage, props(url))
+          capped(combined).write.jdbc(url, stage, props(url))
           withConn(url) { c =>
             val st = c.createStatement()
             st.execute(s"RENAME TABLE $table TO $retired")
@@ -139,7 +131,7 @@ object JdbcEventSink {
                 s"${qi(f.name)} ${derbyType(f.dataType)}")
             }
           }
-          capped(spark, SchemaEvolution.align(df, target))
+          capped(SchemaEvolution.align(df, target))
             .write.mode("append").jdbc(url, table, props(url))
         }
         target
@@ -180,25 +172,21 @@ object JdbcEventSink {
     * loop as a17's dominant term: 5 types × (schema read + DDL + a
     * ~0.1 s INSERT job + ~0.2 s of driver planning) ≈ 2 s per
     * micro-batch of pure latency ladder. Overlap makes it the wall of
-    * the slowest type. `spark.graft.jdbc.maxParallelTables` bounds the
-    * in-flight appends (default 8 — the same bound as the per-append
-    * INSERT fan-out above, so the worst case is 64 concurrent INSERT
-    * channels; 1 restores the serial loop; lower it when the warehouse
-    * rations connections). Exceptions propagate exactly as before
-    * (fail the batch). */
+    * the slowest type. At most 8 appends are in flight — the same
+    * bound as the per-append INSERT fan-out above, so the worst case is
+    * 64 concurrent INSERT channels. Exceptions propagate exactly as
+    * before (fail the batch). */
   def routeAndAppend(spark: SparkSession, batch: DataFrame, url: String,
-                     typeCol: String = "event_type",
                      knownTypes: Option[Seq[String]] = None): Map[String, StructType] = {
     // callers that already collected the batch's distinct types (the
     // streaming prelude's emptiness gate) pass them in — one driver
     // round-trip per micro-batch instead of two
     val types = knownTypes.getOrElse(
-      batch.select(col(typeCol)).distinct()
+      batch.select(col("event_type")).distinct()
         .collect().map(_.getString(0)).toSeq) // bounded by table count
-    graft.streaming.Scaffold.overlapped(types,
-        spark.conf.get("spark.graft.jdbc.maxParallelTables", "8").toInt) { t =>
+    graft.streaming.Scaffold.overlapped(types, 8) { t =>
       t -> evolveAppend(spark,
-        batch.filter(col(typeCol) === t).drop(typeCol), url, tableName(t))
+        batch.filter(col("event_type") === t).drop("event_type"), url, tableName(t))
     }.toMap
   }
 }

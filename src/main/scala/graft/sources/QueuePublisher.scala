@@ -28,14 +28,11 @@ import org.apache.spark.sql.functions._
   * Each task buffers its slice before the send — PUBBATCH needs the
   * whole frame up front (the broker dedups/digests it atomically), the
   * same commit-time buffer contract as the DSv2 sink — and opens one
-  * broker connection. The publish frame is coalesced to at most
-  * `spark.graft.queue.maxPublishPartitions` (default 8) tasks so a
-  * 10k-partition retry frame doesn't open 10k sockets against one
-  * broker. The trade is explicit: fewer tasks = fewer connections but
-  * LARGER per-task buffers (~|rows|/maxTasks each, broker-side too) —
-  * for a very large replay, RAISE the cap to bound buffer size at the
-  * price of more connections, or 0 to disable the coalesce entirely.
-  * Coalesce is narrow (no shuffle).
+  * broker connection. The publish frame is coalesced to at most 8
+  * tasks so a 10k-partition retry frame doesn't open 10k sockets
+  * against one broker. The trade is explicit: fewer tasks = fewer
+  * connections but LARGER per-task buffers (~|rows|/8 each,
+  * broker-side too). Coalesce is narrow (no shuffle).
   */
 object QueuePublisher {
 
@@ -46,17 +43,13 @@ object QueuePublisher {
       val c = new QueueBroker.Client(host, port)
       try c.numPartitions finally c.close()
     }
-    val maxTasks = df.sparkSession.conf
-      .get("spark.graft.queue.maxPublishPartitions", "8").toInt
     // fresh id per logical publish; tasks of ONE call share it so their
     // retries dedup, while a later call is a new job (no whitespace —
     // PUBBATCH keys are space-delimited on the wire)
     val callId = "pub-" + java.util.UUID.randomUUID().toString
-    val routed = df.select(payload.cast("string").as("__p"),
-        pmod(hash(key), lit(parts)).as("__bp"))
+    df.select(payload.cast("string").as("__p"), pmod(hash(key), lit(parts)).as("__bp"))
       .filter(col("__p").isNotNull)
-    val bounded = if (maxTasks > 0) routed.coalesce(maxTasks) else routed
-    bounded
+      .coalesce(8)
       .foreachPartition { (it: Iterator[Row]) =>
         if (it.hasNext) {
           val pid = org.apache.spark.TaskContext.getPartitionId()

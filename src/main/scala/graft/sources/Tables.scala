@@ -50,15 +50,13 @@ object Tables {
 
   private[graft] def memoSize: Int = planMemo.synchronized(planMemo.size)
 
-  def apply(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_TABLE_MEMO").contains("0")) fresh(spark, dir, name)
-    else {
-      val key = (spark, dir, name)
-      planMemo.synchronized(Option(planMemo.get(key))).getOrElse {
-        val df = fresh(spark, dir, name)
-        planMemo.synchronized(Option(planMemo.putIfAbsent(key, df)).getOrElse(df))
-      }
+  def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val key = (spark, dir, name)
+    planMemo.synchronized(Option(planMemo.get(key))).getOrElse {
+      val df = fresh(spark, dir, name)
+      planMemo.synchronized(Option(planMemo.putIfAbsent(key, df)).getOrElse(df))
     }
+  }
 
   private def fresh(spark: SparkSession, dir: String, name: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -130,15 +128,4 @@ object Tables {
     if (tableBytes(spark, dir, name) <= maxBytes)
       org.apache.spark.sql.functions.broadcast(df)
     else df
-
-  def events(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "events")
-  def documents(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "documents")
-  def embeddings(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "embeddings")
-  def lineitem(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "lineitem")
-  def orders(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "orders")
-  def customer(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "customer")
-  def supplier(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "supplier")
-  def part(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "part")
-  def nation(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "nation")
-  def region(spark: SparkSession, dir: String): DataFrame = apply(spark, dir, "region")
 }

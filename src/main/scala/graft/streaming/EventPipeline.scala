@@ -21,8 +21,8 @@ import graft.sources.JdbcEventSink
   *   evolution }.
   *
   * What the reference gets from Bull + bulkers, streaming gives
-  * structurally: micro-batches ARE the bulk inserts
-  * (maxFilesPerTrigger ≙ TAKE_UP_TO_PER_BATCH), the checkpoint is the
+  * structurally: micro-batches ARE the bulk inserts (the source's
+  * per-trigger cap ≙ TAKE_UP_TO_PER_BATCH), the checkpoint is the
   * re-enqueue-on-crash story (no manual SIGTERM dance), and
   * backpressure is trigger-paced instead of a bounded in-memory buffer
   * that throws `errors.bulker_full`.
@@ -42,23 +42,24 @@ object EventPipeline {
     *   partition count × `spark.sql.shuffle.partitions` — parallelism
     *   is cluster-sized, not worker-config-sized.
     * - `TAKE_UP_TO_PER_BATCH` / `BULKER_MAX_LENGTH` (main.ts:153,
-    *   bounded per-INSERT batch + buffer cap) ≙ trigger pacing:
-    *   `maxFilesPerTrigger` (files) or `maxOffsetsPerTrigger` (Kafka)
-    *   bound each micro-batch, and backpressure is structural — the
-    *   source is never drained faster than the sink commits, so there
-    *   is no `errors.bulker_full` overflow path to re-enqueue. */
+    *   bounded per-INSERT batch + buffer cap) ≙ trigger pacing: the
+    *   broker source's `maxRecordsPerTrigger` (`maxOffsetsPerTrigger`
+    *   for Kafka) bounds each micro-batch, and backpressure is
+    *   structural — the source is never drained faster than the sink
+    *   commits, so there is no `errors.bulker_full` overflow path to
+    *   re-enqueue. */
   trait EventSource {
     def load(spark: SparkSession): DataFrame
   }
 
   /** File-backed queue stand-in: each arriving file ≙ a batch of
-    * queue jobs; `maxFilesPerTrigger` ≙ TAKE_UP_TO_PER_BATCH. */
-  final case class FileEventSource(schema: StructType, dir: String,
-                                   maxFilesPerTrigger: Int = 1) extends EventSource {
+    * queue jobs, read one file per micro-batch (the order
+    * [[Scaffold.stageSliceFiles]] stages them in). */
+  final case class FileEventSource(schema: StructType, dir: String) extends EventSource {
     def load(spark: SparkSession): DataFrame =
       spark.readStream
         .schema(schema)
-        .option("maxFilesPerTrigger", maxFilesPerTrigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(dir)
   }
 
@@ -89,15 +90,13 @@ object EventPipeline {
     *
     * `dlqDir = Some(dir)` is where rows go instead of being lost, with a
     * reason + attempt counter (the reference never loses a row,
-    * main.ts:463-514); replay them with `EventRouter.replayDlq`. Which
-    * rows go there depends on the entry point:
-    *  - `start` dead-letters invalid rows (missing routing key /
-    *    unparseable body); None drops them.
-    *  - `startEvolving` and `startEvolvingJdbc` always DROP rows with no
-    *    routing key, and a body that does not parse lands with null
-    *    flattened columns. There `dlqDir` receives only the sinkPing
-    *    divert below and, in `startEvolving`, the batch rows of a type
-    *    whose table write threw.
+    * main.ts:463-514); replay them with `EventRouter.replayDlq`. One
+    * rule holds in every entry point: a row whose body does not parse
+    * is dead-lettered as `malformed_body`, or dropped when `dlqDir` is
+    * None. A row with no routing key is dead-lettered only by `start`;
+    * the evolving sinks drop it. The evolving sinks also send here the
+    * sinkPing divert below and, in `startEvolving`, the batch rows of a
+    * type whose table write threw.
     *
     * `sinkPing = Some(f)` is the connection-watchdog seam (reference
     * main.ts:244-260 pings ClickHouse and main.ts:464 gates inserts on
@@ -133,12 +132,10 @@ object EventPipeline {
       inputDir: String,
       outputDir: String,
       checkpointDir: String,
-      maxFilesPerTrigger: Int = 1,
       transform: EventFlattener.RowTransform = EventFlattener.defaultTransform,
       dlqDir: Option[String] = None,
       sinkPing: Option[() => Boolean] = None,
       compactEvery: Option[Int] = None,
-      compactSortCol: String = "sent_at",
       onCompact: Option[graft.operators.Compactor.Stats => Unit] = None,
       debugTee: Option[String] = None)
 
@@ -166,8 +163,7 @@ object EventPipeline {
     * always-on worker (BULK_REPEAT_INTERVAL_SEC). */
   def start(spark: SparkSession, schema: StructType, cfg: Config,
             availableNow: Boolean = true): StreamingQuery =
-    start(spark, FileEventSource(schema, cfg.inputDir, cfg.maxFilesPerTrigger),
-      cfg, availableNow)
+    start(spark, FileEventSource(schema, cfg.inputDir), cfg, availableNow)
 
   /** Same pipeline over any [[EventSource]] (the queue seam). */
   def start(spark: SparkSession, source: EventSource, cfg: Config,
@@ -177,21 +173,14 @@ object EventPipeline {
       (batch, batchId) =>
         // reference main.ts:463-514: a row is never lost — invalid rows
         // dead-letter (when configured) with a reason + attempt counter
-        val valid = cfg.dlqDir match {
-          case Some(dlqOut) =>
-            val (ok, dlq) =
-              if (batch.columns.contains("props"))
-                EventRouter.splitDlq(batch, "props")
-              else EventRouter.splitDlq(batch)
-            dlq.withColumn("stream_batch_id", lit(batchId))
-              .write.mode("append").parquet(dlqOut)
-            ok
-          case None =>
-            batch.filter(col("event_type").isNotNull &&
-              length(col("event_type")) > 0)
+        val (valid, dlq) =
+          if (batch.columns.contains("props")) EventRouter.splitDlq(batch, "props")
+          else EventRouter.splitDlq(batch)
+        cfg.dlqDir.foreach { dlqOut =>
+          dlq.withColumn("stream_batch_id", lit(batchId))
+            .write.mode("append").parquet(dlqOut)
         }
         val enriched = enrich(valid, cfg.transform)
-          .filter(col("event_type").isNotNull && length(col("event_type")) > 0)
           .withColumn("stream_batch_id", lit(batchId))
         enriched
           .repartition(col("event_type"))
@@ -210,7 +199,7 @@ object EventPipeline {
           if ((batchId + 1) % n == 0 && fs.exists(outPath)) {
             val st = graft.operators.Compactor.compact(batch.sparkSession,
               cfg.outputDir, partitionCol = "event_type",
-              sortCol = cfg.compactSortCol)
+              sortCol = "sent_at")
             cfg.onCompact.foreach(_(st))
           }
         }
@@ -277,17 +266,15 @@ object EventPipeline {
   def startEvolving(spark: SparkSession, schema: StructType, cfg: Config,
                     jsonCol: String = "props",
                     availableNow: Boolean = true): StreamingQuery =
-    startEvolving(spark,
-      FileEventSource(schema, cfg.inputDir, cfg.maxFilesPerTrigger),
-      cfg, jsonCol, availableNow)
+    startEvolving(spark, FileEventSource(schema, cfg.inputDir), cfg, jsonCol, availableNow)
 
   /** Enrichment columns both evolving sinks reserve (one list — the
     * parquet and JDBC twins must never drift apart on it). */
   private val enrichmentCols = Seq("received_at", "sent_at", "message_id",
     "timestamp", "stream_batch_id")
 
-  /** Watchdog divert: rows dead-letter with a reason + attempt counter
-    * instead of failing the stream (reference main.ts:463-514). */
+  /** Divert: rows dead-letter with a reason + attempt counter instead
+    * of failing the stream or landing (reference main.ts:463-514). */
   private def divertToDlq(rows: DataFrame, reason: String, dlqDir: String,
                           batchId: Long): Unit =
     rows.withColumn("dlq_reason", lit(reason))
@@ -297,7 +284,8 @@ object EventPipeline {
 
   /** The shared per-batch prelude of BOTH evolving sinks (parquet and
     * JDBC — one body, so a change to the gate/flatten/enrich sequence
-    * cannot silently apply to only one twin): keep routable rows, gate
+    * cannot silently apply to only one twin): keep routable rows,
+    * dead-letter (or drop) the ones whose body does not parse, gate
     * on the sink ping (diverting the whole batch raw when the
     * destination reports down and a DLQ is configured — main.ts:464's
     * insert gate), flatten the JSON column, enrich, stamp the batch
@@ -306,21 +294,25 @@ object EventPipeline {
     * batch; persists the raw frame and `enriched` (which both sinks
     * consume once per present type) around the body and the trace.
     *
-    * The emptiness gate and the sinks' type discovery are ONE job: the
-    * distinct event_type list is collected here (empty list == empty
-    * batch) and handed to the body, instead of the old isEmpty action
-    * PLUS a per-sink distinct — two fewer driver round-trips per
-    * micro-batch, measured at ~0.3 s/trigger on the r13 event-log
-    * probe. event_type is a kept passthrough column, so the list
-    * collected pre-flatten equals the one the sinks saw post-flatten. */
+    * The emptiness gate, the body check and the sinks' type discovery
+    * are ONE job: the distinct (event_type, malformed) pairs are
+    * collected here (no valid pair == empty batch), so a clean batch
+    * pays no extra round-trip for the check. event_type is a kept
+    * passthrough column, so the list collected pre-flatten equals the
+    * one the sinks saw post-flatten. */
   private def withRoutableBatch(batch: DataFrame, batchId: Long, cfg: Config,
       jsonCol: String)(body: (DataFrame, Seq[String], DataFrame) => Unit): Unit = {
-    val valid = batch
+    val keyed = batch
       .filter(col("event_type").isNotNull && length(col("event_type")) > 0)
+      .withColumn("__malformed", EventRouter.malformedBody(jsonCol))
       .persist()
     try {
-      val types = valid.select(col("event_type")).distinct()
-        .collect().map(_.getString(0)).toSeq // bounded by table count
+      val seen = keyed.select(col("event_type"), col("__malformed")).distinct()
+        .collect().map(r => r.getString(0) -> r.getBoolean(1)).toSeq // ≤ 2 per table
+      if (seen.exists(_._2)) cfg.dlqDir.foreach(divertToDlq(
+        keyed.filter(col("__malformed")).drop("__malformed"), "malformed_body", _, batchId))
+      val valid = keyed.filter(!col("__malformed")).drop("__malformed")
+      val types = seen.collect { case (t, false) => t }
       if (types.nonEmpty) {
         if (cfg.dlqDir.isDefined && !cfg.sinkPing.forall(_())) {
           divertToDlq(valid, "destination_unhealthy", cfg.dlqDir.get, batchId)
@@ -338,7 +330,7 @@ object EventPipeline {
           } finally { enriched.unpersist(); () }
         }
       }
-    } finally { valid.unpersist(); () }
+    } finally { keyed.unpersist(); () }
   }
 
   /** Same evolving pipeline over any [[EventSource]] (the queue seam). */
@@ -409,7 +401,7 @@ object EventPipeline {
     *    seen after a restart, which starts from an empty `known`.
     * 2. Every type whose append is cast-free — a new table, or no
     *    column the batch shares with its table changes dtype (new
-    *    columns are metadata-only via mergeSchema, like evolveAppend's
+    *    columns are metadata-only via mergeSchema, like ClickHouse's
     *    ADD COLUMN) — rides ONE salted-by-type `partitionBy` write to a
     *    staging dir (the batch router's one-shuffle shape,
     *    EventRouter.writeRouted), whose part files then MOVE into the
@@ -420,10 +412,10 @@ object EventPipeline {
     *    column is rewritten: its tables are read by ONE parquet scan
     *    (`event_type` read back as a STRING partition column, so a type
     *    named `007` keeps its name), unioned with the group's batch
-    *    rows, written by one job and swapped in per table — the same
-    *    rewrite [[SchemaEvolution.evolveAppend]] runs for one table. Any
-    *    other group appends its batch rows, cast to the target, as in
-    *    step 2. The groups and the step-2 write run overlapped.
+    *    rows, written by one job and swapped in per table (parquet
+    *    cannot re-read old DOUBLE pages as STRING). Any other group
+    *    appends its batch rows, cast to the target, as in step 2. The
+    *    groups and the step-2 write run overlapped.
     *
     * A failure diverts exactly the types it touched — one type for a
     * schema read or a file move, every type of a write that failed —

@@ -1,39 +1,26 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The ClickHouse-`uniq()` optimizer rule
   * ([[graft.plans.ApproxDistinctRewrite]]): default off (plans and
   * results byte-identical to stock Spark), and with ONE conf flip
   * every exact COUNT(DISTINCT) in unchanged query text plans as an
   * HLL sketch. */
-class ApproxDistinctSpec extends AnyFunSuite {
+class ApproxDistinctSpec extends SparkSpec {
 
   test("spark.graft.approxDistinct flips countDistinct to an HLL sketch plan") {
-    val shared = TestSession.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = SparkSession.builder()
-      .master("local[2]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      import spark.implicits._
-      val df = (0 until 3000).map(i => (i % 3, (i % 700).toLong))
-        .toDF("g", "v")
-      df.createOrReplaceTempView("t")
-      val q = "SELECT g, count(DISTINCT v) AS u FROM t GROUP BY g ORDER BY g"
+    import spark.implicits._
+    val df = (0 until 3000).map(i => (i % 3, (i % 700).toLong))
+      .toDF("g", "v")
+    df.createOrReplaceTempView("t")
+    val q = "SELECT g, count(DISTINCT v) AS u FROM t GROUP BY g ORDER BY g"
 
-      // default: exact, no sketch in the plan
-      val exactPlan = spark.sql(q).queryExecution.executedPlan.toString
-      assert(!exactPlan.contains("hll_sketch"),
-        s"rule must be inert by default:\n$exactPlan")
-      val exact = spark.sql(q).collect().map(r => r.getInt(0) -> r.getLong(1))
+    // default: exact, no sketch in the plan
+    val exactPlan = spark.sql(q).queryExecution.executedPlan.toString
+    assert(!exactPlan.contains("hll_sketch"),
+      s"rule must be inert by default:\n$exactPlan")
+    val exact = spark.sql(q).collect().map(r => r.getInt(0) -> r.getLong(1))
 
-      spark.conf.set("spark.graft.approxDistinct", "true")
+    withConf("spark.graft.approxDistinct" -> "true") {
       val plan = spark.sql(q).queryExecution.executedPlan.toString
       assert(plan.contains("hll_sketch_agg"),
         s"flag set but the distinct stayed exact:\n$plan")
@@ -66,11 +53,6 @@ class ApproxDistinctSpec extends AnyFunSuite {
       val emptyRow = empty.collect()(0)
       assert(!emptyRow.isNullAt(0) && emptyRow.getLong(0) == 0L,
         "empty-input estimate must be 0, matching exact COUNT(DISTINCT)")
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
     }
   }
 }

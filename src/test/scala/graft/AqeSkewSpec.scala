@@ -22,20 +22,12 @@ class AqeSkewSpec extends SparkSpec {
       .toDF("k", "lv")
     val right = (0 to 20).map(k => (k.toLong, s"r$k")).toDF("k", "rv")
 
-    val prev = Seq(
-      "spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-      "spark.sql.adaptive.advisoryPartitionSizeInBytes",
-      "spark.sql.adaptive.coalescePartitions.enabled"
-    ).map(k => k -> spark.conf.getOption(k)).toMap
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set(
-      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "16KB")
-    spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "64KB")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
-    try {
+    withConf(
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "16KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "64KB",
+      "spark.sql.adaptive.coalescePartitions.enabled" -> "false") {
       val joined = left.join(right, Seq("k"))
       // collect() executes THIS DataFrame's own QueryExecution, so the
       // adaptive plan below is the one that actually ran (a count()
@@ -49,9 +41,6 @@ class AqeSkewSpec extends SparkSpec {
         s"expected a sort-merge join:\n$finalPlan")
       assert(finalPlan.contains("skew=true"),
         s"AQE did not mark/split the skewed partition:\n$finalPlan")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 }

@@ -33,17 +33,15 @@ class BucketedJoinSpec extends SparkSpec {
     // sf0.001 tables fit the broadcast threshold, which would bypass
     // bucketing entirely — pin the non-broadcast path the layout is
     // FOR (at 100 TB neither fact side broadcasts)
-    val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     val (plan, got) =
-      try {
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val j = spark.table("b_lineitem")
           .join(spark.table("b_orders"), col("l_orderkey") === col("o_orderkey"))
           .groupBy(col("o_orderpriority"))
           .agg(count(lit(1)).as("n"))
         (j.queryExecution.executedPlan.toString,
           j.collect().map(r => r.getString(0) -> r.getLong(1)).toMap)
-      } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
+      }
 
     // the join itself must not shuffle either side; the only allowed
     // exchange is the one introduced by the final groupBy (above the

@@ -27,9 +27,9 @@ class EventRouterSpec extends SparkSpec {
     val out = tmpDir("route") + "/salted"
     // AQE rightly coalesces tiny salted partitions back together at toy
     // scale — disable it here to observe the fan-out shape itself.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try EventRouter.writeRouted(events(300), out, sortCol = "ts", saltBuckets = 4)
-    finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    withConf("spark.sql.adaptive.enabled" -> "false") {
+      EventRouter.writeRouted(events(300), out, sortCol = "ts", saltBuckets = 4)
+    }
     val hot = spark.read.parquet(out).filter(col("event_type") === "hot")
     assert(hot.count() == 30)
     // salt buckets → several part files under the hot partition
@@ -46,15 +46,12 @@ class EventRouterSpec extends SparkSpec {
         if (i % 10 != 0) "hot" else s"t${i % 3}", i * 1.0)
     }.toDF("event_id", "ts", "user_id", "event_type", "value")
     val out = tmpDir("route") + "/skewed"
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
     // size buckets ~ shuffle partitions (32): with only a handful of
     // salt values, hash collisions into the 32 partitions re-create
     // the very hot partition the salt exists to break
-    spark.conf.set("spark.sql.shuffle.partitions", "32") // test default is 4
-    try EventRouter.writeRouted(skewed, out, sortCol = "ts", saltBuckets = 32)
-    finally {
-      spark.conf.set("spark.sql.adaptive.enabled", "true")
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
+    withConf("spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.shuffle.partitions" -> "32") { // test default is 4
+      EventRouter.writeRouted(skewed, out, sortCol = "ts", saltBuckets = 32)
     }
 
     val hotDir = new java.io.File(s"$out/event_type=hot")
@@ -197,8 +194,7 @@ class EventRouterSpec extends SparkSpec {
     // any per-exchange sampling seed would silently mis-assign batches
     val ev = events(300).withColumn("event_type",
       when(col("event_id") % 7 === 0, lit(null)).otherwise(col("event_type")))
-    spark.conf.set("spark.sql.exchange.reuse", "false")
-    try {
+    withConf("spark.sql.exchange.reuse" -> "false") {
       val got = EventRouter.withBatchId(ev, perBatch = 40,
         Seq(col("ts"), col("event_id")))
       val w = org.apache.spark.sql.expressions.Window
@@ -208,6 +204,6 @@ class EventRouterSpec extends SparkSpec {
       assert(got.count() == 300)
       assert(got.select("event_id", "batch_id").except(
         want.select("event_id", "batch_id")).count() == 0)
-    } finally spark.conf.set("spark.sql.exchange.reuse", "true")
+    }
   }
 }

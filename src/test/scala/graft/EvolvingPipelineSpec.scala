@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
+import graft.operators.SchemaEvolution
 import graft.streaming.EventPipeline
 
 /** The reference's end-to-end story: stream of free-form JSON events →
@@ -130,6 +131,71 @@ class EvolvingPipelineSpec extends SparkSpec {
     val a = spark.read.parquet(s"$out/event_type=a").orderBy("received_at").collect()
     assert(a.map(_.getAs[String]("x")).toSeq == Seq("1", "2", "3", "s"))
     assert(a.map(r => Option(r.getAs[String]("y"))).toSeq == Seq(None, Some("v"), None, None))
+  }
+
+  /** `rows` as one micro-batch of the single type `t`, written under
+    * `out` by the evolving sink's write. */
+  private def landOne(out: String, batchId: Long, rows: DataFrame): Unit =
+    EventPipeline.writeEvolvedBatch(spark,
+      rows.withColumn("event_type", lit("t")).withColumn("received_at", lit(batchId)),
+      Seq("t"), out, batchId)
+
+  test("one-type batch: a later batch adds a column; earlier rows surface null") {
+    val out = tmpDir("evolve") + "/out"
+    landOne(out, 1, Seq((1L, 10.0)).toDF("id", "amount"))
+    landOne(out, 2, Seq((2L, "usd_20", true)).toDF("id", "amount", "flag"))
+    val tbl = SchemaEvolution.readEvolved(spark, s"$out/event_type=t")
+    assert(tbl.schema("amount").dataType == StringType) // widened double->string
+    val rows = tbl.orderBy("id").collect()
+    assert(rows.length == 2)
+    assert(rows(0).getAs[Any]("flag") == null) // old rows null-pad new col
+    assert(rows(1).getAs[String]("amount") == "usd_20")
+  }
+
+  test("one-type batch: a widen keeps the columns only newer files carry") {
+    // fresh tables each time: which footer a single-file schema read
+    // picks varies from table to table
+    (0 until 12).foreach { i =>
+      val out = tmpDir("evolve_keep") + "/out"
+      landOne(out, 1, Seq((1L, 10L)).toDF("id", "a"))
+      landOne(out, 2, Seq((2L, 20L, "kept")).toDF("id", "a", "b"))
+      landOne(out, 3, Seq((3L, "x")).toDF("id", "a"))
+      val rows = SchemaEvolution.readEvolved(spark, s"$out/event_type=t").orderBy("id").collect()
+      assert(rows.map(_.getAs[String]("a")).toSeq == Seq("10", "20", "x"), s"table $i")
+      assert(rows.map(r => Option(r.getAs[String]("b"))).toSeq == Seq(None, Some("kept"), None),
+        s"table $i lost the ADD COLUMN values in the widen rewrite")
+      // the rewrite staged beside the table, under a name partition
+      // discovery skips, and cleaned up after itself
+      assert(new java.io.File(out).list().toSeq == Seq("event_type=t"))
+    }
+  }
+
+  test("a body that does not parse is dead-lettered or dropped, never landed") {
+    val base = tmpDir("evobadbody")
+    val rows = Seq(
+      (1L, 1700000000000000000L, 1L, "click", 1.0, """{"k": 1}"""),
+      (2L, 1700000001000000000L, 2L, "click", 2.0, "{not json"),
+      (3L, 1700000002000000000L, 3L, "click", 3.0, """{"k": 3}""")
+    ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    rows.coalesce(1).write.parquet(s"$base/in")
+    def ids(df: DataFrame): Seq[Long] =
+      df.orderBy("event_id").collect().map(_.getAs[Long]("event_id")).toSeq
+    val withDlq = EventPipeline.Config(s"$base/in", s"$base/out", s"$base/ck",
+      dlqDir = Some(s"$base/dlq"))
+    val noDlq = EventPipeline.Config(s"$base/in", s"$base/out2", s"$base/ck2")
+    Seq(withDlq, noDlq).foreach { cfg =>
+      EventPipeline.startEvolving(spark, rows.schema, cfg).awaitTermination()
+      val click = EventPipeline.readEvolvingTable(spark, cfg, "click")
+      assert(!click.columns.exists(_.contains("corrupt")), click.columns.mkString(", "))
+      assert(ids(click) == Seq(1L, 3L))
+    }
+    val dlq = spark.read.parquet(withDlq.dlqDir.get)
+    assert(ids(dlq) == Seq(2L))
+    assert(dlq.collect().map(_.getAs[String]("dlq_reason")).toSeq == Seq("malformed_body"))
+    // `start` applies the same rule: with no dlqDir the bad body is dropped
+    val routed = EventPipeline.Config(s"$base/in", s"$base/out3", s"$base/ck3")
+    EventPipeline.start(spark, rows.schema, routed).awaitTermination()
+    assert(ids(spark.read.parquet(routed.outputDir)) == Seq(1L, 3L))
   }
 
   test("a restarted query widens with every column the previous run added") {

@@ -1,14 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The one session definition: the plan-affecting keys every main
   * takes from [[GraftSession.builder]], the core count it derives them
   * from, the `SPARK_GRAFT_CONF` override parser, and the SQL-surface
   * registration (the same native expressions the Column API lifts must
   * resolve by name in spark.sql). */
-class GraftSessionSpec extends AnyFunSuite {
+class GraftSessionSpec extends SparkSpec {
 
   test("local[4] gets exactly the spark.sql.* keys Bench set at 4 cpus") {
     assert(GraftSession.sqlConf("local[4]") == Map(
@@ -67,47 +64,30 @@ class GraftSessionSpec extends AnyFunSuite {
   }
 
   test("GraftExtensions registers word_ngrams/dot_product_d/cosine_sim_d in SQL") {
-    // A second SparkSession over the SHARED SparkContext, built by the
-    // shipped builder. getOrCreate() would return the shared session
-    // (no extensions) if one is active, and stopping it would kill the
-    // context for every later suite — so clear, build, and restore
-    // instead of stop.
-    val shared = TestSession.spark
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val spark = GraftSession.builder("local[2]")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    try {
-      GraftSession.sqlConf("local[2]").foreach { case (k, v) =>
-        assert(spark.conf.get(k) == v, k)
-      }
-      val r = spark.sql(
-        """SELECT word_ngrams(array('a','b','c'), 2) AS ng,
-                  dot_product_d(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dp,
-                  cosine_sim_d(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS cs""")
-        .collect()(0)
-      assert(r.getAs[scala.collection.Seq[String]]("ng").toSeq == Seq("a b", "b c"))
-      assert(r.getAs[Double]("dp") == 11.0)
-      assert(r.getAs[Double]("cs") == 1.0)
-      val cn = spark.sql("SELECT char_ngrams('abcd', 3) AS cn")
-        .collect()(0).getAs[scala.collection.Seq[String]]("cn").toSeq
-      assert(cn == Seq("abc", "bcd"))
-      val hh = spark.sql(
-        """SELECT heavy_hitters(v, 2) AS hh
-           FROM VALUES ('a'), ('a'), ('a'), ('b'), ('c') AS t(v)""")
-        .collect()(0).getAs[Map[String, Long]]("hh")
-      assert(hh.contains("a") && hh("a") >= 3)
-      val th = spark.sql(
-        """SELECT theta_estimate(theta_sketch_agg(v)) AS e
-           FROM VALUES (CAST(1 AS BIGINT)), (2L), (2L) AS t(v)""")
-        .collect()(0).getLong(0)
-      assert(th == 2L)
-    } finally {
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      SparkSession.setDefaultSession(shared)
-      SparkSession.setActiveSession(shared)
+    // the shared test session is built by the shipped builder
+    GraftSession.sqlConf("local[4]").foreach { case (k, v) =>
+      assert(spark.conf.get(k) == v, k)
     }
+    val r = spark.sql(
+      """SELECT word_ngrams(array('a','b','c'), 2) AS ng,
+                dot_product_d(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS dp,
+                cosine_sim_d(array(1.0d, 0.0d), array(1.0d, 0.0d)) AS cs""")
+      .collect()(0)
+    assert(r.getAs[scala.collection.Seq[String]]("ng").toSeq == Seq("a b", "b c"))
+    assert(r.getAs[Double]("dp") == 11.0)
+    assert(r.getAs[Double]("cs") == 1.0)
+    val cn = spark.sql("SELECT char_ngrams('abcd', 3) AS cn")
+      .collect()(0).getAs[scala.collection.Seq[String]]("cn").toSeq
+    assert(cn == Seq("abc", "bcd"))
+    val hh = spark.sql(
+      """SELECT heavy_hitters(v, 2) AS hh
+         FROM VALUES ('a'), ('a'), ('a'), ('b'), ('c') AS t(v)""")
+      .collect()(0).getAs[Map[String, Long]]("hh")
+    assert(hh.contains("a") && hh("a") >= 3)
+    val th = spark.sql(
+      """SELECT theta_estimate(theta_sketch_agg(v)) AS e
+         FROM VALUES (CAST(1 AS BIGINT)), (2L), (2L) AS t(v)""")
+      .collect()(0).getLong(0)
+    assert(th == 2L)
   }
 }

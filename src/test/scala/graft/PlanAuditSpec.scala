@@ -14,9 +14,9 @@ class PlanAuditSpec extends SparkSpec {
     spark.catalog.clearCache()
     // audit the real computational plan, not the self-release
     // wrapper's localized copy (TrainingQueries.materialized)
-    spark.conf.set("spark.graft.materialize", "false")
-    try SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
-    finally spark.conf.set("spark.graft.materialize", "true")
+    withConf("spark.graft.materialize" -> "false") {
+      SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
+    }
   }
 
   test("b1: shipdate filter reaches the parquet scan; columns pruned") {

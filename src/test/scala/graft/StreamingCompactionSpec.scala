@@ -47,14 +47,13 @@ class StreamingCompactionSpec extends SparkSpec {
     val total = 300L
 
     // fragmented twin: same input, no maintenance loop
-    val plain = EventPipeline.Config(in, s"$base/out_plain", s"$base/ck_plain",
-      maxFilesPerTrigger = 1)
+    val plain = EventPipeline.Config(in, s"$base/out_plain", s"$base/ck_plain")
     EventPipeline.start(spark, schema, plain).awaitTermination()
 
     // compacted run, with a reader hammering the table concurrently
     val stats = new ConcurrentLinkedQueue[graft.operators.Compactor.Stats]()
     val cfg = EventPipeline.Config(in, s"$base/out", s"$base/ck",
-      maxFilesPerTrigger = 1, compactEvery = Some(2),
+      compactEvery = Some(2),
       onCompact = Some(st => { stats.add(st); () }))
     val stop = new AtomicBoolean(false)
     val observed = new ConcurrentLinkedQueue[Long]()

@@ -26,7 +26,7 @@ class StreamingRollupSpec extends SparkSpec {
         .coalesce(1).write.mode("append").parquet(in)
     }
 
-    val src = EventPipeline.FileEventSource(all.schema, in, maxFilesPerTrigger = 1)
+    val src = EventPipeline.FileEventSource(all.schema, in)
     StreamingRollup.start(spark, src, states, ck,
       keys = Seq("event_type"), value = col("value")).awaitTermination()
 
@@ -63,7 +63,7 @@ class StreamingRollupSpec extends SparkSpec {
       all.filter(col("event_id").isin(r.map(_.toLong): _*))
         .coalesce(1).write.mode("append").parquet(in)
     }
-    val src = EventPipeline.FileEventSource(all.schema, in, maxFilesPerTrigger = 1)
+    val src = EventPipeline.FileEventSource(all.schema, in)
     StreamingRollup.startUniq(spark, src, states, s"$base/ck",
       keys = Seq("event_type"), idCol = col("user_id")).awaitTermination()
 

@@ -136,8 +136,7 @@ class StreamingSeamSpec extends SparkSpec {
   test("bounded trigger drains a backlog without losing or duplicating rows") {
     val base = tmpDir("backpressure")
     val in = s"$base/in"
-    val cfg = EventPipeline.Config(in, s"$base/out", s"$base/ck",
-      maxFilesPerTrigger = 1)
+    val cfg = EventPipeline.Config(in, s"$base/out", s"$base/ck")
     // 4 waves arrive before the worker starts — a backlog deeper than
     // the per-trigger budget (the bulker-full shape)
     val waves = Seq(0 until 30, 30 until 60, 60 until 90, 90 until 120)
