@@ -19,39 +19,16 @@ import graft.plans.{BottomKByHash, CharNGrams, CosineSimD, DotProductD, HeavyHit
   * }}}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions._
-
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((FunctionIdentifier("word_ngrams"),
-      info("word_ngrams", "word_ngrams(toks, n) - space-joined sliding n-grams of a token array"),
-      (args: Seq[Expression]) => WordNGrams(args.head, intArg(args, 1, "word_ngrams"))))
-    ext.injectFunction((FunctionIdentifier("char_ngrams"),
-      info("char_ngrams", "char_ngrams(s, n) - sliding n-codepoint windows of a string"),
-      (args: Seq[Expression]) => CharNGrams(args.head, intArg(args, 1, "char_ngrams"))))
-    ext.injectFunction((FunctionIdentifier("dot_product_d"),
-      info("dot_product_d", "dot_product_d(a, b) - dot product of two double arrays"),
-      (args: Seq[Expression]) => DotProductD(args.head, args(1))))
-    ext.injectFunction((FunctionIdentifier("cosine_sim_d"),
-      info("cosine_sim_d", "cosine_sim_d(a, b) - cosine similarity of two double arrays"),
-      (args: Seq[Expression]) => CosineSimD(args.head, args(1))))
-    ext.injectFunction((FunctionIdentifier("bottom_k_by_hash"),
-      info("bottom_k_by_hash", "bottom_k_by_hash(id, k) - deterministic k-minimum-values sample aggregate"),
-      (args: Seq[Expression]) => BottomKByHash(args.head, intArg(args, 1, "bottom_k_by_hash"))))
-    ext.injectFunction((FunctionIdentifier("heavy_hitters"),
-      info("heavy_hitters", "heavy_hitters(v, capacity) - SpaceSaving top-k sketch aggregate (CH topK)"),
-      (args: Seq[Expression]) => HeavyHitters(args.head, intArg(args, 1, "heavy_hitters"))))
-    ext.injectFunction((FunctionIdentifier("theta_sketch_agg"),
-      info("theta_sketch_agg", "theta_sketch_agg(v) - mergeable theta sketch (CH uniqTheta); supports set algebra"),
-      (args: Seq[Expression]) => graft.plans.ThetaSketchAgg(args.head)))
-    ext.injectFunction((FunctionIdentifier("theta_estimate"),
-      info("theta_estimate", "theta_estimate(sk) - rounded distinct estimate of a theta state"),
-      (args: Seq[Expression]) => graft.plans.ThetaEstimate(args.head)))
-    ext.injectFunction((FunctionIdentifier("theta_anotb_estimate"),
-      info("theta_anotb_estimate", "theta_anotb_estimate(a, b) - estimated |A \\ B|"),
-      (args: Seq[Expression]) => graft.plans.ThetaAnotBEstimate(args.head, args(1))))
-    ext.injectFunction((FunctionIdentifier("theta_intersect_estimate"),
-      info("theta_intersect_estimate", "theta_intersect_estimate(a, b) - estimated |A ∩ B|"),
-      (args: Seq[Expression]) => graft.plans.ThetaIntersectEstimate(args.head, args(1))))
+    GraftExtensions.functions.foreach { case (name, usage, arity, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, usage, ""),
+        (args: Seq[Expression]) => {
+          if (args.size != arity) throw new IllegalArgumentException(
+            s"$name takes $arity arguments, got ${args.size}")
+          build(args)
+        }))
+    }
     // opt-in CH-uniq() semantics: spark.graft.approxDistinct=true
     // rewrites exact COUNT(DISTINCT x) to an HLL sketch estimate
     ext.injectOptimizerRule(graft.plans.ApproxDistinctRewrite)
@@ -59,8 +36,21 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo("graft", null, name, usage, "")
+  /** The SQL functions a graft session registers: (name, usage,
+    * argument count, builder). No name may be a Spark built-in. */
+  private[graft] val functions: Seq[(String, String, Int, Seq[Expression] => Expression)] = Seq(
+    ("word_ngrams", "word_ngrams(toks, n) - space-joined sliding n-grams of a token array", 2,
+      a => WordNGrams(a(0), intArg(a, 1, "word_ngrams"))),
+    ("char_ngrams", "char_ngrams(s, n) - sliding n-codepoint windows of a string", 2,
+      a => CharNGrams(a(0), intArg(a, 1, "char_ngrams"))),
+    ("dot_product_d", "dot_product_d(a, b) - dot product of two double arrays", 2,
+      a => DotProductD(a(0), a(1))),
+    ("cosine_sim_d", "cosine_sim_d(a, b) - cosine similarity of two double arrays", 2,
+      a => CosineSimD(a(0), a(1))),
+    ("bottom_k_by_hash", "bottom_k_by_hash(id, k) - deterministic k-minimum-values sample aggregate", 2,
+      a => BottomKByHash(a(0), intArg(a, 1, "bottom_k_by_hash"))),
+    ("heavy_hitters", "heavy_hitters(v, capacity) - SpaceSaving top-k sketch aggregate (CH topK)", 2,
+      a => HeavyHitters(a(0), intArg(a, 1, "heavy_hitters"))))
 
   private def intArg(args: Seq[Expression], i: Int, fn: String): Int = args(i) match {
     case Literal(v: Int, _) => v

@@ -135,28 +135,21 @@ object Fns {
     graft.plans.Cols.column(
       graft.plans.WinnowingFps(graft.plans.Cols.expression(c), w))
 
-  /** CH `uniqTheta`: mergeable theta sketch of a BIGINT/STRING column
-    * (BINARY state; [[graft.plans.ThetaSketchAgg]]). Unlike HLL the
-    * theta state supports set DIFFERENCE and INTERSECTION estimates. */
-  def thetaSketch(c: Column): Column =
-    graft.plans.Cols.column(
-      graft.plans.ThetaSketchAgg(graft.plans.Cols.expression(c))
-        .toAggregateExpression())
+  /** CH `uniqTheta`: mergeable theta sketch (BINARY state; Spark's
+    * built-in `theta_sketch_agg`, k = 2^12). Unlike HLL the theta
+    * state supports set DIFFERENCE and INTERSECTION estimates. */
+  def thetaSketch(c: Column): Column = theta_sketch_agg(c)
 
   /** Rounded distinct estimate of a theta sketch state. */
-  def thetaEstimate(c: Column): Column =
-    graft.plans.Cols.column(
-      graft.plans.ThetaEstimate(graft.plans.Cols.expression(c)))
+  def thetaEstimate(c: Column): Column = theta_sketch_estimate(c)
 
   /** Estimated \|A ∖ B\| from two theta states. */
   def thetaAnotB(a: Column, b: Column): Column =
-    graft.plans.Cols.column(graft.plans.ThetaAnotBEstimate(
-      graft.plans.Cols.expression(a), graft.plans.Cols.expression(b)))
+    theta_sketch_estimate(theta_difference(a, b))
 
   /** Estimated \|A ∩ B\| from two theta states. */
   def thetaIntersect(a: Column, b: Column): Column =
-    graft.plans.Cols.column(graft.plans.ThetaIntersectEstimate(
-      graft.plans.Cols.expression(a), graft.plans.Cols.expression(b)))
+    theta_sketch_estimate(theta_intersection(a, b))
 
   /** Bounded top-n (score, key) pairs per group, best-first (score
     * desc, key asc) — the multi-probe assignment kernel

@@ -238,10 +238,14 @@ object EventRouter {
   def splitDlq(events: DataFrame): (DataFrame, DataFrame) =
     splitDlqImpl(events, None)
 
-  /** True for a row whose present JSON body does not parse — the
-    * `malformed_body` rule every pipeline entry point applies. */
+  /** True for a row whose present body is not one JSON object — the
+    * `malformed_body` rule every pipeline entry point applies.
+    * `json_object_keys` is null for a non-object (`42`, `[1]`) and
+    * `try_parse_json` for a repeated key, which `spark.read.json`
+    * would infer as two columns of one name. */
   private[graft] def malformedBody(jsonCol: String): Column =
-    col(jsonCol).isNotNull && isnull(try_parse_json(col(jsonCol)))
+    col(jsonCol).isNotNull &&
+      (isnull(json_object_keys(col(jsonCol))) || isnull(try_parse_json(col(jsonCol))))
 
   private def splitDlqImpl(events: DataFrame,
                            jsonCol: Option[String]): (DataFrame, DataFrame) = {

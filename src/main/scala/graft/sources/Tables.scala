@@ -10,7 +10,7 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * time arithmetic is integer math over that long. The driver's
   * generator has shipped it both as parquet TIMESTAMP(NANOS) (Spark 4
   * reads it only with `spark.sql.legacy.parquet.nanosAsLong`, which
-  * surfaces the column as a BIGINT of epoch nanos) and as
+  * [[graft.GraftSession]] sets: a BIGINT of epoch nanos) and as
   * TIMESTAMP(MICROS) (surfaces as a timestamp type). We normalize
   * both shapes to the epoch-nanos BIGINT here so callers don't have
   * to know which vintage of testdata is on disk. The DuckDB oracles
@@ -59,7 +59,6 @@ object Tables {
   }
 
   private def fresh(spark: SparkSession, dir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events") normalizeTs(df) else df
   }

@@ -4,6 +4,7 @@ import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -168,7 +169,6 @@ object EventPipeline {
   /** Same pipeline over any [[EventSource]] (the queue seam). */
   def start(spark: SparkSession, source: EventSource, cfg: Config,
             availableNow: Boolean): StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     Scaffold.foreachBatch(source.load(spark), cfg.checkpointDir, availableNow) {
       (batch, batchId) =>
         // reference main.ts:463-514: a row is never lost — invalid rows
@@ -210,28 +210,6 @@ object EventPipeline {
   def readTable(spark: SparkSession, cfg: Config, eventType: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(cfg.outputDir)
       .filter(col("event_type") === eventType)
-
-  /** Escape an event_type for use as a directory name, using the SAME
-    * character set Hive/Spark's own `escapePathName` uses on the
-    * non-evolving `partitionBy` path — control chars plus the
-    * filesystem/URI specials below percent-encode; everything else
-    * (including non-ASCII letters) passes through raw, exactly as
-    * `partitionBy` writes it. Parity matters: Spark's partition
-    * unescaping decodes each `%XX` as ONE char, so escapes must be
-    * single-byte (the old form emitted `%4E2D` for '中', which
-    * partition discovery mangled to "N2D") and raw chars must match
-    * what `partitionBy` itself would leave raw. '/' and '\' are in
-    * the set, so "page/view" or "../x" still cannot escape or nest
-    * under the output root (the dots stay inside one path segment). */
-  // ..: Spark's own set starts at 1 — NUL passes raw there,
-  // so it must here too (the parity spec pins this against the engine)
-  private val escapeNeeded: Set[Char] =
-    (0x01 to 0x1f).map(_.toChar).toSet + 0x7f.toChar ++ "\"#%'*/:=?\\{[]^".toSet
-
-  private[graft] def escapeType(t: String): String =
-    t.flatMap { c =>
-      if (escapeNeeded(c)) f"%%${c.toInt}%02X" else c.toString
-    }
 
   /** The reference's full loop: per micro-batch, flatten the free-form
     * JSON body, route by event_type, and evolve EACH type's table
@@ -336,7 +314,6 @@ object EventPipeline {
   /** Same evolving pipeline over any [[EventSource]] (the queue seam). */
   def startEvolving(spark: SparkSession, source: EventSource, cfg: Config,
                     jsonCol: String, availableNow: Boolean): StreamingQuery = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val schemas = mutable.Map.empty[String, StructType] // this query run's tables
     Scaffold.foreachBatch(source.load(spark), cfg.checkpointDir, availableNow) {
       (batch, batchId) =>
@@ -438,7 +415,7 @@ object EventPipeline {
     import org.apache.hadoop.fs.Path
     val fs = new Path(outputDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val batchSchema = enriched.drop("event_type").schema
-    def tablePath(t: String) = s"$outputDir/event_type=${escapeType(t)}"
+    def tablePath(t: String) = s"$outputDir/event_type=${escapePathName(t)}"
     // mergeSchema=true is LOAD-BEARING here: after a fast-path batch
     // added a column, only the newer files carry it — a single-footer
     // schema read could pick an older file, miss that column, classify
@@ -496,5 +473,5 @@ object EventPipeline {
   /** Read one evolving per-type table back (schema-merged). */
   def readEvolvingTable(spark: SparkSession, cfg: Config, eventType: String): DataFrame =
     SchemaEvolution.readEvolved(spark,
-      s"${cfg.outputDir}/event_type=${escapeType(eventType)}")
+      s"${cfg.outputDir}/event_type=${escapePathName(eventType)}")
 }

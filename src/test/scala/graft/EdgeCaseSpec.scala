@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.operators.{Dedup, Multimodal, TextAnalysis}
-import graft.streaming.EventPipeline
 
 /** Regression specs for review findings: null-content semantics and
   * hostile routing keys. */
@@ -94,40 +93,30 @@ class EdgeCaseSpec extends SparkSpec {
   }
 
   test("hostile event_type values cannot escape the output root") {
-    assert(EventPipeline.escapeType("click") == "click")
-    assert(!EventPipeline.escapeType("page/view").contains("/"))
-    assert(!EventPipeline.escapeType("../../etc").contains("/"))
-    assert(!EventPipeline.escapeType("a b=c").contains("="))
-    // parity with Spark's partitionBy escaping: space and non-ASCII
-    // letters pass through RAW (Spark leaves them raw too — and its
-    // partition unescaping decodes each %XX as ONE char, so an escape
-    // wider than one byte would be mangled on read)
-    assert(EventPipeline.escapeType("a b") == "a b")
-    assert(EventPipeline.escapeType("中") == "中")
+    // the evolving sinks name a type's directory with Spark's own
+    // partitionBy escaper, so partition discovery reads it back intact
+    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.{escapePathName, unescapePathName}
+    assert(escapePathName("click") == "click")
+    assert(!escapePathName("page/view").contains("/"))
+    assert(!escapePathName("../../etc").contains("/"))
+    assert(!escapePathName("a b=c").contains("="))
+    // space and non-ASCII letters pass through RAW (Spark's partition
+    // unescaping decodes each %XX as ONE char, so an escape wider than
+    // one byte would be mangled on read)
+    assert(escapePathName("a b") == "a b")
+    assert(escapePathName("中") == "中")
     // every emitted escape is exactly %XX (decodable one char at a time)
-    assert("%(?![0-9A-F]{2})".r.findFirstIn(
-      EventPipeline.escapeType("a%b/c\nd")).isEmpty)
+    assert("%(?![0-9A-F]{2})".r.findFirstIn(escapePathName("a%b/c\nd")).isEmpty)
     // distinct inputs stay distinct after escaping ('%' itself escapes)
-    assert(EventPipeline.escapeType("a/b") != EventPipeline.escapeType("a_b"))
-    assert(EventPipeline.escapeType("a%2Fb") != EventPipeline.escapeType("a/b"))
-  }
-
-  test("escapeType == Spark's own escapePathName, char for char") {
-    // pinned against the ENGINE's partitionBy escaper, not a re-derived
-    // charset — if a Spark upgrade changes the escape set, this fails
-    // instead of partition discovery silently mangling a directory
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+    assert(escapePathName("a/b") != escapePathName("a_b"))
+    assert(escapePathName("a%2Fb") != escapePathName("a/b"))
+    // round-trips through Spark's own unescape
     val interesting = (0 until 0x80).map(_.toChar.toString) ++
       Seq("click", "page view", "a/b", "../x", "a%2Fb", "中", "é",
-        "a b", "x=y", "q?r", "s*t", "{u}", "[v]", "w^z", "\"q'",
-        "a:b", "c\\d", "e#f", "tab\there", "nl\nhere", "del")
+        "a b", "x=y", "q?r", "s*t", "{u}", "[v]", "w^z", "\"q'",
+        "a:b", "c\\d", "e#f", "tab\there", "nl\nhere", "del")
     interesting.foreach { s =>
-      assert(EventPipeline.escapeType(s) == ExternalCatalogUtils.escapePathName(s),
-        s"divergence from Spark's escaper on ${s.map(_.toInt)}")
-    }
-    // round-trips through Spark's own unescape
-    interesting.foreach { s =>
-      assert(ExternalCatalogUtils.unescapePathName(EventPipeline.escapeType(s)) == s,
+      assert(unescapePathName(escapePathName(s)) == s,
         s"unescape round-trip broken on ${s.map(_.toInt)}")
     }
   }

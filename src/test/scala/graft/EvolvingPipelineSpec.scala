@@ -175,7 +175,14 @@ class EvolvingPipelineSpec extends SparkSpec {
     val rows = Seq(
       (1L, 1700000000000000000L, 1L, "click", 1.0, """{"k": 1}"""),
       (2L, 1700000001000000000L, 2L, "click", 2.0, "{not json"),
-      (3L, 1700000002000000000L, 3L, "click", 3.0, """{"k": 3}""")
+      (3L, 1700000002000000000L, 3L, "click", 3.0, """{"k": 3}"""),
+      // valid JSON, but not an object: `spark.read.json` infers only
+      // `_corrupt_record` for these
+      (4L, 1700000003000000000L, 4L, "click", 4.0, "42"),
+      (5L, 1700000004000000000L, 5L, "click", 5.0, "\"s\""),
+      (6L, 1700000005000000000L, 6L, "click", 6.0, "[1,2]"),
+      // a repeated key would be inferred as two columns named `k`
+      (7L, 1700000006000000000L, 7L, "click", 7.0, """{"k": 7, "k": 8}""")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     rows.coalesce(1).write.parquet(s"$base/in")
     def ids(df: DataFrame): Seq[Long] =
@@ -190,8 +197,8 @@ class EvolvingPipelineSpec extends SparkSpec {
       assert(ids(click) == Seq(1L, 3L))
     }
     val dlq = spark.read.parquet(withDlq.dlqDir.get)
-    assert(ids(dlq) == Seq(2L))
-    assert(dlq.collect().map(_.getAs[String]("dlq_reason")).toSeq == Seq("malformed_body"))
+    assert(ids(dlq) == Seq(2L, 4L, 5L, 6L, 7L))
+    assert(dlq.collect().map(_.getAs[String]("dlq_reason")).toSet == Set("malformed_body"))
     // `start` applies the same rule: with no dlqDir the bad body is dropped
     val routed = EventPipeline.Config(s"$base/in", s"$base/out3", s"$base/ck3")
     EventPipeline.start(spark, rows.schema, routed).awaitTermination()

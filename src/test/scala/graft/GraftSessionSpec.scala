@@ -4,7 +4,8 @@ package graft
   * takes from [[GraftSession.builder]], the core count it derives them
   * from, the `SPARK_GRAFT_CONF` override parser, and the SQL-surface
   * registration (the same native expressions the Column API lifts must
-  * resolve by name in spark.sql). */
+  * resolve by name in spark.sql, check their argument count, and never
+  * take over an engine function's name). */
 class GraftSessionSpec extends SparkSpec {
 
   test("local[4] gets exactly the spark.sql.* keys Bench set at 4 cpus") {
@@ -85,9 +86,30 @@ class GraftSessionSpec extends SparkSpec {
       .collect()(0).getAs[Map[String, Long]]("hh")
     assert(hh.contains("a") && hh("a") >= 3)
     val th = spark.sql(
-      """SELECT theta_estimate(theta_sketch_agg(v)) AS e
+      """SELECT theta_sketch_estimate(theta_sketch_agg(v)) AS e
          FROM VALUES (CAST(1 AS BIGINT)), (2L), (2L) AS t(v)""")
       .collect()(0).getLong(0)
     assert(th == 2L)
+  }
+
+  test("every registered function fails by name on one argument too few or too many") {
+    GraftExtensions.functions.foreach { case (name, _, arity, _) =>
+      Seq(arity - 1, arity + 1).foreach { n =>
+        val e = intercept[IllegalArgumentException] {
+          spark.sql(s"SELECT $name(${Seq.fill(n)("1").mkString(", ")})").collect()
+        }
+        assert(e.getMessage == s"$name takes $arity arguments, got $n", e.getMessage)
+      }
+    }
+  }
+
+  test("no registered function shadows a Spark built-in") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+    val names = GraftExtensions.functions.map(_._1)
+    assert(names.size == 6)
+    assert(names.filter(n => FunctionRegistry.builtin.functionExists(FunctionIdentifier(n))).isEmpty)
+    val th = spark.sql("DESCRIBE FUNCTION theta_sketch_agg").collect().map(_.getString(0))
+    assert(th.exists(_.startsWith("Class: org.apache.spark.")), th.mkString("\n"))
   }
 }

@@ -3,12 +3,12 @@ package graft
 import org.apache.spark.sql.functions._
 import graft.functions.Fns
 
-/** Theta-sketch set algebra ([[graft.plans.ThetaSketchAgg]] family):
-  * below the nominal k = 2^12 the sketch retains every hash, so on
-  * small sets the estimates are EXACT — which makes the correctness
-  * story assertable without tolerance: difference and intersection
-  * must equal the true set sizes, and partial/merge must equal the
-  * one-pass sketch. */
+/** Theta-sketch set algebra (Spark's built-in theta family behind
+  * `Fns.theta*`): below the nominal k = 2^12 the sketch retains every
+  * hash, so on small sets the estimates are EXACT — which makes the
+  * correctness story assertable without tolerance: difference and
+  * intersection must equal the true set sizes, and partial/merge must
+  * equal the one-pass sketch. */
 class ThetaSpec extends SparkSpec {
   import spark.implicits._
 
@@ -34,6 +34,22 @@ class ThetaSpec extends SparkSpec {
       assert(got.getLong(2) == 500L, s"($parts parts) |A\\B|")
       assert(got.getLong(3) == 500L, s"($parts parts) |A∩B|")
     }
+  }
+
+  test("estimation mode: pinned estimate, difference and intersection") {
+    // 150k distinct BIGINTs per side, 50k shared: far past nominal k,
+    // so all four figures are estimates. The literals are the values
+    // graft's own datasketches kernel returned before Spark's built-in
+    // theta family replaced it; the two agree bit for bit.
+    val a = spark.range(0L, 150000L, 1L, 4).select(lit("a").as("g"), col("id").as("v"))
+    val b = spark.range(100000L, 250000L, 1L, 4).select(lit("b").as("g"), col("id").as("v"))
+    val sk = a.union(b).groupBy(col("g")).agg(Fns.thetaSketch(col("v")).as("sk"))
+    val got = sk.as("x").join(sk.as("y"), col("x.g") === "a" && col("y.g") === "b")
+      .select(Fns.thetaEstimate(col("x.sk")), Fns.thetaEstimate(col("y.sk")),
+        Fns.thetaAnotB(col("x.sk"), col("y.sk")),
+        Fns.thetaIntersect(col("x.sk"), col("y.sk")))
+      .collect().head
+    assert((0 to 3).map(got.getLong) == Seq(149587L, 151797L, 97801L, 51661L))
   }
 
   test("string inputs sketch too; empty group estimates 0") {
