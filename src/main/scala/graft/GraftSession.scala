@@ -61,9 +61,9 @@ object GraftExtensions {
 
 /** The one definition of a graft session's plan-affecting `spark.sql.*`
   * settings: AQE on, UTC, nanos-long parquet reads (the events table is
-  * TIMESTAMP(NANOS)), extensions registered. Every main takes its
-  * session from [[builder]], so the oracle gate checks the plans the
-  * bench times. */
+  * TIMESTAMP(NANOS)), extensions registered, plus graft's local
+  * `file:` FileSystem. Every main takes its session from [[builder]],
+  * so the oracle gate checks the plans the bench times. */
 object GraftSession {
   def builder(master: String = "local[*]"): SparkSession.Builder =
     SparkSession.builder()
@@ -154,14 +154,22 @@ object GraftSession {
       //    getFileLinkStatus, which without native Hadoop libs FORKS a
       //    `readlink` shell per rename (~30 state-delta renames per
       //    stateful trigger). The FileSystem-based manager does the
-      //    same atomic local/HDFS rename through java.io.File — no
-      //    forks; object stores without FileContext already use it.
+      //    same atomic local/HDFS rename through java.io.File, with no
+      //    `readlink`; object stores without FileContext already use
+      //    it. Its create and mkdirs still forked `chmod` until the
+      //    `file:` FileSystem below.
       // Measured: b23_stream_sessions 3.60 -> 2.47 s; family-wide
       // every trigger sheds the same per-commit ladder.
       "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
       "spark.sql.streaming.checkpointFileManagerClass" ->
         ("org.apache.spark.sql.execution.streaming.checkpointing." +
-          "FileSystemBasedCheckpointFileManager"))
+          "FileSystemBasedCheckpointFileManager"),
+      // Local writes without a `chmod` fork per file and dir: without
+      // libhadoop, stock Hadoop forks one for each part file, `.crc`
+      // sidecar, partition dir, staged-land mkdirs and checkpoint log
+      // (477 per ingest_drain run, JFR). LocalFs sets the same bits in
+      // the JVM; docs/SCALE.md has the census and the A/B.
+      "spark.hadoop.fs.file.impl" -> graft.sources.LocalFs.Impl)
     localCores(master) match {
       // a cluster's cores and executor memory aren't knowable from the
       // driver: callers size those with .config(...) on the builder

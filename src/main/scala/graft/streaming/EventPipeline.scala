@@ -379,8 +379,9 @@ object EventPipeline {
     * 2. Every type whose append is cast-free — a new table, or no
     *    column the batch shares with its table changes dtype (new
     *    columns are metadata-only via mergeSchema, like ClickHouse's
-    *    ADD COLUMN) — rides ONE salted-by-type `partitionBy` write to a
-    *    staging dir (the batch router's one-shuffle shape,
+    *    ADD COLUMN) — rides ONE `partitionBy` write to a staging dir,
+    *    hash-partitioned by type with no salt, so AQE coalesces a small
+    *    batch to a task or two (the batch router's one-shuffle shape,
     *    EventRouter.writeRouted), whose part files then MOVE into the
     *    per-type tables driver-side ([[SchemaEvolution.land]]).
     * 3. The other types are grouped by their table's merged schema. The
@@ -446,6 +447,8 @@ object EventPipeline {
          else widened(spark.read.schema(keyed(ex.get, "event_type"))
            .option("basePath", outputDir).parquet(ts.map(tablePath): _*),
            rows, target, "event_type"))
+          // the write's cost is per file, not per core: spreading it
+          // over ts.size partitions measured slower (docs/SCALE.md)
           .repartition(col("event_type"))
           .sortWithinPartitions(col("event_type"), col("received_at")),
         "event_type", ts.map(t => t -> tablePath(t)),

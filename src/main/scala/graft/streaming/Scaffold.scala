@@ -89,5 +89,11 @@ private[graft] object Scaffold {
     dir
   }
 
-  private lazy val hadoopConf = new Configuration()
+  // names the session's `file:` class: the JVM caches the first one
+  // made, and a scratch dir may be asked for before any session exists
+  private lazy val hadoopConf = {
+    val conf = new Configuration()
+    conf.set("fs.file.impl", graft.sources.LocalFs.Impl)
+    conf
+  }
 }

@@ -182,7 +182,9 @@ class EvolvingPipelineSpec extends SparkSpec {
       (5L, 1700000004000000000L, 5L, "click", 5.0, "\"s\""),
       (6L, 1700000005000000000L, 6L, "click", 6.0, "[1,2]"),
       // a repeated key would be inferred as two columns named `k`
-      (7L, 1700000006000000000L, 7L, "click", 7.0, """{"k": 7, "k": 8}""")
+      (7L, 1700000006000000000L, 7L, "click", 7.0, """{"k": 7, "k": 8}"""),
+      // RFC 8259 JSON has no NaN literal, though `spark.read.json` reads one
+      (8L, 1700000007000000000L, 8L, "click", 8.0, """{"a":NaN}""")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     rows.coalesce(1).write.parquet(s"$base/in")
     def ids(df: DataFrame): Seq[Long] =
@@ -197,7 +199,7 @@ class EvolvingPipelineSpec extends SparkSpec {
       assert(ids(click) == Seq(1L, 3L))
     }
     val dlq = spark.read.parquet(withDlq.dlqDir.get)
-    assert(ids(dlq) == Seq(2L, 4L, 5L, 6L, 7L))
+    assert(ids(dlq) == Seq(2L, 4L, 5L, 6L, 7L, 8L))
     assert(dlq.collect().map(_.getAs[String]("dlq_reason")).toSet == Set("malformed_body"))
     // `start` applies the same rule: with no dlqDir the bad body is dropped
     val routed = EventPipeline.Config(s"$base/in", s"$base/out3", s"$base/ck3")

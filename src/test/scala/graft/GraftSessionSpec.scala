@@ -8,7 +8,7 @@ package graft
   * take over an engine function's name). */
 class GraftSessionSpec extends SparkSpec {
 
-  test("local[4] gets exactly the spark.sql.* keys Bench set at 4 cpus") {
+  test("local[4] gets exactly the session keys Bench set at 4 cpus") {
     assert(GraftSession.sqlConf("local[4]") == Map(
       "spark.sql.shuffle.partitions" -> "4",
       "spark.sql.session.timeZone" -> "UTC",
@@ -21,7 +21,8 @@ class GraftSessionSpec extends SparkSpec {
         GraftSession.advisoryPartitionBytes(Runtime.getRuntime.maxMemory, 4).toString,
       "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
       "spark.sql.streaming.checkpointFileManagerClass" ->
-        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager"))
+        "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
+      "spark.hadoop.fs.file.impl" -> "graft.sources.LocalFs"))
   }
 
   test("advisory partition size: heap x 0.3 / cpus / 4, clamped to [8 MB, 64 MB]") {
