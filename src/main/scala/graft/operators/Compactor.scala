@@ -19,8 +19,8 @@ import org.apache.spark.sql.functions._
   * Mechanics: one `repartitionByRange` over (partition key, sort key)
   * sized from the table's actual byte size — ranges follow the
   * partition key first, so each output file lands in one partition
-  * dir; staged write + directory swap keeps readers consistent (same
-  * pattern as SchemaEvolution's widen rewrite).
+  * dir; staged write + directory swap ([[swapIn]], which
+  * SchemaEvolution's widen rewrite shares) keeps readers consistent.
   */
 object Compactor {
 
@@ -36,6 +36,21 @@ object Compactor {
         out += f.getPath
     }
     out.toSeq
+  }
+
+  /** Swap the staged dir `staged` in for `dir`, which is being read
+    * and so cannot be overwritten in place: rename `dir` to `aside`,
+    * rename `staged` to `dir`, then delete `aside`. When the second
+    * rename fails `aside` is renamed back, so `dir` keeps its files. */
+  private[graft] def swapIn(fs: FileSystem, staged: Path, dir: Path, aside: Path): Unit = {
+    fs.delete(aside, true)
+    if (!fs.rename(dir, aside))
+      throw new java.io.IOException(s"could not move $dir aside to $aside")
+    if (!fs.rename(staged, dir)) {
+      fs.rename(aside, dir) // roll back
+      throw new java.io.IOException(s"could not swap $staged in for $dir")
+    }
+    fs.delete(aside, true)
   }
 
   def compact(spark: SparkSession, tableDir: String, partitionCol: String,
@@ -65,15 +80,7 @@ object Compactor {
       .write.partitionBy(partitionCol).mode("overwrite")
       .parquet(staging.toString)
 
-    val backup = new Path(dir.getParent, dir.getName + "__precompact")
-    fs.delete(backup, true)
-    if (!fs.rename(dir, backup))
-      throw new IllegalStateException(s"compact: could not stage out $dir")
-    if (!fs.rename(staging, dir)) {
-      fs.rename(backup, dir) // roll back
-      throw new IllegalStateException(s"compact: could not swap in $staging")
-    }
-    fs.delete(backup, true)
+    swapIn(fs, staging, dir, new Path(dir.getParent, dir.getName + "__precompact"))
     Stats(before.size.toLong, dataFiles(fs, dir).size.toLong, bytes)
   }
 }

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -19,9 +21,19 @@ import org.apache.spark.sql.types._
   *  - the flatten itself is a single `from_json` + `getField`/
   *    `element_at` projection — no per-row driver logic, fully
   *    columnar, works identically on 100 TB;
+  *  - the column plan comes from ONE walk of the inferred schema, with
+  *    16 item slots per split array; one aggregate then gives each
+  *    array's longest length and each string column's date-likeness,
+  *    and the slots no row reaches are dropped;
   *  - date-string detection (reference: src/utils.ts isDateString) is
   *    an aggregate over the column, not a peek at the first row, so it
-  *    is deterministic under parallelism.
+  *    is deterministic under parallelism;
+  *  - keys that snake-case to one name (`a_b` beside `a.b`, `fooBar`
+  *    beside `foo_bar`) are ONE column: the first non-null value in
+  *    schema order (JSON inference sorts keys by name), at their
+  *    shared type or STRING when they differ. The reference lets the
+  *    later key in body order win; the inferred schema does not keep
+  *    body order.
   */
 object EventFlattener {
 
@@ -77,123 +89,85 @@ object EventFlattener {
     flattenWithSchema(df, jsonCol, schema, keep, opts)
   }
 
+  /** One output column of the plan. `slots` are the (array, item)
+    * positions it reads, each array numbered by its place in the walk
+    * (two arrays may snake-case to one path): the column is dropped
+    * when no row's array reaches any of them. A column outside every
+    * split array has none and is always kept. */
+  private case class Leaf(name: String, col: Column, dtype: DataType,
+                          slots: Seq[(Int, Int)] = Nil)
+
   def flattenWithSchema(df: DataFrame, jsonCol: String, schema: StructType,
                         keep: Seq[String] = Nil, opts: Options = Options()): DataFrame = {
-    val parsed = from_json(col(jsonCol), schema)
-    val withParsed = df.withColumn("__graft_json", parsed)
-    val root = col("__graft_json")
-
-    // First pass over the *schema*: leaf plan with unresolved array widths.
-    val arrayPaths = collectArrayPaths("", schema)
-
-    // Data-driven facts — per-array max length and per-string-leaf
-    // date-likeness — gathered in ONE aggregate action over one scan
-    // (each agg pass re-parses the JSON column; don't pay it twice).
-    val arrayAggs =
-      if (!opts.splitArrays) Nil
-      else arrayPaths.map { case (path, c) => max(size(c(root))).as(s"len:$path") }
-
-    // Array widths must resolve before leaves exist, but date detection
-    // needs the leaf plan — build leaves in two stages around one agg:
-    // stage 1 derives the string-leaf columns from a zero-width plan
-    // (widths only gate array-indexed leaves, whose dates we detect per
-    // item anyway from the same leaf expression shapes).
-    val probeLeaves = leafColumns("", root, schema, opts,
-        arrayPaths.map { case (p, _) => p -> MaxArrayItems }.toMap)
-      .filterNot { case (name, _, _) => opts.reserved.map(snakeCase).contains(name) }
-    val stringLeaves = probeLeaves.collect { case (n, c, StringType) => (n, c) }
-    val dateAggs =
-      if (!opts.detectDates) Nil
-      else stringLeaves.map { case (n, c) =>
-        (bool_and(c.isNull || c.rlike(DateRe)) && max(c.isNotNull)).as(s"date:$n")
+    val withParsed = df.withColumn("__graft_json", from_json(col(jsonCol), schema))
+    val reserved = opts.reserved.map(snakeCase)
+    val arrays = mutable.ArrayBuffer.empty[Column]
+    val leaves = merged(leafColumns("", col("__graft_json"), schema, opts, arrays)
+      .filterNot(l => reserved(l.name)))
+    // the data's facts, each split array's longest length and each
+    // string column's date-likeness, in ONE aggregate over one scan
+    // (each scan re-parses the JSON column; don't pay it twice)
+    val strings = if (opts.detectDates) leaves.filter(_.dtype == StringType) else Nil
+    val aggs = arrays.toSeq.map(a => max(size(a)).as("len")) ++ strings.map(l =>
+      (bool_and(l.col.isNull || l.col.rlike(DateRe)) && max(l.col.isNotNull)).as("date"))
+    val stats =
+      if (aggs.isEmpty) Row.empty else withParsed.agg(aggs.head, aggs.tail: _*).collect()(0)
+    def fact[T](i: Int, ifNull: T): T = if (stats.isNullAt(i)) ifNull else stats.getAs[T](i)
+    val lens = arrays.indices.map(fact(_, 0))
+    val dates = strings.indices.filter(i => fact(arrays.size + i, false)).map(strings(_).name).toSet
+    val projected = leaves
+      .filter(l => l.slots.isEmpty || l.slots.exists { case (a, i) => i < lens(a) })
+      .map {
+        case l if dates(l.name) =>
+          coalesce(try_to_timestamp(l.col), try_to_timestamp(l.col, lit("MM/dd/yyyy"))).as(l.name)
+        case l => l.col.as(l.name)
       }
-
-    val allAggs = arrayAggs ++ dateAggs
-    val statsRow =
-      if (allAggs.isEmpty) null
-      else withParsed.agg(allAggs.head, allAggs.tail: _*).collect()(0)
-
-    val maxLens: Map[String, Int] =
-      if (arrayAggs.isEmpty) Map.empty
-      else arrayPaths.zipWithIndex.map { case ((path, _), i) =>
-        path -> (if (statsRow.isNullAt(i)) 0 else statsRow.getInt(i))
-      }.toMap
-
-    val dateCols: Set[String] =
-      if (dateAggs.isEmpty) Set.empty
-      else {
-        val off = arrayAggs.length
-        stringLeaves.zipWithIndex.collect {
-          case ((n, _), i) if !statsRow.isNullAt(off + i) && statsRow.getBoolean(off + i) => n
-        }.toSet
-      }
-
-    val leaves0 = leafColumns("", root, schema, opts, maxLens)
-      .filterNot { case (name, _, _) => opts.reserved.map(snakeCase).contains(name) }
-
-    val projected = leaves0.map {
-      case (n, c, StringType) if dateCols(n) =>
-        coalesce(try_to_timestamp(c), try_to_timestamp(c, lit("MM/dd/yyyy"))).as(n)
-      case (n, c, _) => c.as(n)
-    }
     withParsed.select(keep.map(col) ++ projected: _*)
   }
 
-  /** Struct-path descent to every array column (arrays nested inside
-    * arrays fall back to JSON strings, as the reference stringifies
-    * anything deeper than record-in-array). */
-  private def collectArrayPaths(prefix: String, dt: DataType,
-                                path: Column => Column = identity): Seq[(String, Column => Column)] =
-    dt match {
-      case st: StructType => st.fields.toSeq.flatMap { f =>
-        val p = if (prefix.isEmpty) snakeCase(f.name) else s"${prefix}_${snakeCase(f.name)}"
-        collectArrayPaths(p, f.dataType, root => path(root).getField(f.name))
-      }
-      case ArrayType(et, _) =>
-        val here = Seq(prefix -> path)
-        et match {
-          case st: StructType => here // struct-in-array fields counted via parent length
-          case _ => here
-        }
-      case _ => Nil
-    }
-
-  /** Leaf projection plan: (snake_name, column, leafType). */
-  private def leafColumns(prefix: String, c: Column, dt: DataType,
-                          opts: Options, maxLens: Map[String, Int]): Seq[(String, Column, DataType)] =
+  /** The one walk of the schema: every leaf column under `prefix`. A
+    * split array is appended to `arrays` and yields [[MaxArrayItems]]
+    * item slots; arrays of arrays, and of records holding a record or
+    * an array, are JSON strings, as the reference stringifies anything
+    * deeper than record-in-array. */
+  private def leafColumns(prefix: String, c: Column, dt: DataType, opts: Options,
+                          arrays: mutable.ArrayBuffer[Column]): Seq[Leaf] =
     dt match {
       case st: StructType if opts.splitRecords || prefix.isEmpty =>
         st.fields.toSeq.flatMap { f =>
           val p = if (prefix.isEmpty) snakeCase(f.name) else s"${prefix}_${snakeCase(f.name)}"
-          leafColumns(p, c.getField(f.name), f.dataType, opts, maxLens)
+          leafColumns(p, c.getField(f.name), f.dataType, opts, arrays)
         }
-      case _: StructType =>
-        Seq((prefix, to_json(c), StringType))
-      case ArrayType(et, _) if opts.splitArrays && isFlattenableElement(et, opts) =>
-        val n = math.min(maxLens.getOrElse(prefix, 0), MaxArrayItems)
-        (0 until n).flatMap { i =>
-          val item = try_element_at(c, lit(i + 1))
-          et match {
-            case st: StructType if opts.splitRecords =>
-              st.fields.toSeq.flatMap { f =>
-                leafColumns(s"${prefix}_${i}_${snakeCase(f.name)}",
-                  item.getField(f.name), f.dataType, opts, maxLens)
-              }
-            case st: StructType =>
-              Seq((s"${prefix}_$i", to_json(item), StringType))
-            case _ =>
-              Seq((s"${prefix}_$i", item, et))
-          }
+      case ArrayType(et, _) if opts.splitArrays && isFlattenableElement(et) =>
+        arrays += c
+        val a = arrays.size - 1
+        (0 until MaxArrayItems).flatMap { i =>
+          leafColumns(s"${prefix}_$i", try_element_at(c, lit(i + 1)), et, opts, arrays)
+            .map(_.copy(slots = Seq(a -> i)))
         }
-      case _: ArrayType =>
-        Seq((prefix, to_json(c), StringType))
+      case _: StructType | _: ArrayType =>
+        Seq(Leaf(prefix, to_json(c), StringType))
       case other =>
-        Seq((prefix, c, other))
+        Seq(Leaf(prefix, c, other))
     }
+
+  /** Leaves that snake-case to one name become one column: its value
+    * is the first non-null of theirs in schema order, its type their
+    * shared type, or STRING when they differ (the sink's widen rule). */
+  private def merged(leaves: Seq[Leaf]): Seq[Leaf] = {
+    val byName = leaves.groupBy(_.name)
+    leaves.map(_.name).distinct.map(byName).map {
+      case Seq(one) => one
+      case ls =>
+        val t = if (ls.forall(_.dtype == ls.head.dtype)) ls.head.dtype else StringType
+        Leaf(ls.head.name, coalesce(ls.map(_.col.cast(t)): _*), t,
+          if (ls.exists(_.slots.isEmpty)) Nil else ls.flatMap(_.slots))
+    }
+  }
 
   /** Arrays of atomics or of flat records are split; deeper nesting is
     * stringified (reference behavior for anything it can't split). */
-  private def isFlattenableElement(et: DataType, opts: Options): Boolean = et match {
+  private def isFlattenableElement(et: DataType): Boolean = et match {
     case st: StructType => st.fields.forall(f => f.dataType match {
       case _: StructType | _: ArrayType => false
       case _ => true

@@ -229,14 +229,19 @@ object EventRouter {
 
   /** DLQ split (reference: src/main.ts:463-514 — failed batch rows
     * become single-retry jobs with attempt counters). Valid rows go to
-    * the route; invalid rows (no routing key / unparseable body) go to
-    * the dead-letter frame with a reason, never lost. */
-  def splitDlq(events: DataFrame, jsonCol: String): (DataFrame, DataFrame) =
-    splitDlqImpl(events, Some(jsonCol))
-
-  /** Routing-key-only DLQ split, for frames with no JSON body column. */
-  def splitDlq(events: DataFrame): (DataFrame, DataFrame) =
-    splitDlqImpl(events, None)
+    * the route; invalid rows go to the dead-letter frame with a reason
+    * and `retry_attempt` 1, never lost: no routing key, or, when the
+    * frame has `jsonCol`, a body that does not parse. */
+  def splitDlq(events: DataFrame, jsonCol: String): (DataFrame, DataFrame) = {
+    val bodyBad = if (events.columns.contains(jsonCol)) malformedBody(jsonCol) else lit(false)
+    val invalidReason =
+      when(col(RouteCol).isNull || length(col(RouteCol)) === 0, "missing_event_type")
+        .when(bodyBad, "malformed_body")
+    val tagged = events.withColumn("dlq_reason", invalidReason)
+    (tagged.filter(col("dlq_reason").isNull).drop("dlq_reason"),
+      tagged.filter(col("dlq_reason").isNotNull)
+        .withColumn("retry_attempt", lit(1)))
+  }
 
   /** True for a row whose present body is not one JSON object — the
     * `malformed_body` rule every pipeline entry point applies.
@@ -246,16 +251,4 @@ object EventRouter {
   private[graft] def malformedBody(jsonCol: String): Column =
     col(jsonCol).isNotNull &&
       (isnull(json_object_keys(col(jsonCol))) || isnull(try_parse_json(col(jsonCol))))
-
-  private def splitDlqImpl(events: DataFrame,
-                           jsonCol: Option[String]): (DataFrame, DataFrame) = {
-    val bodyBad = jsonCol.map(malformedBody).getOrElse(lit(false))
-    val invalidReason =
-      when(col(RouteCol).isNull || length(col(RouteCol)) === 0, "missing_event_type")
-        .when(bodyBad, "malformed_body")
-    val tagged = events.withColumn("dlq_reason", invalidReason)
-    (tagged.filter(col("dlq_reason").isNull).drop("dlq_reason"),
-      tagged.filter(col("dlq_reason").isNotNull)
-        .withColumn("retry_attempt", lit(1)))
-  }
 }

@@ -130,10 +130,11 @@ object SchemaEvolution {
   /** Write the keyed `rows` by ONE `partitionBy(keyCol)` job to `stage`,
     * then land each table's staged partition in its dir (`tables`: key
     * → dir). An append (`replace = false`) moves the part files in; a
-    * rewrite (`replace = true`) swaps the staged dir in for the table:
-    * delete, then rename, since a path being read cannot be overwritten
-    * in place. Returns each key that failed, with its cause: every key
-    * when building or writing `rows` fails, else the keys whose landing
+    * rewrite (`replace = true`) swaps the staged dir in for the table
+    * by [[Compactor.swapIn]]: the old dir waits in `<stage>_old_<key>`
+    * until the new one is in, so a failed swap keeps the table's rows.
+    * Returns each key that failed, with its cause: every key when
+    * building or writing `rows` fails, else the keys whose landing
     * failed. `stage` must be a `__`-prefixed name with no `=`, which
     * partition discovery skips, and every key must have rows. */
   private[graft] def land(spark: SparkSession, rows: => DataFrame, keyCol: String,
@@ -151,9 +152,10 @@ object SchemaEvolution {
       case Nil =>
         val failed = tables.flatMap { case (key, dir) =>
           attempt(Seq(key)) {
-            val from = new Path(stage, s"$keyCol=${ExternalCatalogUtils.escapePathName(key)}")
+            val escaped = ExternalCatalogUtils.escapePathName(key) // `=` is escaped
+            val from = new Path(stage, s"$keyCol=$escaped")
             val to = new Path(dir)
-            if (replace) { fs.delete(to, true); move(from, to) }
+            if (replace) Compactor.swapIn(fs, from, to, new Path(s"${stage}_old_$escaped"))
             else {
               if (!fs.exists(to) && !fs.mkdirs(to))
                 throw new java.io.IOException(s"cannot create table dir $to")

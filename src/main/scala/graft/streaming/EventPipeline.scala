@@ -3,7 +3,7 @@ package graft.streaming
 import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -173,20 +173,13 @@ object EventPipeline {
       (batch, batchId) =>
         // reference main.ts:463-514: a row is never lost — invalid rows
         // dead-letter (when configured) with a reason + attempt counter
-        val (valid, dlq) =
-          if (batch.columns.contains("props")) EventRouter.splitDlq(batch, "props")
-          else EventRouter.splitDlq(batch)
-        cfg.dlqDir.foreach { dlqOut =>
-          dlq.withColumn("stream_batch_id", lit(batchId))
-            .write.mode("append").parquet(dlqOut)
-        }
+        val (valid, dlq) = EventRouter.splitDlq(batch, "props")
+        cfg.dlqDir.foreach(divertToDlq(dlq, col("dlq_reason"), _, batchId))
         val enriched = enrich(valid, cfg.transform)
           .withColumn("stream_batch_id", lit(batchId))
-        enriched
-          .repartition(col("event_type"))
-          .sortWithinPartitions(col("event_type"), col("sent_at"))
+        EventRouter.routedFrame(enriched, "sent_at", saltBuckets = 1)
           .write.mode("append")
-          .partitionBy("event_type")
+          .partitionBy(EventRouter.RouteCol)
           .parquet(cfg.outputDir)
         traceBatch(enriched, cfg.debugTee)
         // the in-stream maintenance merge (see Config.compactEvery):
@@ -251,11 +244,12 @@ object EventPipeline {
   private val enrichmentCols = Seq("received_at", "sent_at", "message_id",
     "timestamp", "stream_batch_id")
 
-  /** Divert: rows dead-letter with a reason + attempt counter instead
-    * of failing the stream or landing (reference main.ts:463-514). */
-  private def divertToDlq(rows: DataFrame, reason: String, dlqDir: String,
+  /** Divert: rows dead-letter with a per-row reason + attempt counter
+    * instead of failing the stream or landing (reference
+    * main.ts:463-514). */
+  private def divertToDlq(rows: DataFrame, reason: Column, dlqDir: String,
                           batchId: Long): Unit =
-    rows.withColumn("dlq_reason", lit(reason))
+    rows.withColumn("dlq_reason", reason)
       .withColumn("retry_attempt", lit(1))
       .withColumn("stream_batch_id", lit(batchId))
       .write.mode("append").parquet(dlqDir)
@@ -287,13 +281,13 @@ object EventPipeline {
     try {
       val seen = keyed.select(col("event_type"), col("__malformed")).distinct()
         .collect().map(r => r.getString(0) -> r.getBoolean(1)).toSeq // ≤ 2 per table
-      if (seen.exists(_._2)) cfg.dlqDir.foreach(divertToDlq(
-        keyed.filter(col("__malformed")).drop("__malformed"), "malformed_body", _, batchId))
+      if (seen.exists(_._2)) cfg.dlqDir.foreach(divertToDlq(keyed.filter(col("__malformed"))
+        .drop("__malformed"), lit("malformed_body"), _, batchId))
       val valid = keyed.filter(!col("__malformed")).drop("__malformed")
       val types = seen.collect { case (t, false) => t }
       if (types.nonEmpty) {
         if (cfg.dlqDir.isDefined && !cfg.sinkPing.forall(_())) {
-          divertToDlq(valid, "destination_unhealthy", cfg.dlqDir.get, batchId)
+          divertToDlq(valid, lit("destination_unhealthy"), cfg.dlqDir.get, batchId)
         } else {
           val keep = valid.columns.filterNot(_ == jsonCol).toSeq
           val reserved = EventFlattener.defaultReserved ++ keep ++ enrichmentCols
@@ -321,7 +315,7 @@ object EventPipeline {
           val onFail: Option[(Seq[String], Throwable) => Unit] =
             cfg.dlqDir.map { dlqOut => (failed: Seq[String], _: Throwable) =>
               divertToDlq(valid.filter(col("event_type").isin(failed: _*)),
-                "sink_write_failed", dlqOut, batchId)
+                lit("sink_write_failed"), dlqOut, batchId)
             }
           writeEvolvedBatch(spark, enriched, types, cfg.outputDir,
             batchId, onFail, schemas)
