@@ -2,9 +2,15 @@ package graft.operators
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import java.util.Locale
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.json.GraftJsonTyper
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Spark re-expression of the reference's event "preparation" pipeline
   * (reference: src/clickhouse-batch-client.class.ts:190-448).
@@ -15,19 +21,26 @@ import org.apache.spark.sql.types._
   * columns, reserved bookkeeping keys dropped, and column types
   * inferred from the first value's string form.
   *
-  * Here all of that is **plan-time work + one codegen'd projection**:
-  *  - structure comes from Spark's distributed JSON schema inference
+  * Here all of that is **two light jobs + one codegen'd projection**:
+  *  - structure comes from Spark's own JSON schema inference
+  *    (`JsonInferSchema`, through the `GraftJsonTyper` shim), run
+  *    per body in ONE pass ([[typedGroups]]) that can group the types
+  *    (the evolving sinks group by event type and body verdict), so
+  *    the schema equals `spark.read.json`'s over the same bodies
   *    (sampled at scale via [[Options.sampleFraction]]);
   *  - the flatten itself is a single `from_json` + `getField`/
   *    `element_at` projection — no per-row driver logic, fully
   *    columnar, works identically on 100 TB;
   *  - the column plan comes from ONE walk of the inferred schema, with
-  *    16 item slots per split array; one aggregate then gives each
-  *    array's longest length and each string column's date-likeness,
+  *    16 item slots per split array; one walk of the parsed rows then
+  *    gives each array's longest length and each string column's
+  *    date-likeness, reading exactly the values the projection reads,
   *    and the slots no row reaches are dropped;
   *  - date-string detection (reference: src/utils.ts isDateString) is
-  *    an aggregate over the column, not a peek at the first row, so it
-  *    is deterministic under parallelism;
+  *    over the whole column, not a peek at the first row, so it is
+  *    deterministic under parallelism;
+  *  - keys snake-case with the letters and digits of every script as
+  *    word characters; a key with no letter or digit is dropped;
   *  - keys that snake-case to one name (`a_b` beside `a.b`, `fooBar`
   *    beside `foo_bar`) are ONE column: the first non-null value in
   *    schema order (JSON inference sorts keys by name), at their
@@ -54,12 +67,15 @@ object EventFlattener {
     "event_type", "__is_single_retry", "__single_retry_attempts",
     "__is_from_old_queue", "__bulker_full_attempts", "__received_at")
 
-  /** lodash.snakecase-ish: camelCase boundaries + non-alphanumeric
-    * separators → lower snake_case. */
+  /** lodash.snakecase-ish: camelCase boundaries + separators → lower
+    * snake_case. Letters and digits of every script are word characters
+    * (`名前` stays `名前`, `ÄB` becomes `äb`), and the lowercasing is
+    * locale-free; any other character separates words, so a key with no
+    * letter or digit (`!!`) snake-cases to the empty string. */
   def snakeCase(s: String): String =
-    s.replaceAll("([a-z0-9])([A-Z])", "$1_$2")
-      .replaceAll("([A-Z]+)([A-Z][a-z])", "$1_$2")
-      .split("[^A-Za-z0-9]+").filter(_.nonEmpty).mkString("_").toLowerCase
+    s.replaceAll("([\\p{Ll}\\p{N}])(\\p{Lu})", "$1_$2")
+      .replaceAll("(\\p{Lu}+)(\\p{Lu}\\p{Ll})", "$1_$2")
+      .split("[^\\p{L}\\p{N}]+").filter(_.nonEmpty).mkString("_").toLowerCase(Locale.ROOT)
 
   /** Date-string shapes the flattener promotes to timestamps:
     * ISO date / datetime (incl. the `...T...Z` / offset forms
@@ -71,84 +87,160 @@ object EventFlattener {
     "^\\d{4}-\\d{2}-\\d{2}([T ]\\d{2}:\\d{2}(:\\d{2}(\\.\\d{1,6})?)?(Z|[+-]\\d{2}:\\d{2})?)?$" +
       "|^\\d{2}/\\d{2}/\\d{4}$"
 
-  /** Distributed JSON structure inference over a string column. */
+  /** One group's share of a frame (see [[typedGroups]]): its row count
+    * and the merged JSON type of its non-null bodies, None when it has
+    * none. */
+  final case class Typed(rows: Long, dtype: Option[DataType])
+
+  /** The inference pre-pass: ONE job over `df` types each non-null body
+    * of `jsonCol` with Spark's own JSON inference and merges the types
+    * per group, the group of a row being `key` over its `by` columns
+    * (ordinals 1.. of the row `key` sees; ordinal 0 is the body). The
+    * driver merges the groups' records, at most one per group and
+    * partition; [[schemaOf]] turns any set of them into the schema
+    * `spark.read.json` infers over those groups' bodies. */
+  def typedGroups[K](df: DataFrame, jsonCol: String, by: Seq[String])(
+      key: InternalRow => K): Map[K, Typed] = {
+    val typer = GraftJsonTyper(df.sparkSession)
+    def add(a: Typed, b: Typed): Typed = Typed(a.rows + b.rows,
+      (a.dtype ++ b.dtype).reduceOption(typer.merge))
+    GraftJsonTyper.collectPartitions(df.select((jsonCol +: by).map(col): _*)) { rows =>
+      val acc = mutable.HashMap.empty[K, Typed]
+      rows.foreach { r =>
+        val t = Typed(1L, Option.when(!r.isNullAt(0))(typer.typeOf(r.getUTF8String(0))))
+        val k = key(r)
+        acc(k) = acc.get(k).fold(t)(add(_, t))
+      }
+      acc.toMap
+    }.flatten.groupMapReduce(_._1)(_._2)(add)
+  }
+
+  /** The schema `spark.read.json` infers over the bodies `groups` typed. */
+  def schemaOf(spark: SparkSession, groups: Iterable[Typed]): StructType =
+    GraftJsonTyper(spark).schemaOf(groups.flatMap(_.dtype))
+
+  /** Distributed JSON structure inference over a string column: equal
+    * to `spark.read.json` over the (sampled) bodies, in one job. */
   def inferStructure(df: DataFrame, jsonCol: String, opts: Options = Options()): StructType = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    val ds = df.select(col(jsonCol)).na.drop().as[String]
-    val sampled = if (opts.sampleFraction < 1.0) ds.sample(opts.sampleFraction, 42L) else ds
-    spark.read.json(sampled).schema
+    val bodies = df.select(col(jsonCol)).na.drop()
+    val sampled = if (opts.sampleFraction < 1.0) bodies.sample(opts.sampleFraction, 42L) else bodies
+    schemaOf(df.sparkSession, typedGroups(sampled, jsonCol, Nil)(_ => ()).values)
   }
 
   /** Flatten `jsonCol` into typed top-level columns, keeping `keep`
-    * passthrough columns. One inference pass + one stats pass (array
-    * max-lengths, date-likeness) + one projection. */
+    * passthrough columns. Cost: one inference job, one facts walk
+    * (array max-lengths, date-likeness) and one projection. */
   def flatten(df: DataFrame, jsonCol: String, keep: Seq[String] = Nil,
               opts: Options = Options()): DataFrame = {
     val schema = inferStructure(df, jsonCol, opts)
     flattenWithSchema(df, jsonCol, schema, keep, opts)
   }
 
-  /** One output column of the plan. `slots` are the (array, item)
-    * positions it reads, each array numbered by its place in the walk
-    * (two arrays may snake-case to one path): the column is dropped
-    * when no row's array reaches any of them. A column outside every
-    * split array has none and is always kept. */
-  private case class Leaf(name: String, col: Column, dtype: DataType,
+  /** Where a value sits in the parsed body: per step, a field ordinal
+    * inside a record or an item index inside an array, with the type of
+    * the value there. */
+  private type Path = Seq[(Int, DataType)]
+
+  /** One output column of the plan. `at` is where the projection reads
+    * its value, one path per key merged into it, in coalesce order.
+    * `slots` are the (array, item) positions it reads, each array
+    * numbered by its place in the walk (two arrays may snake-case to
+    * one path): the column is dropped when no row's array reaches any
+    * of them. A column outside every split array has none and is
+    * always kept. */
+  private case class Leaf(name: String, col: Column, dtype: DataType, at: Seq[Path],
                           slots: Seq[(Int, Int)] = Nil)
 
   def flattenWithSchema(df: DataFrame, jsonCol: String, schema: StructType,
                         keep: Seq[String] = Nil, opts: Options = Options()): DataFrame = {
     val withParsed = df.withColumn("__graft_json", from_json(col(jsonCol), schema))
     val reserved = opts.reserved.map(snakeCase)
-    val arrays = mutable.ArrayBuffer.empty[Column]
-    val leaves = merged(leafColumns("", col("__graft_json"), schema, opts, arrays)
+    val arrays = mutable.ArrayBuffer.empty[Path]
+    val leaves = merged(leafColumns("", col("__graft_json"), Nil, schema, opts, arrays)
       .filterNot(l => reserved(l.name)))
-    // the data's facts, each split array's longest length and each
-    // string column's date-likeness, in ONE aggregate over one scan
-    // (each scan re-parses the JSON column; don't pay it twice)
     val strings = if (opts.detectDates) leaves.filter(_.dtype == StringType) else Nil
-    val aggs = arrays.toSeq.map(a => max(size(a)).as("len")) ++ strings.map(l =>
-      (bool_and(l.col.isNull || l.col.rlike(DateRe)) && max(l.col.isNotNull)).as("date"))
-    val stats =
-      if (aggs.isEmpty) Row.empty else withParsed.agg(aggs.head, aggs.tail: _*).collect()(0)
-    def fact[T](i: Int, ifNull: T): T = if (stats.isNullAt(i)) ifNull else stats.getAs[T](i)
-    val lens = arrays.indices.map(fact(_, 0))
-    val dates = strings.indices.filter(i => fact(arrays.size + i, false)).map(strings(_).name).toSet
+    val (lens, dates) = facts(withParsed.select("__graft_json"), schema.length, arrays.toSeq,
+      strings.map(_.at))
+    val dateCols = strings.zip(dates).collect { case (l, true) => l.name }.toSet
     val projected = leaves
       .filter(l => l.slots.isEmpty || l.slots.exists { case (a, i) => i < lens(a) })
       .map {
-        case l if dates(l.name) =>
+        case l if dateCols(l.name) =>
           coalesce(try_to_timestamp(l.col), try_to_timestamp(l.col, lit("MM/dd/yyyy"))).as(l.name)
         case l => l.col.as(l.name)
       }
     withParsed.select(keep.map(col) ++ projected: _*)
   }
 
-  /** The one walk of the schema: every leaf column under `prefix`. A
-    * split array is appended to `arrays` and yields [[MaxArrayItems]]
-    * item slots; arrays of arrays, and of records holding a record or
-    * an array, are JSON strings, as the reference stringifies anything
-    * deeper than record-in-array. */
-  private def leafColumns(prefix: String, c: Column, dt: DataType, opts: Options,
-                          arrays: mutable.ArrayBuffer[Column]): Seq[Leaf] =
+  /** The data's facts in ONE walk of the parsed rows: each split
+    * array's longest length, and whether each string column holds a
+    * value and only date-like values ([[DateRe]], by `rlike`'s
+    * `Pattern.find`). A string column reads the first non-null of its
+    * paths, as its coalesce does; a value that is not a JSON string (a
+    * number cast to STRING, a stringified record) is never date-like. */
+  private def facts(parsed: DataFrame, width: Int, arrays: Seq[Path],
+                    strings: Seq[Seq[Path]]): (Seq[Int], Seq[Boolean]) =
+    if (arrays.isEmpty && strings.isEmpty) (Nil, Nil)
+    else {
+      def valueAt(root: InternalRow, path: Path): Any = path.foldLeft(root: Any) {
+        case (r: InternalRow, (o, dt)) if !r.isNullAt(o) => r.get(o, dt)
+        case (a: ArrayData, (i, dt)) if i < a.numElements() && !a.isNullAt(i) => a.get(i, dt)
+        case _ => null
+      }
+      val parts = GraftJsonTyper.collectPartitions(parsed) { rows =>
+        val date = java.util.regex.Pattern.compile(DateRe)
+        val lens = Array.fill(arrays.size)(0)
+        val seen, undated = Array.fill(strings.size)(false)
+        rows.filterNot(_.isNullAt(0)).map(_.getStruct(0, width)).foreach { root =>
+          arrays.indices.foreach { a =>
+            valueAt(root, arrays(a)) match {
+              case v: ArrayData => lens(a) = math.max(lens(a), v.numElements())
+              case _ =>
+            }
+          }
+          strings.indices.filterNot(undated(_)).foreach { s =>
+            strings(s).iterator.map(valueAt(root, _)).find(_ != null).foreach { v =>
+              seen(s) = true
+              v match {
+                case u: UTF8String if date.matcher(u.toString).find() =>
+                case _ => undated(s) = true
+              }
+            }
+          }
+        }
+        (lens, seen, undated)
+      }
+      (arrays.indices.map(a => parts.foldLeft(0)(_ max _._1(a))),
+        strings.indices.map(s => parts.exists(_._2(s)) && !parts.exists(_._3(s))))
+    }
+
+  /** The one walk of the schema: every leaf column under `prefix`, at
+    * `at` in the parsed body. A key with no letter or digit snake-cases
+    * to nothing and is dropped with its subtree. A split array's path is
+    * appended to `arrays` and yields [[MaxArrayItems]] item slots;
+    * arrays of arrays, and of records holding a record or an array, are
+    * JSON strings, as the reference stringifies anything deeper than
+    * record-in-array. */
+  private def leafColumns(prefix: String, c: Column, at: Path, dt: DataType, opts: Options,
+                          arrays: mutable.ArrayBuffer[Path]): Seq[Leaf] =
     dt match {
       case st: StructType if opts.splitRecords || prefix.isEmpty =>
-        st.fields.toSeq.flatMap { f =>
-          val p = if (prefix.isEmpty) snakeCase(f.name) else s"${prefix}_${snakeCase(f.name)}"
-          leafColumns(p, c.getField(f.name), f.dataType, opts, arrays)
+        st.fields.toSeq.zipWithIndex.filter(f => snakeCase(f._1.name).nonEmpty).flatMap {
+          case (f, i) =>
+            val p = if (prefix.isEmpty) snakeCase(f.name) else s"${prefix}_${snakeCase(f.name)}"
+            leafColumns(p, c.getField(f.name), at :+ (i -> f.dataType), f.dataType, opts, arrays)
         }
       case ArrayType(et, _) if opts.splitArrays && isFlattenableElement(et) =>
-        arrays += c
+        arrays += at
         val a = arrays.size - 1
         (0 until MaxArrayItems).flatMap { i =>
-          leafColumns(s"${prefix}_$i", try_element_at(c, lit(i + 1)), et, opts, arrays)
-            .map(_.copy(slots = Seq(a -> i)))
+          leafColumns(s"${prefix}_$i", try_element_at(c, lit(i + 1)), at :+ (i -> et), et,
+            opts, arrays).map(_.copy(slots = Seq(a -> i)))
         }
       case _: StructType | _: ArrayType =>
-        Seq(Leaf(prefix, to_json(c), StringType))
+        Seq(Leaf(prefix, to_json(c), StringType, Seq(at)))
       case other =>
-        Seq(Leaf(prefix, c, other))
+        Seq(Leaf(prefix, c, other, Seq(at)))
     }
 
   /** Leaves that snake-case to one name become one column: its value
@@ -160,7 +252,7 @@ object EventFlattener {
       case Seq(one) => one
       case ls =>
         val t = if (ls.forall(_.dtype == ls.head.dtype)) ls.head.dtype else StringType
-        Leaf(ls.head.name, coalesce(ls.map(_.col.cast(t)): _*), t,
+        Leaf(ls.head.name, coalesce(ls.map(_.col.cast(t)): _*), t, ls.flatMap(_.at),
           if (ls.exists(_.slots.isEmpty)) Nil else ls.flatMap(_.slots))
     }
   }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonProcessingException, JsonToken,
+  StreamReadConstraints, StreamReadFeature}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -244,11 +246,26 @@ object EventRouter {
   }
 
   /** True for a row whose present body is not one JSON object — the
-    * `malformed_body` rule every pipeline entry point applies.
-    * `json_object_keys` is null for a non-object (`42`, `[1]`) and
-    * `try_parse_json` for a repeated key, which `spark.read.json`
-    * would infer as two columns of one name. */
+    * `malformed_body` rule every pipeline entry point applies. One
+    * strict Jackson pass per body: the root is an object, no key repeats
+    * in any object (`spark.read.json` would infer two columns of one
+    * name), nothing but whitespace follows it, and none of Jackson's
+    * leniencies is on (no NaN, single quotes, unquoted names, leading
+    * zeros, trailing commas, comments or raw control characters). */
   private[graft] def malformedBody(jsonCol: String): Column =
-    col(jsonCol).isNotNull &&
-      (isnull(json_object_keys(col(jsonCol))) || isnull(try_parse_json(col(jsonCol))))
+    col(jsonCol).isNotNull && notOneObject(col(jsonCol).cast("binary"))
+
+  private lazy val strictJson = new JsonFactoryBuilder()
+    .enable(StreamReadFeature.STRICT_DUPLICATE_DETECTION)
+    // as long a string as Spark's JSON reader takes
+    .streamReadConstraints(StreamReadConstraints.builder().maxStringLength(Int.MaxValue).build())
+    .build()
+
+  private val notOneObject = udf { (body: Array[Byte]) =>
+    try {
+      val p = strictJson.createParser(body)
+      try p.nextToken() != JsonToken.START_OBJECT || { p.skipChildren(); p.nextToken() != null }
+      finally p.close()
+    } catch { case _: JsonProcessingException => true }
+  }
 }

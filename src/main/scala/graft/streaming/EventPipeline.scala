@@ -209,6 +209,11 @@ object EventPipeline {
     * schema independently (CREATE on first batch, ADD COLUMN nullable,
     * widen-to-String — reference batch-client:492-568).
     *
+    * Before any write, one pre-pass job over the cached batch checks
+    * each body, finds the present types and infers the batch schema
+    * (see withRoutableBatch), and one walk of the parsed rows sizes the
+    * flatten's array columns and finds its date columns.
+    *
     * Schema evolution is per-type METADATA (driver-side merges); the
     * DATA write is ONE routed `partitionBy` job per micro-batch for
     * every cast-free type, staged then file-moved into the per-type
@@ -266,11 +271,14 @@ object EventPipeline {
     * batch; persists the raw frame and `enriched` (which both sinks
     * consume once per present type) around the body and the trace.
     *
-    * The emptiness gate, the body check and the sinks' type discovery
-    * are ONE job: the distinct (event_type, malformed) pairs are
-    * collected here (no valid pair == empty batch), so a clean batch
-    * pays no extra round-trip for the check. event_type is a kept
-    * passthrough column, so the list collected pre-flatten equals the
+    * The emptiness gate, the sinks' type discovery and the batch's
+    * schema inference are ONE pre-pass job over the persisted batch
+    * ([[EventFlattener.typedGroups]]): per (event_type, malformed) pair
+    * it returns a row count and the merged JSON type of the pair's
+    * bodies (no valid pair == empty batch), and the body check is
+    * computed as the pass fills the cache. The valid pairs' types merge
+    * into the one batch schema the flatten projects. event_type is a
+    * kept passthrough column, so the list taken pre-flatten equals the
     * one the sinks saw post-flatten. */
   private def withRoutableBatch(batch: DataFrame, batchId: Long, cfg: Config,
       jsonCol: String)(body: (DataFrame, Seq[String], DataFrame) => Unit): Unit = {
@@ -279,19 +287,21 @@ object EventPipeline {
       .withColumn("__malformed", EventRouter.malformedBody(jsonCol))
       .persist()
     try {
-      val seen = keyed.select(col("event_type"), col("__malformed")).distinct()
-        .collect().map(r => r.getString(0) -> r.getBoolean(1)).toSeq // ≤ 2 per table
-      if (seen.exists(_._2)) cfg.dlqDir.foreach(divertToDlq(keyed.filter(col("__malformed"))
+      val seen = EventFlattener.typedGroups(keyed, jsonCol, Seq("event_type", "__malformed"))(
+        r => r.getUTF8String(1).toString -> r.getBoolean(2)) // ≤ 2 per table
+      if (seen.keys.exists(_._2)) cfg.dlqDir.foreach(divertToDlq(keyed.filter(col("__malformed"))
         .drop("__malformed"), lit("malformed_body"), _, batchId))
       val valid = keyed.filter(!col("__malformed")).drop("__malformed")
-      val types = seen.collect { case (t, false) => t }
+      val typed = seen.collect { case ((t, false), g) => t -> g }
+      val types = typed.keys.toSeq.sorted
       if (types.nonEmpty) {
         if (cfg.dlqDir.isDefined && !cfg.sinkPing.forall(_())) {
           divertToDlq(valid, lit("destination_unhealthy"), cfg.dlqDir.get, batchId)
         } else {
           val keep = valid.columns.filterNot(_ == jsonCol).toSeq
           val reserved = EventFlattener.defaultReserved ++ keep ++ enrichmentCols
-          val flat = EventFlattener.flatten(valid, jsonCol, keep = keep,
+          val flat = EventFlattener.flattenWithSchema(valid, jsonCol,
+            EventFlattener.schemaOf(batch.sparkSession, typed.values), keep = keep,
             opts = EventFlattener.Options(reserved = reserved))
           val enriched = enrich(flat, cfg.transform)
             .withColumn("stream_batch_id", lit(batchId))

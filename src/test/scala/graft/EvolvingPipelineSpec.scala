@@ -207,6 +207,42 @@ class EvolvingPipelineSpec extends SparkSpec {
     assert(ids(spark.read.parquet(routed.outputDir)) == Seq(1L, 3L))
   }
 
+  test("content after the body's object dead-letters it, in start and startEvolving") {
+    val base = tmpDir("evotrailing")
+    val rows = Seq(
+      (1L, 1700000000000000000L, 1L, "click", 1.0, """{"k": 1}"""),
+      // a second value, a bare word and a comment after the object: each
+      // was read as `k = 2`, silently losing the rest
+      (2L, 1700000001000000000L, 2L, "click", 2.0, """{"k": 2}{"b": 2}"""),
+      (3L, 1700000002000000000L, 3L, "click", 3.0, """{"k": 2} x"""),
+      (4L, 1700000003000000000L, 4L, "click", 4.0, """{"k": 2}//c""")
+    ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    rows.coalesce(1).write.parquet(s"$base/in")
+    def ids(df: DataFrame): Seq[Long] =
+      df.orderBy("event_id").collect().map(_.getAs[Long]("event_id")).toSeq
+    val evolving = EventPipeline.Config(s"$base/in", s"$base/out", s"$base/ck",
+      dlqDir = Some(s"$base/dlq"))
+    EventPipeline.startEvolving(spark, rows.schema, evolving).awaitTermination()
+    assert(ids(EventPipeline.readEvolvingTable(spark, evolving, "click")) == Seq(1L))
+    assert(ids(spark.read.parquet(s"$base/dlq")) == Seq(2L, 3L, 4L))
+    val routed = EventPipeline.Config(s"$base/in", s"$base/out2", s"$base/ck2",
+      dlqDir = Some(s"$base/dlq2"))
+    EventPipeline.start(spark, rows.schema, routed).awaitTermination()
+    assert(ids(spark.read.parquet(routed.outputDir)) == Seq(1L))
+    assert(ids(spark.read.parquet(s"$base/dlq2")) == Seq(2L, 3L, 4L))
+  }
+
+  test("the body rule is strict JSON: Jackson's leniencies stay off, valid edge shapes land") {
+    val malformed = Seq("""{"a":'x'}""", "{a:1}", """{"a":01}""", """{"a":1,}""",
+      """{"a":{"b":1,"b":2}}""", "{\"a\":\"\u0001\"}", "", " ")
+    val clean = Seq("{}", """ {"a":1} """, """{"a":1e400}""", """{"a":12345678901234567890}""",
+      """{"a":[[1]]}""", """{"a":null}""", """{"ключ":"значение"}""")
+    val verdicts = (malformed ++ clean).toDF("b")
+      .select(col("b"), graft.operators.EventRouter.malformedBody("b")).collect()
+      .map(r => r.getString(0) -> r.getBoolean(1)).toMap
+    assert(verdicts == (malformed.map(_ -> true) ++ clean.map(_ -> false)).toMap)
+  }
+
   test("a restarted query widens with every column the previous run added") {
     val base = tmpDir("evorestart")
     val cfg = EventPipeline.Config(s"$base/in", s"$base/out", s"$base/ck")

@@ -1,26 +1,25 @@
 #!/usr/bin/env python3
 """Parse a Spark event log into per-query / per-job wall times.
 
-Usage: python3 tools/joblog.py <events-file> [query-substring]
+Usage: python3 tools/joblog.py <event-log file or dir> [query-substring]
 
 Groups jobs by spark.job.description (set per bench query by
-graft.Bench.timeOnce). Per query: total wall window, then each job's
+graft.Bench.timeOnce), or, for a job without one, by its stream query
+and micro-batch (tools/eventlog.py reads the log). Per query: total wall window, then each job's
 duration, submission offset and its last stage's name — so per-leg
 cost inside a multi-action query is visible. Jobs submitted
 concurrently (AQE fans out independent subtrees) overlap; the offset
 column makes that visible.
 """
-import json, sys, collections
+import sys, collections
+
+from eventlog import events, job_label
 
 path = sys.argv[1]
 want = sys.argv[2] if len(sys.argv) > 2 else None
 
 jobs = {}
-for line in open(path, errors="replace"):
-    try:
-        e = json.loads(line)
-    except json.JSONDecodeError:
-        continue
+for e in events(path):
     t = e.get("Event")
     if t == "SparkListenerJobStart":
         props = e.get("Properties") or {}
@@ -28,7 +27,7 @@ for line in open(path, errors="replace"):
         name = stages[-1]["Stage Name"] if stages else ""
         nstage = len(stages)
         jobs[e["Job ID"]] = {
-            "desc": props.get("spark.job.description", "<unlabeled>"),
+            "desc": job_label(props),
             "site": f"{name} ({nstage} stages)",
             "t0": e.get("Submission Time", 0),
         }
@@ -36,6 +35,9 @@ for line in open(path, errors="replace"):
         j = jobs.get(e["Job ID"])
         if j is not None:
             j["t1"] = e.get("Completion Time", 0)
+
+if not jobs:
+    sys.exit(f"{path}: no Spark job in this log")
 
 per = collections.defaultdict(list)
 for jid, j in sorted(jobs.items()):

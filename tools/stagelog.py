@@ -4,9 +4,13 @@
 executor run time — shows whether a slow stage is low-parallelism CPU,
 task-launch overhead, or skew.
 
-Usage: python3 tools/stagelog.py <events-file> [query-substring]
+Usage: python3 tools/stagelog.py <event-log file or dir> [query-substring]
+
+Jobs group as in tools/joblog.py.
 """
-import json, sys, collections
+import sys, collections
+
+from eventlog import events, job_label
 
 path = sys.argv[1]
 want = sys.argv[2] if len(sys.argv) > 2 else None
@@ -14,15 +18,11 @@ want = sys.argv[2] if len(sys.argv) > 2 else None
 stage_desc = {}
 stages = {}
 tasks = collections.defaultdict(lambda: [0.0, 0])  # stage -> [sum run ms, n]
-for line in open(path, errors="replace"):
-    try:
-        e = json.loads(line)
-    except json.JSONDecodeError:
-        continue
+for e in events(path):
     t = e.get("Event")
     if t == "SparkListenerJobStart":
         props = e.get("Properties") or {}
-        d = props.get("spark.job.description", "<unlabeled>")
+        d = job_label(props)
         for si in e.get("Stage Infos") or []:
             stage_desc[si["Stage ID"]] = d
     elif t == "SparkListenerStageCompleted":
@@ -37,6 +37,9 @@ for line in open(path, errors="replace"):
         m = e.get("Task Metrics") or {}
         tasks[sid][0] += m.get("Executor Run Time", 0)
         tasks[sid][1] += 1
+
+if not stage_desc:
+    sys.exit(f"{path}: no Spark job in this log")
 
 per = collections.defaultdict(list)
 for sid, (wall, ntask) in stages.items():
