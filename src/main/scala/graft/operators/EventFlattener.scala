@@ -7,10 +7,8 @@ import java.util.Locale
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.json.GraftJsonTyper
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** Spark re-expression of the reference's event "preparation" pipeline
   * (reference: src/clickhouse-batch-client.class.ts:190-448).
@@ -87,27 +85,22 @@ object EventFlattener {
     "^\\d{4}-\\d{2}-\\d{2}([T ]\\d{2}:\\d{2}(:\\d{2}(\\.\\d{1,6})?)?(Z|[+-]\\d{2}:\\d{2})?)?$" +
       "|^\\d{2}/\\d{2}/\\d{4}$"
 
-  /** One group's share of a frame (see [[typedGroups]]): its row count
-    * and the merged JSON type of its non-null bodies, None when it has
-    * none. */
-  final case class Typed(rows: Long, dtype: Option[DataType])
-
   /** The inference pre-pass: ONE job over `df` types each non-null body
     * of `jsonCol` with Spark's own JSON inference and merges the types
     * per group, the group of a row being `key` over its `by` columns
-    * (ordinals 1.. of the row `key` sees; ordinal 0 is the body). The
-    * driver merges the groups' records, at most one per group and
-    * partition; [[schemaOf]] turns any set of them into the schema
+    * (ordinals 1.. of the row `key` sees; ordinal 0 is the body). A
+    * group whose bodies are all null types to None. The driver merges
+    * the groups' types, at most one per group and partition;
+    * [[schemaOf]] turns any set of them into the schema
     * `spark.read.json` infers over those groups' bodies. */
   def typedGroups[K](df: DataFrame, jsonCol: String, by: Seq[String])(
-      key: InternalRow => K): Map[K, Typed] = {
+      key: InternalRow => K): Map[K, Option[DataType]] = {
     val typer = GraftJsonTyper(df.sparkSession)
-    def add(a: Typed, b: Typed): Typed = Typed(a.rows + b.rows,
-      (a.dtype ++ b.dtype).reduceOption(typer.merge))
+    def add(a: Option[DataType], b: Option[DataType]) = (a ++ b).reduceOption(typer.merge)
     GraftJsonTyper.collectPartitions(df.select((jsonCol +: by).map(col): _*)) { rows =>
-      val acc = mutable.HashMap.empty[K, Typed]
+      val acc = mutable.HashMap.empty[K, Option[DataType]]
       rows.foreach { r =>
-        val t = Typed(1L, Option.when(!r.isNullAt(0))(typer.typeOf(r.getUTF8String(0))))
+        val t = Option.when(!r.isNullAt(0))(typer.typeOf(r.getUTF8String(0)))
         val k = key(r)
         acc(k) = acc.get(k).fold(t)(add(_, t))
       }
@@ -116,8 +109,8 @@ object EventFlattener {
   }
 
   /** The schema `spark.read.json` infers over the bodies `groups` typed. */
-  def schemaOf(spark: SparkSession, groups: Iterable[Typed]): StructType =
-    GraftJsonTyper(spark).schemaOf(groups.flatMap(_.dtype))
+  def schemaOf(spark: SparkSession, groups: Iterable[Option[DataType]]): StructType =
+    GraftJsonTyper(spark).schemaOf(groups.flatten)
 
   /** Distributed JSON structure inference over a string column: equal
     * to `spark.read.json` over the (sampled) bodies, in one job. */
@@ -136,31 +129,23 @@ object EventFlattener {
     flattenWithSchema(df, jsonCol, schema, keep, opts)
   }
 
-  /** Where a value sits in the parsed body: per step, a field ordinal
-    * inside a record or an item index inside an array, with the type of
-    * the value there. */
-  private type Path = Seq[(Int, DataType)]
-
-  /** One output column of the plan. `at` is where the projection reads
-    * its value, one path per key merged into it, in coalesce order.
-    * `slots` are the (array, item) positions it reads, each array
-    * numbered by its place in the walk (two arrays may snake-case to
-    * one path): the column is dropped when no row's array reaches any
-    * of them. A column outside every split array has none and is
-    * always kept. */
-  private case class Leaf(name: String, col: Column, dtype: DataType, at: Seq[Path],
+  /** One output column of the plan. `slots` are the (array, item)
+    * positions it reads, each array numbered by its place in the walk
+    * (two arrays may snake-case to one path): the column is dropped
+    * when no row's array reaches any of them. A column outside every
+    * split array has none and is always kept. */
+  private case class Leaf(name: String, col: Column, dtype: DataType,
                           slots: Seq[(Int, Int)] = Nil)
 
   def flattenWithSchema(df: DataFrame, jsonCol: String, schema: StructType,
                         keep: Seq[String] = Nil, opts: Options = Options()): DataFrame = {
     val withParsed = df.withColumn("__graft_json", from_json(col(jsonCol), schema))
     val reserved = opts.reserved.map(snakeCase)
-    val arrays = mutable.ArrayBuffer.empty[Path]
-    val leaves = merged(leafColumns("", col("__graft_json"), Nil, schema, opts, arrays)
+    val arrays = mutable.ArrayBuffer.empty[Column]
+    val leaves = merged(leafColumns("", col("__graft_json"), schema, opts, arrays)
       .filterNot(l => reserved(l.name)))
     val strings = if (opts.detectDates) leaves.filter(_.dtype == StringType) else Nil
-    val (lens, dates) = facts(withParsed.select("__graft_json"), schema.length, arrays.toSeq,
-      strings.map(_.at))
+    val (lens, dates) = facts(withParsed, arrays.toSeq, strings.map(_.col))
     val dateCols = strings.zip(dates).collect { case (l, true) => l.name }.toSet
     val projected = leaves
       .filter(l => l.slots.isEmpty || l.slots.exists { case (a, i) => i < lens(a) })
@@ -172,75 +157,58 @@ object EventFlattener {
     withParsed.select(keep.map(col) ++ projected: _*)
   }
 
-  /** The data's facts in ONE walk of the parsed rows: each split
-    * array's longest length, and whether each string column holds a
-    * value and only date-like values ([[DateRe]], by `rlike`'s
-    * `Pattern.find`). A string column reads the first non-null of its
-    * paths, as its coalesce does; a value that is not a JSON string (a
-    * number cast to STRING, a stringified record) is never date-like. */
-  private def facts(parsed: DataFrame, width: Int, arrays: Seq[Path],
-                    strings: Seq[Seq[Path]]): (Seq[Int], Seq[Boolean]) =
+  /** The data's facts in ONE walk of `parsed`'s rows, over the very
+    * columns the projection reads: each split array's longest length,
+    * and whether each string column holds a value and only date-like
+    * values ([[DateRe]], by `rlike`'s `Pattern.find`). */
+  private def facts(parsed: DataFrame, arrays: Seq[Column],
+                    strings: Seq[Column]): (Seq[Int], Seq[Boolean]) =
     if (arrays.isEmpty && strings.isEmpty) (Nil, Nil)
     else {
-      def valueAt(root: InternalRow, path: Path): Any = path.foldLeft(root: Any) {
-        case (r: InternalRow, (o, dt)) if !r.isNullAt(o) => r.get(o, dt)
-        case (a: ArrayData, (i, dt)) if i < a.numElements() && !a.isNullAt(i) => a.get(i, dt)
-        case _ => null
-      }
-      val parts = GraftJsonTyper.collectPartitions(parsed) { rows =>
+      val (n, m) = (arrays.size, strings.size) // the closure ships no Column
+      val read = parsed.select(arrays.map(size) ++ strings: _*)
+      val parts = GraftJsonTyper.collectPartitions(read) { rows =>
         val date = java.util.regex.Pattern.compile(DateRe)
-        val lens = Array.fill(arrays.size)(0)
-        val seen, undated = Array.fill(strings.size)(false)
-        rows.filterNot(_.isNullAt(0)).map(_.getStruct(0, width)).foreach { root =>
-          arrays.indices.foreach { a =>
-            valueAt(root, arrays(a)) match {
-              case v: ArrayData => lens(a) = math.max(lens(a), v.numElements())
-              case _ =>
-            }
-          }
-          strings.indices.filterNot(undated(_)).foreach { s =>
-            strings(s).iterator.map(valueAt(root, _)).find(_ != null).foreach { v =>
-              seen(s) = true
-              v match {
-                case u: UTF8String if date.matcher(u.toString).find() =>
-                case _ => undated(s) = true
-              }
-            }
+        val lens = Array.fill(n)(0)
+        val seen, undated = Array.fill(m)(false)
+        rows.foreach { r =>
+          (0 until n).filterNot(r.isNullAt).foreach(a => lens(a) = lens(a) max r.getInt(a))
+          (0 until m).filterNot(s => undated(s) || r.isNullAt(n + s)).foreach { s =>
+            seen(s) = true
+            undated(s) = !date.matcher(r.getUTF8String(n + s).toString).find()
           }
         }
         (lens, seen, undated)
       }
-      (arrays.indices.map(a => parts.foldLeft(0)(_ max _._1(a))),
-        strings.indices.map(s => parts.exists(_._2(s)) && !parts.exists(_._3(s))))
+      ((0 until n).map(a => parts.foldLeft(0)(_ max _._1(a))),
+        (0 until m).map(s => parts.exists(_._2(s)) && !parts.exists(_._3(s))))
     }
 
-  /** The one walk of the schema: every leaf column under `prefix`, at
-    * `at` in the parsed body. A key with no letter or digit snake-cases
-    * to nothing and is dropped with its subtree. A split array's path is
-    * appended to `arrays` and yields [[MaxArrayItems]] item slots;
-    * arrays of arrays, and of records holding a record or an array, are
-    * JSON strings, as the reference stringifies anything deeper than
-    * record-in-array. */
-  private def leafColumns(prefix: String, c: Column, at: Path, dt: DataType, opts: Options,
-                          arrays: mutable.ArrayBuffer[Path]): Seq[Leaf] =
+  /** The one walk of the schema: every leaf column under `prefix`. A
+    * key with no letter or digit snake-cases to nothing and is dropped
+    * with its subtree. A split array is appended to `arrays` and yields
+    * [[MaxArrayItems]] item slots; arrays of arrays, and of records
+    * holding a record or an array, are JSON strings, as the reference
+    * stringifies anything deeper than record-in-array. */
+  private def leafColumns(prefix: String, c: Column, dt: DataType, opts: Options,
+                          arrays: mutable.ArrayBuffer[Column]): Seq[Leaf] =
     dt match {
       case st: StructType if opts.splitRecords || prefix.isEmpty =>
-        st.fields.toSeq.zipWithIndex.filter(f => snakeCase(f._1.name).nonEmpty).flatMap {
-          case (f, i) =>
-            val p = if (prefix.isEmpty) snakeCase(f.name) else s"${prefix}_${snakeCase(f.name)}"
-            leafColumns(p, c.getField(f.name), at :+ (i -> f.dataType), f.dataType, opts, arrays)
+        st.fields.toSeq.filter(f => snakeCase(f.name).nonEmpty).flatMap { f =>
+          val p = if (prefix.isEmpty) snakeCase(f.name) else s"${prefix}_${snakeCase(f.name)}"
+          leafColumns(p, c.getField(f.name), f.dataType, opts, arrays)
         }
       case ArrayType(et, _) if opts.splitArrays && isFlattenableElement(et) =>
-        arrays += at
+        arrays += c
         val a = arrays.size - 1
         (0 until MaxArrayItems).flatMap { i =>
-          leafColumns(s"${prefix}_$i", try_element_at(c, lit(i + 1)), at :+ (i -> et), et,
-            opts, arrays).map(_.copy(slots = Seq(a -> i)))
+          leafColumns(s"${prefix}_$i", try_element_at(c, lit(i + 1)), et, opts, arrays)
+            .map(_.copy(slots = Seq(a -> i)))
         }
       case _: StructType | _: ArrayType =>
-        Seq(Leaf(prefix, to_json(c), StringType, Seq(at)))
+        Seq(Leaf(prefix, to_json(c), StringType))
       case other =>
-        Seq(Leaf(prefix, c, other, Seq(at)))
+        Seq(Leaf(prefix, c, other))
     }
 
   /** Leaves that snake-case to one name become one column: its value
@@ -252,7 +220,7 @@ object EventFlattener {
       case Seq(one) => one
       case ls =>
         val t = if (ls.forall(_.dtype == ls.head.dtype)) ls.head.dtype else StringType
-        Leaf(ls.head.name, coalesce(ls.map(_.col.cast(t)): _*), t, ls.flatMap(_.at),
+        Leaf(ls.head.name, coalesce(ls.map(_.col.cast(t)): _*), t,
           if (ls.exists(_.slots.isEmpty)) Nil else ls.flatMap(_.slots))
     }
   }

@@ -1,7 +1,9 @@
 package graft.operators
 
-import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonProcessingException, JsonToken,
-  StreamReadConstraints, StreamReadFeature}
+import java.io.IOException
+
+import com.fasterxml.jackson.core.{JsonFactoryBuilder, JsonToken, StreamReadConstraints,
+  StreamReadFeature}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -253,7 +255,7 @@ object EventRouter {
     * leniencies is on (no NaN, single quotes, unquoted names, leading
     * zeros, trailing commas, comments or raw control characters). */
   private[graft] def malformedBody(jsonCol: String): Column =
-    col(jsonCol).isNotNull && notOneObject(col(jsonCol).cast("binary"))
+    col(jsonCol).isNotNull && notOneObject(col(jsonCol))
 
   private lazy val strictJson = new JsonFactoryBuilder()
     .enable(StreamReadFeature.STRICT_DUPLICATE_DETECTION)
@@ -261,11 +263,14 @@ object EventRouter {
     .streamReadConstraints(StreamReadConstraints.builder().maxStringLength(Int.MaxValue).build())
     .build()
 
-  private val notOneObject = udf { (body: Array[Byte]) =>
+  /** The body is parsed as the UTF-8 text Spark's JSON readers see
+    * (on raw bytes Jackson would guess UTF-16 or UTF-32 from a leading
+    * NUL); any read error is a malformed body, never a failed task. */
+  private val notOneObject = udf { (body: String) =>
     try {
       val p = strictJson.createParser(body)
       try p.nextToken() != JsonToken.START_OBJECT || { p.skipChildren(); p.nextToken() != null }
       finally p.close()
-    } catch { case _: JsonProcessingException => true }
+    } catch { case _: IOException => true }
   }
 }

@@ -274,8 +274,8 @@ object EventPipeline {
     * The emptiness gate, the sinks' type discovery and the batch's
     * schema inference are ONE pre-pass job over the persisted batch
     * ([[EventFlattener.typedGroups]]): per (event_type, malformed) pair
-    * it returns a row count and the merged JSON type of the pair's
-    * bodies (no valid pair == empty batch), and the body check is
+    * it returns the merged JSON type of the pair's bodies (no valid
+    * pair == empty batch), and the body check is
     * computed as the pass fills the cache. The valid pairs' types merge
     * into the one batch schema the flatten projects. event_type is a
     * kept passthrough column, so the list taken pre-flatten equals the

@@ -1,5 +1,6 @@
 package org.apache.spark.sql.catalyst.json
 
+import java.io.CharConversionException
 import java.nio.charset.MalformedInputException
 
 import scala.reflect.ClassTag
@@ -16,8 +17,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * can type bodies in its own pass and group the types as it likes.
   *
   * The steps are `JsonInferSchema.infer`'s: a record's type is
-  * `inferField` over a parser from the reader's factory, or, when the
-  * record does not parse, the PERMISSIVE branch's one corrupt-record
+  * `inferField` over a parser of its raw bytes, or, when the record
+  * does not parse or decode, the PERMISSIVE branch's one corrupt-record
   * field; types merge with `compatibleRootType`; the merged root is
   * finished with `canonicalizeType`. `spark.read.json` over the same
   * records gives the same schema. `canonicalizeType` is `private[json]`,
@@ -31,13 +32,21 @@ final class GraftJsonTyper private (options: JSONOptions) extends Serializable {
   /** One record's type, as `spark.read.json` types it. */
   def typeOf(record: UTF8String): DataType =
     try {
+      // the raw bytes, as `spark.read.json` infers a Dataset[String]
+      // (`CreateJacksonParser.internalRow`): Jackson guesses the
+      // encoding, so a NUL-led body may read as UTF-16 or UTF-32
       val parser = factory.createParser(record.getBytes)
       try { parser.nextToken(); inference.inferField(parser) }
       finally parser.close()
     } catch {
       case _: JsonProcessingException | _: MalformedInputException =>
-        StructType(Seq(StructField(options.columnNameOfCorruptRecord, StringType)))
+        corrupt
+      case _: CharConversionException if options.encoding.isEmpty =>
+        corrupt
     }
+
+  private def corrupt: DataType =
+    StructType(Seq(StructField(options.columnNameOfCorruptRecord, StringType)))
 
   def merge(a: DataType, b: DataType): DataType = merger(a, b)
 

@@ -207,7 +207,7 @@ class EvolvingPipelineSpec extends SparkSpec {
     assert(ids(spark.read.parquet(routed.outputDir)) == Seq(1L, 3L))
   }
 
-  test("content after the body's object dead-letters it, in start and startEvolving") {
+  test("content after the body's object or a leading NUL dead-letters it, in start and startEvolving") {
     val base = tmpDir("evotrailing")
     val rows = Seq(
       (1L, 1700000000000000000L, 1L, "click", 1.0, """{"k": 1}"""),
@@ -215,7 +215,12 @@ class EvolvingPipelineSpec extends SparkSpec {
       // was read as `k = 2`, silently losing the rest
       (2L, 1700000001000000000L, 2L, "click", 2.0, """{"k": 2}{"b": 2}"""),
       (3L, 1700000002000000000L, 3L, "click", 3.0, """{"k": 2} x"""),
-      (4L, 1700000003000000000L, 4L, "click", 4.0, """{"k": 2}//c""")
+      (4L, 1700000003000000000L, 4L, "click", 4.0, """{"k": 2}//c"""),
+      // on raw bytes Jackson guesses UTF-16 or UTF-32 for these and
+      // fails to decode two of them; Spark's readers see UTF-8 text
+      (5L, 1700000004000000000L, 5L, "click", 5.0, "\u0000a\u0000\u0000"),
+      (6L, 1700000005000000000L, 6L, "click", 6.0, "\u0000{\u0000}"),
+      (7L, 1700000006000000000L, 7L, "click", 7.0, "\u0000\u0000\u0000{\u0000")
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
     rows.coalesce(1).write.parquet(s"$base/in")
     def ids(df: DataFrame): Seq[Long] =
@@ -224,17 +229,20 @@ class EvolvingPipelineSpec extends SparkSpec {
       dlqDir = Some(s"$base/dlq"))
     EventPipeline.startEvolving(spark, rows.schema, evolving).awaitTermination()
     assert(ids(EventPipeline.readEvolvingTable(spark, evolving, "click")) == Seq(1L))
-    assert(ids(spark.read.parquet(s"$base/dlq")) == Seq(2L, 3L, 4L))
+    assert(ids(spark.read.parquet(s"$base/dlq")) == (2L to 7L))
     val routed = EventPipeline.Config(s"$base/in", s"$base/out2", s"$base/ck2",
       dlqDir = Some(s"$base/dlq2"))
     EventPipeline.start(spark, rows.schema, routed).awaitTermination()
     assert(ids(spark.read.parquet(routed.outputDir)) == Seq(1L))
-    assert(ids(spark.read.parquet(s"$base/dlq2")) == Seq(2L, 3L, 4L))
+    assert(ids(spark.read.parquet(s"$base/dlq2")) == (2L to 7L))
   }
 
   test("the body rule is strict JSON: Jackson's leniencies stay off, valid edge shapes land") {
     val malformed = Seq("""{"a":'x'}""", "{a:1}", """{"a":01}""", """{"a":1,}""",
-      """{"a":{"b":1,"b":2}}""", "{\"a\":\"\u0001\"}", "", " ")
+      """{"a":{"b":1,"b":2}}""", "{\"a\":\"\u0001\"}", "", " ",
+      // NUL-led bodies are UTF-8 text with a stray NUL, as Spark reads
+      // them, not UTF-16 or UTF-32
+      "\u0000a\u0000\u0000", "\u0000{\u0000}", "\u0000\u0000\u0000{\u0000")
     val clean = Seq("{}", """ {"a":1} """, """{"a":1e400}""", """{"a":12345678901234567890}""",
       """{"a":[[1]]}""", """{"a":null}""", """{"ключ":"значение"}""")
     val verdicts = (malformed ++ clean).toDF("b")
