@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
+import graft.obs.{Counters, Profiler}
 object Bench {
   private def gcMillis: Long =
     java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -64,6 +65,7 @@ object Bench {
       .config(GraftSession.confOverrides())
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    val profiler = Profiler.install(spark)
     // Untimed warmup: absorb one-time JVM/codegen/parquet-reader init
     // (otherwise it all lands on whichever query happens to run first).
     // Caching queries are fair game now that the cache is cleared
@@ -95,25 +97,29 @@ object Bench {
     // timing map holds only queries that actually ran.
     def timeOnce(name: String,
                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame):
-        (Double, Option[String]) = {
-      // Label every job with its query (guide §1.5): a probe run with
-      // spark.eventLog.enabled can then attribute per-job wall time to
-      // queries, which is how the per-leg numbers in OPTIMIZATION_r12.md
-      // were measured. Thread-local; cleared after the action.
+        (Double, Option[String], Counters) = {
+      // Label every job with its query (guide §1.5), in the Spark UI by
+      // its description and in the profiler, which splits the run into
+      // the `layers` the full bench file carries. Thread-local; cleared
+      // after the action.
       spark.sparkContext.setJobDescription(name)
-      val t0 = System.nanoTime()
-      val err =
-        try { fn(spark, sfDir).count(); None }
-        catch { case e: Throwable =>
-          Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")}".take(160)) }
-      val sec = (System.nanoTime() - t0) / 1e9
+      val ((sec, err), run) = profiler.measure(name) {
+        val t0 = System.nanoTime()
+        val err =
+          try { fn(spark, sfDir).count(); None }
+          catch { case e: Throwable =>
+            Some(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).linesIterator.nextOption().getOrElse("")}".take(160)) }
+        ((System.nanoTime() - t0) / 1e9, err)
+      }
       spark.sparkContext.setJobDescription(null)
       // queries are independent: drop this query's persisted
       // intermediates (LSH signature/band caches etc.) so they don't
       // accumulate, evict to disk, and tax later queries
       spark.catalog.clearCache()
-      (sec, err)
+      (sec, err, run)
     }
+    // the layers of the run whose time a query reports
+    val layers = scala.collection.mutable.Map.empty[String, Counters]
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = selected.flatMap { case (name, fn) =>
       if (spark.sparkContext.isStopped) {
@@ -123,7 +129,7 @@ object Bench {
         None
       } else {
         val g0 = gcMillis
-        val (first, err1) = timeOnce(name, fn)
+        val first @ (sec1, err1, _) = timeOnce(name, fn)
         // Shared-host noise can inflate a single run 5-7x (r3/r4 driver
         // runs vs. local: c13 9.8s vs 1.6s, c19 22.9s vs 1.7s). A query
         // over the noise threshold gets ONE re-run; min-of-2 filters
@@ -132,19 +138,19 @@ object Bench {
         // same single retry (transient executor loss), then records.
         val out =
           if (err1.isDefined) {
-            if (spark.sparkContext.isStopped) (first, err1)
-            else { val (s2, e2) = timeOnce(name, fn); if (e2.isDefined) (s2, e2) else (s2, None) }
-          } else if (first > 2.0) {
-            val (s2, e2) = timeOnce(name, fn)
-            if (e2.isDefined) (first, None) else (math.min(first, s2), None)
-          } else (first, None)
+            if (spark.sparkContext.isStopped) first else timeOnce(name, fn)
+          } else if (sec1 > 2.0) {
+            val second @ (sec2, err2, _) = timeOnce(name, fn)
+            if (err2.isEmpty && sec2 < sec1) second else first
+          } else first
         out match {
-          case (_, Some(e)) =>
+          case (_, Some(e), _) =>
             failed.put(name, e)
             System.err.println(f"[bench] $name%-24s FAILED  $e")
             None
-          case (sec, None) =>
+          case (sec, None, run) =>
             System.err.println(f"[bench] $name%-24s ${sec}%7.2f s  gc=${gcMillis - g0}%5d ms")
+            layers(name) = run
             Some(name -> sec)
         }
       }
@@ -181,7 +187,7 @@ object Bench {
       if (spark.sparkContext.isStopped) None
       else {
         val runs = (1 to 3).map(_ => timeOnce(name, selected.toMap.apply(name)))
-          .collect { case (s2, None) => s2 }
+          .collect { case (s2, None, _) => s2 }
         if (runs.isEmpty) None
         else {
           val med = runs.sorted.apply(runs.size / 2)
@@ -226,6 +232,15 @@ object Bench {
         .map { case (k, v) => "\"" + k + "\":\"" + esc(v) + "\"" }
         .mkString("{", ",", "}")}"""
     val full = s"""{"queries":${qmap(results)}$retimedField$failedField$suspectsField,"metric":"total","value":${ms3(total)},"unit":"sec","n_queries":${results.size},"sf":"$sfDir","cpus":$cpus}"""
+    // Each timed query's `layers` go to the file only: its wall time,
+    // the part of it no Spark job ran (driver_ms) and the profiler's
+    // counters of the same run.
+    val layersField = results.map { case (name, sec) =>
+      val run = layers(name)
+      val wall = math.round(sec * 1000)
+      (Seq("wall_ms" -> wall, "driver_ms" -> math.max(0L, wall - run.jobBusyMs)) ++ run.fields)
+        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("\"" + name + "\":{", ",", "}")
+    }.mkString(",\"layers\":{", ",", "}}")
     // The FULL per-query map always goes to a file — but only a
     // full-suite run at the canonical sf may overwrite the committed
     // idle baseline (the retime pass and round-over-round diffs read
@@ -233,7 +248,7 @@ object Bench {
     // instead of clobbering the baseline with a partial map.
     val benchFile = benchFileFor(only.nonEmpty, sfDir, cpus)
     try java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(benchFile), full + "\n")
+      java.nio.file.Paths.get(benchFile), full.stripSuffix("}") + layersField + "\n")
     catch { case _: Throwable => () }
     // ...but the collector keeps only the LAST ~2000 characters of
     // stdout, and a 170+-entry map is ~5 KB: a full line can NEVER
@@ -268,6 +283,7 @@ object Bench {
       s"""{"metric":"total","value":${ms3(total)},"unit":"sec","n_queries":${results.size}$failedShort,"sf":"$sfDir","cpus":$cpus,"queries":${qmap(slowest)}$retimedShort$suspectsField,"queries_omitted":${results.size - slowest.size},"queries_full":"$benchFile"}"""
     }
     println(line)
+    profiler.close()
     spark.stop()
   }
 }

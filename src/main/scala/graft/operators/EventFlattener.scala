@@ -6,9 +6,11 @@ import java.util.Locale
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Literal, RuntimeReplaceable}
 import org.apache.spark.sql.catalyst.json.GraftJsonTyper
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Spark re-expression of the reference's event "preparation" pipeline
   * (reference: src/clickhouse-batch-client.class.ts:190-448).
@@ -149,23 +151,37 @@ object EventFlattener {
     val dateCols = strings.zip(dates).collect { case (l, true) => l.name }.toSet
     val projected = leaves
       .filter(l => l.slots.isEmpty || l.slots.exists { case (a, i) => i < lens(a) })
-      .map {
-        case l if dateCols(l.name) =>
-          coalesce(try_to_timestamp(l.col), try_to_timestamp(l.col, lit("MM/dd/yyyy"))).as(l.name)
-        case l => l.col.as(l.name)
-      }
+      .map(l => (if (dateCols(l.name)) asDate(l.col) else l.col).as(l.name))
     withParsed.select(keep.map(col) ++ projected: _*)
+  }
+
+  /** A date string's timestamp, as a promoted column lands it. */
+  private def asDate(c: Column): Column =
+    coalesce(try_to_timestamp(c), try_to_timestamp(c, lit("MM/dd/yyyy")))
+
+  /** [[asDate]] as the analyzer resolves it, over the string at ordinal
+    * 0 of a row, so the walk evaluates it on just the values it checks. */
+  private def asDateOfRow(spark: SparkSession): Expression = {
+    val marker = UTF8String.fromString("\u0000graft_date")
+    spark.range(1).select(asDate(lit(marker.toString))).queryExecution.analyzed.expressions.head
+      .transformUp {
+        case Literal(`marker`, dt) => BoundReference(0, dt, nullable = true)
+        case r: RuntimeReplaceable => r.replacement
+      }
   }
 
   /** The data's facts in ONE walk of `parsed`'s rows, over the very
     * columns the projection reads: each split array's longest length,
     * and whether each string column holds a value and only date-like
-    * values ([[DateRe]], by `rlike`'s `Pattern.find`). */
+    * values: each matches [[DateRe]] (by `rlike`'s `Pattern.find`) and
+    * lands as a timestamp under [[asDate]], so `2024-02-30` is not
+    * date-like. */
   private def facts(parsed: DataFrame, arrays: Seq[Column],
                     strings: Seq[Column]): (Seq[Int], Seq[Boolean]) =
     if (arrays.isEmpty && strings.isEmpty) (Nil, Nil)
     else {
       val (n, m) = (arrays.size, strings.size) // the closure ships no Column
+      val toDate = asDateOfRow(parsed.sparkSession)
       val read = parsed.select(arrays.map(size) ++ strings: _*)
       val parts = GraftJsonTyper.collectPartitions(read) { rows =>
         val date = java.util.regex.Pattern.compile(DateRe)
@@ -175,7 +191,8 @@ object EventFlattener {
           (0 until n).filterNot(r.isNullAt).foreach(a => lens(a) = lens(a) max r.getInt(a))
           (0 until m).filterNot(s => undated(s) || r.isNullAt(n + s)).foreach { s =>
             seen(s) = true
-            undated(s) = !date.matcher(r.getUTF8String(n + s).toString).find()
+            val v = r.getUTF8String(n + s)
+            undated(s) = !date.matcher(v.toString).find() || toDate.eval(InternalRow(v)) == null
           }
         }
         (lens, seen, undated)

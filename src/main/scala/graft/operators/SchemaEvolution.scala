@@ -55,7 +55,11 @@ object ChTypes {
   *  - column missing from the existing table → ADD COLUMN, always
   *    nullable: files written before it read the column as null;
   *  - existing numeric/boolean column receiving strings → widen the
-  *    column to String (the only ALTER the reference risks);
+  *    column to String (the only ALTER the reference risks); so does
+  *    a timestamp column (a key whose values were all dates) receiving
+  *    a non-date string, which no cast to the timestamp could land.
+  *    Old values read back as Spark's cast text, as a widened number
+  *    does;
   *  - incoming DateTime64 vs existing DateTime → keep the existing,
   *    narrower type;
   *  - everything else → keep the existing type.
@@ -70,7 +74,7 @@ object ChTypes {
 object SchemaEvolution {
 
   private def widensToString(existing: DataType): Boolean = existing match {
-    case LongType | IntegerType | DoubleType | FloatType | BooleanType => true
+    case LongType | IntegerType | DoubleType | FloatType | BooleanType | TimestampType => true
     case _ => false
   }
 

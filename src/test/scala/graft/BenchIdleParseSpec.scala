@@ -40,9 +40,13 @@ class BenchIdleParseSpec extends AnyFunSuite {
          |  "value": 1.75,
          |  "sf": "$canonicalSf"
          |}""".stripMargin
+    // a full bench file's line, which carries each query's layers
+    val layered = compact.stripSuffix("}") +
+      ""","layers":{"a1":{"wall_ms":500,"driver_ms":120,"jobs":3},"b2":{"wall_ms":1250}}}"""
     val want = Map("a1" -> 0.5, "b2" -> 1.25)
     assert(Bench.parseIdleBaseline(compact, canonicalSf) == want)
     assert(Bench.parseIdleBaseline(pretty, canonicalSf) == want)
+    assert(Bench.parseIdleBaseline(layered, canonicalSf) == want)
   }
 
   test("a baseline at a different sf is rejected; garbage is empty") {

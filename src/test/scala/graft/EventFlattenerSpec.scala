@@ -70,14 +70,22 @@ class EventFlattenerSpec extends SparkSpec {
   }
 
   test("all-date string columns promote to timestamp; mixed stay string") {
+    // a date-shaped string that is no real date mixes its column too
     val df = Seq(
-      ("""{"when":"2024-03-01 10:00:00","mixed":"2024-03-01"}""", 1L),
-      ("""{"when":"2024-03-02","mixed":"notadate"}""", 2L)
+      ("""{"when":"2024-03-01 10:00:00","mixed":"2024-03-01","day":"2024-01-05",""" +
+        """"us":"03/15/2024","at":"2024-01-01T10:00"}""", 1L),
+      ("""{"when":"2024-03-02","mixed":"notadate","day":"2024-02-30","us":"13/45/2024",""" +
+        """"at":"2024-01-01T25:00","leap":"02/29/2023"}""", 2L)
     ).toDF("body", "row_id")
     val flat = EventFlattener.flatten(df, "body", keep = Seq("row_id"))
     val types = flat.schema.fields.map(f => f.name -> f.dataType.typeName).toMap
-    assert(types("when") == "timestamp")
-    assert(types("mixed") == "string")
+    assert(types == Map("row_id" -> "long", "when" -> "timestamp", "mixed" -> "string",
+      "day" -> "string", "us" -> "string", "at" -> "string", "leap" -> "string"))
+    val rows = flat.orderBy("row_id").collect()
+    assert(Seq("day", "us", "at").map(c => rows.map(_.getAs[String](c)).toSeq) == Seq(
+      Seq("2024-01-05", "2024-02-30"), Seq("03/15/2024", "13/45/2024"),
+      Seq("2024-01-01T10:00", "2024-01-01T25:00")))
+    assert(rows(1).getAs[String]("leap") == "02/29/2023")
   }
 
   test("US slash dates parse via the MM/dd/yyyy fallback") {

@@ -4,7 +4,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructType, TimestampType}
 import graft.operators.SchemaEvolution
 import graft.streaming.EventPipeline
 
@@ -49,6 +49,39 @@ class EvolvingPipelineSpec extends SparkSpec {
 
     // enrichment flowed through: content-hash message_id + timestamp
     assert(clicks(0).getAs[String]("message_id").length == 32)
+  }
+
+  /** `bodies` as one `startEvolving` run of type `click` over `cfg`. */
+  private def clicks(cfg: EventPipeline.Config, bodies: (Long, String)*): Unit = {
+    val df = bodies.map { case (id, body) =>
+      (id, 1700000000000000000L + id * 1000000000L, 1L, "click", 1.0, body)
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+    df.coalesce(1).write.mode("append").parquet(cfg.inputDir)
+    EventPipeline.startEvolving(spark, df.schema, cfg).awaitTermination()
+  }
+
+  test("a timestamp column widens to STRING when a later batch sends a non-date string") {
+    val base = tmpDir("evowhen")
+    val cfg = EventPipeline.Config(s"$base/in", s"$base/out", s"$base/ck")
+    clicks(cfg, 1L -> """{"when":"2024-01-01"}""", 2L -> """{"when":"2024-01-02"}""")
+    assert(EventPipeline.readEvolvingTable(spark, cfg, "click").schema("when").dataType ==
+      TimestampType)
+    clicks(cfg, 3L -> """{"when":"x"}""")
+    val t = EventPipeline.readEvolvingTable(spark, cfg, "click")
+    assert(t.schema("when").dataType == StringType)
+    // old values read back as Spark's cast text, as a widened number does
+    assert(t.orderBy("event_id").collect().map(_.getAs[String]("when")).toSeq ==
+      Seq("2024-01-01 00:00:00", "2024-01-02 00:00:00", "x"))
+  }
+
+  test("a date-shaped string that is no real date lands as STRING, not NULL") {
+    val base = tmpDir("evobaddate")
+    val cfg = EventPipeline.Config(s"$base/in", s"$base/out", s"$base/ck")
+    clicks(cfg, 1L -> """{"when":"2024-01-05"}""", 2L -> """{"when":"2024-02-30"}""")
+    val t = EventPipeline.readEvolvingTable(spark, cfg, "click")
+    assert(t.schema("when").dataType == StringType)
+    assert(t.orderBy("event_id").collect().map(_.getAs[String]("when")).toSeq ==
+      Seq("2024-01-05", "2024-02-30"))
   }
 
   test("the always-on worker (availableNow = false) evolves tables as files arrive") {

@@ -1,46 +1,17 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
-import org.apache.spark.sql.functions._
 import graft.streaming.EventPipeline
 
 /** The streaming router's write must be ONE routed job per micro-batch
   * (the batch router's one-shuffle shape), not a per-present-type job
   * loop — at high type cardinality the loop serialized N sequential
-  * filtered writes per trigger. Counted via SQL-execution events whose
-  * physical plan is a parquet insert; a steady trigger's whole job
+  * filtered writes per trigger. Counted as the profiler's write jobs,
+  * the jobs whose tasks wrote output rows; a steady trigger's whole job
   * count, schema reads included, must not follow the type count. */
 class EvolvingWriteJobSpec extends SparkSpec {
   import spark.implicits._
 
-  private def countEvents(hit: SparkListenerEvent => Boolean)(body: => Unit): Int = {
-    val n = new AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (hit(e)) { n.incrementAndGet(); () }
-      override def onOtherEvent(e: SparkListenerEvent): Unit =
-        if (hit(e)) { n.incrementAndGet(); () }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      // the listener bus is async; wait for it to drain
-      val deadline = System.nanoTime() + 10e9.toLong
-      var last = -1
-      while (System.nanoTime() < deadline && n.get() != last) {
-        last = n.get(); Thread.sleep(300)
-      }
-      n.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
-  private def countInserts(body: => Unit): Int = countEvents {
-    case e: SparkListenerSQLExecutionStart =>
-      e.physicalPlanDescription.contains("InsertIntoHadoopFsRelation")
-    case _ => false
-  }(body)
+  private def countInserts(body: => Unit): Long = profiled(body)._2.writeJobs
 
   test("evolving router: one insert job per micro-batch across many types") {
     val base = tmpDir("evojobs")
@@ -57,7 +28,7 @@ class EvolvingWriteJobSpec extends SparkSpec {
         .awaitTermination()
     }
     // 8 event types, ONE routed staging write (the input-setup write
-    // happened before the listener registered)
+    // happened before the profiler counted)
     assert(inserts == 1, s"expected exactly 1 insert job for 8 types, saw $inserts")
 
     // every type's table materialized from the single write
@@ -95,7 +66,7 @@ class EvolvingWriteJobSpec extends SparkSpec {
     assert(EventPipeline.readEvolvingTable(spark, cfg, "b").count() == 1)
   }
 
-  private def widenTwice(base: String, types: Seq[String]): (EventPipeline.Config, Int) = {
+  private def widenTwice(base: String, types: Seq[String]): (EventPipeline.Config, Long) = {
     val cfg = EventPipeline.Config(s"$base/in", s"$base/out", s"$base/ck")
     def write(amount: Int => String, from: Int): Unit =
       types.zipWithIndex.map { case (t, i) =>
@@ -140,7 +111,7 @@ class EvolvingWriteJobSpec extends SparkSpec {
 
   /** Spark jobs the second trigger of one always-on query starts, when
     * every one of `types` types gains a column (a cast-free append). */
-  private def secondTriggerJobs(base: String, types: Int): Int = {
+  private def secondTriggerJobs(base: String, types: Int): Long = {
     val cfg = EventPipeline.Config(s"$base/in", s"$base/out", s"$base/ck")
     def write(dir: String, from: Int, props: Int => String): Unit =
       (0 until types).map { i =>
@@ -150,18 +121,18 @@ class EvolvingWriteJobSpec extends SparkSpec {
         .coalesce(1).write.mode("append").parquet(dir)
     write(cfg.inputDir, 0, i => s"""{"k": $i}""")
     // staged outside the input dir, so the query cannot see it before
-    // the listener counts
+    // the profiler counts
     write(s"$base/next", 100, i => s"""{"k": $i, "extra": "e$i"}""")
     val next = new java.io.File(s"$base/next").listFiles().filter(_.getName.startsWith("part-")).head
     val q = EventPipeline.startEvolving(spark, spark.read.parquet(cfg.inputDir).schema, cfg,
       availableNow = false)
     val jobs = try {
       q.processAllAvailable()
-      countEvents(_.isInstanceOf[SparkListenerJobStart]) {
+      profiled {
         java.nio.file.Files.move(next.toPath,
           java.nio.file.Paths.get(cfg.inputDir, "part-next.parquet"))
         q.processAllAvailable()
-      }
+      }._2.jobs
     } finally q.stop()
     (0 until types).foreach { i =>
       val rows = EventPipeline.readEvolvingTable(spark, cfg, s"type_$i").orderBy("event_id").collect()

@@ -97,6 +97,20 @@ class JdbcEventSinkSpec extends SparkSpec {
       .fieldNames.toSet === Set("event_id", "payload"))
   }
 
+  test("a timestamp column widens to a string column when a batch sends a non-date string") {
+    val url3 = "jdbc:derby:memory:graftsink3;create=true"
+    val t = "ev_seen"
+    val b1 = Seq((1L, "2024-01-01")).toDF("event_id", "seen_at")
+      .withColumn("seen_at", to_timestamp(col("seen_at")))
+    JdbcEventSink.evolveAppend(spark, b1, url3, t)
+    val s2 = JdbcEventSink.evolveAppend(spark,
+      Seq((2L, "x")).toDF("event_id", "seen_at"), url3, t)
+    assert(s2("seen_at").dataType === StringType)
+    val rows = JdbcEventSink.readTable(spark, url3, t).orderBy("event_id")
+      .select(col("seen_at")).as[String].collect()
+    assert(rows.toSeq === Seq("2024-01-01 00:00:00", "x"))
+  }
+
   test("a15 replay is invocation-independent (bench runs queries twice)") {
     val dir = "/root/testdata/sf0.001"
     def run() = SparkEntry.queries("a15_jdbc_evolve")(spark, dir)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
+import graft.obs.{Counters, Profiler}
 
 /** One shared local session for every suite (sbt runs suites in one
   * JVM; a per-suite session would dominate test wall time), built by
@@ -17,6 +18,12 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
   def tmpDir(prefix: String): String = graft.streaming.Scaffold.scratch(prefix)
+
+  /** `body`'s result and what it ran in Spark, by [[Profiler]]. */
+  def profiled[A](body: => A): (A, Counters) = {
+    val profiler = Profiler.install(spark)
+    try profiler.measure(suiteName)(body) finally profiler.close()
+  }
 
   /** `body` with the session confs `kv` set; afterwards each key gets
     * back its previous value, or is unset if it had none. */

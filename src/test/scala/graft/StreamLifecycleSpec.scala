@@ -1,16 +1,9 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.sql.streaming.StreamingQueryListener
-import org.apache.spark.sql.streaming.StreamingQueryListener._
-
 /** The streaming lifecycle contract: how many streaming queries each
   * streaming driver row starts at sf0.001. Every start pays a whole
   * query lifecycle (checkpoint set-up, planning, stop), so a change
-  * that adds or loses one shows here before it shows in the timings.
-  * Spark posts `QueryStartedEvent` on the thread that calls `start()`,
-  * so the count is complete when the row's body returns. */
+  * that adds or loses one shows here before it shows in the timings. */
 class StreamLifecycleSpec extends SparkSpec {
 
   private val dir =
@@ -28,17 +21,9 @@ class StreamLifecycleSpec extends SparkSpec {
 
   expected.foreach { case (name, n) =>
     test(s"$name starts $n streaming quer${if (n == 1) "y" else "ies"}") {
-      val started = new AtomicInteger
-      val listener = new StreamingQueryListener {
-        override def onQueryStarted(e: QueryStartedEvent): Unit = { started.incrementAndGet(); () }
-        override def onQueryProgress(e: QueryProgressEvent): Unit = ()
-        override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
-      }
-      spark.streams.addListener(listener)
-      try {
-        assert(SparkEntry.queries(name)(spark, dir).count() > 0)
-        assert(started.get == n)
-      } finally spark.streams.removeListener(listener)
+      val (rows, ran) = profiled(SparkEntry.queries(name)(spark, dir).count())
+      assert(rows > 0)
+      assert(ran.streamsStarted == n)
     }
   }
 }

@@ -1,17 +1,14 @@
 package graft
 
-import java.util.concurrent.ConcurrentHashMap
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import graft.obs.Profiler
 import graft.streaming.EventPipeline
 
 /** The Spark jobs one steady, cast-free `startEvolving` trigger runs,
   * pinned literally: the inference pre-pass (which fills the batch
   * cache and yields the types, the body verdicts and the batch schema),
-  * the flatten's facts walk and the routed write. Jobs are
-  * attributed to a trigger by the `streaming.sql.batchId` job property
-  * the stream sets, so no other job in the JVM is counted. */
+  * the flatten's facts walk and the routed write. The profiler counts
+  * a trigger's jobs by the query and batch ids the stream sets on them,
+  * so no other job in the JVM is counted. */
 class TriggerJobsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -27,13 +24,7 @@ class TriggerJobsSpec extends SparkSpec {
     write(cfg.inputDir, 0, i => s"""{"k":$i,"tags":["a","b"],"when":"2024-01-0${i + 1}"}""")
     // staged outside the input dir, so the first trigger cannot see it
     write(s"$base/next", 100, i => s"""{"k":$i,"tags":["c"],"when":"2024-02-0${i + 1}","extra":"e$i"}""")
-    val jobs = new ConcurrentHashMap[String, AtomicInteger]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
-          .foreach(b => jobs.computeIfAbsent(b, _ => new AtomicInteger()).incrementAndGet())
-    }
-    spark.sparkContext.addSparkListener(listener)
+    val profiler = Profiler.install(spark)
     val q = EventPipeline.startEvolving(spark, spark.read.parquet(cfg.inputDir).schema, cfg,
       availableNow = false)
     try {
@@ -42,13 +33,7 @@ class TriggerJobsSpec extends SparkSpec {
         .filter(_.getName.startsWith("part-")).head
       java.nio.file.Files.move(next.toPath, java.nio.file.Paths.get(cfg.inputDir, "part-next.parquet"))
       q.processAllAvailable()
-    } finally q.stop()
-    // the listener bus is async; wait for it to drain
-    def total = jobs.values().toArray.map(_.asInstanceOf[AtomicInteger].get()).sum
-    val deadline = System.nanoTime() + 10e9.toLong
-    var last = -1
-    while (System.nanoTime() < deadline && total != last) { last = total; Thread.sleep(300) }
-    spark.sparkContext.removeSparkListener(listener)
+    } finally { q.stop(); profiler.close() }
     // trigger 1 lands every table; trigger 2 adds `extra` to each (cast-free)
     val rows = EventPipeline.readEvolvingTable(spark, cfg, "type_1").orderBy("event_id").collect()
     assert(rows.map(r => Option(r.getAs[String]("extra"))).toSeq == Seq(None, None, Some("e1"), Some("e5")))
@@ -56,6 +41,6 @@ class TriggerJobsSpec extends SparkSpec {
     // Before the pre-pass this trigger ran 9: the distinct (type,
     // malformed) collect (3), `spark.read.json` (1), the stats
     // aggregate (2) and the same write (3).
-    assert(jobs.get("1").get() == 5, jobs)
+    assert(profiler.batch(q.id, 1).jobs == 5)
   }
 }
