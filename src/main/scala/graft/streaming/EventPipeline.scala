@@ -210,9 +210,11 @@ object EventPipeline {
     * widen-to-String — reference batch-client:492-568).
     *
     * Before any write, one pre-pass job over the cached batch checks
-    * each body, finds the present types and infers the batch schema
-    * (see withRoutableBatch), and one walk of the parsed rows sizes the
-    * flatten's array columns and finds its date columns.
+    * each body, finds the present types, infers the batch schema and
+    * gathers the flatten's facts: its array lengths and date columns
+    * (see withRoutableBatch). A steady cast-free trigger therefore runs
+    * three jobs: the pre-pass, and the routed write's shuffle map stage
+    * and write.
     *
     * Schema evolution is per-type METADATA (driver-side merges); the
     * DATA write is ONE routed `partitionBy` job per micro-batch for
@@ -268,18 +270,24 @@ object EventPipeline {
     * insert gate), flatten the JSON column, enrich, stamp the batch
     * id, then hand (rawValid, presentTypes, enriched) to the
     * sink-specific body. Skips the body for an empty or diverted
-    * batch; persists the raw frame and `enriched` (which both sinks
-    * consume once per present type) around the body and the trace.
+    * batch. Persists the raw frame, with its body verdict, around the
+    * body and the trace: that is the batch's one cache. `enriched` is
+    * not cached; each consumer (a write group, a JDBC table, the trace)
+    * filters it by `event_type` and the filter runs below the
+    * deterministic projection, so each parses only its own rows from
+    * the cache, and the trace parses none. `sent_at` is therefore
+    * stamped once per table write, not once per batch.
     *
-    * The emptiness gate, the sinks' type discovery and the batch's
-    * schema inference are ONE pre-pass job over the persisted batch
-    * ([[EventFlattener.typedGroups]]): per (event_type, malformed) pair
-    * it returns the merged JSON type of the pair's bodies (no valid
-    * pair == empty batch), and the body check is
-    * computed as the pass fills the cache. The valid pairs' types merge
-    * into the one batch schema the flatten projects. event_type is a
-    * kept passthrough column, so the list taken pre-flatten equals the
-    * one the sinks saw post-flatten. */
+    * The emptiness gate, the sinks' type discovery, the batch's
+    * schema inference and the flatten's facts are ONE pre-pass job over
+    * the persisted batch ([[EventFlattener.typedGroups]]): per
+    * (event_type, malformed) pair it returns the merged JSON type and
+    * the facts of the pair's bodies (no valid pair == empty batch), and
+    * the body check is computed as the pass fills the cache. The valid
+    * pairs' types merge into the one batch schema the flatten projects,
+    * and their facts into the ones it plans by, so the flatten runs no
+    * job of its own. event_type is a kept passthrough column, so the
+    * list taken pre-flatten equals the one the sinks saw post-flatten. */
   private def withRoutableBatch(batch: DataFrame, batchId: Long, cfg: Config,
       jsonCol: String)(body: (DataFrame, Seq[String], DataFrame) => Unit): Unit = {
     val keyed = batch
@@ -300,16 +308,12 @@ object EventPipeline {
         } else {
           val keep = valid.columns.filterNot(_ == jsonCol).toSeq
           val reserved = EventFlattener.defaultReserved ++ keep ++ enrichmentCols
-          val flat = EventFlattener.flattenWithSchema(valid, jsonCol,
-            EventFlattener.schemaOf(batch.sparkSession, typed.values), keep = keep,
+          val flat = EventFlattener.flattenTyped(valid, jsonCol, typed.values, keep = keep,
             opts = EventFlattener.Options(reserved = reserved))
           val enriched = enrich(flat, cfg.transform)
             .withColumn("stream_batch_id", lit(batchId))
-            .persist()
-          try {
-            body(valid, types, enriched)
-            traceBatch(enriched, cfg.debugTee)
-          } finally { enriched.unpersist(); () }
+          body(valid, types, enriched)
+          traceBatch(enriched, cfg.debugTee)
         }
       }
     } finally { keyed.unpersist(); () }

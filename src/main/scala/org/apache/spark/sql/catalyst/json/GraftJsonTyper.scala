@@ -1,11 +1,13 @@
 package org.apache.spark.sql.catalyst.json
 
-import java.io.CharConversionException
+import java.io.{CharConversionException, IOException}
 import java.nio.charset.MalformedInputException
 
 import scala.reflect.ClassTag
 
 import com.fasterxml.jackson.core.JsonProcessingException
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.ClassicConversions._
@@ -22,12 +24,14 @@ import org.apache.spark.unsafe.types.UTF8String
   * field; types merge with `compatibleRootType`; the merged root is
   * finished with `canonicalizeType`. `spark.read.json` over the same
   * records gives the same schema. `canonicalizeType` is `private[json]`,
-  * hence this shim in Spark's package. */
+  * hence this shim in Spark's package. [[objectOf]] reads a record as
+  * `from_json` does, for the flatten's facts. */
 final class GraftJsonTyper private (options: JSONOptions) extends Serializable {
   private val inference = new JsonInferSchema(options)
   private val merger =
     JsonInferSchema.compatibleRootType(options.columnNameOfCorruptRecord, options.parseMode)
   @transient private lazy val factory = options.buildJsonFactory()
+  @transient private lazy val mapper = new ObjectMapper(factory)
 
   /** One record's type, as `spark.read.json` types it. */
   def typeOf(record: UTF8String): DataType =
@@ -49,6 +53,24 @@ final class GraftJsonTyper private (options: JSONOptions) extends Serializable {
     StructType(Seq(StructField(options.columnNameOfCorruptRecord, StringType)))
 
   def merge(a: DataType, b: DataType): DataType = merger(a, b)
+
+  /** The record as `from_json` reads it against a struct schema: the
+    * first JSON value of its UTF-8 text, a repeated key at its last
+    * value. A root object is read without the corrupt-record column's
+    * key, which `from_json` leaves to corrupt records; a record that
+    * does not parse or whose root is no object reads as an object of
+    * that column alone, holding the record's text; a record holding no
+    * value reads as None. */
+  def objectOf(record: UTF8String): Option[ObjectNode] = {
+    val text = record.toString
+    def corrupt = Some(mapper.createObjectNode().put(options.columnNameOfCorruptRecord, text))
+    try mapper.readTree(text) match {
+      case null => None
+      case o: ObjectNode => o.remove(options.columnNameOfCorruptRecord); Some(o)
+      case v if v.isMissingNode => None
+      case _ => corrupt
+    } catch { case _: IOException => corrupt }
+  }
 
   /** The schema of records whose types merge to `types`, in any order. */
   def schemaOf(types: Iterable[DataType]): StructType =
