@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
 import graft.obs.{Counters, Profiler}
 object Bench {
   private def gcMillis: Long =
@@ -66,11 +67,15 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val profiler = Profiler.install(spark)
-    // Untimed warmup: absorb one-time JVM/codegen/parquet-reader init
-    // (otherwise it all lands on whichever query happens to run first).
-    // Caching queries are fair game now that the cache is cleared
-    // before timing starts — only their generated code stays warm
-    // (c21's composed plan alone costs ~13 s of janino compilation).
+    // Untimed warmup: absorb one-time JVM/parquet-reader/class-loading
+    // init (otherwise it all lands on whichever query happens to run
+    // first). Caching queries are fair game now that the cache is
+    // cleared before timing starts. Generated code mostly does not stay
+    // warm: Spark's codegen cache keeps 100 classes
+    // (spark.sql.codegen.cache.maxEntries), c21's plan alone compiles
+    // about 85 (0.7 s of Janino at sf0.1 on 4 cores), and a c21 run
+    // right after this warm-up compiles about 55 of them again. Each
+    // timed query's `codegen_classes` counts what it compiled.
     // The set touches EVERY test table once (a cold page cache
     // otherwise charges each table's first read to whichever timed
     // query scans it first): documents (c9), embeddings (c6),
@@ -89,6 +94,10 @@ object Bench {
     spark.catalog.clearCache()
     val selected = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.forall(_.contains(n)) }
+    // The generated classes a query compiled, read around it from
+    // Spark's JVM-wide codegen counter: exact, since one query runs at
+    // a time.
+    def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     // A query that THROWS must surface as a failure, not as a fast
     // success: an executor OOM kills the context and every subsequent
     // .count() then fails in ~10 ms — an exception-swallowing timer
@@ -97,12 +106,13 @@ object Bench {
     // timing map holds only queries that actually ran.
     def timeOnce(name: String,
                  fn: (SparkSession, String) => org.apache.spark.sql.DataFrame):
-        (Double, Option[String], Counters) = {
+        (Double, Option[String], (Counters, Long)) = {
       // Label every job with its query (guide §1.5), in the Spark UI by
       // its description and in the profiler, which splits the run into
       // the `layers` the full bench file carries. Thread-local; cleared
       // after the action.
       spark.sparkContext.setJobDescription(name)
+      val c0 = compiles
       val ((sec, err), run) = profiler.measure(name) {
         val t0 = System.nanoTime()
         val err =
@@ -116,10 +126,10 @@ object Bench {
       // intermediates (LSH signature/band caches etc.) so they don't
       // accumulate, evict to disk, and tax later queries
       spark.catalog.clearCache()
-      (sec, err, run)
+      (sec, err, (run, compiles - c0))
     }
     // the layers of the run whose time a query reports
-    val layers = scala.collection.mutable.Map.empty[String, Counters]
+    val layers = scala.collection.mutable.Map.empty[String, (Counters, Long)]
     val failed = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val results = selected.flatMap { case (name, fn) =>
       if (spark.sparkContext.isStopped) {
@@ -233,12 +243,13 @@ object Bench {
         .mkString("{", ",", "}")}"""
     val full = s"""{"queries":${qmap(results)}$retimedField$failedField$suspectsField,"metric":"total","value":${ms3(total)},"unit":"sec","n_queries":${results.size},"sf":"$sfDir","cpus":$cpus}"""
     // Each timed query's `layers` go to the file only: its wall time,
-    // the part of it no Spark job ran (driver_ms) and the profiler's
-    // counters of the same run.
+    // the part of it no Spark job ran (driver_ms), the classes it
+    // compiled and the profiler's counters of the same run.
     val layersField = results.map { case (name, sec) =>
-      val run = layers(name)
+      val (run, codegen) = layers(name)
       val wall = math.round(sec * 1000)
-      (Seq("wall_ms" -> wall, "driver_ms" -> math.max(0L, wall - run.jobBusyMs)) ++ run.fields)
+      (Seq("wall_ms" -> wall, "driver_ms" -> math.max(0L, wall - run.jobBusyMs),
+        "codegen_classes" -> codegen) ++ run.fields)
         .map { case (k, v) => "\"" + k + "\":" + v }.mkString("\"" + name + "\":{", ",", "}")
     }.mkString(",\"layers\":{", ",", "}}")
     // The FULL per-query map always goes to a file — but only a

@@ -63,13 +63,28 @@ object GraftExtensions {
   * settings: AQE on, UTC, nanos-long parquet reads (the events table is
   * TIMESTAMP(NANOS)), extensions registered, plus graft's local
   * `file:` FileSystem. Every main takes its session from [[builder]],
-  * so the oracle gate checks the plans the bench times. */
+  * so the oracle gate checks the plans the bench times.
+  *
+  * [[builder]] also makes class-name misses cheap, a large share of the
+  * cost of compiling Spark's generated code. If the calling thread's
+  * context class loader is the system loader, it becomes a
+  * [[ClassMissCache]] over it, which remembers the names the system
+  * loader could not find. Built on that thread, a local session's
+  * executor takes the cache as its parent loader; stream, AQE and
+  * [[graft.streaming.Scaffold.overlapped]] threads inherit it. Threads
+  * that submit queries should descend from the thread that built the
+  * session; on any other thread the driver's own compiles search the
+  * classpath on every miss, as before. Any
+  * other context loader (spark-submit's, a REPL's, a notebook's) can
+  * gain classes later and is left alone. */
 object GraftSession {
-  def builder(master: String = "local[*]"): SparkSession.Builder =
+  def builder(master: String = "local[*]"): SparkSession.Builder = {
+    ClassMissCache.install()
     SparkSession.builder()
       .master(master)
       .withExtensions(new GraftExtensions)
       .config(sqlConf(master))
+  }
 
   def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
     builder(s"local[$cores]").getOrCreate()
@@ -169,7 +184,14 @@ object GraftSession {
       // sidecar, partition dir, staged-land mkdirs and checkpoint log
       // (477 per ingest_drain run, JFR). LocalFs sets the same bits in
       // the JVM; docs/SCALE.md has the census and the A/B.
-      "spark.hadoop.fs.file.impl" -> graft.sources.LocalFs.Impl)
+      "spark.hadoop.fs.file.impl" -> graft.sources.LocalFs.Impl,
+      // A graft session adds no session artifacts (`spark.jars` and
+      // `addJar` stay SparkContext-wide), so per-session isolation buys
+      // nothing. With it on, every task loads classes through an
+      // ExecutorClassLoader that asks the driver over RPC for each name
+      // the classpath lacks, and Janino probes many such names per
+      // compile; docs/SCALE.md has the census.
+      "spark.sql.artifact.isolation.enabled" -> "false")
     localCores(master) match {
       // a cluster's cores and executor memory aren't knowable from the
       // driver: callers size those with .config(...) on the builder

@@ -22,7 +22,37 @@ class GraftSessionSpec extends SparkSpec {
       "spark.sql.streaming.checkpoint.fileChecksum.enabled" -> "false",
       "spark.sql.streaming.checkpointFileManagerClass" ->
         "org.apache.spark.sql.execution.streaming.checkpointing.FileSystemBasedCheckpointFileManager",
-      "spark.hadoop.fs.file.impl" -> "graft.sources.LocalFs"))
+      "spark.hadoop.fs.file.impl" -> "graft.sources.LocalFs",
+      "spark.sql.artifact.isolation.enabled" -> "false"))
+  }
+
+  test("a task thread loads classes through the miss cache, with no RPC-fetching loader") {
+    // a Dataset job, so it runs under the session's artifact state as a query does
+    val chain = spark.range(0, 1, 1, 1).map { _ =>
+      Iterator.iterate(Thread.currentThread.getContextClassLoader)(_.getParent)
+        .takeWhile(_ != null).map(_.getClass.getName).mkString(" > ")
+    }(org.apache.spark.sql.Encoders.STRING).collect().head.split(" > ").toSeq
+    assert(chain.contains(classOf[ClassMissCache].getName), chain)
+    assert(!chain.exists(_.endsWith("ExecutorClassLoader")), chain)
+  }
+
+  test("builder installs the miss cache over the system loader and leaves any other loader") {
+    val t = Thread.currentThread
+    val prev = t.getContextClassLoader
+    val system = ClassLoader.getSystemClassLoader
+    val other = new java.net.URLClassLoader(Array.empty[java.net.URL], system)
+    try {
+      t.setContextClassLoader(other)
+      GraftSession.builder("local[2]")
+      assert(t.getContextClassLoader eq other)
+      t.setContextClassLoader(system)
+      GraftSession.builder("local[2]")
+      val installed = t.getContextClassLoader
+      assert(installed.isInstanceOf[ClassMissCache] && (installed.getParent eq system))
+      // a second builder call keeps the one cache
+      GraftSession.builder("local[2]")
+      assert(t.getContextClassLoader eq installed)
+    } finally t.setContextClassLoader(prev)
   }
 
   test("advisory partition size: heap x 0.3 / cpus / 4, clamped to [8 MB, 64 MB]") {

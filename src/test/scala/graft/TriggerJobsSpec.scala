@@ -1,21 +1,34 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types.StructType
+
 import graft.obs.Profiler
+import graft.sources.JdbcEventSink
 import graft.streaming.EventPipeline
 
-/** The Spark jobs one steady `startEvolving` trigger runs, pinned
+/** The Spark jobs one steady evolving trigger runs, pinned
   * literally: the inference pre-pass (which fills the batch cache and
   * yields the types, the body verdicts, the batch schema and the
-  * flatten's facts) and the routed write, which computes the projection
-  * from that one cache. The profiler counts a trigger's jobs by the
+  * flatten's facts) and the writes, which compute the projection from
+  * that one cache: one routed write in the parquet sink
+  * (`startEvolving`), one INSERT per type in the JDBC sink
+  * (`startEvolvingJdbc`). The profiler counts a trigger's jobs by the
   * query and batch ids the stream sets on them, so no other job in the
   * JVM is counted. */
 class TriggerJobsSpec extends SparkSpec {
   import spark.implicits._
 
   /** The jobs of the trigger that lands `second`'s bodies on the tables
-    * `first`'s bodies created, 8 events over 4 types each. */
-  private def secondTriggerJobs(name: String, first: Int => String, second: Int => String) = {
+    * `first`'s bodies created, 8 events over 4 types each, in the sink
+    * `start` runs; and `type_1`'s table as `read` gives it. */
+  private def secondTriggerJobs(name: String, first: Int => String, second: Int => String,
+                                start: (EventPipeline.Config, StructType) => StreamingQuery =
+                                  (cfg, schema) => EventPipeline.startEvolving(spark, schema, cfg,
+                                    availableNow = false),
+                                read: EventPipeline.Config => DataFrame =
+                                  EventPipeline.readEvolvingTable(spark, _, "type_1")) = {
     val base = tmpDir(name)
     val cfg = EventPipeline.Config(s"$base/in", s"$base/out", s"$base/ck")
     def write(dir: String, from: Int, props: Int => String): Unit =
@@ -28,8 +41,7 @@ class TriggerJobsSpec extends SparkSpec {
     // staged outside the input dir, so the first trigger cannot see it
     write(s"$base/next", 100, second)
     val profiler = Profiler.install(spark)
-    val q = EventPipeline.startEvolving(spark, spark.read.parquet(cfg.inputDir).schema, cfg,
-      availableNow = false)
+    val q = start(cfg, spark.read.parquet(cfg.inputDir).schema)
     try {
       q.processAllAvailable()
       val next = new java.io.File(s"$base/next").listFiles()
@@ -37,7 +49,7 @@ class TriggerJobsSpec extends SparkSpec {
       java.nio.file.Files.move(next.toPath, java.nio.file.Paths.get(cfg.inputDir, "part-next.parquet"))
       q.processAllAvailable()
     } finally { q.stop(); profiler.close() }
-    (EventPipeline.readEvolvingTable(spark, cfg, "type_1"), profiler.batch(q.id, 1).jobs)
+    (read(cfg), profiler.batch(q.id, 1).jobs)
   }
 
   test("a steady cast-free evolving trigger runs three jobs") {
@@ -68,5 +80,21 @@ class TriggerJobsSpec extends SparkSpec {
     // and the write). With the facts walk and the cache fill this
     // trigger ran 5.
     assert(jobs == 3)
+  }
+
+  test("a steady cast-free JDBC evolving trigger runs five jobs") {
+    // one in-memory Derby database for this test alone
+    val url = "jdbc:derby:memory:grafttrigjobs;create=true"
+    val (table, jobs) = secondTriggerJobs("trigjdbc",
+      i => s"""{"k":$i,"tags":["a","b"]}""",
+      i => s"""{"k":$i,"tags":["c"],"extra":"e$i"}""",
+      (cfg, schema) => EventPipeline.startEvolvingJdbc(spark,
+        EventPipeline.FileEventSource(schema, cfg.inputDir), cfg, url, availableNow = false),
+      _ => JdbcEventSink.readTable(spark, url, JdbcEventSink.tableName("type_1")))
+    val rows = table.orderBy("event_id").collect()
+    assert(rows.map(r => Option(r.getAs[String]("extra"))).toSeq == Seq(None, None, Some("e1"), Some("e5")))
+    // the pre-pass (1) and one INSERT job per type (4); each type's
+    // schema read and ADD COLUMN run on the driver's own connections
+    assert(jobs == 5)
   }
 }
