@@ -10,7 +10,8 @@ object Bench {
 
   /** Parse the committed idle baseline (BENCH_IDLE.json) into a
     * query→seconds map, or empty if the file's `sf` isn't the run's
-    * sf dir (a baseline is only comparable at its own scale).
+    * sf dir or its `cpus` isn't the run's core count (a baseline is
+    * only comparable at its own scale and on its own cores).
     *
     * A REAL JSON parse (Jackson, already on Spark's classpath), not a
     * regex: the r11 regex form tolerated no whitespace after colons,
@@ -21,10 +22,10 @@ object Bench {
     * the committed file and asserts a full-sized map, so a future
     * format drift fails the build instead of silently disarming the
     * retimer. Public for that spec. */
-  def parseIdleBaseline(txt: String, sfDir: String): Map[String, Double] =
+  def parseIdleBaseline(txt: String, sfDir: String, cpus: String): Map[String, Double] =
     try {
       val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(txt)
-      if (root.path("sf").asText("") != sfDir) Map.empty
+      if (root.path("sf").asText("") != sfDir || root.path("cpus").asText("") != cpus) Map.empty
       else {
         val q = root.path("queries")
         q.properties().asScala.map(e => e.getKey -> e.getValue.asDouble).toMap
@@ -178,15 +179,18 @@ object Bench {
     // The baseline is only comparable at ITS OWN scale: a bench at a
     // different sf dir (e.g. an sf1 sweep against the committed sf0.1
     // idle run) would "re-time" nearly every query and run the whole
-    // suite twice for nothing — parseIdleBaseline gates on `sf`.
+    // suite twice for nothing — parseIdleBaseline gates on `sf`, and
+    // likewise on `cpus`: a 4-core run against the 32-core idle file
+    // re-timed up to 10 queries 3x each for the cores it lacked.
     // SPARK_GRAFT_IDLE points a PROBE run at a scale-matched baseline
-    // (e.g. BENCH_sf1_r9c.json for an sf1 sweep) so oversized-scale
-    // runs get the same solo-retime adjudication as the canonical one;
-    // the sf gate still applies to whatever file is named.
+    // (e.g. BENCH_sf1_r13.json for a 32-core sweep of its sf1 dir) so
+    // oversized-scale runs get the same solo-retime adjudication as the
+    // canonical one; the sf and cpus gates still apply to whatever file
+    // is named, so a file that names no `cpus` matches no run.
     val idleFile = sys.env.getOrElse("SPARK_GRAFT_IDLE", "BENCH_IDLE.json")
     val idle: Map[String, Double] =
       try parseIdleBaseline(new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(idleFile))), sfDir)
+        java.nio.file.Paths.get(idleFile))), sfDir, cpus)
       catch { case _: Throwable => Map.empty }
     val risers = results.flatMap { case (name, sec) =>
         idle.get(name).collect {
@@ -227,7 +231,7 @@ object Bench {
       if (cpus == "32" || only.nonEmpty || sfDir != "/root/testdata/sf0.1") Nil
       else oversplitSuspects(results,
         try parseIdleBaseline(new String(java.nio.file.Files.readAllBytes(
-          java.nio.file.Paths.get("BENCH_local_latest.json"))), sfDir)
+          java.nio.file.Paths.get("BENCH_local_latest.json"))), sfDir, "32")
         catch { case _: Throwable => Map.empty })
     val suspectsField =
       if (suspects.isEmpty) ""

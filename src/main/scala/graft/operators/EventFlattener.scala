@@ -23,15 +23,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * inferred from the first value's string form.
   *
   * Here all of that is **one light job + one codegen'd projection**:
+  *  - each body is read once, as `from_json` reads it, in ONE pass
+  *    ([[typedGroups]]) that can group what it finds (the evolving
+  *    sinks group by event type and body verdict);
   *  - structure comes from Spark's own JSON schema inference
-  *    (`JsonInferSchema`, through the `GraftJsonTyper` shim), run
-  *    per body in ONE pass ([[typedGroups]]) that can group the types
-  *    (the evolving sinks group by event type and body verdict), so
-  *    the schema equals `spark.read.json`'s over the same bodies
-  *    (sampled at scale via [[Options.sampleFraction]]);
-  *  - the same pass walks each body into the flatten's [[Facts]], per
-  *    JSON path as `from_json` reads it: each array's longest length
-  *    and each string's date-likeness;
+  *    (`JsonInferSchema`, through the `GraftJsonTyper` shim) over that
+  *    reading, so over bodies that are each one object with no
+  *    repeated key the schema equals `spark.read.json`'s (sampled at
+  *    scale via [[Options.sampleFraction]]); a repeated key is typed
+  *    at its last value, and any other body as its text in
+  *    `corrupt_record`, as `from_json` fills them;
+  *  - the same pass walks that reading into the flatten's [[Facts]],
+  *    per JSON path: each array's longest length and each string's
+  *    date-likeness;
   *  - the flatten itself is a single `from_json` + `getField`/
   *    `element_at` projection — no per-row driver logic, fully
   *    columnar, works identically on 100 TB;
@@ -142,7 +146,7 @@ object EventFlattener {
     * under [[asDate]], the very column the projection writes; so
     * `2024-02-30` is not date-like. A number's, a boolean's, a record's
     * or an array's JSON text never matches [[DateRe]]. */
-  private final class FactsReader(typer: GraftJsonTyper, toDate: Expression) extends Serializable {
+  private final class FactsReader(val typer: GraftJsonTyper, toDate: Expression) extends Serializable {
     @transient private lazy val date = java.util.regex.Pattern.compile(DateRe)
 
     private def dated(s: String): Boolean =
@@ -150,7 +154,7 @@ object EventFlattener {
 
     def add(body: UTF8String, into: Facts): Unit = typer.objectOf(body).foreach(walk(_, into))
 
-    private def walk(v: JsonNode, at: Facts): Unit = if (!v.isNull) {
+    def walk(v: JsonNode, at: Facts): Unit = if (!v.isNull) {
       at.seen = true
       if (v.isTextual) at.undated ||= !dated(v.textValue)
       else {
@@ -167,43 +171,47 @@ object EventFlattener {
   private def reader(spark: SparkSession) = new FactsReader(GraftJsonTyper(spark), asDateOfRow(spark))
 
   /** One group's share of the inference pre-pass: the merged JSON type
-    * of its bodies (None when every body is null) and their [[Facts]]. */
+    * of its bodies (None when no body holds a value) and their [[Facts]]. */
   final case class Typed(dtype: Option[DataType], facts: Facts)
 
-  /** The inference pre-pass: ONE job over `df` types each non-null body
-    * of `jsonCol` with Spark's own JSON inference and walks it into the
-    * flatten's [[Facts]], merging both per group, the group of a row
-    * being `key` over its `by` columns (ordinals 1.. of the row `key`
-    * sees; ordinal 0 is the body). The driver merges the groups, at most
-    * one per group and partition; [[schemaOf]] turns any set of them
-    * into the schema `spark.read.json` infers over those groups' bodies,
-    * and [[flattenTyped]] flattens their bodies with no further job. */
+  /** The inference pre-pass: ONE job over `df` reads each non-null body
+    * of `jsonCol` once, as `from_json` reads it, types that reading with
+    * Spark's own JSON inference and walks it into the flatten's
+    * [[Facts]], merging both per group, the group of a row being `key`
+    * over its `by` columns (ordinals 1.. of the row `key` sees; ordinal
+    * 0 is the body). The driver merges the groups, at most one per group
+    * and partition; [[schemaOf]] turns any set of them into the schema
+    * of those groups' bodies (`spark.read.json`'s when each is one
+    * object with no repeated key), and [[flattenTyped]] flattens their
+    * bodies with no further job. */
   def typedGroups[K](df: DataFrame, jsonCol: String, by: Seq[String])(
       key: InternalRow => K): Map[K, Typed] = {
-    val typer = GraftJsonTyper(df.sparkSession)
     val facts = reader(df.sparkSession)
+    val typer = facts.typer
     def add(a: Option[DataType], b: Option[DataType]) = (a ++ b).reduceOption(typer.merge)
     GraftJsonTyper.collectPartitions(df.select((jsonCol +: by).map(col): _*)) { rows =>
       val acc = mutable.HashMap.empty[K, Typed]
       rows.foreach { r =>
         val k = key(r)
         val g = acc.getOrElseUpdate(k, Typed(None, new Facts))
-        if (!r.isNullAt(0)) {
-          val body = r.getUTF8String(0)
-          facts.add(body, g.facts)
-          acc(k) = g.copy(dtype = add(g.dtype, Some(typer.typeOf(body))))
+        if (!r.isNullAt(0)) typer.objectOf(r.getUTF8String(0)).foreach { o =>
+          facts.walk(o, g.facts)
+          acc(k) = g.copy(dtype = add(g.dtype, Some(typer.typeOf(o))))
         }
       }
       acc.toMap
     }.flatten.groupMapReduce(_._1)(_._2)((a, b) => Typed(add(a.dtype, b.dtype), a.facts.merge(b.facts)))
   }
 
-  /** The schema `spark.read.json` infers over the bodies `groups` typed. */
+  /** The schema of the bodies `groups` typed: `spark.read.json`'s when
+    * each is one object with no repeated key. */
   def schemaOf(spark: SparkSession, groups: Iterable[Typed]): StructType =
     GraftJsonTyper(spark).schemaOf(groups.flatMap(_.dtype))
 
-  /** Distributed JSON structure inference over a string column: equal
-    * to `spark.read.json` over the (sampled) bodies, in one job. */
+  /** Distributed JSON structure inference over a string column, in one
+    * job: the schema of the (sampled) bodies as `from_json` reads them,
+    * equal to `spark.read.json`'s when each is one object with no
+    * repeated key. */
   def inferStructure(df: DataFrame, jsonCol: String, opts: Options = Options()): StructType = {
     val bodies = df.select(col(jsonCol)).na.drop()
     val sampled = if (opts.sampleFraction < 1.0) bodies.sample(opts.sampleFraction, 42L) else bodies
@@ -214,7 +222,8 @@ object EventFlattener {
     * passthrough columns. Cost: one job, which infers the schema and
     * gathers the facts (array max-lengths, date-likeness), and the
     * projection. A sampled inference (see [[Options.sampleFraction]])
-    * gathers the facts of every body in a job of their own. */
+    * gathers the facts of every body in a job of their own, run only
+    * when the plan needs them (see [[flattenWithSchema]]). */
   def flatten(df: DataFrame, jsonCol: String, keep: Seq[String] = Nil,
               opts: Options = Options()): DataFrame =
     if (opts.sampleFraction < 1.0)
@@ -229,9 +238,9 @@ object EventFlattener {
   private case class Leaf(name: String, col: Column, dtype: DataType,
                           parts: Seq[Facts => Facts], slots: Seq[(Facts => Facts, Int)] = Nil)
 
-  /** Flatten `df`'s bodies by `schema`. The plan needs the bodies'
-    * [[Facts]] (split arrays or, with date detection, string columns):
-    * one job walks every body for them. */
+  /** Flatten `df`'s bodies by `schema`. When the plan needs the
+    * bodies' [[Facts]] (a split array or, with date detection, a string
+    * column), one job walks every body for them. */
   def flattenWithSchema(df: DataFrame, jsonCol: String, schema: StructType,
                         keep: Seq[String] = Nil, opts: Options = Options()): DataFrame =
     project(df, jsonCol, schema, keep, opts, factsOf(df, jsonCol))

@@ -250,8 +250,8 @@ object EventRouter {
   /** True for a row whose present body is not one JSON object — the
     * `malformed_body` rule every pipeline entry point applies. One
     * strict Jackson pass per body: the root is an object, no key repeats
-    * in any object (`spark.read.json` would infer two columns of one
-    * name), nothing but whitespace follows it, and none of Jackson's
+    * in any object (`from_json` would keep only its last value), nothing
+    * but whitespace follows it, and none of Jackson's
     * leniencies is on (no NaN, single quotes, unquoted names, leading
     * zeros, trailing commas, comments or raw control characters). */
   private[graft] def malformedBody(jsonCol: String): Column =

@@ -158,8 +158,9 @@ object JdbcEventSink {
       else f"_u${c.toInt}%x_"
     }
 
-  /** One micro-batch's routed JDBC write: each present event type
-    * appends (with evolution) to its own table. The per-type loop is
+  /** One micro-batch's routed JDBC write: each of `types`, the batch's
+    * event types (the streaming pre-pass finds them with no job of its
+    * own), appends (with evolution) to its own table. The per-type loop is
     * the reference's own one-bulker-per-type shape — INSERT batches
     * are per-table by nature, so unlike the parquet fast path there
     * is no single-job variant to ride; type count bounds the loop.
@@ -177,16 +178,9 @@ object JdbcEventSink {
     * 64 concurrent INSERT channels. Exceptions propagate exactly as
     * before (fail the batch). */
   def routeAndAppend(spark: SparkSession, batch: DataFrame, url: String,
-                     knownTypes: Option[Seq[String]] = None): Map[String, StructType] = {
-    // callers that already collected the batch's distinct types (the
-    // streaming prelude's emptiness gate) pass them in — one driver
-    // round-trip per micro-batch instead of two
-    val types = knownTypes.getOrElse(
-      batch.select(col("event_type")).distinct()
-        .collect().map(_.getString(0)).toSeq) // bounded by table count
+                     types: Seq[String]): Map[String, StructType] =
     graft.streaming.Scaffold.overlapped(types, 8) { t =>
       t -> evolveAppend(spark,
         batch.filter(col("event_type") === t).drop("event_type"), url, tableName(t))
     }.toMap
-  }
 }

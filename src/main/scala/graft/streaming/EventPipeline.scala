@@ -357,8 +357,7 @@ object EventPipeline {
     Scaffold.foreachBatch(source.load(spark), cfg.checkpointDir, availableNow) {
       (batch, batchId) =>
         withRoutableBatch(batch, batchId, cfg, jsonCol) { (_, types, enriched) =>
-          JdbcEventSink.routeAndAppend(spark, enriched, jdbcUrl,
-            knownTypes = Some(types))
+          JdbcEventSink.routeAndAppend(spark, enriched, jdbcUrl, types)
           ()
         }
     }

@@ -1,56 +1,47 @@
 package org.apache.spark.sql.catalyst.json
 
-import java.io.{CharConversionException, IOException}
-import java.nio.charset.MalformedInputException
+import java.io.IOException
 
 import scala.reflect.ClassTag
 
-import com.fasterxml.jackson.core.JsonProcessingException
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.classic.ClassicConversions._
 import org.apache.spark.sql.execution.SQLExecution
-import org.apache.spark.sql.types.{DataType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Spark's own JSON schema inference, one record at a time, so a caller
   * can type bodies in its own pass and group the types as it likes.
   *
-  * The steps are `JsonInferSchema.infer`'s: a record's type is
-  * `inferField` over a parser of its raw bytes, or, when the record
-  * does not parse or decode, the PERMISSIVE branch's one corrupt-record
-  * field; types merge with `compatibleRootType`; the merged root is
-  * finished with `canonicalizeType`. `spark.read.json` over the same
-  * records gives the same schema. `canonicalizeType` is `private[json]`,
-  * hence this shim in Spark's package. [[objectOf]] reads a record as
-  * `from_json` does, for the flatten's facts. */
+  * A record is read once, as `from_json` reads it ([[objectOf]]), and
+  * that tree is typed with `JsonInferSchema.inferField` over its
+  * traversal ([[typeOf]]); types merge with `compatibleRootType`; the
+  * merged root is finished with `canonicalizeType`, as
+  * `JsonInferSchema.infer` does. Over records that are each one JSON
+  * object with no repeated key, `spark.read.json` gives the same
+  * schema, save for a root key named as the corrupt-record column,
+  * which `from_json` never reads from a body. Other records are typed
+  * as `from_json` reads them: a repeated key at its last value, and a
+  * record that does not parse
+  * (a NUL-led one among them) or whose root is no object as its text in
+  * the corrupt-record column. `canonicalizeType` is `private[json]`,
+  * hence this shim in Spark's package. */
 final class GraftJsonTyper private (options: JSONOptions) extends Serializable {
   private val inference = new JsonInferSchema(options)
   private val merger =
     JsonInferSchema.compatibleRootType(options.columnNameOfCorruptRecord, options.parseMode)
-  @transient private lazy val factory = options.buildJsonFactory()
-  @transient private lazy val mapper = new ObjectMapper(factory)
+  @transient private lazy val mapper = new ObjectMapper(options.buildJsonFactory())
 
-  /** One record's type, as `spark.read.json` types it. */
-  def typeOf(record: UTF8String): DataType =
-    try {
-      // the raw bytes, as `spark.read.json` infers a Dataset[String]
-      // (`CreateJacksonParser.internalRow`): Jackson guesses the
-      // encoding, so a NUL-led body may read as UTF-16 or UTF-32
-      val parser = factory.createParser(record.getBytes)
-      try { parser.nextToken(); inference.inferField(parser) }
-      finally parser.close()
-    } catch {
-      case _: JsonProcessingException | _: MalformedInputException =>
-        corrupt
-      case _: CharConversionException if options.encoding.isEmpty =>
-        corrupt
-    }
-
-  private def corrupt: DataType =
-    StructType(Seq(StructField(options.columnNameOfCorruptRecord, StringType)))
+  /** The type of a record [[objectOf]] read, as `spark.read.json`
+    * types the same value. */
+  def typeOf(record: JsonNode): DataType = {
+    val parser = record.traverse()
+    try { parser.nextToken(); inference.inferField(parser) }
+    finally parser.close()
+  }
 
   def merge(a: DataType, b: DataType): DataType = merger(a, b)
 

@@ -17,7 +17,7 @@ class BenchIdleParseSpec extends AnyFunSuite {
     val p = java.nio.file.Paths.get("BENCH_IDLE.json")
     assert(java.nio.file.Files.exists(p), "BENCH_IDLE.json must be committed")
     val txt = new String(java.nio.file.Files.readAllBytes(p))
-    val idle = Bench.parseIdleBaseline(txt, canonicalSf)
+    val idle = Bench.parseIdleBaseline(txt, canonicalSf, "32")
     assert(idle.size >= 200,
       s"committed idle baseline parsed to only ${idle.size} entries — " +
         "the solo-retime adjudication is disarmed")
@@ -29,7 +29,7 @@ class BenchIdleParseSpec extends AnyFunSuite {
 
   test("pretty-printed and compact shapes parse identically") {
     val compact =
-      s"""{"queries":{"a1":0.5,"b2":1.25},"metric":"total","value":1.75,"sf":"$canonicalSf"}"""
+      s"""{"queries":{"a1":0.5,"b2":1.25},"metric":"total","value":1.75,"sf":"$canonicalSf","cpus":32}"""
     val pretty =
       s"""{
          |  "queries": {
@@ -38,22 +38,31 @@ class BenchIdleParseSpec extends AnyFunSuite {
          |  },
          |  "metric": "total",
          |  "value": 1.75,
-         |  "sf": "$canonicalSf"
+         |  "sf": "$canonicalSf",
+         |  "cpus": 32
          |}""".stripMargin
     // a full bench file's line, which carries each query's layers
     val layered = compact.stripSuffix("}") +
       ""","layers":{"a1":{"wall_ms":500,"driver_ms":120,"jobs":3},"b2":{"wall_ms":1250}}}"""
     val want = Map("a1" -> 0.5, "b2" -> 1.25)
-    assert(Bench.parseIdleBaseline(compact, canonicalSf) == want)
-    assert(Bench.parseIdleBaseline(pretty, canonicalSf) == want)
-    assert(Bench.parseIdleBaseline(layered, canonicalSf) == want)
+    assert(Bench.parseIdleBaseline(compact, canonicalSf, "32") == want)
+    assert(Bench.parseIdleBaseline(pretty, canonicalSf, "32") == want)
+    assert(Bench.parseIdleBaseline(layered, canonicalSf, "32") == want)
   }
 
   test("a baseline at a different sf is rejected; garbage is empty") {
-    val txt = s"""{"queries":{"a1":0.5},"sf":"/root/testdata/sf0.01"}"""
-    assert(Bench.parseIdleBaseline(txt, canonicalSf).isEmpty)
-    assert(Bench.parseIdleBaseline("not json at all", canonicalSf).isEmpty)
-    assert(Bench.parseIdleBaseline("""{"sf":"x"}""", canonicalSf).isEmpty)
+    val txt = s"""{"queries":{"a1":0.5},"sf":"elsewhere/sf0.01","cpus":32}"""
+    assert(Bench.parseIdleBaseline(txt, canonicalSf, "32").isEmpty)
+    // nor is one at the same sf on another core count, or naming none:
+    // a 4-core run re-timed against the 32-core floor re-times for the
+    // cores it lacks
+    val at32 = s"""{"queries":{"a1":0.5},"sf":"$canonicalSf","cpus":32}"""
+    assert(Bench.parseIdleBaseline(at32, canonicalSf, "4").isEmpty)
+    assert(Bench.parseIdleBaseline(at32, canonicalSf, "32") == Map("a1" -> 0.5))
+    assert(Bench.parseIdleBaseline(s"""{"queries":{"a1":0.5},"sf":"$canonicalSf"}""",
+      canonicalSf, "32").isEmpty)
+    assert(Bench.parseIdleBaseline("not json at all", canonicalSf, "32").isEmpty)
+    assert(Bench.parseIdleBaseline("""{"sf":"x"}""", canonicalSf, "32").isEmpty)
   }
 
   test("only a full-suite sf0.1 32-core run may write the canonical file") {

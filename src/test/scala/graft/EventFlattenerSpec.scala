@@ -121,17 +121,27 @@ class EventFlattenerSpec extends SparkSpec {
 
   test("malformed JSON bodies flatten to nulls; rows are not lost") {
     // the reference DLQs rows whose body fails to parse — here the row
-    // survives with null flattened columns (splitDlq tags it downstream)
+    // survives with null flattened columns (splitDlq tags it downstream).
+    // Each body is typed as `from_json` reads it: a repeated key at its
+    // last value, and a root array, like a body that does not parse, as
+    // its text in `corrupt_record`, not as its items' keys
     val df = Seq(
       (1L, """{"k": 5, "name": "ok"}"""),
       (2L, """{not json at all"""),
-      (3L, null.asInstanceOf[String])).toDF("event_id", "body")
+      (3L, null.asInstanceOf[String]),
+      (4L, """{"k": 6, "k": 7}"""),
+      (5L, """[{"name":"arr"}]""")).toDF("event_id", "body")
     val out = EventFlattener.flatten(df, "body", keep = Seq("event_id"),
       opts = Options(detectDates = false, sampleFraction = 1.0))
-    assert(out.count() == 3)
+    assert(out.columns.toSeq == Seq("event_id", "corrupt_record", "k", "name"))
+    assert(out.count() == 5)
     val rows = out.orderBy("event_id").collect()
     assert(rows(0).getAs[Long]("k") == 5L && rows(0).getAs[String]("name") == "ok")
     assert(rows(1).isNullAt(rows(1).fieldIndex("k")))
+    assert(rows(1).getAs[String]("corrupt_record") == "{not json at all")
     assert(rows(2).isNullAt(rows(2).fieldIndex("name")))
+    assert(rows(3).getAs[Long]("k") == 7L && rows(3).isNullAt(rows(3).fieldIndex("corrupt_record")))
+    assert(rows(4).isNullAt(rows(4).fieldIndex("name")))
+    assert(rows(4).getAs[String]("corrupt_record") == """[{"name":"arr"}]""")
   }
 }

@@ -12,32 +12,41 @@ import graft.streaming.EventPipeline
 class FlattenInferenceSpec extends SparkSpec {
   import spark.implicits._
 
-  /** Every shape inference merges: scalar conflicts, record against
-    * array, null-only keys, empty documents, records 4 deep, camelCase,
-    * non-ASCII and colliding keys, a body that does not parse, and
-    * NUL-led bodies: inference reads raw bytes, so Jackson takes
-    * `\u0000{\u0000}` for UTF-16 `{}` and cannot decode the other two
-    * (a `CharConversionException`, typed as a corrupt record). */
-  private val shapes = Seq(
+  /** Every object shape inference merges: scalar conflicts, record
+    * against array, null-only keys, empty documents, records 4 deep,
+    * camelCase, non-ASCII and colliding keys. Each is one JSON object
+    * with no repeated key, the one shape `spark.read.json` and
+    * `from_json` read alike. */
+  private val objects = Seq(
     """{"n":1,"x":1,"s":"a","r":{"a":1},"arr":[1,2],"onlyNull":null}""",
     """{"n":2.5,"x":"two","s":3,"r":[1],"arr":{"b":1},"onlyNull":null}""",
     """{"n":12345678901234567890,"deep":{"a":{"b":{"c":{"d":1}}}},"camelCase":true}""",
     """{"deep":{"a":{"b":{"c":{"d":"x","e":[1.5]}}}},"名前":1,"ÄB":2,"B":[]}""",
     """{"a_b":1,"a":{"b":"2024-01-01"},"fooBar":"x","foo_bar":4,"when":"2024-01-02"}""",
     "{}",
+    """{"arr":[[1],[2,3]],"r":null,"empty":{}}""")
+
+  /** Shapes the two readers read apart, each typed as `from_json` reads
+    * it: root arrays, a body that does not parse, and NUL-led bodies
+    * (`spark.read.json` reads raw bytes, so Jackson takes
+    * `\u0000{\u0000}` for UTF-16 `{}` and cannot decode the other two;
+    * `from_json` reads the UTF-8 text, which does not parse) land as
+    * their text in the corrupt-record column, as `{bad` does; a
+    * repeated key is typed at its last value. */
+  private val others = Seq(
     "[]",
     """[{"inArray":1}]""",
-    """{"arr":[[1],[2,3]],"r":null,"empty":{}}""",
     "{bad",
     "\u0000a\u0000\u0000",
     "\u0000{\u0000}",
-    "\u0000\u0000\u0000{\u0000")
+    "\u0000\u0000\u0000{\u0000",
+    """{"k":1,"k":2}""")
 
-  /** `n` bodies cycling through [[shapes]], over 3 partitions, with a
-    * group key per row. */
-  private def corpus(n: Int): DataFrame =
-    (0 until n).map(i => (s"g${i % 3}", shapes(i % shapes.size))).toDF("g", "body")
-      .repartition(3)
+  /** `n` bodies cycling through `shapes`, over 3 partitions, with a
+    * group key and an id per row. */
+  private def corpus(n: Int, shapes: Seq[String] = objects): DataFrame =
+    (0 until n).map(i => (i.toLong, s"g${i % 3}", shapes(i % shapes.size)))
+      .toDF("event_id", "g", "body").repartition(3)
 
   private def readJson(df: DataFrame): StructType = spark.read.json(df.select("body").as[String]).schema
 
@@ -57,6 +66,25 @@ class FlattenInferenceSpec extends SparkSpec {
     val sampled = df.select("body").na.drop().sample(0.1, 42L)
     assert(EventFlattener.inferStructure(df, "body", Options(sampleFraction = 0.1)) ==
       readJson(sampled))
+  }
+
+  test("other shapes are typed as from_json reads them, and flatten by that reading") {
+    val df = corpus(70, objects ++ others)
+    // a non-object body types as `{bad` does, a repeated key as its last value
+    val read = corpus(70, objects ++ Seq("{bad", """{"k":2}"""))
+    val groups = EventFlattener.typedGroups(df, "body", Seq("g"))(_.getUTF8String(1).toString)
+    assert(EventFlattener.schemaOf(spark, groups.values) == readJson(read))
+    assert(EventFlattener.inferStructure(df, "body") == readJson(read))
+    assert(!readJson(read).fieldNames.contains("inArray"))
+    val flat = EventFlattener.flatten(df, "body", keep = Seq("event_id", "body"),
+      opts = Options(detectDates = false)).orderBy("event_id").collect()
+    flat.foreach { r =>
+      val body = r.getAs[String]("body")
+      val corrupt = Option(r.getAs[String]("corrupt_record"))
+      if (objects.contains(body) || body.startsWith("{\"k\"")) assert(corrupt.isEmpty, body)
+      else assert(corrupt.contains(body), body)
+      if (body.startsWith("{\"k\"")) assert(r.getAs[Long]("k") == 2L)
+    }
   }
 
   test("a collided string column is date-like by the values its coalesce reads") {

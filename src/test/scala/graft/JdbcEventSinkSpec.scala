@@ -83,13 +83,13 @@ class JdbcEventSinkSpec extends SparkSpec {
     val batch = Seq(
       ("click", 1L, "a"), ("click", 2L, "b"), ("view", 3L, "c")
     ).toDF("event_type", "event_id", "payload")
-    val schemas = JdbcEventSink.routeAndAppend(spark, batch, url2)
+    val schemas = JdbcEventSink.routeAndAppend(spark, batch, url2, Seq("click", "view"))
     assert(schemas.keySet === Set("click", "view"))
     assert(JdbcEventSink.readTable(spark, url2, "ev_click").count() === 2)
     assert(JdbcEventSink.readTable(spark, url2, "ev_view").count() === 1)
     // second batch evolves just its own table
     val batch2 = Seq(("view", 4L, "d", 1.5)).toDF("event_type", "event_id", "payload", "score")
-    JdbcEventSink.routeAndAppend(spark, batch2, url2)
+    JdbcEventSink.routeAndAppend(spark, batch2, url2, Seq("view"))
     val view = JdbcEventSink.readTable(spark, url2, "ev_view")
     assert(view.schema.fieldNames.contains("score"))
     assert(view.count() === 2)

@@ -420,20 +420,24 @@ class PropertySpec extends SparkSpec {
       Gen.choose(-10.0, 10.0).map(_.toString),
       Gen.oneOf("true", "false", "null"),
       Gen.alphaNumStr.map(s => "\"" + s.take(10) + "\""))
+    // each object's keys are distinct: the one shape `spark.read.json`
+    // and `from_json` read alike
     def objJson(depth: Int): Gen[String] =
-      Gen.choose(0, 4).flatMap { n =>
-        Gen.listOfN(n, key.flatMap { k =>
+      Gen.choose(0, 4).flatMap(n => Gen.listOfN(n, key)).flatMap { keys =>
+        keys.distinct.foldLeft(Gen.const(List.empty[String])) { (pairs, k) =>
           val v = if (depth <= 0) scalarJson
             else Gen.frequency(
               4 -> scalarJson,
               1 -> objJson(depth - 1),
               1 -> Gen.listOfN(2, scalarJson).map(_.mkString("[", ",", "]")))
-          v.map(vv => "\"" + k + "\":" + vv)
-        }).map(_.distinct.mkString("{", ",", "}"))
+          for (ps <- pairs; vv <- v) yield ps :+ ("\"" + k + "\":" + vv)
+        }.map(_.mkString("{", ",", "}"))
       }
     forAll1(Gen.listOfN(12, objJson(2)), trials = 5) { (bodies: List[String]) =>
       val df = bodies.zipWithIndex
         .map { case (b, i) => (i.toLong, b) }.toDF("event_id", "props")
+      assert(graft.operators.EventFlattener.inferStructure(df, "props") ===
+        spark.read.json(bodies.toDS()).schema)
       val flat = graft.operators.EventFlattener.flatten(df, "props",
         keep = Seq("event_id"),
         opts = graft.operators.EventFlattener.Options(sampleFraction = 1.0))
